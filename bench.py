@@ -420,14 +420,14 @@ def run_scale_tier(spark, base_dir: str) -> dict:
      0.58s/11.5s cold vs 1.15s/5.55s warm on the same box — a phantom 20x
     ratio); the second rep prices the operator, not the JVM.
 
-    The r11 general-graph driver tier is pinned OFF here (same call as
+    The driver tiers are pinned OFF here (same call as
     tools/scale_probe_100x): this tier's whole purpose is the DISTRIBUTED
     loops' scaling shape, and the bounded driver tier would intercept the
     small scaled graphs and splice a Python-loop regime into the curve."""
-    from hadoop_data_lake_spark.operators import graph as _G
+    from hadoop_data_lake_spark.core import driver_tier as DT
 
-    orig_tier = _G.GENERAL_DRIVER_TIER_ENABLED
-    _G.GENERAL_DRIVER_TIER_ENABLED = False
+    orig_tier = DT.GENERAL_DRIVER_TIER_ENABLED
+    DT.GENERAL_DRIVER_TIER_ENABLED = False
     try:
         return _run_scale_tier_inner(spark, base_dir)
     finally:
@@ -435,7 +435,7 @@ def run_scale_tier(spark, base_dir: str) -> dict:
         # mid-tier must not leave the tier disabled for the rest of the
         # process, and a caller that deliberately disabled it (the
         # tools/scale_probe_100x pattern) must stay disabled.
-        _G.GENERAL_DRIVER_TIER_ENABLED = orig_tier
+        DT.GENERAL_DRIVER_TIER_ENABLED = orig_tier
 
 
 def _run_scale_tier_inner(spark, base_dir: str) -> dict:
@@ -641,13 +641,13 @@ def main() -> None:
     # Frozen-plan control re-timings (see CONTROL_TIER_SENSITIVE note):
     # tier-sensitive controls get a second, driver-tier-OFF timing used
     # ONLY for the control ratio; their headline entry above is untouched.
-    from hadoop_data_lake_spark.operators import graph as _G
+    from hadoop_data_lake_spark.core import driver_tier as DT
 
     control_timings = {
         n: t for n, t in timings.items() if n in CONTROL_R10_ABSOLUTES
     }
-    orig_tier = _G.GENERAL_DRIVER_TIER_ENABLED
-    _G.GENERAL_DRIVER_TIER_ENABLED = False
+    orig_tier = DT.GENERAL_DRIVER_TIER_ENABLED
+    DT.GENERAL_DRIVER_TIER_ENABLED = False
     try:
         for name in sorted(CONTROL_TIER_SENSITIVE):
             best = float("inf")
@@ -659,7 +659,7 @@ def main() -> None:
             print(f"# control[frozen] {name}: {control_timings[name]:.3f}s",
                   file=sys.stderr)
     finally:
-        _G.GENERAL_DRIVER_TIER_ENABLED = orig_tier
+        DT.GENERAL_DRIVER_TIER_ENABLED = orig_tier
 
     scale_base = os.environ.get(SCALE_BASE_ENV, "/root/testdata/sf0.01")
     scale_check = run_scale_tier(spark, scale_base) if os.path.isdir(scale_base) else {}

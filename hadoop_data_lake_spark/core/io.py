@@ -325,27 +325,32 @@ def register_tables(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = 
         read_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     """Driver-built literal frame via ONE pandas/Arrow batch.
 
     Row-based ``createDataFrame(list_of_tuples)`` pays a fixed
     ~0.3-0.5 s per call (per-row schema verification + a pickled-row
     parallelize job) REGARDLESS of row count, vs ~0.13-0.19 s for a
-    pandas batch under Arrow (r15 profile, re-confirmed r16) — real
-    money for the dozens of small scaffolding frames (quantile targets,
-    shift lattices, report rows) built once per query invocation.
+    pandas batch under Arrow — real money for the dozens of small
+    scaffolding frames (quantile targets, shift lattices, report rows)
+    built once per query invocation.
 
-    ``schema`` is a DDL string or StructType and stays the declared
-    contract either way. Empty input and rows carrying ``None`` fall
-    back to the row path: pandas would route NULL-carrying integral
-    columns through float64 (the ADVICE r15 precision trap) and has
-    nothing to infer from zero rows — the fixed cost is only worth
-    dodging on the common non-NULL path.
+    ``rows`` is a list of tuples or a pandas frame (a driver tier's
+    result; `core.driver_tier` declines NULL inputs, so it goes straight
+    to Arrow with no per-row scan). ``schema`` is a DDL string or
+    StructType and stays the declared contract either way. An empty row
+    list and rows carrying ``None`` fall back to the row path: pandas
+    would route NULL-carrying integral columns through float64 and has
+    nothing to infer from zero rows.
     """
-    if not rows or any(v is None for r in rows for v in r):
-        return spark.createDataFrame(rows, schema)
     import pandas as pd
 
+    if (
+        isinstance(rows, pd.DataFrame)
+        or not rows
+        or any(v is None for r in rows for v in r)
+    ):
+        return spark.createDataFrame(rows, schema)
     st = T._parse_datatype_string(schema) if isinstance(schema, str) else schema
     pdf = pd.DataFrame(rows, columns=[f.name for f in st.fields])
     return spark.createDataFrame(pdf, st)
@@ -368,11 +373,11 @@ def checkpoint_serialized(df: DataFrame) -> DataFrame:
 
 
 #: Footer-read budget for `parquet_row_count`: past this many files the
-#: function answers None and the caller's Spark-count fallback (a
-#: distributed, column-pruned metadata scan) takes over — a table whose
-#: rows are spread over thousands of files AND still under the caller's
-#: cap is pathological, while the common 100 TB case (many files, many
-#: rows) exits on the cap within the first footer or two.
+#: function answers None and the caller has no bound (a driver tier then
+#: probes instead) — a table whose rows are spread over thousands of files
+#: AND still under the caller's cap is pathological, while the common
+#: 100 TB case (many files, many rows) exits on the cap within the first
+#: footer or two.
 PARQUET_COUNT_MAX_FOOTERS = 4096
 
 
@@ -381,27 +386,25 @@ def parquet_row_count(sf_dir: str, name: str, cap: int | None = None) -> int | N
     driver-local metadata reads, no Spark job.
 
     The fused driver tiers (graph.hits_topk_sides_driver /
-    pagerank_layered_driver) need a sound upper bound on a fact table's
-    row count before deciding to collect; a column-pruned Spark
-    ``count()`` answers it but costs a full scheduler round-trip
-    (~0.1 s at sf0.1) per query invocation. Footer ``num_rows`` is the
-    same exact number read straight off the files. Returns ``None`` when
-    the layout is unreadable (missing path, non-parquet, remote
-    filesystem without local access) or has more than
-    ``PARQUET_COUNT_MAX_FOOTERS`` files — callers must fall back to the
-    Spark count, so the bound stays sound everywhere.
+    pagerank_layered_driver) take a sound upper bound on a fact table's
+    row count as their `core.driver_tier.collect_bounded` bound; footer
+    ``num_rows`` is that exact number read straight off the files,
+    without the scheduler round-trip of a Spark ``count()``. Returns
+    ``None`` when the layout is unreadable (missing path, non-parquet,
+    remote filesystem without local access) or has more than
+    ``PARQUET_COUNT_MAX_FOOTERS`` files; the listing itself stops one
+    file past that guard.
 
-    ``cap`` (VERDICT r15 item 3) bounds the driver-side metadata work at
-    scale: callers that only need to DECIDE "is the table under my
-    collect budget?" pass their cap, and the loop stops reading footers
-    as soon as the running sum exceeds it — on a 100 TB local-FS table
-    that is one or two footers, not a full recursive listing + 10^5
-    single-threaded footer reads per query invocation (guide §5/§6).
-    With ``cap``, the return value is the exact count when it is
-    <= ``cap``, and otherwise SOME value > ``cap`` (a partial sum —
-    still a correct "over the cap" verdict, NOT the table's row count).
+    ``cap`` bounds the driver-side metadata work at scale: callers that
+    only need to DECIDE "is the table under my collect budget?" pass
+    their cap, and the loop stops reading footers as soon as the running
+    sum exceeds it. With ``cap``, the return value is the exact count
+    when it is <= ``cap``, and otherwise SOME value > ``cap`` (a partial
+    sum — still a correct "over the cap" verdict, NOT the table's row
+    count).
     """
     import glob
+    import itertools
     import os
 
     path = f"{sf_dir}/{name}.parquet"
@@ -411,8 +414,10 @@ def parquet_row_count(sf_dir: str, name: str, cap: int | None = None) -> int | N
         if os.path.isfile(path):
             files = [path]
         elif os.path.isdir(path):
-            files = sorted(glob.glob(os.path.join(path, "**", "*.parquet"),
-                                     recursive=True))
+            # the listing stops one file past the guard: a table with more
+            # files answers None without being listed in full
+            found = glob.iglob(os.path.join(path, "**", "*.parquet"), recursive=True)
+            files = sorted(itertools.islice(found, PARQUET_COUNT_MAX_FOOTERS + 1))
         else:
             return None
         if not files or len(files) > PARQUET_COUNT_MAX_FOOTERS:

@@ -25,6 +25,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from hadoop_data_lake_spark.core import driver_tier as DT
+from hadoop_data_lake_spark.core.driver_tier import _est_row_bytes
+from hadoop_data_lake_spark.core.io import local_frame
 
 
 class ConvergenceError(RuntimeError):
@@ -52,76 +57,6 @@ BROADCAST_STATE_MAX_ROWS = 1_000_000
 # BOTH caps, so the row-cap semantics every existing caller was tested
 # under can only narrow, never widen.
 BROADCAST_STATE_MAX_BYTES = 64 * 1024 * 1024
-
-# conservative on-wire width estimates per Spark SQL type; complex /
-# variable-length types get deliberately pessimistic defaults because a
-# too-small estimate ships an oversized broadcast while a too-large one
-# merely falls back to the (always-correct) shuffle formulation.
-_FIXED_TYPE_BYTES = {
-    "boolean": 1,
-    "byte": 1,
-    "short": 2,
-    "integer": 4,
-    "float": 4,
-    "date": 4,
-    "long": 8,
-    "double": 8,
-    "timestamp": 8,
-    "timestamp_ntz": 8,
-}
-
-
-def _est_row_bytes(schema) -> int:
-    """Pessimistic per-row byte estimate for a broadcast-candidate schema."""
-    total = 0
-    for f in schema.fields:
-        t = f.dataType.typeName()
-        if t in _FIXED_TYPE_BYTES:
-            total += _FIXED_TYPE_BYTES[t]
-        elif t == "decimal":
-            total += 16
-        elif t == "string":
-            total += 48  # id-ish labels in practice; pessimistic for keys
-        else:
-            # array / map / struct / binary: unbounded payloads have no
-            # business inside per-vertex iteration state; price them so a
-            # few such columns push a large frame over the byte cap.
-            total += 256
-    return max(total, 8)
-
-# Driver-collect budget for the layered-graph fast path's per-sink
-# out-degree histogram (pagerank_intexact): (sink, src_degree, count)
-# triples. 500k rows ~ 15 MB collected — the same order as the ANN probe
-# sets and shard plans the driver already holds; beyond it the recurrence
-# still runs over the histogram, just distributed (the middle tier).
-LAYERED_HIST_MAX_ROWS = 500_000
-# general-graph driver tier (round 11): a NON-layered graph whose whole
-# edge list fits the driver budget (vocab-bounded word co-occurrence
-# graphs — TextRank at ANY corpus scale — small dimension graphs) runs
-# all `iters` rounds in exact Python integer arithmetic after ONE collect
-# of the already-checkpointed edges: zero per-round Spark jobs instead of
-# iters x (join + agg + scalar) — on local[32] that is ~0.35-0.4 s of
-# fixed job overhead per round, ~3.5 s for the standard 10 rounds. The
-# node cap is checked first (free byproduct of the flags aggregate) so
-# big graphs never pay the edge-count job; both caps measured, never
-# assumed, and the distributed loop above them is unchanged. Bit-identical
-# by construction (the recurrence is integer div/sums, order-independent);
-# pinned by tests/test_round11_fixes.py.
-GENERAL_DRIVER_MAX_NODES = 200_000
-GENERAL_DRIVER_MAX_EDGES = 500_000
-GENERAL_DRIVER_TIER_ENABLED = True
-
-# numpy driver tier (round 12): HITS-style recurrences whose per-round
-# work is a gather + integer bincount are ~1000x cheaper per edge than
-# the pure-Python dict loops above, so they earn a wider edge cap. The
-# budget is BYTES, not dict ops: one Arrow collect of (long, long) edges
-# is 16 B/edge -> 4M edges = 64 MB on the driver, the same order as the
-# broadcast byte budget. Above it the distributed loop stands unchanged
-# (the customer x supplier purchase graph saturates at |C| x |S| but
-# GROWS with the corpus until then — this tier covers the bench scales
-# and bows out exactly where a 1000-executor cluster would want the
-# shuffle formulation anyway).
-NUMPY_DRIVER_MAX_EDGES = 4_000_000
 
 # Escape hatch for tests (and for callers that want the general loop's
 # plan shape regardless of structure): disables BOTH layered tiers.
@@ -152,12 +87,10 @@ _bcast_state = broadcast_bounded_state
 
 def _cc_driver_labels(raw: DataFrame, return_edges: bool = False):
     """Union-find core of the CC driver tier: (vertex -> min reachable
-    id) dict over the collected (u, v) pairs, or ``None`` to decline
-    (tier disabled upstream; edge count over ``GENERAL_DRIVER_MAX_EDGES``;
-    empty input — the distributed path's empty-frame shape is already
-    cheap; or u/v are not one shared integral/string type, the types
-    whose Spark ordering provably matches Python's — UTF-8 byte order
-    preserves code-point order).
+    id) dict over the (u, v) pairs collected through the driver-tier
+    gate, or ``None`` to decline. u and v must share one integral or
+    string type: the types whose Spark ordering provably matches
+    Python's (UTF-8 byte order preserves code-point order).
 
     Exactness: union always attaches the larger root under the smaller,
     so every tree's root is the minimum id of its set (singleton base
@@ -165,25 +98,20 @@ def _cc_driver_labels(raw: DataFrame, return_edges: bool = False):
     `min reachable vertex`, the star loop's fixed point. Duplicates,
     reversed duplicates and self-loops collapse harmlessly.
 
-    ``return_edges=True`` additionally hands back the collected edge
-    rows, so a caller that needs a PER-PAIR pass over the same bounded
-    pair list (cluster_safe_split_audit's leak audit, r16) folds it into
-    this one collect instead of collecting the checkpoint again.
+    ``return_edges=True`` additionally hands back the collected (u, v)
+    pairs, so a caller that needs a PER-PAIR pass over the same bounded
+    pair list (cluster_safe_split_audit's leak audit) folds it into this
+    one collect instead of collecting the checkpoint again.
     """
-    from pyspark.sql.types import (
-        ByteType,
-        IntegerType,
-        LongType,
-        ShortType,
-        StringType,
-    )
-
-    ut, vt = raw.schema["u"].dataType, raw.schema["v"].dataType
-    orderable = (ByteType, ShortType, IntegerType, LongType, StringType)
-    if ut != vt or not isinstance(ut, orderable):
+    if raw.schema["u"].dataType != raw.schema["v"].dataType:
         return None
-    n_edges = raw.count()  # cheap: raw is an eager localCheckpoint
-    if n_edges == 0 or n_edges > GENERAL_DRIVER_MAX_EDGES:
+    pdf = DT.collect_bounded(
+        raw.select("u", "v"),
+        max_rows=DT.MAX_ROWS,
+        types=DT.INTEGRAL + (T.StringType,),
+        null_cols=("u", "v"),
+    )
+    if pdf is None:
         return None
 
     parent: dict = {}
@@ -196,14 +124,8 @@ def _cc_driver_labels(raw: DataFrame, return_edges: bool = False):
             parent[x], x = r, parent[x]
         return r
 
-    rows = raw.collect()
-    for row in rows:
-        u, v = row[0], row[1]
-        if u is None or v is None:
-            # NULL ids are not orderable against ints/strings in Python —
-            # decline (ADVICE r15) so null-carrying pair frames keep the
-            # distributed loop's semantics instead of a TypeError.
-            return None
+    rows = list(zip(pdf["u"].tolist(), pdf["v"].tolist()))
+    for u, v in rows:
         if u not in parent:
             parent[u] = u
         if v not in parent:
@@ -220,29 +142,17 @@ def _cc_driver_labels(raw: DataFrame, return_edges: bool = False):
 def _cc_driver(raw: DataFrame):
     """Driver tier for `connected_components`: the union-find labels as a
     (vertex, component) DataFrame, or ``None`` when the core declines."""
-    from pyspark.sql.types import StructField, StructType
+    import pandas as pd
 
     labels = _cc_driver_labels(raw)
     if labels is None:
         return None
-    import pandas as pd
-
     ut = raw.schema["u"].dataType
-    # Arrow path: the row-based createDataFrame pays a fixed ~0.3-0.5 s
-    # per call (pickled-row parallelize) vs ~0.17 s for one pandas batch
-    # (r15 profile); at the 500k-edge cap the vertex list can reach ~1M
-    # rows where the difference is larger still.
-    out = pd.DataFrame(
-        {
-            "vertex": list(labels),
-            "component": list(labels.values()),
-        }
-    )
-    return raw.sparkSession.createDataFrame(
+    out = pd.DataFrame({"vertex": list(labels), "component": list(labels.values())})
+    return local_frame(
+        raw.sparkSession,
         out,
-        StructType(
-            [StructField("vertex", ut), StructField("component", ut)]
-        ),
+        T.StructType([T.StructField("vertex", ut), T.StructField("component", ut)]),
     )
 
 
@@ -265,7 +175,7 @@ def connected_components(
     silently WRONG (components split). strict=True (default) raises
     ConvergenceError instead; strict=False returns the partial labels for
     callers that genuinely want bounded-effort clustering. `max_iter` /
-    `strict` govern the DISTRIBUTED loop only: the r15 driver tier (see
+    `strict` govern the DISTRIBUTED loop only: the driver tier (see
     below) computes the exact fixed point directly, so under the cap it
     returns converged labels regardless of the iteration budget.
     """
@@ -278,34 +188,24 @@ def connected_components(
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
         eager=True
     )
-    # DRIVER TIER (round 15): near-dup pair sets are tiny relative to the
-    # corpus that produced them (253 pairs at sf0.1 for the minhash
-    # family), but the distributed star loop pays 3 shuffles + a
-    # fingerprint aggregate PER ROUND plus the verts/canonical-edge
-    # exchanges — fixed Spark overhead, not data cost (r14 profile:
-    # 0.85 s of dedup_clusters_minhash's 3.0 s). Under the edge cap, one
-    # collect of the checkpointed pairs (the count is ~free post-
-    # checkpoint, and the upstream pair pipeline ran exactly once at the
-    # checkpoint) + exact union-find with min-root election returns the
-    # identical (vertex, component = min reachable id) labeling — set
-    # semantics, engine-independent, pinned by test against the star
-    # loop. Over the cap, or for mixed/unorderable id types, the
-    # distributed loop below stands unchanged.
-    if GENERAL_DRIVER_TIER_ENABLED:
-        labels = _cc_driver(raw)
-        if labels is not None:
-            return labels
+    # Driver tier: near-dup pair sets are tiny relative to the corpus
+    # that produced them (253 pairs at sf0.1 for the minhash family), but
+    # the distributed star loop pays 3 shuffles + a fingerprint aggregate
+    # PER ROUND — fixed Spark overhead, not data cost. One bounded collect
+    # of the checkpointed pairs + exact union-find returns the identical
+    # (vertex, component = min reachable id) labeling.
+    labels = _cc_driver(raw)
+    if labels is not None:
+        return labels
     return _cc_distributed(raw, max_iter=max_iter, strict=strict)
 
 
 def _cc_distributed(raw: DataFrame, max_iter: int, strict: bool) -> DataFrame:
     """The alternating large-star/small-star loop over an ALREADY
-    eagerly-checkpointed (u, v) pair frame — factored out (r16, ADVICE
-    r15) so `dedup_clusters`' driver-tier decline path can run it
-    directly on its own checkpoint instead of re-entering
-    `connected_components` (which would re-checkpoint the materialized
-    frame and re-run the tier gate: one extra materialization job plus
-    an extra count per over-cap call)."""
+    eagerly-checkpointed (u, v) pair frame — factored out so
+    `dedup_clusters`' driver-tier decline path can run it directly on its
+    own checkpoint instead of re-entering `connected_components` (which
+    would re-checkpoint the materialized frame and re-run the tier gate)."""
     # every input vertex, kept aside so isolated (self-loop-only) vertices
     # still label themselves in the output.
     verts = (
@@ -412,41 +312,36 @@ def dedup_clusters(
     raw = pairs.select(
         F.col(id_a).alias("u"), F.col(id_b).alias("v")
     ).localCheckpoint(eager=True)
-    # DRIVER TIER (round 15): when the CC union-find tier fires, the
-    # sizes aggregate + join fold into the same driver pass — one local
-    # frame out instead of two more small Spark jobs per call.
-    if GENERAL_DRIVER_TIER_ENABLED:
-        labels = _cc_driver_labels(raw)
-        if labels is not None:
-            from collections import Counter
+    # Driver tier: when the CC union-find tier fires, the sizes aggregate
+    # + join fold into the same driver pass — one local frame out.
+    labels = _cc_driver_labels(raw)
+    if labels is not None:
+        from collections import Counter
 
-            from pyspark.sql.types import LongType, StructField, StructType
+        import pandas as pd
 
-            import pandas as pd
-
-            sizes_d = Counter(labels.values())
-            ut = raw.schema["u"].dataType
-            out = pd.DataFrame(
-                {
-                    "doc": list(labels),
-                    "cluster_rep": list(labels.values()),
-                    "cluster_size": [sizes_d[c] for c in labels.values()],
-                }
-            )
-            return raw.sparkSession.createDataFrame(
-                out,
-                StructType(
-                    [
-                        StructField("doc", ut),
-                        StructField("cluster_rep", ut),
-                        StructField("cluster_size", LongType()),
-                    ]
-                ),
-            )
-    # raw is already an eager checkpoint and the tier gate above already
-    # declined — run the star loop on it directly (r16, ADVICE r15):
-    # re-entering connected_components would checkpoint the checkpoint
-    # and probe the tier a second time.
+        sizes_d = Counter(labels.values())
+        ut = raw.schema["u"].dataType
+        out = pd.DataFrame(
+            {
+                "doc": list(labels),
+                "cluster_rep": list(labels.values()),
+                "cluster_size": [sizes_d[c] for c in labels.values()],
+            }
+        )
+        return local_frame(
+            raw.sparkSession,
+            out,
+            T.StructType(
+                [
+                    T.StructField("doc", ut),
+                    T.StructField("cluster_rep", ut),
+                    T.StructField("cluster_size", T.LongType()),
+                ]
+            ),
+        )
+    # raw is already an eager checkpoint and the tier already declined —
+    # run the star loop on it directly.
     comp = _cc_distributed(raw, max_iter=max_iter, strict=True)
     sizes = comp.groupBy("component").agg(F.count("*").alias("cluster_size"))
     return (
@@ -729,14 +624,18 @@ def pagerank_intexact(
             .agg(F.count("*").alias("cnt"))
             .localCheckpoint(eager=True)
         )
-        n_hist = hist_df.count()
-        if n_hist <= LAYERED_HIST_MAX_ROWS:
+        pdf = DT.collect_bounded(
+            hist_df, max_rows=DT.MAX_ROWS, null_cols=("dst",)
+        )
+        if pdf is not None:
             # driver tier: exact Python ints, zero per-round jobs
             from collections import defaultdict
 
+            import pandas as pd
+
             sink_hist: dict[object, list[tuple[int, int]]] = defaultdict(list)
-            for r in hist_df.collect():
-                sink_hist[r["dst"]].append((r["deg"], r["cnt"]))
+            for d, dg, c in zip(*(pdf[k].tolist() for k in ("dst", "deg", "cnt"))):
+                sink_hist[d].append((dg, c))
             r_src = scale // n  # uniform source rank (round 0 init)
             dsum = n_dang * (scale // n)  # sinks all start at init rank
             sink_rank: dict[object, int] = {}
@@ -752,23 +651,15 @@ def pagerank_intexact(
                     new_dsum += v
                 r_src = base + (damping_pct * d_per) // 100
                 dsum = new_dsum
-            from pyspark.sql.types import LongType, StructField, StructType
-
-            import pandas as pd
-
-            # Arrow path (r15): the row-based createDataFrame pays a fixed
-            # ~0.3-0.5 s per call vs ~0.17 s for one pandas batch.
-            sinks_df = e.sparkSession.createDataFrame(
+            sinks_df = local_frame(
+                e.sparkSession,
                 pd.DataFrame(
-                    {
-                        "node": list(sink_rank),
-                        "rank_units": list(sink_rank.values()),
-                    }
+                    {"node": list(sink_rank), "rank_units": list(sink_rank.values())}
                 ),
-                StructType(
+                T.StructType(
                     [
-                        StructField("node", nodes_f.schema["node"].dataType),
-                        StructField("rank_units", LongType()),
+                        T.StructField("node", nodes_f.schema["node"].dataType),
+                        T.StructField("rank_units", T.LongType()),
                     ]
                 ),
             )
@@ -820,36 +711,33 @@ def pagerank_intexact(
 
     # GENERAL-GRAPH DRIVER TIER — the non-layered analogue of the layered
     # driver tier above: when the node count (free from the flags
-    # aggregate) and the edge count (one cheap count over the checkpointed
-    # RDD, only attempted under the node cap) both fit the driver budget,
-    # collect the raw edge list ONCE and run every round in Python ints.
-    # The recurrence below is exactly the distributed loop's: per round,
-    # contributions rank div deg summed per destination, the dangling mass
-    # entering every node as dsum div n, zero-in-degree nodes getting the
-    # closed-form rank. Integer div/sums are order-independent, so the
-    # result is bit-identical to the distributed loop (pinned by test).
-    # At 100 TB this tier is for graphs whose SIZE does not scale with the
-    # corpus — word co-occurrence graphs are vocabulary-bounded — while
-    # corpus-scaled graphs (purchase/web graphs) fail the caps and take
-    # the distributed loop unchanged.
-    if (
-        GENERAL_DRIVER_TIER_ENABLED
-        and iters >= 1
-        and n <= GENERAL_DRIVER_MAX_NODES
-        and e.count() <= GENERAL_DRIVER_MAX_EDGES
-    ):
+    # aggregate) fits the node cap and the edge list passes the driver-tier
+    # gate, run every round in Python ints. The recurrence below is
+    # exactly the distributed loop's: per round, contributions rank div
+    # deg summed per destination, the dangling mass entering every node as
+    # dsum div n, zero-in-degree nodes getting the closed-form rank.
+    # Integer div/sums are order-independent, so the result is
+    # bit-identical to the distributed loop (pinned by test). At 100 TB
+    # this tier is for graphs whose SIZE does not scale with the corpus —
+    # word co-occurrence graphs are vocabulary-bounded — while
+    # corpus-scaled graphs fail the caps and take the distributed loop.
+    pdf = None
+    if iters >= 1 and n <= DT.MAX_NODES:
+        pdf = DT.collect_bounded(
+            e.select("src", "dst"), max_rows=DT.MAX_ROWS, null_cols=("src", "dst")
+        )
+    if pdf is not None:
         from collections import defaultdict
+
+        import pandas as pd
 
         out_deg_d: dict[object, int] = defaultdict(int)
         in_edges: dict[object, list] = defaultdict(list)
-        src_set = set()
-        dst_set = set()
-        for r in e.select("src", "dst").collect():
-            s, d = r["src"], r["dst"]
+        for s, d in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
             out_deg_d[s] += 1
             in_edges[d].append(s)
-            src_set.add(s)
-            dst_set.add(d)
+        src_set = set(out_deg_d)
+        dst_set = set(in_edges)
         all_nodes = src_set | dst_set
         dang_nodes = all_nodes - src_set  # no out-edges
         rank = {v: scale // n for v in all_nodes}
@@ -866,19 +754,13 @@ def pagerank_intexact(
                 else:
                     new_rank[v] = base + (damping_pct * d_per) // 100
             rank = new_rank
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        import pandas as pd
-
-        # Arrow path (r15): same fixed-cost argument as the layered tier.
-        return e.sparkSession.createDataFrame(
-            pd.DataFrame(
-                {"node": list(rank), "rank_units": list(rank.values())}
-            ),
-            StructType(
+        return local_frame(
+            e.sparkSession,
+            pd.DataFrame({"node": list(rank), "rank_units": list(rank.values())}),
+            T.StructType(
                 [
-                    StructField("node", nodes_f.schema["node"].dataType),
-                    StructField("rank_units", LongType()),
+                    T.StructField("node", nodes_f.schema["node"].dataType),
+                    T.StructField("rank_units", T.LongType()),
                 ]
             ),
         )
@@ -1114,55 +996,40 @@ def lpa_communities(
     )
     n_verts = labels.count()  # bounded driver scalar: enables the state broadcast
 
-    # GENERAL-DRIVER TIER (round 11, the pagerank_intexact pattern): a
-    # dimension-bounded graph — brand/category co-occurrence graphs stay
-    # (dim x dim) at ANY corpus scale because the caller pre-aggregates
-    # co-occurrence counts into the edge weight — runs all rounds in
-    # Python after ONE collect of the checkpointed symmetrized edges.
-    # The recurrence is integer weight sums + (score desc, label asc)
-    # argmax: order-independent, so bit-identical to the distributed loop
-    # (pinned by test). Corpus-scaled graphs fail the measured caps and
-    # take the loop below unchanged.
-    if (
-        GENERAL_DRIVER_TIER_ENABLED
-        and iters >= 1
-        and n_verts <= GENERAL_DRIVER_MAX_NODES
-        and e.count() <= GENERAL_DRIVER_MAX_EDGES
-    ):
+    # Driver tier (the pagerank_intexact pattern): a dimension-bounded
+    # graph — brand/category co-occurrence graphs stay (dim x dim) at ANY
+    # corpus scale because the caller pre-aggregates co-occurrence counts
+    # into the edge weight — runs all rounds in Python after ONE bounded
+    # collect of the checkpointed symmetrized edges. The recurrence is
+    # integer weight sums + (score desc, label asc) argmax:
+    # order-independent, so bit-identical to the distributed loop (pinned
+    # by test). NULL weights decline with the ids: SQL SUM skips them, and
+    # pandas would hand them over as float NaN.
+    pdf = None
+    if iters >= 1 and n_verts <= DT.MAX_NODES:
+        pdf = DT.collect_bounded(e, max_rows=DT.MAX_ROWS, null_cols=("s", "d", "w"))
+    if pdf is not None:
         from collections import defaultdict
 
-        edge_rows = [(r["s"], r["d"], r["w"]) for r in e.collect()]
+        import pandas as pd
+
+        edge_rows = list(zip(*(pdf[k].tolist() for k in ("s", "d", "w"))))
         label = {s: s for s, _, _ in edge_rows}
         for _ in range(iters):
-            # per-group sums mirror SQL SUM null semantics exactly: null
-            # weights are skipped, but a group whose weights are ALL null
-            # keeps a None score (not 0) so the argmax below can rank it
-            # the way the distributed topk does (desc => nulls LAST).
-            tally: dict[object, dict[object, object]] = defaultdict(dict)
+            tally: dict[object, dict[object, int]] = defaultdict(dict)
             for s, d, wt in edge_rows:
-                lb = label[d]
                 grp = tally[s]
-                if lb not in grp:
-                    grp[lb] = wt  # may be None — the SQL "sum of nulls"
-                elif wt is not None:
-                    grp[lb] = (grp[lb] or 0) + wt
+                grp[label[d]] = grp.get(label[d], 0) + wt
             label = {
-                v: min(
-                    scores.items(),
-                    key=lambda kv: (kv[1] is None, -(kv[1] or 0), kv[0]),
-                )[0]
+                v: min(scores.items(), key=lambda kv: (-kv[1], kv[0]))[0]
                 for v, scores in tally.items()
             }
         csize: dict[object, int] = defaultdict(int)
         for lb in label.values():
             csize[lb] += 1
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        import pandas as pd
-
         vt = e.schema["s"].dataType
-        # Arrow path (r15): same fixed-cost argument as the pagerank tiers.
-        return e.sparkSession.createDataFrame(
+        return local_frame(
+            e.sparkSession,
             pd.DataFrame(
                 {
                     "vertex": list(label),
@@ -1170,11 +1037,11 @@ def lpa_communities(
                     "community_size": [csize[lb] for lb in label.values()],
                 }
             ),
-            StructType(
+            T.StructType(
                 [
-                    StructField("vertex", vt),
-                    StructField("community", vt),
-                    StructField("community_size", LongType()),
+                    T.StructField("vertex", vt),
+                    T.StructField("community", vt),
+                    T.StructField("community_size", T.LongType()),
                 ]
             ),
         )
@@ -1208,12 +1075,18 @@ def lpa_communities(
 
 
 def _hits_numpy_rounds(hub_i, auth_i, n_h: int, n_a: int, rounds: int, scale: int):
-    """The shared numpy HITS recurrence (one kernel, two tiers): exact
-    int64 bincount rounds over index-encoded DISTINCT edges. The
-    bit-identity proof lives on `hits_scaled_driver` (every aggregate is
-    a sum of non-negative ints <= scale, so per-node sums stay < 2^53 —
-    float64 bincount accumulation is exact — and the rescale numerator
-    stays < 2^63); callers must have checked that envelope already."""
+    """The numpy HITS recurrence: exact int64 bincount rounds over
+    index-encoded edges, each half-round followed by the integer rescale
+    ``v * scale // max(v)``.
+
+    Exactness: every aggregate is a sum of non-negative ints <= `scale`,
+    so a per-node sum is <= scale * |E| < 2^53 — np.bincount's float64
+    accumulation is EXACT (every addend and partial sum is a
+    representable integer), hence order-independent like the distributed
+    integer hash aggregate; the rescale numerator v * scale <=
+    scale^2 * |E| < 2^63 never overflows int64, and floor-div of
+    non-negative ints equals SQL `div`. Callers must have checked that
+    envelope against the edge count."""
     import numpy as np
 
     def _rescale(v):
@@ -1241,65 +1114,49 @@ def hits_topk_sides_driver(
     scale: int = 1_000_000,
     n_edges_bound: int | None = None,
 ):
-    """Fused driver tier (round 14) for top-k HITS
+    """Fused driver tier for top-k HITS
     (queries/tpch_queries.hits_hubs_authorities): collect the RAW —
     possibly duplicated — edge projection ONCE, dedupe pairs in numpy,
-    run the shared integer recurrence, and return ONLY the 2k result
-    rows as a ``(side, node, score)`` DataFrame (``'hub'`` rows first,
-    each side ordered score desc / node asc — the `_hits_top_sides`
-    contract). The caller thereby skips the distinct exchange, the edge
-    checkpoint, the countDistinct cap job AND the two per-node score
-    frames (r13 profile at sf0.1: edge build 1.06 s + counts 0.24 s +
-    per-node shaping 0.69 s of a 2.4 s query).
+    run the integer recurrence, and return ONLY the 2k result rows as a
+    ``(side, node, score)`` DataFrame (``'hub'`` rows first, each side
+    ordered score desc / node asc — the `_hits_top_sides` contract). The
+    caller thereby skips the distinct exchange, the edge checkpoint, the
+    count job and the two per-node score frames.
 
-    ``n_edges_bound`` must be a SOUND upper bound on the collected row
-    count, obtainable without executing the join — e.g. the fact-side
-    row count when the join key is the other side's primary key (an
-    inner join on a unique key cannot multiply fact rows). The edge-count
-    cap (``NUMPY_DRIVER_MAX_EDGES`` — itself a byte budget at 16 B/edge,
-    see the constant) and the exactness envelope are checked against the
-    bound (conservative: the deduped edge count is <= the bound); a
-    defensive post-collect recheck routes to ``None`` if the promise was
-    broken.
-    No node cap is needed: unlike `hits_scaled_driver`, no per-node
-    Spark frame is ever built (numpy holds <= 2 * |E| node slots, and
-    only 2k rows go back through createDataFrame).
+    ``n_edges_bound`` is the gate's sound bound on the collected row
+    count (`core.driver_tier`), e.g. the fact-side row count when the
+    join key is the other side's primary key. The cap
+    (``NUMPY_MAX_ROWS``) and the exactness envelope are checked against
+    it (conservative: the deduped edge count is <= the bound).
 
-    Returns ``None`` when any cap fails — callers fall back to the r12
-    two-frame tier / the distributed loop unchanged. Both node columns
-    must share one INTEGRAL Spark type (the unioned ``node`` column's
-    type; non-integral node ids decline to the fallback rather than
-    crash in the numpy index encoding — ADVICE r14).
+    Returns ``None`` when the gate or the envelope declines — the caller
+    then runs the distributed loop. Both node columns must share one
+    INTEGRAL Spark type, the numpy index encoding's domain.
     """
-    if not GENERAL_DRIVER_TIER_ENABLED:
-        return None
     if rounds < 1 or k < 1 or scale > 1_000_000:
         return None  # the <2^53 / <2^63 exactness chain is sized to 1e6
-    if n_edges_bound is None or n_edges_bound > NUMPY_DRIVER_MAX_EDGES:
+    if n_edges_bound is None:
+        return None  # a probe would run the un-materialized join twice
+    if scale * n_edges_bound >= 2**53 or scale * scale * n_edges_bound >= 2**63:
         return None
-    if (
-        scale * n_edges_bound >= 2**53
-        or scale * scale * n_edges_bound >= 2**63
-    ):
+    if e.schema[hub_col].dataType != e.schema[auth_col].dataType:
         return None
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    integral = (ByteType, ShortType, IntegerType, LongType)
-    if (
-        e.schema[hub_col].dataType != e.schema[auth_col].dataType
-        or not isinstance(e.schema[hub_col].dataType, integral)
-    ):
+    pdf = DT.collect_bounded(
+        e.select(hub_col, auth_col),
+        max_rows=DT.NUMPY_MAX_ROWS,
+        bound=n_edges_bound,
+        types=DT.INTEGRAL,
+        null_cols=(hub_col, auth_col),
+    )
+    if pdf is None:
         return None
     import numpy as np
+    import pandas as pd
 
-    pdf = e.toPandas()
-    n_raw = len(pdf)
-    if n_raw == 0 or n_raw > n_edges_bound:
-        return None  # empty, or the caller's bound was not sound
     hub_u, hub_i = np.unique(pdf[hub_col].to_numpy(), return_inverse=True)
     auth_u, auth_i = np.unique(pdf[auth_col].to_numpy(), return_inverse=True)
     # pair dedupe == SQL DISTINCT: encode (hub, auth) as one int64 —
-    # hub_i < 2*|E| and len(auth_u) <= |E| <= 4e6, so the product stays
+    # hub_i < |E| and len(auth_u) <= |E| <= 4e6, so the product stays
     # far under 2^63.
     code = np.unique(hub_i.astype(np.int64) * len(auth_u) + auth_i)
     hub_i = code // len(auth_u)
@@ -1310,31 +1167,25 @@ def hits_topk_sides_driver(
         # (score desc, node asc) — np.lexsort's LAST key is primary;
         # -v cannot overflow (0 <= v <= scale).
         order = np.lexsort((nodes, -v))[:k]
-        return [(int(nodes[j]), int(v[j])) for j in order]
+        return nodes[order], v[order]
 
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    import pandas as pd
-
-    hub_top = _topk(hub_u, h)
-    auth_top = _topk(auth_u, a)
-    # Arrow path even for 2k rows: the row-based createDataFrame pays a
-    # fixed ~0.3-0.5 s per call (schema verification + pickled-row
-    # parallelize job) vs ~0.17 s via one pandas/Arrow batch (r15 profile).
+    hub_n, hub_s = _topk(hub_u, h)
+    auth_n, auth_s = _topk(auth_u, a)
     out = pd.DataFrame(
         {
-            "side": ["hub"] * len(hub_top) + ["auth"] * len(auth_top),
-            "node": [n for n, _ in hub_top] + [n for n, _ in auth_top],
-            "score": [s for _, s in hub_top] + [s for _, s in auth_top],
+            "side": ["hub"] * len(hub_n) + ["auth"] * len(auth_n),
+            "node": np.concatenate([hub_n, auth_n]),
+            "score": np.concatenate([hub_s, auth_s]),
         }
     )
-    return e.sparkSession.createDataFrame(
+    return local_frame(
+        e.sparkSession,
         out,
-        StructType(
+        T.StructType(
             [
-                StructField("side", StringType()),
-                StructField("node", e.schema[hub_col].dataType),
-                StructField("score", LongType()),
+                T.StructField("side", T.StringType()),
+                T.StructField("node", e.schema[hub_col].dataType),
+                T.StructField("score", T.LongType()),
             ]
         ),
     )
@@ -1349,7 +1200,7 @@ def pagerank_layered_driver(
     damping_pct: int = 85,
     n_edges_bound: int | None = None,
 ):
-    """Fused driver tier (round 15) for LAYERED fixed-point PageRank
+    """Fused driver tier for LAYERED fixed-point PageRank
     (queries/tpch_queries.pagerank_det) — the pagerank analogue of
     `hits_topk_sides_driver`: collect the RAW, possibly duplicated edge
     projection ONCE (Arrow), then pair-dedup, out-degrees, the layered
@@ -1357,9 +1208,7 @@ def pagerank_layered_driver(
     rounds run in numpy/driver integers. The caller thereby skips the
     entire distributed edge build (repartition + dropDuplicates + degree
     window), the flags union-aggregate, the histogram groupBy and their
-    eager checkpoints (r15 profile at sf0.1: raw-join collect 0.35 s +
-    numpy dedup/degree 0.13 s vs 2.0 s for the full distributed-build
-    query whose per-round arithmetic ALREADY ran on the driver).
+    eager checkpoints.
 
     Bit-identity with `pagerank_intexact`'s layered tiers: the recurrence
     below is literally the layered driver tier's —
@@ -1375,44 +1224,33 @@ def pagerank_layered_driver(
     Pinned by tests against both distributed tiers on random bipartite
     multigraphs.
 
-    ``n_edges_bound`` must be a SOUND upper bound on the collected row
-    count obtainable without executing the join (the
-    `hits_topk_sides_driver` contract — e.g. the fact-side row count when
-    the join key is the other side's primary key); a defensive
-    post-collect recheck declines if the promise was broken.
+    ``n_edges_bound`` is the gate's sound bound on the collected row
+    count (the `hits_topk_sides_driver` contract).
 
     Returns ``None`` (caller falls back to the distributed build +
-    `pagerank_intexact` unchanged) when: the tier is disabled, a cap or
-    the exactness envelope fails, node columns are not one shared
-    integral type, the collected edge list is empty, or the graph is NOT
-    layered (some node appears on both sides — the general loop's
-    semantics, which this tier does not replicate).
+    `pagerank_intexact` unchanged) when the gate or the envelope
+    declines, the node columns are not one shared integral type, or the
+    graph is NOT layered (some node appears on both sides — the general
+    loop's semantics, which this tier does not replicate).
     """
-    if not GENERAL_DRIVER_TIER_ENABLED:
-        return None
     if iters < 1 or scale > 10**12 or not 0 < damping_pct < 100:
         return None  # the <2^53 mass envelope is sized to scale <= 1e12
-    if n_edges_bound is None or n_edges_bound > NUMPY_DRIVER_MAX_EDGES:
+    if n_edges_bound is None:
+        return None  # a probe would run the un-materialized join twice
+    if e.schema[src].dataType != e.schema[dst].dataType:
         return None
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    integral = (ByteType, ShortType, IntegerType, LongType)
-    if (
-        e.schema[src].dataType != e.schema[dst].dataType
-        or not isinstance(e.schema[src].dataType, integral)
-    ):
+    pdf = DT.collect_bounded(
+        e.select(src, dst),
+        max_rows=DT.NUMPY_MAX_ROWS,
+        bound=n_edges_bound,
+        types=DT.INTEGRAL,
+        null_cols=(src, dst),
+    )
+    if pdf is None:
         return None
     import numpy as np
+    import pandas as pd
 
-    pdf = e.toPandas()
-    n_raw = len(pdf)
-    if n_raw == 0 or n_raw > n_edges_bound:
-        return None  # empty, or the caller's bound was not sound
-    if pdf[src].isna().any() or pdf[dst].isna().any():
-        # nullable integral + actual NULLs arrives as float64+NaN and the
-        # final astype would fabricate garbage node ids — decline (ADVICE
-        # r15); the distributed path keeps NULL as a node key.
-        return None
     src_u, src_i = np.unique(pdf[src].to_numpy(), return_inverse=True)
     dst_u, dst_i = np.unique(pdf[dst].to_numpy(), return_inverse=True)
     # layered structure test (== the operator's n_mid == 0): no node may
@@ -1456,22 +1294,9 @@ def pagerank_layered_driver(
         dsum = int(sink_rank.sum())
         r_src = base + (damping_pct * d_per) // 100
 
-    from pyspark.sql.types import StructField, StructType
-
-    import pandas as pd
-
-    # Arrow path: |V| result rows (all sinks + all sources) make the
-    # row-based createDataFrame measurable (~0.47 s vs ~0.19 s for 16k
-    # rows, r15 profile) — ship one pandas frame instead.
-    np_dtype = {
-        ByteType: np.int8,
-        ShortType: np.int16,
-        IntegerType: np.int32,
-        LongType: np.int64,
-    }[type(e.schema[src].dataType)]
     out = pd.DataFrame(
         {
-            "node": np.concatenate([dst_u, src_u]).astype(np_dtype, copy=False),
+            "node": np.concatenate([dst_u, src_u]),
             "rank_units": np.concatenate(
                 [
                     sink_rank.astype(np.int64, copy=False),
@@ -1480,101 +1305,13 @@ def pagerank_layered_driver(
             ),
         }
     )
-    return e.sparkSession.createDataFrame(
+    return local_frame(
+        e.sparkSession,
         out,
-        StructType(
+        T.StructType(
             [
-                StructField("node", e.schema[src].dataType),
-                StructField("rank_units", LongType()),
+                T.StructField("node", e.schema[src].dataType),
+                T.StructField("rank_units", T.LongType()),
             ]
         ),
     )
-
-
-def hits_scaled_driver(
-    e: DataFrame,
-    hub_col: str,
-    auth_col: str,
-    n_hubs: int,
-    n_auths: int,
-    rounds: int = 2,
-    scale: int = 1_000_000,
-    n_edges: int | None = None,
-):
-    """Driver tier (round 12) for the integer-rescaled HITS fixed point
-    (queries/tpch_queries.hits_hubs_authorities): when the bipartite
-    graph fits the driver budget, collect the checkpointed edge list
-    ONCE (Arrow) and run every mutual-reinforcement round as a numpy
-    gather + bincount in exact integer arithmetic — zero per-round Spark
-    jobs instead of rounds x 2 x (join + agg + scalar max). Returns
-    ``(hub_scores, auth_scores)`` DataFrames with columns
-    ``(hub_col, 'v')`` / ``(auth_col, 'v')`` — the same shape the
-    distributed loop's final score frames carry, so the caller's top-k
-    shaping is shared verbatim by both paths — or ``None`` when any cap
-    fails (the distributed loop then stands unchanged).
-
-    Bit-identity argument (pinned by tests/test_round12_fixes.py):
-    every aggregate is a sum of non-negative ints <= `scale`, so a
-    per-node sum is <= scale * n_edges <= 1e6 * 4e6 = 4e12 < 2^53 —
-    np.bincount's float64 accumulation is therefore EXACT (every addend
-    and partial sum is a representable integer), hence order-independent
-    like the distributed integer hash aggregate; the rescale numerator
-    v * scale <= 4e18 < 2^63-1 never overflows int64, and floor-div of
-    non-negative ints equals SQL `div`.
-    """
-    if not GENERAL_DRIVER_TIER_ENABLED:
-        return None
-    if rounds < 1 or scale > 1_000_000:
-        return None  # the <2^53 / <2^63 exactness chain is sized to 1e6
-    if n_hubs + n_auths > GENERAL_DRIVER_MAX_NODES:
-        return None
-    # callers that already know |E| (folded into their flags aggregate)
-    # pass it in so the cap check costs zero extra jobs; otherwise it is
-    # counted here, and only under the node cap (the r11 gate order).
-    n_e = e.count() if n_edges is None else n_edges
-    if n_e > NUMPY_DRIVER_MAX_EDGES:
-        return None
-    # Tie the exactness envelope to the ACTUAL edge count, not only the
-    # mutable module cap (driver-ADVICE r12): bincount's float64 sums are
-    # exact only while scale*|E| < 2^53, and the rescale numerator fits
-    # int64 only while scale^2*|E| < 2^63 (v <= scale*|E|); numpy wraps
-    # int64 silently, so a future NUMPY_DRIVER_MAX_EDGES raise must not
-    # be able to outrun the proof — the guard travels with the function.
-    if scale * n_e >= 2**53 or scale * scale * n_e >= 2**63:
-        return None
-    import numpy as np
-
-    pdf = e.toPandas()
-    if len(pdf) == 0:
-        return None
-    hub_u, hub_i = np.unique(pdf[hub_col].to_numpy(), return_inverse=True)
-    auth_u, auth_i = np.unique(pdf[auth_col].to_numpy(), return_inverse=True)
-    h, a = _hits_numpy_rounds(hub_i, auth_i, len(hub_u), len(auth_u), rounds, scale)
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    import pandas as pd
-
-    # Arrow path (r16, completing the r15 conversion): the row-based
-    # createDataFrame pays ~0.3-0.5 s fixed per call vs ~0.13-0.19 s for
-    # one pandas batch — and this tier returns TWO frames per call.
-    spark = e.sparkSession
-    h_df = spark.createDataFrame(
-        pd.DataFrame({hub_col: hub_u, "v": h}),
-        StructType(
-            [
-                StructField(hub_col, e.schema[hub_col].dataType),
-                StructField("v", LongType()),
-            ]
-        ),
-    )
-    a_df = spark.createDataFrame(
-        pd.DataFrame({auth_col: auth_u, "v": a}),
-        StructType(
-            [
-                StructField(auth_col, e.schema[auth_col].dataType),
-                StructField("v", LongType()),
-            ]
-        ),
-    )
-    return h_df, a_df

@@ -24,19 +24,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-#: Row cap for the prefix driver tier — same budget class as
-#: graph.GENERAL_DRIVER_MAX_EDGES (one bounded Arrow collect).
-PREFIX_DRIVER_MAX_ROWS = 500_000
-#: Byte budget for the same collect (ADVICE r15): the row cap alone does
-#: not bound the collect for wide frames, so the effective row cap is
-#: min(PREFIX_DRIVER_MAX_ROWS, MAX_BYTES / est row width) over the
-#: schema-estimated width — the same order as graph's 4M-edge x 16 B
-#: numpy-tier budget. Unbounded-payload columns (arrays/maps/structs/
-#: binary) decline outright: their width is not estimable from the
-#: schema, and a 500k-row frame of per-doc token arrays is a multi-GB
-#: driver collect no row cap can see coming.
-PREFIX_DRIVER_MAX_BYTES = 64 * 1024 * 1024
+from hadoop_data_lake_spark.core import driver_tier as DT
+from hadoop_data_lake_spark.core.io import local_frame
 
 
 def _prefix_agg_driver(
@@ -46,84 +37,45 @@ def _prefix_agg_driver(
     max_cols: dict[str, str],
     n_rows_bound: int | None = None,
 ):
-    """Driver tier (round 15) for `prefix_agg`: one Arrow collect + numpy
-    cumsum/cummax instead of range-repartition + window + checkpoint +
-    totals collect + offset map (4 jobs and an exchange for what is, on
-    every current caller, a dimension-bounded frame — 85k (day, cents)
-    groups for value_psi_drift at sf0.1, measured 0.69 s distributed).
+    """Driver tier for `prefix_agg`: one bounded collect
+    (`core.driver_tier`) + numpy cumsum/cummax instead of
+    range-repartition + window + checkpoint + totals collect + offset map
+    (4 jobs and an exchange for what is, on every current caller, a
+    dimension-bounded frame).
 
     Exactness: the contract requires `order_cols` to be a total order, so
     one stable driver-side sort reproduces the distributed row order;
     integer running sums are order-independent and checked against an
     int64 overflow envelope; running max does no arithmetic at all.
 
-    Declines (``None`` — the distributed two-phase path below runs
-    unchanged) when: the shared driver-tier switch is off; the frame
-    exceeds the effective cap — min(``PREFIX_DRIVER_MAX_ROWS``,
-    ``PREFIX_DRIVER_MAX_BYTES`` / estimated row width) — by the caller's
-    ``n_rows_bound`` when one is supplied (NO probe runs: an over-bound
-    input never executes its upstream twice — VERDICT r15 item 6) or by
-    the limit(cap+1) probe otherwise; any column (passthrough included)
-    is an array/map/struct/binary type (ADVICE r15: the collect budget is
-    BYTES, and unbounded payloads defeat any schema estimate); a sum
-    input is not integral (float sums are order-dependent in the low
-    bits — the distributed grouping is the behavioral contract); an order
-    column is not an integral/string/date/timestamp type (Python and
-    Spark agree on those orderings); any involved column carries NULLs or
-    NaNs (window aggregates have skip-null semantics this tier does not
-    replicate); a passthrough integral column carries NULLs (pandas
-    round-trips it through float64, silently losing >= 2^53 precision —
-    ADVICE r15); or a running sum could overflow int64.
+    Beyond the gate's own declines, the tier's types are: integral sum
+    inputs (float sums are order-dependent in the low bits), order
+    columns whose Python and Spark orderings agree (integral, string,
+    date, timestamp), and max inputs of those or floating types. NULLs
+    decline in every involved column (window aggregates skip them) and
+    in passthrough integral columns (pandas would round-trip them through
+    float64, losing >= 2^53 precision). ``n_rows_bound`` is the gate's
+    sound bound.
     """
-    from hadoop_data_lake_spark.operators import graph as _G
-
-    if not _G.GENERAL_DRIVER_TIER_ENABLED:
-        return None
     import numpy as np
-    from pyspark.sql import types as T
 
-    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    order_ok = DT.INTEGRAL + (T.StringType, T.DateType, T.TimestampType)
+    # each later role's types are a subset of the earlier one's, so a
+    # column in several roles keeps the intersection
+    types = {c: order_ok + (T.FloatType, T.DoubleType) for c in max_cols.values()}
+    types.update({c: order_ok for c in order_cols})
+    types.update({c: DT.INTEGRAL for c in sum_cols.values()})
     schema = {f.name: f.dataType for f in df.schema.fields}
-    order_ok = integral + (T.StringType, T.DateType, T.TimestampType)
-    max_ok = integral + (
-        T.StringType,
-        T.FloatType,
-        T.DoubleType,
-        T.DateType,
-        T.TimestampType,
+    pdf = DT.collect_bounded(
+        df,
+        max_rows=DT.MAX_ROWS,
+        bound=n_rows_bound,
+        types=types,
+        null_cols=[
+            c for c in df.columns if c in types or isinstance(schema[c], DT.INTEGRAL)
+        ],
     )
-    if any(not isinstance(schema[c], order_ok) for c in order_cols):
-        return None
-    if any(not isinstance(schema[s], integral) for s in sum_cols.values()):
-        return None
-    if any(not isinstance(schema[s], max_ok) for s in max_cols.values()):
-        return None
-    if any(
-        isinstance(t, (T.ArrayType, T.MapType, T.StructType, T.BinaryType))
-        for t in schema.values()
-    ):
-        return None
-    cap = min(
-        PREFIX_DRIVER_MAX_ROWS,
-        PREFIX_DRIVER_MAX_BYTES // _G._est_row_bytes(df.schema),
-    )
-    if n_rows_bound is not None and n_rows_bound > cap:
-        return None  # caller-known over-cap: decline without executing df
-
-    pdf = df.limit(cap + 1).toPandas()
-    if len(pdf) == 0 or len(pdf) > cap:
-        return None
-    involved = list(
-        dict.fromkeys([*order_cols, *sum_cols.values(), *max_cols.values()])
-    )
-    if pdf[involved].isna().any().any():
-        return None
-    passthrough_integral = [
-        c
-        for c in df.columns
-        if c not in involved and isinstance(schema[c], integral)
-    ]
-    if passthrough_integral and pdf[passthrough_integral].isna().any().any():
+    if pdf is None:
         return None
 
     pdf = pdf.sort_values(list(order_cols), kind="stable", ignore_index=True)
@@ -141,8 +93,8 @@ def _prefix_agg_driver(
         pdf[out] = np.maximum.accumulate(pdf[src].to_numpy())
         new_fields.append(T.StructField(out, schema[src]))
 
-    return df.sparkSession.createDataFrame(
-        pdf, T.StructType(list(df.schema.fields) + new_fields)
+    return local_frame(
+        df.sparkSession, pdf, T.StructType(list(df.schema.fields) + new_fields)
     )
 
 
@@ -168,7 +120,7 @@ def prefix_agg(
     be a total order for per-row determinism; order-insensitive downstream
     aggregates (bin edges, moments) tolerate ties.
 
-    ``n_rows_bound`` (r16, VERDICT r15 item 6): a SOUND upper bound on
+    ``n_rows_bound``: a SOUND upper bound on
     `df`'s row count the caller already knows without executing it (a
     dimension table's parquet footer count, a broadcast-budget contract).
     When it exceeds the driver-tier cap the tier declines WITHOUT its
@@ -182,9 +134,9 @@ def prefix_agg(
     if not sum_cols and not max_cols:
         raise ValueError("prefix_agg needs at least one running column")
     order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
-    # DRIVER TIER (round 15): dimension-bounded frames skip the exchange +
-    # window + checkpoint + totals machinery entirely; over-cap or
-    # type-unsafe inputs fall through to the two-phase path unchanged.
+    # Driver tier: dimension-bounded frames skip the exchange + window +
+    # checkpoint + totals machinery entirely; over-cap or type-unsafe
+    # inputs fall through to the two-phase path unchanged.
     out = _prefix_agg_driver(
         df, order_cols, sum_cols, max_cols, n_rows_bound=n_rows_bound
     )

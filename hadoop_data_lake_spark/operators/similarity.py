@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hadoop_data_lake_spark.core.io import local_frame
 from hadoop_data_lake_spark.functions.vectors import cosine, dot, norm
 from hadoop_data_lake_spark.operators.windows import topk_per_group
 
@@ -907,8 +908,6 @@ def ivf_build(
         .parquet(f"{path}/cells")
     )
     spark = corpus.sparkSession
-    from hadoop_data_lake_spark.core.io import local_frame
-
     local_frame(
         spark,
         [(j, [float(x) for x in centers[j]]) for j in range(len(centers))],
@@ -1117,10 +1116,10 @@ def pq_topk(
         lut_rows.append(
             (r["query_id"], [[float(v) for v in row] for row in lut])
         )
-    # Arrow path (r15): row-based createDataFrame pays ~0.3-0.5 s fixed
-    # (pickled-row parallelize) vs ~0.13 s for one pandas batch — nested
-    # arrays convert fine under the explicit schema.
-    luts = spark.createDataFrame(
+    # one pandas/Arrow batch; nested arrays convert fine under the
+    # explicit schema
+    luts = local_frame(
+        spark,
         pd.DataFrame(
             {"query_id": [r[0] for r in lut_rows], "lut": [r[1] for r in lut_rows]}
         ),
@@ -1269,8 +1268,8 @@ def pq_det_topk(
         ).astype(np.int64).reshape(m, sub)
         lut = np.einsum("ms,mks->mk", qi, books)  # exact int64 (~8e12 max)
         lut_rows.append((r["query_id"], [[int(v) for v in row] for row in lut]))
-    # Arrow path (r15): same fixed-cost argument as pq_topk's LUT frame.
-    luts = spark.createDataFrame(
+    luts = local_frame(
+        spark,
         pd.DataFrame(
             {"query_id": [r[0] for r in lut_rows], "lut": [r[1] for r in lut_rows]}
         ),

@@ -2916,7 +2916,7 @@ FROM tot
 
 
 def _psi_wide_driver(dc: DataFrame):
-    """Driver tier for `value_psi_drift`'s integer middle (r16): one Arrow
+    """Driver tier for `value_psi_drift`'s integer middle: one bounded
     collect of the eagerly-checkpointed (day, cents, n) aggregate, then
     cut / period tags / n-weighted prefix ranks / decile edges / bin map /
     (bin, ref, cur) pivot in numpy — 10 local rows back instead of the
@@ -2934,33 +2934,28 @@ def _psi_wide_driver(dc: DataFrame):
     schema the distributed pivot produces (bin/ref/cur, all long), so the
     shared float tail computes on identical integers.
 
-    Declines (``None`` — the distributed formulation runs unchanged) on:
-    tier switch off; over the prefix-tier row cap (probed with a
-    limit(cap+1) collect — dc is an EAGER checkpoint, so the probe never
-    re-executes the events scan); any NULLs; non-integer cents/n dtypes;
-    an empty frame or empty reference period (divide-by-nr semantics stay
-    the distributed path's contract).
+    Declines (``None`` — the distributed formulation runs unchanged) when
+    the driver-tier gate declines (`core.driver_tier`: dc is an EAGER
+    checkpoint, so its limit(cap+1) collect never re-executes the events
+    scan; NULLs; cents/n not integral, day not a date) or the reference
+    period is empty (divide-by-nr semantics stay the distributed path's
+    contract).
     """
-    from hadoop_data_lake_spark.operators import graph as _G
-    from hadoop_data_lake_spark.operators.packing import PREFIX_DRIVER_MAX_ROWS
-
-    if not _G.GENERAL_DRIVER_TIER_ENABLED:
-        return None
     import datetime
 
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
+    from pyspark.sql.types import DateType, LongType, StructField, StructType
 
-    pdf = dc.limit(PREFIX_DRIVER_MAX_ROWS + 1).toPandas()
-    if len(pdf) == 0 or len(pdf) > PREFIX_DRIVER_MAX_ROWS:
-        return None
-    if pdf.isna().any().any():
-        return None
-    if not (
-        pd.api.types.is_integer_dtype(pdf["cents"])
-        and pd.api.types.is_integer_dtype(pdf["n"])
-    ):
+    from hadoop_data_lake_spark.core import driver_tier as DT
+
+    pdf = DT.collect_bounded(
+        dc,
+        max_rows=DT.MAX_ROWS,
+        types={"day": (DateType,), "cents": DT.INTEGRAL, "n": DT.INTEGRAL},
+        null_cols=("day", "cents", "n"),
+    )
+    if pdf is None:
         return None
 
     day = pdf["day"]
@@ -3012,7 +3007,8 @@ def _psi_wide_driver(dc: DataFrame):
             "cur": [cur_cnt.get(b, 0) for b in all_bins],
         }
     )
-    return dc.sparkSession.createDataFrame(
+    return local_frame(
+        dc.sparkSession,
         out,
         StructType(
             [
@@ -3046,21 +3042,15 @@ def value_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows occupy exactly the consecutive rank bins [bin_lo, bin_hi]
     (exploded, <= 10 rows per group) — identical edges by construction.
 
-    Driver tier (r16, VERDICT r15 item 5): everything between the
-    checkpointed (day, cents, n) aggregate and the float tail is INTEGER
-    arithmetic over a dimension-bounded frame (day x distinct cents —
-    43k groups at sf0.1, bounded by the price domain at any corpus
-    scale), so under the prefix tier's cap it all runs in one
-    numpy/driver pass on ONE Arrow collect of the checkpoint: cut,
-    period tags, the n-weighted prefix ranks, the decile edges, the
-    per-cents bin map and the (bin, ref, cur) pivot — exact by the same
-    argument as the distributed formulation (pure int sums/divisions,
-    replayed verbatim). The r15 prefix tier was NEUTRAL here because it
-    shipped all 43k ranked rows BACK through createDataFrame; this tier
-    returns 10 rows. The float expressions (shares, log, round) stay in
-    Spark, computed by the same tail over the same integers in both
-    paths. Declines (over-cap, NULLs, unexpected dtypes, empty ref) run
-    the distributed formulation below unchanged."""
+    Driver tier: everything between the checkpointed (day, cents, n)
+    aggregate and the float tail is INTEGER arithmetic over a
+    dimension-bounded frame (day x distinct cents — 43k groups at sf0.1,
+    bounded by the price domain at any corpus scale), so under the row
+    cap it all runs in one numpy/driver pass on ONE bounded collect of the
+    checkpoint (`_psi_wide_driver`) and returns 10 rows. The float
+    expressions (shares, log, round) stay in Spark, computed by the same
+    tail over the same integers in both paths. Declines run the
+    distributed formulation below unchanged."""
     from hadoop_data_lake_spark.functions.fixedpoint import to_units
     from hadoop_data_lake_spark.operators.packing import token_prefix_sum
 

@@ -1727,23 +1727,21 @@ def pack_sequences_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concat-and-chunk packing plan over documents in doc_id order with a
     512-token context (operators/packing.py — two-phase distributed prefix
     sum, never a single-task global window)."""
+    from hadoop_data_lake_spark.core import driver_tier as DT
     from hadoop_data_lake_spark.core.io import parquet_row_count
-    from hadoop_data_lake_spark.operators.packing import (
-        PREFIX_DRIVER_MAX_ROWS,
-        pack_sequences,
-    )
+    from hadoop_data_lake_spark.operators.packing import pack_sequences
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tok")
     )
-    # footer bound: one prefix row per document (VERDICT r15 item 6).
+    # footer bound: one prefix row per document.
     return pack_sequences(
         docs,
         "doc_id",
         "n_tok",
         context_len=512,
         n_rows_bound=parquet_row_count(
-            sf_dir, "documents", cap=PREFIX_DRIVER_MAX_ROWS
+            sf_dir, "documents", cap=DT.MAX_ROWS
         ),
     )
 
@@ -1838,23 +1836,21 @@ def export_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase distributed prefix sum from operators/packing.py — never a
     single-task global window or zipWithIndex) and a round-robin shard
     assignment, balanced to within one row across 16 shards."""
+    from hadoop_data_lake_spark.core import driver_tier as DT
     from hadoop_data_lake_spark.core.io import parquet_row_count
-    from hadoop_data_lake_spark.operators.packing import (
-        PREFIX_DRIVER_MAX_ROWS,
-        shuffle_shard_plan,
-    )
+    from hadoop_data_lake_spark.operators.packing import shuffle_shard_plan
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id")
     # footer row count = a free, sound bound on the prefix frame (one row
     # per document), so an over-cap corpus declines the prefix driver tier
-    # WITHOUT probing (VERDICT r15 item 6 — no double upstream execution).
+    # WITHOUT probing (no double upstream execution).
     return shuffle_shard_plan(
         docs,
         "doc_id",
         n_shards=16,
         salt=0,
         n_rows_bound=parquet_row_count(
-            sf_dir, "documents", cap=PREFIX_DRIVER_MAX_ROWS
+            sf_dir, "documents", cap=DT.MAX_ROWS
         ),
     )
 
@@ -4385,14 +4381,13 @@ def cluster_safe_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint-ed so the minhash pipeline is not re-executed per
     branch.
 
-    Driver tier (r16, VERDICT r15 item 4): when the CC union-find tier
-    fires, the component labels AND the pair list are already on the
-    driver from its one collect — the per-pair leak counts fold into the
-    same pass (Python md5 replays Spark's md5(cast(id as string))
-    byte-for-byte: the ids are gated to one shared integral/string type,
-    where str(int) == Spark's long->string cast and UTF-8 encoding
-    matches), so the leak joins (pairs x sides x sides) and the second
-    read of `sides` disappear. The cluster-side count stays a provable
+    Driver tier: when the CC union-find tier fires, the component labels
+    AND the pair list are already on the driver from its one collect —
+    the per-pair leak counts fold into the same pass (Python md5 replays
+    Spark's md5(cast(id as string)) byte-for-byte: the ids are gated to
+    one shared integral/string type, where str(int) == Spark's
+    long->string cast and UTF-8 encoding matches), so the leak joins
+    (pairs x sides x sides) and the second read of `sides` disappear. The cluster-side count stays a provable
     invariant either way (a pair's endpoints share a component, so
     side_cluster(rep(a)) == side_cluster(rep(b)) — computed honestly in
     both paths, never assumed). Over the cap or on unorderable id types
@@ -4414,11 +4409,7 @@ def cluster_safe_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("test"),
         ).otherwise(F.lit("train"))
 
-    tier = (
-        G._cc_driver_labels(raw, return_edges=True)
-        if G.GENERAL_DRIVER_TIER_ENABLED
-        else None
-    )
+    tier = G._cc_driver_labels(raw, return_edges=True)
     if tier is not None:
         import hashlib
 
@@ -4436,7 +4427,8 @@ def cluster_safe_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         leak_n = sum(1 for r in edges if py_side(r[0]) != py_side(r[1]))
         ut = raw.schema["u"].dataType
-        comp = spark.createDataFrame(
+        comp = local_frame(
+            spark,
             pd.DataFrame(
                 {"doc_id": list(labels), "cluster_rep": list(labels.values())}
             ),
@@ -4444,8 +4436,9 @@ def cluster_safe_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 [StructField("doc_id", ut), StructField("cluster_rep", ut)]
             ),
         )
-        leaks = spark.createDataFrame(
-            pd.DataFrame({"leak_c": [leak_c], "leak_n": [leak_n]}),
+        leaks = local_frame(
+            spark,
+            [(leak_c, leak_n)],
             StructType(
                 [
                     StructField("leak_c", LongType()),
@@ -4466,10 +4459,9 @@ def cluster_safe_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     else:
-        # distributed audit, unchanged shape: CC star loop on the same
-        # checkpoint (no re-checkpoint — the r16 _cc_distributed entry),
-        # sides checkpointed because counts AND both leak-join reads
-        # consume it.
+        # distributed audit: CC star loop on the same checkpoint (no
+        # re-checkpoint — the _cc_distributed entry), sides checkpointed
+        # because counts AND both leak-join reads consume it.
         comp = G._cc_distributed(raw, max_iter=20, strict=True).select(
             F.col("vertex").alias("doc_id"),
             F.col("component").alias("cluster_rep"),

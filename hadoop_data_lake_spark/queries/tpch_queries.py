@@ -2191,38 +2191,25 @@ def pagerank_det(spark: SparkSession, sf_dir: str) -> DataFrame:
         (-F.col("l_suppkey") - 1).alias("dst"),
     )
 
-    from hadoop_data_lake_spark.operators import graph as G
+    from hadoop_data_lake_spark.core import driver_tier as DT
+    from hadoop_data_lake_spark.core.io import parquet_row_count
+    from hadoop_data_lake_spark.operators.graph import pagerank_layered_driver
 
-    # Round 15: the common case runs the FUSED driver tier
-    # (operators/graph.pagerank_layered_driver — the hits_topk_sides_driver
-    # pattern): ONE Arrow collect of the raw join projection; pair-dedup,
-    # degrees, the layered test, the sink histogram and all 10 rounds in
-    # numpy/driver integers (bit-identical recurrence, pinned by test).
-    # The cap bound is the lineitem row count alone (read off the parquet
-    # footers — no Spark job; exact, so still a sound bound — with the
-    # column-pruned count as the fallback when footers are unreadable):
-    # the inner join on orders' primary key cannot multiply lineitem
-    # rows, so |raw edges| <= |lineitem|. Above the cap — or if the tier
-    # declines — the r13 distributed build below stands unchanged.
-    if G.GENERAL_DRIVER_TIER_ENABLED:
-        from hadoop_data_lake_spark.core.io import parquet_row_count
-
-        # cap= (r16): the footer loop stops as soon as the sum exceeds the
-        # tier's edge cap — bounded driver metadata work on many-file
-        # tables (the returned over-cap partial sum still declines the
-        # tier; only an under-cap return is the exact count).
-        bound = parquet_row_count(
-            sf_dir, "lineitem", cap=G.NUMPY_DRIVER_MAX_EDGES
-        )
-        top = G.pagerank_layered_driver(
-            e_raw,
-            "src",
-            "dst",
-            iters=10,
-            n_edges_bound=bound if bound is not None else li.count(),
-        )
-        if top is not None:
-            return top
+    # The common case runs the FUSED driver tier: ONE Arrow collect of the
+    # raw join projection; pair-dedup, degrees, the layered test, the
+    # sink histogram and all 10 rounds in numpy/driver integers. Its sound
+    # bound is the lineitem footer row count: the inner join on orders'
+    # primary key cannot multiply lineitem rows, so |raw edges| <=
+    # |lineitem|. If the tier declines, the distributed build below runs.
+    top = pagerank_layered_driver(
+        e_raw,
+        "src",
+        "dst",
+        iters=10,
+        n_edges_bound=parquet_row_count(sf_dir, "lineitem", cap=DT.NUMPY_MAX_ROWS),
+    )
+    if top is not None:
+        return top
 
     # Round 13: ONE exchange builds dedup + out-degree together —
     # repartition(src) hash-clusters by the prefix, so dropDuplicates
@@ -3021,18 +3008,18 @@ def gini_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_cust = orders.groupBy("o_custkey").agg(
         F.sum(to_units(F.col("o_totalprice"))).alias("cents")
     )
+    from hadoop_data_lake_spark.core import driver_tier as DT
     from hadoop_data_lake_spark.core.io import parquet_row_count
-    from hadoop_data_lake_spark.operators.packing import PREFIX_DRIVER_MAX_ROWS
 
     # o_custkey is a customer FK, so |per_cust| <= |customer| — the footer
-    # count is a free sound bound for the prefix driver tier (VERDICT r15
-    # item 6: an over-cap customer dimension declines without probing).
+    # count is a free sound bound for the prefix driver tier (an over-cap
+    # customer dimension declines without probing).
     ranked = token_prefix_sum(
         per_cust.withColumn("__one", F.lit(1)),
         ["cents", "o_custkey"],
         "__one",
         n_rows_bound=parquet_row_count(
-            sf_dir, "customer", cap=PREFIX_DRIVER_MAX_ROWS
+            sf_dir, "customer", cap=DT.MAX_ROWS
         ),
     ).withColumnRenamed("cum", "i")
     mom = ranked.agg(
@@ -3152,8 +3139,8 @@ def pareto_8020_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(to_units(F.col("o_totalprice"))).alias("cents"))
         .localCheckpoint(eager=True)
     )
+    from hadoop_data_lake_spark.core import driver_tier as DT
     from hadoop_data_lake_spark.core.io import parquet_row_count
-    from hadoop_data_lake_spark.operators.packing import PREFIX_DRIVER_MAX_ROWS
 
     ranked = prefix_agg(
         per_cust.withColumn("__one", F.lit(1)).withColumn(
@@ -3161,9 +3148,9 @@ def pareto_8020_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         ["__neg", "o_custkey"],
         sum_cols={"i": "__one", "cum": "cents"},
-        # |per_cust| <= |customer| (FK) — footer bound, see gini (r16)
+        # |per_cust| <= |customer| (FK) — footer bound, see gini
         n_rows_bound=parquet_row_count(
-            sf_dir, "customer", cap=PREFIX_DRIVER_MAX_ROWS
+            sf_dir, "customer", cap=DT.MAX_ROWS
         ),
     ).crossJoin(
         F.broadcast(
@@ -3311,16 +3298,16 @@ def abc_part_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_part = li.groupBy("l_partkey").agg(
         F.sum(to_units(F.col("l_extendedprice"))).alias("cents")
     )
+    from hadoop_data_lake_spark.core import driver_tier as DT
     from hadoop_data_lake_spark.core.io import parquet_row_count
-    from hadoop_data_lake_spark.operators.packing import PREFIX_DRIVER_MAX_ROWS
 
     ranked = prefix_agg(
         per_part.withColumn("__neg", -F.col("cents")),
         ["__neg", "l_partkey"],
         sum_cols={"cum": "cents"},
-        # |per_part| <= |part| (FK) — footer bound, see gini (r16)
+        # |per_part| <= |part| (FK) — footer bound, see gini
         n_rows_bound=parquet_row_count(
-            sf_dir, "part", cap=PREFIX_DRIVER_MAX_ROWS
+            sf_dir, "part", cap=DT.MAX_ROWS
         ),
     ).crossJoin(F.broadcast(per_part.agg(F.sum("cents").alias("total"))))
     classed = ranked.withColumn(
@@ -4076,16 +4063,16 @@ def lorenz_curve_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(to_units(F.col("o_totalprice"))).alias("cents"))
         .localCheckpoint(eager=True)
     )
+    from hadoop_data_lake_spark.core import driver_tier as DT
     from hadoop_data_lake_spark.core.io import parquet_row_count
-    from hadoop_data_lake_spark.operators.packing import PREFIX_DRIVER_MAX_ROWS
 
     ranked = prefix_agg(
         per_cust.withColumn("__one", F.lit(1)),
         ["cents", "o_custkey"],
         sum_cols={"i": "__one", "cum": "cents"},
-        # |per_cust| <= |customer| (FK) — footer bound, see gini (r16)
+        # |per_cust| <= |customer| (FK) — footer bound, see gini
         n_rows_bound=parquet_row_count(
-            sf_dir, "customer", cap=PREFIX_DRIVER_MAX_ROWS
+            sf_dir, "customer", cap=DT.MAX_ROWS
         ),
     ).crossJoin(
         F.broadcast(
@@ -4826,78 +4813,46 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash aggregate + a broadcast scalar max; 10^6-scaled sums stay under
     bigint for degrees < ~10^6 per node (cast to decimal beyond).
 
-    Round 12: when the graph fits the driver caps, the whole fixed point
-    runs as the numpy driver tier (operators/graph.hits_scaled_driver —
-    one Arrow collect, exact int64 bincounts, bit-identical by the
-    <2^53 exactness argument in its docstring); above the caps the
-    distributed loop below stands unchanged, and both paths share the
-    same top-k shaping.
-
-    Round 14 (VERDICT r13 item 3 — the edge build + per-node shaping
-    were ~75% of the r13 profile): the common case now runs the FUSED
-    driver tier (operators/graph.hits_topk_sides_driver) — ONE Arrow
-    collect of the raw join projection, pair-dedup + rounds + top-k all
-    in numpy, 20 rows back. The cap bound is the lineitem row count
-    alone (a column-pruned count, no join execution): the inner join on
-    orders' primary key cannot multiply lineitem rows, so |raw edges|
-    <= |lineitem|. Above the byte cap — or if the fused tier declines —
-    the r12 shape below (distinct + checkpoint + exact counts +
-    two-frame tier / distributed loop) stands unchanged."""
+    The common case runs the FUSED driver tier
+    (operators/graph.hits_topk_sides_driver): ONE Arrow collect of the raw
+    join projection, pair-dedup + rounds + top-k all in numpy, 20 rows
+    back. Its sound bound is the lineitem footer row count: the inner
+    join on orders' primary key cannot multiply lineitem rows, so
+    |raw edges| <= |lineitem|. If the tier declines, the distributed loop
+    below runs."""
     orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     e_raw = li.join(orders, li["l_orderkey"] == orders["o_orderkey"]).select(
         F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s")
     )
 
-    from hadoop_data_lake_spark.operators import graph as G
+    from hadoop_data_lake_spark.core import driver_tier as DT
+    from hadoop_data_lake_spark.core.io import parquet_row_count
+    from hadoop_data_lake_spark.operators.graph import (
+        broadcast_bounded_state,
+        hits_topk_sides_driver,
+    )
 
-    # Skip the bound's count job entirely when the fused tier cannot run
-    # (tiers pinned off in plan audits / scale probes — ADVICE r14): the
-    # count exists only to serve as n_edges_bound. Round 15: the bound
-    # comes off the parquet footers when readable (exact, no Spark job —
-    # core/io.parquet_row_count), with the column-pruned count as the
-    # fallback.
-    if G.GENERAL_DRIVER_TIER_ENABLED:
-        from hadoop_data_lake_spark.core.io import parquet_row_count
-
-        # cap= (r16): early-exit footer loop, see pagerank_det.
-        bound = parquet_row_count(
-            sf_dir, "lineitem", cap=G.NUMPY_DRIVER_MAX_EDGES
-        )
-        top = G.hits_topk_sides_driver(
-            e_raw,
-            "c",
-            "s",
-            rounds=2,
-            k=10,
-            n_edges_bound=bound if bound is not None else li.count(),
-        )
-        if top is not None:
-            return top
+    top = hits_topk_sides_driver(
+        e_raw,
+        "c",
+        "s",
+        rounds=2,
+        k=10,
+        n_edges_bound=parquet_row_count(sf_dir, "lineitem", cap=DT.NUMPY_MAX_ROWS),
+    )
+    if top is not None:
+        return top
 
     e = e_raw.distinct().localCheckpoint(eager=True)
 
-    from hadoop_data_lake_spark.operators.graph import broadcast_bounded_state
-
     # vertex-count bounds for the state broadcast, computed ONCE: the hub
     # and authority score frames carry exactly the distinct customers /
-    # suppliers of the edge list on every round, so one aggregate over the
-    # checkpointed edges replaces the per-rescale recount the previous
-    # shape ran (4 driver jobs per query; driver-ADVICE r10).
-    n_c, n_s, n_e = e.agg(
+    # suppliers of the edge list on every round.
+    n_c, n_s = e.agg(
         F.countDistinct("c").alias("n_c"),
         F.countDistinct("s").alias("n_s"),
-        F.count("*").alias("n_e"),
     ).first()
-
-    from hadoop_data_lake_spark.operators.graph import hits_scaled_driver
-
-    driver_scores = hits_scaled_driver(
-        e, "c", "s", n_c, n_s, rounds=2, n_edges=n_e
-    )
-    if driver_scores is not None:
-        h, a = driver_scores
-        return _hits_top_sides(h, a)
 
     def rescale(df: DataFrame, n_rows: int) -> DataFrame:
         # checkpoint before branching: the max-agg and the join both read
@@ -4922,7 +4877,7 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hits_top_sides(h: DataFrame, a: DataFrame) -> DataFrame:
-    """Shared top-10 shaping for both HITS tiers: hub scores (c, v) and
+    """Top-10 shaping of the distributed HITS loop: hub scores (c, v) and
     authority scores (s, v) -> (side, node, score) via TakeOrdered."""
     top_h = (
         h.orderBy(F.col("v").desc(), F.col("c").asc())

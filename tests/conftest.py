@@ -20,3 +20,34 @@ def spark():
 
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+class TierSwitch:
+    """The driver-tier switch (`core.driver_tier.GENERAL_DRIVER_TIER_ENABLED`)
+    for one test, restored by monkeypatch at teardown.
+
+    ``tiers(False)`` turns every driver tier off; ``tiers.on_off(fn)``
+    returns ``(fn() with tiers on, fn() with tiers off)`` and leaves the
+    tiers on.
+    """
+
+    def __init__(self, monkeypatch):
+        self._mp = monkeypatch
+
+    def __call__(self, enabled: bool) -> None:
+        from hadoop_data_lake_spark.core import driver_tier as DT
+
+        self._mp.setattr(DT, "GENERAL_DRIVER_TIER_ENABLED", enabled)
+
+    def on_off(self, fn):
+        self(True)
+        on = fn()
+        self(False)
+        off = fn()
+        self(True)
+        return on, off
+
+
+@pytest.fixture()
+def tiers(monkeypatch):
+    return TierSwitch(monkeypatch)

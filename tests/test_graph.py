@@ -60,13 +60,12 @@ def test_dedup_clusters_sizes_and_reps(spark):
     assert rows[31]["cluster_rep"] == 30 and rows[31]["cluster_size"] == 2
 
 
-def test_connected_components_nonconvergence_is_loud(spark):
+def test_connected_components_nonconvergence_is_loud(spark, tiers):
     """A path graph of diameter 9 cannot converge in 2 iterations; the
     result would silently split components — strict mode must raise.
-    max_iter/strict govern the DISTRIBUTED star loop (the r15 driver tier
+    max_iter/strict govern the DISTRIBUTED star loop (the driver tier
     is exact and never partial), so the loop behavior is pinned with the
     tier switched off."""
-    from hadoop_data_lake_spark.operators import graph as G
     from hadoop_data_lake_spark.operators.graph import (
         ConvergenceError,
         connected_components,
@@ -75,19 +74,16 @@ def test_connected_components_nonconvergence_is_loud(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], "src long, dst long"
     )
-    orig = G.GENERAL_DRIVER_TIER_ENABLED
-    G.GENERAL_DRIVER_TIER_ENABLED = False
-    try:
-        with pytest.raises(ConvergenceError, match="max_iter=2"):
-            connected_components(chain, max_iter=2)
-        # best-effort mode returns (possibly split) labels instead
-        partial = connected_components(chain, max_iter=2, strict=False)
-        assert partial.count() == 10
-        # and enough iterations converge to a single component
-        full = connected_components(chain, max_iter=10)
-        assert {r["component"] for r in full.collect()} == {0}
-    finally:
-        G.GENERAL_DRIVER_TIER_ENABLED = orig
+    tiers(False)
+    with pytest.raises(ConvergenceError, match="max_iter=2"):
+        connected_components(chain, max_iter=2)
+    # best-effort mode returns (possibly split) labels instead
+    partial = connected_components(chain, max_iter=2, strict=False)
+    assert partial.count() == 10
+    # and enough iterations converge to a single component
+    full = connected_components(chain, max_iter=10)
+    assert {r["component"] for r in full.collect()} == {0}
+    tiers(True)
     # the driver tier needs no iteration budget: exact on the same chain
     assert {
         r["component"] for r in connected_components(chain, max_iter=2).collect()

@@ -152,3 +152,43 @@ def test_schema_evolution_merge_read(spark, tmp_path):
     assert rows[1]["score"] is None and rows[3]["score"] == 30.0
     # evolved-column aggregation skips NULL backfill rows, not files
     assert merged.agg(F.count("score")).collect()[0][0] == 2
+
+
+def test_parquet_row_count_listing_stops_past_the_guard(tmp_path, monkeypatch):
+    """A table with more files than the footer guard answers None after
+    listing one file past the guard and reading no footer at all."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hadoop_data_lake_spark.core import io as IO
+
+    table_dir = tmp_path / "t.parquet"
+    table_dir.mkdir()
+    for i in range(10):
+        pq.write_table(pa.table({"x": [i]}), str(table_dir / f"part-{i:05d}.parquet"))
+
+    listed, footers = [], []
+    real_iglob, real_file = glob.iglob, pq.ParquetFile
+
+    def counting_iglob(*a, **kw):
+        for path in real_iglob(*a, **kw):
+            listed.append(path)
+            yield path
+
+    def counting_file(path, *a, **kw):
+        footers.append(path)
+        return real_file(path, *a, **kw)
+
+    monkeypatch.setattr(glob, "iglob", counting_iglob)
+    monkeypatch.setattr(pq, "ParquetFile", counting_file)
+    monkeypatch.setattr(IO, "PARQUET_COUNT_MAX_FOOTERS", 3)
+    assert IO.parquet_row_count(str(tmp_path), "t") is None
+    assert len(listed) == 4  # guard + 1, not all 10
+    assert footers == []
+    # under the guard the same table is listed in full and counted exactly
+    monkeypatch.setattr(IO, "PARQUET_COUNT_MAX_FOOTERS", 10)
+    listed.clear()
+    assert IO.parquet_row_count(str(tmp_path), "t") == 10
+    assert len(listed) == 10 and len(footers) == 10

@@ -348,10 +348,10 @@ def test_graph_state_broadcast_cap_is_value_neutral(spark):
     assert results["bcast"][0], "pagerank produced no rows"
 
 
-def test_pagerank_layered_fast_path_matches_general_loop(spark):
+def test_pagerank_layered_fast_path_matches_general_loop(spark, tiers, monkeypatch):
     """The three pagerank_intexact tiers must be bit-identical (all exact
-    integer arithmetic): driver-histogram (layered graph, histogram under
-    budget), distributed-histogram (layered, budget forced to -1), and the
+    integer arithmetic): driver-histogram (layered graph, driver tiers
+    on), distributed-histogram (layered, driver tiers off), and the
     general loop (layered detection disabled). A chain graph (src and dst
     sets overlap) must produce the same result regardless of the layered
     machinery being enabled."""
@@ -371,17 +371,13 @@ def test_pagerank_layered_fast_path_matches_general_loop(spark):
             for r in G.pagerank_intexact(df, iters=6).collect()
         }
 
-    old_cap, old_on = G.LAYERED_HIST_MAX_ROWS, G.LAYERED_FAST_PATH_ENABLED
-    try:
-        driver_bip = run(bip)
-        chain_out = run(chain)
-        G.LAYERED_HIST_MAX_ROWS = -1  # layered but over budget: middle tier
-        mid_bip = run(bip)
-        G.LAYERED_FAST_PATH_ENABLED = False  # general distributed loop
-        general_bip = run(bip)
-        chain_out2 = run(chain)
-    finally:
-        G.LAYERED_HIST_MAX_ROWS, G.LAYERED_FAST_PATH_ENABLED = old_cap, old_on
+    driver_bip = run(bip)
+    chain_out = run(chain)
+    tiers(False)  # layered, no driver tier: middle tier
+    mid_bip = run(bip)
+    monkeypatch.setattr(G, "LAYERED_FAST_PATH_ENABLED", False)  # general loop
+    general_bip = run(bip)
+    chain_out2 = run(chain)
     assert driver_bip == mid_bip == general_bip
     assert chain_out == chain_out2
     assert len(driver_bip) == 35  # 30 sources + 5 sinks

@@ -68,9 +68,10 @@ def test_broadcast_state_byte_cap_blocks_wide_state(spark):
     assert G.broadcast_bounded_state(narrow, -1) is narrow
 
 
-def test_pagerank_layered_multiedge_tiers_match(spark):
+def test_pagerank_layered_multiedge_tiers_match(spark, tiers, monkeypatch):
     """Duplicate (multi-)edges: all three pagerank_intexact tiers must stay
-    bit-identical. The histogram tiers count EDGE rows (cnt can exceed the
+    bit-identical (driver histogram; distributed histogram with the driver
+    tiers off; general loop with layered detection off too). The histogram tiers count EDGE rows (cnt can exceed the
     distinct source count) while out-degree counts the same duplicates, so
     contributions — and the bigint mass bound — are consistent across
     driver / distributed-histogram / general-loop formulations."""
@@ -90,20 +91,16 @@ def test_pagerank_layered_multiedge_tiers_match(spark):
             for r in G.pagerank_intexact(edges, iters=5).collect()
         }
 
-    old_cap, old_on = G.LAYERED_HIST_MAX_ROWS, G.LAYERED_FAST_PATH_ENABLED
-    try:
-        driver_t = run()
-        G.LAYERED_HIST_MAX_ROWS = -1
-        mid_t = run()
-        G.LAYERED_FAST_PATH_ENABLED = False
-        general_t = run()
-    finally:
-        G.LAYERED_HIST_MAX_ROWS, G.LAYERED_FAST_PATH_ENABLED = old_cap, old_on
+    driver_t = run()
+    tiers(False)  # layered, no driver tier: middle tier
+    mid_t = run()
+    monkeypatch.setattr(G, "LAYERED_FAST_PATH_ENABLED", False)  # general loop
+    general_t = run()
     assert driver_t == mid_t == general_t
     assert len(driver_t) == 23  # 20 sources + 3 sinks
 
 
-def test_pagerank_detection_adds_zero_jobs(spark):
+def test_pagerank_detection_adds_zero_jobs(spark, monkeypatch):
     """Layered detection must be FREE on non-layered graphs (the r10 shape
     ran two extra count jobs on every call): with the fast path enabled vs
     disabled, a chain graph (non-layered, takes the general loop either
@@ -115,16 +112,12 @@ def test_pagerank_detection_adds_zero_jobs(spark):
     tracker = spark.sparkContext.statusTracker()
 
     def jobs_for(enabled):
-        old = G.LAYERED_FAST_PATH_ENABLED
-        G.LAYERED_FAST_PATH_ENABLED = enabled
-        try:
-            # job ids are monotonically increasing; counting LIST LENGTH
-            # breaks late in a long suite once the UI evicts retained jobs
-            before = max(tracker.getJobIdsForGroup(None) or [0])
-            G.pagerank_intexact(chain, iters=2)
-            return max(tracker.getJobIdsForGroup(None) or [0]) - before
-        finally:
-            G.LAYERED_FAST_PATH_ENABLED = old
+        monkeypatch.setattr(G, "LAYERED_FAST_PATH_ENABLED", enabled)
+        # job ids are monotonically increasing; counting LIST LENGTH
+        # breaks late in a long suite once the UI evicts retained jobs
+        before = max(tracker.getJobIdsForGroup(None) or [0])
+        G.pagerank_intexact(chain, iters=2)
+        return max(tracker.getJobIdsForGroup(None) or [0]) - before
 
     warm = jobs_for(True)  # warm up partitions/AQE once
     assert jobs_for(True) == jobs_for(False), warm
@@ -383,29 +376,22 @@ def test_bench_calm_box_gate(monkeypatch):
     assert sleeps  # it did wait before giving up
 
 
-def _pr_both_tiers(spark, rows, iters=4):
-    """Run pagerank_intexact with the general driver tier ON vs OFF on the
-    same edge list; return the two sorted (node, rank_units) lists."""
+def _pr_both_tiers(spark, tiers, rows, iters=4):
+    """Run pagerank_intexact with the driver tiers ON vs OFF on the same
+    edge list; return the two sorted (node, rank_units) lists."""
     import hadoop_data_lake_spark.operators.graph as G
 
-    out = []
-    for enabled in (True, False):
-        orig = G.GENERAL_DRIVER_TIER_ENABLED
-        G.GENERAL_DRIVER_TIER_ENABLED = enabled
-        try:
-            e = spark.createDataFrame(rows, "src int, dst int")
-            got = sorted(
-                (r["node"], r["rank_units"])
-                for r in G.pagerank_intexact(e, iters=iters).collect()
-            )
-        finally:
-            G.GENERAL_DRIVER_TIER_ENABLED = orig
-        out.append(got)
-    return out
+    e = spark.createDataFrame(rows, "src int, dst int")
+    return tiers.on_off(
+        lambda: sorted(
+            (r["node"], r["rank_units"])
+            for r in G.pagerank_intexact(e, iters=iters).collect()
+        )
+    )
 
 
-def test_general_driver_tier_bit_identical(spark):
-    """Round-11 general-graph driver tier: byte-for-byte the distributed
+def test_general_driver_tier_bit_identical(spark, tiers):
+    """General-graph driver tier: byte-for-byte the distributed
     loop's integer recurrence, on a graph with every structural feature the
     loop handles — dangling nodes (5 has no out-edge), zero-in-degree
     nodes (1 is never a destination), duplicate (multi-)edges, a cycle,
@@ -416,105 +402,96 @@ def test_general_driver_tier_bit_identical(spark):
         (2, 5), (4, 5), (4, 5),          # dangling sink 5, dup edge
         (3, 4), (1, 4),
     ]
-    fast, dist = _pr_both_tiers(spark, rows)
+    fast, dist = _pr_both_tiers(spark, tiers, rows)
     assert fast == dist
     assert len(fast) == 5
     # mass sanity: total rank stays ~scale (integer truncation only)
     assert abs(sum(r for _, r in fast) - 10**12) < 10**7
 
 
-def test_general_driver_tier_caps_route_to_distributed(spark):
+def test_general_driver_tier_caps_route_to_distributed(spark, monkeypatch):
     """Above either measured cap the operator must take the distributed
     loop (no collect of an unbounded edge list). Forced by dropping the
     caps to zero; equality of values is what the other test pins."""
+    import hadoop_data_lake_spark.core.driver_tier as DT
     import hadoop_data_lake_spark.operators.graph as G
 
     e = spark.createDataFrame([(1, 2), (2, 1)], "src int, dst int")
-    orig_n, orig_m = G.GENERAL_DRIVER_MAX_NODES, G.GENERAL_DRIVER_MAX_EDGES
-    G.GENERAL_DRIVER_MAX_NODES = 0
-    try:
+    for cap in ("MAX_NODES", "MAX_ROWS"):
+        monkeypatch.undo()
+        monkeypatch.setattr(DT, cap, 0)
         df = G.pagerank_intexact(e, iters=1)
         # the distributed loop returns the ranks frame selected from the
         # iterated localCheckpoint — a Scan ExistingRDD, not a local
-        # createDataFrame; cheap structural probe:
+        # frame; cheap structural probe:
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan
-    finally:
-        G.GENERAL_DRIVER_MAX_NODES = orig_n
-        G.GENERAL_DRIVER_MAX_EDGES = orig_m
+        assert "ExistingRDD" in plan, cap
 
 
-def test_lpa_driver_tier_bit_identical(spark):
-    """Round-11 LPA driver tier: same (score desc, label asc) synchronous
+def _lpa_rows_both_tiers(spark, tiers, rows, ddl, weight, iters):
+    import hadoop_data_lake_spark.operators.graph as G
+
+    e = spark.createDataFrame(rows, ddl)
+    src, dst = e.columns[:2]
+    return tiers.on_off(
+        lambda: sorted(
+            map(
+                tuple,
+                G.lpa_communities(
+                    e, src=src, dst=dst, weight=weight, iters=iters
+                ).collect(),
+            )
+        )
+    )
+
+
+def test_lpa_driver_tier_bit_identical(spark, tiers):
+    """LPA driver tier: same (score desc, label asc) synchronous
     recurrence as the distributed loop, string labels + integer weights,
     including a weight-tied pair (the tie-break path) and an isolated
     2-clique."""
-    import hadoop_data_lake_spark.operators.graph as G
-
     rows = [
         ("a", "b", 3), ("b", "c", 3),      # tie at b: labels a vs c
         ("c", "d", 5), ("a", "d", 1),
         ("x", "y", 2),                      # separate component
     ]
-    out = []
-    for enabled in (True, False):
-        orig = G.GENERAL_DRIVER_TIER_ENABLED
-        G.GENERAL_DRIVER_TIER_ENABLED = enabled
-        try:
-            e = spark.createDataFrame(
-                rows, "brand_a string, brand_b string, n_orders long"
-            )
-            got = sorted(
-                map(
-                    tuple,
-                    G.lpa_communities(
-                        e,
-                        src="brand_a",
-                        dst="brand_b",
-                        weight="n_orders",
-                        iters=4,
-                    ).collect(),
-                )
-            )
-        finally:
-            G.GENERAL_DRIVER_TIER_ENABLED = orig
-        out.append(got)
-    fast, dist = out
+    fast, dist = _lpa_rows_both_tiers(
+        spark, tiers, rows, "brand_a string, brand_b string, n_orders long",
+        "n_orders", 4,
+    )
     assert fast == dist
     assert len(fast) == 6
 
 
-def test_lpa_driver_tier_caps_route_to_distributed(spark):
+def test_lpa_driver_tier_caps_route_to_distributed(spark, monkeypatch):
     """Above either measured cap lpa_communities must take the distributed
     loop (no collect of an unbounded edge list) — same probe as the
     pagerank cap test: the distributed loop's labels frame is an iterated
-    localCheckpoint (Scan ExistingRDD), never a local createDataFrame."""
+    localCheckpoint (Scan ExistingRDD), never a local frame."""
+    import hadoop_data_lake_spark.core.driver_tier as DT
     import hadoop_data_lake_spark.operators.graph as G
 
     e = spark.createDataFrame(
         [("a", "b", 1), ("b", "c", 2)], "brand_a string, brand_b string, w long"
     )
-    orig = G.GENERAL_DRIVER_MAX_NODES
-    G.GENERAL_DRIVER_MAX_NODES = 0
-    try:
+    for cap in ("MAX_NODES", "MAX_ROWS"):
+        monkeypatch.undo()
+        monkeypatch.setattr(DT, cap, 0)
         df = G.lpa_communities(e, src="brand_a", dst="brand_b", weight="w", iters=1)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan
-    finally:
-        G.GENERAL_DRIVER_MAX_NODES = orig
+        assert "ExistingRDD" in plan, cap
 
 
-def test_driver_tier_property_random_graphs(spark):
-    """Property harness for the r11 driver tiers: on random small digraphs
-    (dangling nodes, self-referential pairs, duplicate edges, multiple
-    components all arise naturally), pagerank_intexact and lpa_communities
-    must return BIT-identical results with the tier on vs off. Seeded
-    stdlib RNG, a handful of draws, one Spark pipeline per draw — the
-    hypothesis float strategies are avoided per tests/test_properties.py's
-    container note, and graph shapes need structured randomness anyway."""
+def test_driver_tier_property_random_graphs(spark, tiers):
+    """Property harness for the graph driver tiers: on random small
+    digraphs (dangling nodes, self-referential pairs, duplicate edges,
+    multiple components all arise naturally), pagerank_intexact and
+    lpa_communities must return BIT-identical results with the tiers on
+    vs off. Seeded stdlib RNG, a handful of draws, one Spark pipeline per
+    draw — the hypothesis float strategies are avoided per
+    tests/test_properties.py's container note, and graph shapes need
+    structured randomness anyway."""
     import random
-
-    import hadoop_data_lake_spark.operators.graph as G
 
     rng = random.Random(0xC0FFEE)
     for draw in range(4):
@@ -524,33 +501,10 @@ def test_driver_tier_property_random_graphs(spark):
             (rng.randint(0, n - 1), rng.randint(0, n - 1)) for _ in range(m)
         ]
         rows = [(s, d) for s, d in rows if s != d] or [(0, 1)]
-        out_pr, out_lpa = [], []
-        for enabled in (True, False):
-            orig = G.GENERAL_DRIVER_TIER_ENABLED
-            G.GENERAL_DRIVER_TIER_ENABLED = enabled
-            try:
-                e = spark.createDataFrame(rows, "src int, dst int")
-                out_pr.append(
-                    sorted(
-                        (r["node"], r["rank_units"])
-                        for r in G.pagerank_intexact(e, iters=3).collect()
-                    )
-                )
-                ew = spark.createDataFrame(
-                    [(s, d, 1 + (s + d) % 3) for s, d in rows],
-                    "src int, dst int, w long",
-                )
-                out_lpa.append(
-                    sorted(
-                        map(
-                            tuple,
-                            G.lpa_communities(
-                                ew, src="src", dst="dst", weight="w", iters=3
-                            ).collect(),
-                        )
-                    )
-                )
-            finally:
-                G.GENERAL_DRIVER_TIER_ENABLED = orig
-        assert out_pr[0] == out_pr[1], (draw, rows)
-        assert out_lpa[0] == out_lpa[1], (draw, rows)
+        pr_on, pr_off = _pr_both_tiers(spark, tiers, rows, iters=3)
+        assert pr_on == pr_off, (draw, rows)
+        lpa_on, lpa_off = _lpa_rows_both_tiers(
+            spark, tiers, [(s, d, 1 + (s + d) % 3) for s, d in rows],
+            "src int, dst int, w long", "w", 3,
+        )
+        assert lpa_on == lpa_off, (draw, rows)

@@ -1,14 +1,13 @@
 """Regression tests for the round-12 fixes (VERDICT r11 items + ADVICE r11).
 
-- operators/graph.hits_scaled_driver: the numpy driver tier for the
-  integer-rescaled HITS fixed point — bit-identical to the distributed
-  loop (the <2^53 bincount exactness argument), cap-routed so graphs over
-  the node/edge budgets take the distributed loop unchanged.
+- operators/graph._hits_numpy_rounds: the numpy HITS recurrence —
+  bit-identical to a Python-int replay of the distributed loop (the
+  <2^53 bincount exactness argument).
 - operators/graph.lpa_communities driver tier: NULL edge weights now
   mirror SQL SUM semantics exactly (skipped inside a group; an all-null
   group keeps a NULL score that ranks LAST under desc) instead of raising
   TypeError — divergence flagged by ADVICE r11.
-- bench.run_scale_tier: the GENERAL_DRIVER_TIER_ENABLED pin is restored
+- bench.run_scale_tier: the driver-tier switch pin is restored
   in a finally block to the CALLER's value (not hardcoded True), so an
   exception mid-tier can't leave the tier disabled process-wide and a
   deliberately-disabled caller isn't clobbered.
@@ -29,40 +28,32 @@ SF_DIR = "/root/testdata/sf0.001"
 # ---------------------------------------------------------------- HITS tier
 
 
-def _hits_both_tiers(spark):
-    import hadoop_data_lake_spark.operators.graph as G
+def _hits_both_tiers(spark, tiers):
     from hadoop_data_lake_spark.queries.tpch_queries import (
         hits_hubs_authorities,
     )
 
-    out = []
-    for enabled in (True, False):
-        orig = G.GENERAL_DRIVER_TIER_ENABLED
-        G.GENERAL_DRIVER_TIER_ENABLED = enabled
-        try:
-            got = sorted(
-                map(tuple, hits_hubs_authorities(spark, SF_DIR).collect())
-            )
-        finally:
-            G.GENERAL_DRIVER_TIER_ENABLED = orig
-        out.append(got)
-    return out
+    return tiers.on_off(
+        lambda: sorted(map(tuple, hits_hubs_authorities(spark, SF_DIR).collect()))
+    )
 
 
-def test_hits_driver_tier_bit_identical_e2e(spark):
+def test_hits_driver_tier_bit_identical_e2e(spark, tiers):
     """The full query at sf0.001 returns byte-identical rows with the
     numpy driver tier on vs the distributed loop."""
-    fast, dist = _hits_both_tiers(spark)
+    fast, dist = _hits_both_tiers(spark, tiers)
     assert fast == dist
     assert len(fast) == 20  # top-10 hubs + top-10 authorities
 
 
-def test_hits_scaled_driver_matches_python_int_reference(spark):
+def test_hits_numpy_rounds_matches_python_int_reference():
     """Property check of the EXACTNESS argument: on random bipartite
     multigraphs (duplicate edges allowed — degree counts then differ per
     edge, exercising the count step), the numpy recurrence must equal a
     pure-Python arbitrary-precision integer replay of the distributed
     semantics (count -> rescale -> sum -> rescale per round)."""
+    import numpy as np
+
     import hadoop_data_lake_spark.operators.graph as G
 
     rng = random.Random(0x12C0DE)
@@ -73,14 +64,13 @@ def test_hits_scaled_driver_matches_python_int_reference(spark):
             (rng.randint(0, nh - 1), rng.randint(100, 100 + na - 1))
             for _ in range(m)
         ]
-        e = spark.createDataFrame(rows, "c long, s long")
-        n_c = len({c for c, _ in rows})
-        n_s = len({s for _, s in rows})
-        got = G.hits_scaled_driver(e, "c", "s", n_c, n_s, rounds=2)
-        assert got is not None
-        h_df, a_df = got
-        got_h = dict(map(tuple, h_df.collect()))
-        got_a = dict(map(tuple, a_df.collect()))
+        hub_u, hub_i = np.unique([c for c, _ in rows], return_inverse=True)
+        auth_u, auth_i = np.unique([s for _, s in rows], return_inverse=True)
+        h_arr, a_arr = G._hits_numpy_rounds(
+            hub_i, auth_i, len(hub_u), len(auth_u), rounds=2, scale=1_000_000
+        )
+        got_h = dict(zip(hub_u.tolist(), h_arr.tolist()))
+        got_a = dict(zip(auth_u.tolist(), a_arr.tolist()))
 
         # pure-Python integer reference
         scale = 1_000_000
@@ -106,95 +96,45 @@ def test_hits_scaled_driver_matches_python_int_reference(spark):
         assert got_a == a
 
 
-def test_hits_scaled_driver_cap_routing(spark):
-    """Caps and guards: tier disabled, node cap, edge cap, oversize
-    scale, and an empty edge list must all return None (the caller then
-    takes the distributed loop unchanged)."""
-    import hadoop_data_lake_spark.operators.graph as G
-
-    e = spark.createDataFrame([(1, 2), (3, 2)], "c long, s long")
-
-    orig = G.GENERAL_DRIVER_TIER_ENABLED
-    G.GENERAL_DRIVER_TIER_ENABLED = False
-    try:
-        assert G.hits_scaled_driver(e, "c", "s", 2, 1) is None
-    finally:
-        G.GENERAL_DRIVER_TIER_ENABLED = orig
-
-    # node cap: n_hubs + n_auths over the budget — no edge-count job is
-    # observable from here, but the return must be None
-    assert (
-        G.hits_scaled_driver(e, "c", "s", G.GENERAL_DRIVER_MAX_NODES, 1)
-        is None
-    )
-
-    orig_e = G.NUMPY_DRIVER_MAX_EDGES
-    G.NUMPY_DRIVER_MAX_EDGES = 1
-    try:
-        assert G.hits_scaled_driver(e, "c", "s", 2, 1) is None
-    finally:
-        G.NUMPY_DRIVER_MAX_EDGES = orig_e
-
-    # the exactness chain is sized to scale=1e6; larger scales must bow out
-    assert G.hits_scaled_driver(e, "c", "s", 2, 1, scale=10_000_000) is None
-
-    empty = spark.createDataFrame([], "c long, s long")
-    assert G.hits_scaled_driver(empty, "c", "s", 0, 0) is None
-
-
-def test_hits_query_distributed_path_shape(spark):
+def test_hits_query_distributed_path_shape(spark, tiers):
     """With the tier pinned off, the query's final frame comes from the
     iterated checkpoint chain (Scan ExistingRDD), not a local collect —
     the cap-routing probe the r11 tier tests established."""
-    import hadoop_data_lake_spark.operators.graph as G
     from hadoop_data_lake_spark.queries.tpch_queries import (
         hits_hubs_authorities,
     )
 
-    orig = G.GENERAL_DRIVER_TIER_ENABLED
-    G.GENERAL_DRIVER_TIER_ENABLED = False
-    try:
-        df = hits_hubs_authorities(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan
-    finally:
-        G.GENERAL_DRIVER_TIER_ENABLED = orig
+    tiers(False)
+    df = hits_hubs_authorities(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan
 
 
 # ------------------------------------------------------ LPA null weights
 
 
-def _lpa_both_tiers(spark, rows, iters=4):
+def _lpa_both_tiers(spark, tiers, rows, iters=4):
     import hadoop_data_lake_spark.operators.graph as G
 
-    out = []
-    for enabled in (True, False):
-        orig = G.GENERAL_DRIVER_TIER_ENABLED
-        G.GENERAL_DRIVER_TIER_ENABLED = enabled
-        try:
-            e = spark.createDataFrame(
-                rows, "brand_a string, brand_b string, w long"
+    e = spark.createDataFrame(rows, "brand_a string, brand_b string, w long")
+    return tiers.on_off(
+        lambda: sorted(
+            map(
+                tuple,
+                G.lpa_communities(
+                    e, src="brand_a", dst="brand_b", weight="w", iters=iters,
+                ).collect(),
             )
-            got = sorted(
-                map(
-                    tuple,
-                    G.lpa_communities(
-                        e, src="brand_a", dst="brand_b", weight="w",
-                        iters=iters,
-                    ).collect(),
-                )
-            )
-        finally:
-            G.GENERAL_DRIVER_TIER_ENABLED = orig
-        out.append(got)
-    return out
+        )
+    )
 
 
-def test_lpa_driver_tier_null_weights_no_crash(spark):
+def test_lpa_driver_tier_null_weights_no_crash(spark, tiers):
     """ADVICE r11: a NULL edge weight raised TypeError in the driver
     tier while the distributed loop's F.sum silently skipped it. Both
-    paths must now agree bit-for-bit on a graph mixing null and non-null
-    weights."""
+    paths must agree bit-for-bit on a graph mixing null and non-null
+    weights (the driver-tier gate now declines NULL weights, so the
+    distributed loop answers both runs)."""
     rows = [
         ("a", "b", None),   # null weight inside a group that also has a 3
         ("a", "b", 3),
@@ -202,12 +142,12 @@ def test_lpa_driver_tier_null_weights_no_crash(spark):
         ("c", "d", None),   # group with ONLY null weights (SQL sum -> NULL)
         ("x", "y", 2),      # clean separate component
     ]
-    fast, dist = _lpa_both_tiers(spark, rows)
+    fast, dist = _lpa_both_tiers(spark, tiers, rows)
     assert fast == dist
     assert len(fast) == 6
 
 
-def test_lpa_driver_tier_null_vs_zero_ranking(spark):
+def test_lpa_driver_tier_null_vs_zero_ranking(spark, tiers):
     """The semantic corner the 'treat null as 0' shortcut gets wrong:
     a candidate label whose weight sum is 0 must BEAT a candidate whose
     sum is SQL-NULL (desc ranks nulls last), even when the null label
@@ -219,7 +159,7 @@ def test_lpa_driver_tier_null_vs_zero_ranking(spark):
         ("v", "aa", None),
         ("v", "zz", 0),
     ]
-    fast, dist = _lpa_both_tiers(spark, rows, iters=1)
+    fast, dist = _lpa_both_tiers(spark, tiers, rows, iters=1)
     assert fast == dist
     v_row = [r for r in fast if r[0] == "v"]
     assert v_row and v_row[0][1] == "zz"
@@ -229,22 +169,22 @@ def test_lpa_driver_tier_null_vs_zero_ranking(spark):
 
 
 @pytest.mark.parametrize("orig_value", [True, False])
-def test_run_scale_tier_restores_flag_on_exception(monkeypatch, orig_value):
+def test_run_scale_tier_restores_flag_on_exception(monkeypatch, tiers, orig_value):
     """ADVICE r11: an exception mid-scale-tier must not leave the driver
     tier disabled process-wide, and the restore must honor a caller that
     had deliberately disabled it (the tools/scale_probe_100x pattern)."""
     import bench
-    import hadoop_data_lake_spark.operators.graph as G
+    import hadoop_data_lake_spark.core.driver_tier as DT
 
     def boom(spark, base_dir):
-        assert G.GENERAL_DRIVER_TIER_ENABLED is False  # pinned inside
+        assert DT.GENERAL_DRIVER_TIER_ENABLED is False  # pinned inside
         raise RuntimeError("mid-tier failure")
 
     monkeypatch.setattr(bench, "_run_scale_tier_inner", boom)
-    monkeypatch.setattr(G, "GENERAL_DRIVER_TIER_ENABLED", orig_value)
+    tiers(orig_value)
     with pytest.raises(RuntimeError):
         bench.run_scale_tier(None, "/nonexistent")
-    assert G.GENERAL_DRIVER_TIER_ENABLED is orig_value
+    assert DT.GENERAL_DRIVER_TIER_ENABLED is orig_value
 
 
 # ------------------------------------------------- token_lang_mi domain

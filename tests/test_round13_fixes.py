@@ -1,8 +1,8 @@
 """Regression tests for the round-13 hardening (ADVICE r12 items).
 
-- operators/graph.hits_scaled_driver: the int64/float64 exactness
-  envelope now travels WITH the function — a future raise of the mutable
-  NUMPY_DRIVER_MAX_EDGES module cap cannot silently outrun the <2^53
+- operators/graph.hits_topk_sides_driver: the int64/float64 exactness
+  envelope travels WITH the function — a raise of the mutable
+  `core.driver_tier.NUMPY_MAX_ROWS` cap cannot silently outrun the <2^53
   bincount / <2^63 rescale proof (numpy wraps int64 without raising).
 - __main__.main: ANN_DEPLOY_OVERRIDES is cleared in a finally block, so
   a query that raises mid-run can no longer leak the --auto-scale
@@ -24,19 +24,27 @@ def _edges(spark):
     return spark.createDataFrame([(1, 10), (1, 11), (2, 10)], "c int, s int")
 
 
+def _raise_caps(monkeypatch, rows):
+    """Lift the gate's row and byte caps so only the envelope can bind."""
+    import hadoop_data_lake_spark.core.driver_tier as DT
+
+    monkeypatch.setattr(DT, "NUMPY_MAX_ROWS", rows)
+    monkeypatch.setattr(DT, "MAX_BYTES", 2**62)
+
+
 def test_hits_guard_blocks_int64_rescale_overflow(spark, monkeypatch):
     """scale^2 * |E| >= 2^63 must route to the distributed loop even when
     the module edge cap has been raised past the proof's envelope."""
     import hadoop_data_lake_spark.operators.graph as G
 
-    monkeypatch.setattr(G, "NUMPY_DRIVER_MAX_EDGES", 10**11)
+    _raise_caps(monkeypatch, 10**11)
     e = _edges(spark)
     # scale=1e6 -> numerator bound scale^2 * |E| = 1e12 * 1e10 >> 2^63
-    assert G.hits_scaled_driver(e, "c", "s", 2, 2, n_edges=10**10) is None
+    assert G.hits_topk_sides_driver(e, "c", "s", n_edges_bound=10**10) is None
     # just under the cap but over the envelope: still None
-    assert G.hits_scaled_driver(e, "c", "s", 2, 2, n_edges=10**7) is None
+    assert G.hits_topk_sides_driver(e, "c", "s", n_edges_bound=10**7) is None
     # inside the envelope (1e12 * 9e6 < 2^63): the tier runs
-    assert G.hits_scaled_driver(e, "c", "s", 2, 2, n_edges=9_000_000) is not None
+    assert G.hits_topk_sides_driver(e, "c", "s", n_edges_bound=9_000_000) is not None
 
 
 def test_hits_guard_blocks_float64_sum_inexactness(spark, monkeypatch):
@@ -44,13 +52,13 @@ def test_hits_guard_blocks_float64_sum_inexactness(spark, monkeypatch):
     independently of the int64 bound — at small scales it binds first."""
     import hadoop_data_lake_spark.operators.graph as G
 
-    monkeypatch.setattr(G, "NUMPY_DRIVER_MAX_EDGES", 2**54)
+    _raise_caps(monkeypatch, 2**54)
     e = _edges(spark)
     # scale=1: 2^53 edges breaches the float64 bound while scale^2*|E|
     # (= 2^53) is still under 2^63
-    assert G.hits_scaled_driver(e, "c", "s", 2, 2, scale=1, n_edges=2**53) is None
+    assert G.hits_topk_sides_driver(e, "c", "s", scale=1, n_edges_bound=2**53) is None
     assert (
-        G.hits_scaled_driver(e, "c", "s", 2, 2, scale=1, n_edges=2**52)
+        G.hits_topk_sides_driver(e, "c", "s", scale=1, n_edges_bound=2**52)
         is not None
     )
 
@@ -58,12 +66,13 @@ def test_hits_guard_blocks_float64_sum_inexactness(spark, monkeypatch):
 def test_hits_guard_no_false_trigger_at_shipped_caps(spark):
     """At the shipped caps (scale<=1e6, |E|<=4e6) the new guard is
     strictly looser than the existing cap checks — it never fires."""
+    import hadoop_data_lake_spark.core.driver_tier as DT
     import hadoop_data_lake_spark.operators.graph as G
 
-    assert 10**6 * G.NUMPY_DRIVER_MAX_EDGES < 2**53
-    assert 10**12 * G.NUMPY_DRIVER_MAX_EDGES < 2**63
-    got = G.hits_scaled_driver(
-        _edges(spark), "c", "s", 2, 2, n_edges=G.NUMPY_DRIVER_MAX_EDGES
+    assert 10**6 * DT.NUMPY_MAX_ROWS < 2**53
+    assert 10**12 * DT.NUMPY_MAX_ROWS < 2**63
+    got = G.hits_topk_sides_driver(
+        _edges(spark), "c", "s", n_edges_bound=DT.NUMPY_MAX_ROWS
     )
     assert got is not None
 
@@ -140,7 +149,7 @@ def test_pagerank_deg_col_bit_identical_layered(spark):
     assert _ranks(plain) == _ranks(fused)
 
 
-def test_pagerank_deg_col_bit_identical_general_loop_with_multiedges(spark):
+def test_pagerank_deg_col_bit_identical_general_loop_with_multiedges(spark, tiers):
     """The general distributed loop (contrib_base now joins the flags
     frame for dst_dang instead of an out_deg self-join) must stay
     bit-identical to the untouched general DRIVER tier, with multi-edges
@@ -160,18 +169,14 @@ def test_pagerank_deg_col_bit_identical_general_loop_with_multiedges(spark):
     )
     out = {}
     for enabled in (True, False):
-        orig = G.GENERAL_DRIVER_TIER_ENABLED
-        G.GENERAL_DRIVER_TIER_ENABLED = enabled
-        try:
-            out[("plain", enabled)] = _ranks(G.pagerank_intexact(e, iters=4))
-            out[("deg", enabled)] = _ranks(
-                G.pagerank_intexact(e_deg, iters=4, deg_col="deg")
-            )
-        finally:
-            G.GENERAL_DRIVER_TIER_ENABLED = orig
+        tiers(enabled)
+        out[("plain", enabled)] = _ranks(G.pagerank_intexact(e, iters=4))
+        out[("deg", enabled)] = _ranks(
+            G.pagerank_intexact(e_deg, iters=4, deg_col="deg")
+        )
     assert len({tuple(v) for v in out.values()}) == 1, out
 
-def test_pagerank_deg_col_property_random_graphs(spark):
+def test_pagerank_deg_col_property_random_graphs(spark, tiers):
     """Property harness for the r13 deg_col fusion: on random small
     digraphs (dangles, duplicate edges, cycles, multiple components all
     arise naturally), pagerank_intexact must return BIT-identical ranks
@@ -196,23 +201,17 @@ def test_pagerank_deg_col_property_random_graphs(spark):
         rows = [(s, d) for s, d in rows if s != d] or [(0, 1)]
         outs = set()
         for enabled in (True, False):
-            orig = G.GENERAL_DRIVER_TIER_ENABLED
-            G.GENERAL_DRIVER_TIER_ENABLED = enabled
-            try:
-                e = spark.createDataFrame(rows, "src long, dst long")
-                outs.add(tuple(_ranks(G.pagerank_intexact(e, iters=3))))
-                e_deg = e.repartition("src").withColumn(
-                    "deg", F.count("*").over(Window.partitionBy("src"))
+            tiers(enabled)
+            e = spark.createDataFrame(rows, "src long, dst long")
+            outs.add(tuple(_ranks(G.pagerank_intexact(e, iters=3))))
+            e_deg = e.repartition("src").withColumn(
+                "deg", F.count("*").over(Window.partitionBy("src"))
+            )
+            outs.add(
+                tuple(
+                    _ranks(G.pagerank_intexact(e_deg, iters=3, deg_col="deg"))
                 )
-                outs.add(
-                    tuple(
-                        _ranks(
-                            G.pagerank_intexact(e_deg, iters=3, deg_col="deg")
-                        )
-                    )
-                )
-            finally:
-                G.GENERAL_DRIVER_TIER_ENABLED = orig
+            )
         assert len(outs) == 1, (draw, rows)
 
 # -------------------------------------------- round-artifact checklist gate
@@ -259,15 +258,15 @@ def test_backlog_artifacts_gate(tmp_path):
     (repo / "bench_detail.json").write_text('{"changed": true}')
     assert run_in(repo) == 1  # modified tracked artifact: dirty
 
-def test_lpa_null_weight_property_random_graphs(spark):
+def test_lpa_null_weight_property_random_graphs(spark, tiers):
     """Property extension of the r12 NULL-weight fix: on random digraphs
     where ~1/3 of edge weights are SQL NULL (all-null candidate groups,
     null-vs-zero ranking corners, and multi-edges arise naturally), the
-    LPA driver tier must stay BIT-identical to the distributed loop.
-    Same seeded-RNG harness as the pagerank deg_col property test."""
+    LPA operator must give BIT-identical results with the driver tiers on
+    and off (the gate declines NULL weights, so the distributed loop
+    answers those draws). Same seeded-RNG harness as the pagerank deg_col
+    property test."""
     import random
-
-    import hadoop_data_lake_spark.operators.graph as G
 
     rng = random.Random(0x13A11)
     for draw in range(4):
@@ -282,32 +281,21 @@ def test_lpa_null_weight_property_random_graphs(spark):
             rows.append((f"n{s}", f"n{d}", w))
         if not rows:
             rows = [("n0", "n1", None)]
-        fast, dist = _lpa_both_tiers_r13(spark, rows, iters=3)
+        fast, dist = _lpa_both_tiers_r13(spark, tiers, rows, iters=3)
         assert fast == dist, (draw, rows)
 
 
-def _lpa_both_tiers_r13(spark, rows, iters):
+def _lpa_both_tiers_r13(spark, tiers, rows, iters):
     import hadoop_data_lake_spark.operators.graph as G
 
-    out = []
-    for enabled in (True, False):
-        orig = G.GENERAL_DRIVER_TIER_ENABLED
-        G.GENERAL_DRIVER_TIER_ENABLED = enabled
-        try:
-            e = spark.createDataFrame(
-                rows, "brand_a string, brand_b string, w long"
+    e = spark.createDataFrame(rows, "brand_a string, brand_b string, w long")
+    return tiers.on_off(
+        lambda: sorted(
+            map(
+                tuple,
+                G.lpa_communities(
+                    e, src="brand_a", dst="brand_b", weight="w", iters=iters,
+                ).collect(),
             )
-            out.append(
-                sorted(
-                    map(
-                        tuple,
-                        G.lpa_communities(
-                            e, src="brand_a", dst="brand_b", weight="w",
-                            iters=iters,
-                        ).collect(),
-                    )
-                )
-            )
-        finally:
-            G.GENERAL_DRIVER_TIER_ENABLED = orig
-    return out
+        )
+    )

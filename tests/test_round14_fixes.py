@@ -180,36 +180,11 @@ def _sides(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_hits_topk_fused_matches_two_frame_tier_with_dupes(spark):
-    """The r14 fused tier (raw edges in, numpy pair-dedup, 2k rows out)
-    must be bit-identical to the r12 two-frame tier + _hits_top_sides on
-    an edge list WITH duplicates (the fused tier's np.unique must equal
-    SQL DISTINCT)."""
-    from pyspark.sql import functions as F
-
-    import hadoop_data_lake_spark.operators.graph as G
-    from hadoop_data_lake_spark.queries.tpch_queries import _hits_top_sides
-
-    raw = spark.createDataFrame(
-        [(1, 10), (1, 10), (1, 11), (2, 10), (2, 12), (3, 12), (3, 12)],
-        "c long, s long",
-    )
-    fused = G.hits_topk_sides_driver(
-        raw, "c", "s", rounds=2, k=10, n_edges_bound=raw.count()
-    )
-    assert fused is not None
-    e = raw.distinct()
-    n_c, n_s, n_e = e.agg(
-        F.countDistinct("c"), F.countDistinct("s"), F.count("*")
-    ).first()
-    h, a = G.hits_scaled_driver(e, "c", "s", n_c, n_s, rounds=2, n_edges=n_e)
-    assert _sides(fused) == _sides(_hits_top_sides(h, a))
-
-
 def test_hits_topk_fused_property_random_bipartite(spark):
-    """Random bipartite multigraphs: the fused tier, the two-frame tier,
-    and the DISTRIBUTED loop (tier disabled, via the graded query shape)
-    must agree bit-for-bit on the (side, node, score) rows. Seeded
+    """Random bipartite multigraphs: the fused tier and the DISTRIBUTED
+    loop (the graded query's fallback shape) must agree bit-for-bit on the
+    (side, node, score) rows. Duplicate edges arise naturally, so the
+    fused tier's np.unique pair dedupe must equal SQL DISTINCT. Seeded
     stdlib RNG, one Spark pipeline per draw."""
     import random
 
@@ -234,24 +209,21 @@ def test_hits_topk_fused_property_random_bipartite(spark):
         )
         assert fused is not None, draw
         e = raw.distinct().localCheckpoint(eager=True)
-        n_c, n_s, n_e = e.agg(
-            F.countDistinct("c"), F.countDistinct("s"), F.count("*")
-        ).first()
-        h, a = G.hits_scaled_driver(e, "c", "s", n_c, n_s, rounds=2, n_edges=n_e)
-        two_frame = _hits_top_sides(h, a)
+
         # distributed loop: replay the graded query's fallback shape
-        def rescale(df, n_rows):
+        def rescale(df):
             df = df.localCheckpoint(eager=True)
             mx = df.agg(F.max("v").alias("m"))
             return df.crossJoin(F.broadcast(mx)).select(
                 df.columns[0], F.expr("v * 1000000 div m").alias("v")
             )
 
-        a_d = rescale(e.groupBy("s").agg(F.count("*").cast("long").alias("v")), n_s)
-        h_d = rescale(e.join(a_d, "s").groupBy("c").agg(F.sum("v").alias("v")), n_c)
-        a_d = rescale(e.join(h_d, "c").groupBy("s").agg(F.sum("v").alias("v")), n_s)
-        h_d = rescale(e.join(a_d, "s").groupBy("c").agg(F.sum("v").alias("v")), n_c)
+        a_d = rescale(e.groupBy("s").agg(F.count("*").cast("long").alias("v")))
+        h_d = rescale(e.join(a_d, "s").groupBy("c").agg(F.sum("v").alias("v")))
+        a_d = rescale(e.join(h_d, "c").groupBy("s").agg(F.sum("v").alias("v")))
+        h_d = rescale(e.join(a_d, "s").groupBy("c").agg(F.sum("v").alias("v")))
         dist = _hits_top_sides(h_d, a_d)
+
         # k may trim: compare fused against the k-trimmed reference sides
         def trim(sides_rows, kk):
             hubs = [r for r in sides_rows if r[0] == "hub"]
@@ -259,20 +231,20 @@ def test_hits_topk_fused_property_random_bipartite(spark):
             key = lambda r: (-r[2], r[1])
             return sorted(sorted(hubs, key=key)[:kk] + sorted(auths, key=key)[:kk])
 
-        assert _sides(fused) == trim(_sides(two_frame), k), draw
-        assert trim(_sides(two_frame), k) == trim(_sides(dist), k), draw
+        assert _sides(fused) == trim(_sides(dist), k), draw
 
 
-def test_hits_topk_fused_cap_routing(spark):
+def test_hits_topk_fused_cap_routing(spark, tiers):
     """Bound/envelope violations must decline (None), including an
     unsound caller bound discovered post-collect."""
+    import hadoop_data_lake_spark.core.driver_tier as DT
     import hadoop_data_lake_spark.operators.graph as G
 
     raw = spark.createDataFrame([(1, 10), (2, 10)], "c long, s long")
     assert G.hits_topk_sides_driver(raw, "c", "s", n_edges_bound=None) is None
     assert (
         G.hits_topk_sides_driver(
-            raw, "c", "s", n_edges_bound=G.NUMPY_DRIVER_MAX_EDGES + 1
+            raw, "c", "s", n_edges_bound=DT.NUMPY_MAX_ROWS + 1
         )
         is None
     )
@@ -287,12 +259,8 @@ def test_hits_topk_fused_cap_routing(spark):
     mixed = spark.createDataFrame([(1, 10)], "c int, s long")
     assert G.hits_topk_sides_driver(mixed, "c", "s", n_edges_bound=1) is None
     # disabled tier declines
-    orig = G.GENERAL_DRIVER_TIER_ENABLED
-    G.GENERAL_DRIVER_TIER_ENABLED = False
-    try:
-        assert G.hits_topk_sides_driver(raw, "c", "s", n_edges_bound=2) is None
-    finally:
-        G.GENERAL_DRIVER_TIER_ENABLED = orig
+    tiers(False)
+    assert G.hits_topk_sides_driver(raw, "c", "s", n_edges_bound=2) is None
 
 
 

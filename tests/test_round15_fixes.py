@@ -2,8 +2,8 @@
 
 1. hits_topk_sides_driver declines non-integral node columns instead of
    crashing in the numpy index encoding.
-2. hits_hubs_authorities skips the n_edges_bound count job entirely when
-   the driver tier is pinned off (the tier function is never called).
+2. hits_hubs_authorities runs no Spark job for the fused tier when the
+   driver tiers are pinned off (the gate declines before any count).
 3. check_oracle rejects --scaled-variants at non-sf0.1 scales (exit 2).
 4. round_gate's entry() smoke assertion is non-vacuous (> 0, not >= 0).
 5. The fused-tier docstring names the real cap (edge count, not bytes).
@@ -47,22 +47,34 @@ def test_hits_fused_still_runs_on_int_columns(spark):
     assert out is not None and out.count() > 0
 
 
-def test_hits_query_skips_tier_and_its_count_when_disabled(spark, monkeypatch):
-    """With the tier pinned off, the query must not even call the tier
-    function (whose bound argument is the extra count job ADVICE r14
-    flagged) — and the distributed fallback must still answer."""
+def test_hits_query_skips_tier_and_its_count_when_disabled(spark, monkeypatch, tiers):
+    """With the tiers pinned off, the fused tier must decline without
+    running a single Spark job (no bound count, no collect — ADVICE r14),
+    and the distributed fallback must still answer."""
     import hadoop_data_lake_spark.operators.graph as G
     from hadoop_data_lake_spark.queries.tpch_queries import (
         hits_hubs_authorities,
     )
 
-    def _boom(*a, **k):  # pragma: no cover - the assertion is that it never runs
-        raise AssertionError("fused tier called while disabled")
+    sc = spark.sparkContext
+    calls = []
+    orig = G.hits_topk_sides_driver
 
-    monkeypatch.setattr(G, "GENERAL_DRIVER_TIER_ENABLED", False)
-    monkeypatch.setattr(G, "hits_topk_sides_driver", _boom)
+    def spy(*a, **k):
+        sc.setLocalProperty("spark.jobGroup.id", "hits-tier-off")
+        try:
+            out = orig(*a, **k)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        calls.append(out)
+        return out
+
+    tiers(False)
+    monkeypatch.setattr(G, "hits_topk_sides_driver", spy)
     rows = hits_hubs_authorities(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) == 20
+    assert calls == [None]
+    assert sc.statusTracker().getJobIdsForGroup("hits-tier-off") == []
 
 
 def test_check_oracle_rejects_scaled_variants_at_graded_scales():
@@ -94,7 +106,7 @@ def test_fused_docstring_names_the_edge_cap():
     import hadoop_data_lake_spark.operators.graph as G
 
     doc = G.hits_topk_sides_driver.__doc__
-    assert "NUMPY_DRIVER_MAX_EDGES" in doc
+    assert "NUMPY_MAX_ROWS" in doc
     assert "byte cap and the exactness envelope" not in doc
 
 

@@ -19,7 +19,6 @@ Two new fused driver tiers (OPTIMIZATION_r15.md):
 
 import random
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -28,15 +27,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from hadoop_data_lake_spark.core import driver_tier as DT
 from hadoop_data_lake_spark.operators import graph as G
-
-
-@pytest.fixture()
-def tier_guard():
-    """Restore the module tier switch after each test."""
-    orig = G.GENERAL_DRIVER_TIER_ENABLED
-    yield
-    G.GENERAL_DRIVER_TIER_ENABLED = orig
 
 
 def _bipartite_edges(spark, seed, n_src=25, n_dst=8, m=120):
@@ -56,7 +48,7 @@ def _bipartite_edges(spark, seed, n_src=25, n_dst=8, m=120):
 # ------------------------------------------------ pagerank fused tier
 
 
-def test_pagerank_layered_driver_bit_identity(spark, tier_guard):
+def test_pagerank_layered_driver_bit_identity(spark, tiers):
     """Fused tier == distributed loop on random bipartite multigraphs,
     raw (pre-dedup) edges in, across iteration counts."""
     from pyspark.sql import Window
@@ -68,7 +60,7 @@ def test_pagerank_layered_driver_bit_identity(spark, tier_guard):
         )
         assert got is not None
         a = {(r["node"], r["rank_units"]) for r in got.collect()}
-        G.GENERAL_DRIVER_TIER_ENABLED = False
+        tiers(False)
         edges = (
             e_raw.repartition("src")
             .dropDuplicates(["src", "dst"])
@@ -78,11 +70,11 @@ def test_pagerank_layered_driver_bit_identity(spark, tier_guard):
             (r["node"], r["rank_units"])
             for r in G.pagerank_intexact(edges, iters=iters, deg_col="deg").collect()
         }
-        G.GENERAL_DRIVER_TIER_ENABLED = True
+        tiers(True)
         assert a == b, f"seed={seed} iters={iters}"
 
 
-def test_pagerank_layered_driver_declines(spark, tier_guard):
+def test_pagerank_layered_driver_declines(spark, tiers):
     e = _bipartite_edges(spark, 7)
     n = e.count()
     # non-layered: a node on both sides
@@ -99,7 +91,7 @@ def test_pagerank_layered_driver_declines(spark, tier_guard):
     assert G.pagerank_layered_driver(e, "src", "dst", n_edges_bound=None) is None
     assert (
         G.pagerank_layered_driver(
-            e, "src", "dst", n_edges_bound=G.NUMPY_DRIVER_MAX_EDGES + 1
+            e, "src", "dst", n_edges_bound=DT.NUMPY_MAX_ROWS + 1
         )
         is None
     )
@@ -112,22 +104,23 @@ def test_pagerank_layered_driver_declines(spark, tier_guard):
     )
     assert G.pagerank_layered_driver(se, "src", "dst", n_edges_bound=2) is None
     # tier switch pinned off
-    G.GENERAL_DRIVER_TIER_ENABLED = False
+    tiers(False)
     assert G.pagerank_layered_driver(e, "src", "dst", n_edges_bound=n) is None
 
 
 # ------------------------------------------------ connected-components tier
 
 
-def _cc_both_ways(spark, df):
-    a = {(r[0], r[1]) for r in G.connected_components(df, "doc_a", "doc_b").collect()}
-    G.GENERAL_DRIVER_TIER_ENABLED = False
-    b = {(r[0], r[1]) for r in G.connected_components(df, "doc_a", "doc_b").collect()}
-    G.GENERAL_DRIVER_TIER_ENABLED = True
-    return a, b
+def _cc_both_ways(tiers, df):
+    return tiers.on_off(
+        lambda: {
+            (r[0], r[1])
+            for r in G.connected_components(df, "doc_a", "doc_b").collect()
+        }
+    )
 
 
-def test_cc_driver_identity_random_graphs(spark, tier_guard):
+def test_cc_driver_identity_random_graphs(spark, tiers):
     """Union-find tier == star loop on random graphs with duplicates,
     reversed duplicates and self-loops."""
     schema = StructType(
@@ -140,13 +133,13 @@ def test_cc_driver_identity_random_graphs(spark, tier_guard):
             (rng.randint(0, n), rng.randint(0, n)) for _ in range(rng.randint(1, 120))
         ]
         df = spark.createDataFrame(rows, schema)
-        a, b = _cc_both_ways(spark, df)
+        a, b = _cc_both_ways(tiers, df)
         assert a == b
         # component = min reachable id: every label <= its vertex
         assert all(c <= v for v, c in a)
 
 
-def test_cc_driver_identity_string_ids(spark, tier_guard):
+def test_cc_driver_identity_string_ids(spark, tiers):
     schema = StructType(
         [StructField("doc_a", StringType()), StructField("doc_b", StringType())]
     )
@@ -156,11 +149,11 @@ def test_cc_driver_identity_string_ids(spark, tier_guard):
         for _ in range(80)
     ]
     df = spark.createDataFrame(rows, schema)
-    a, b = _cc_both_ways(spark, df)
+    a, b = _cc_both_ways(tiers, df)
     assert a == b
 
 
-def test_cc_driver_declines_mixed_types_and_cap(spark, tier_guard, monkeypatch):
+def test_cc_driver_declines_mixed_types_and_cap(spark, tiers, monkeypatch):
     # mixed id types: decline (the distributed loop is the behavior oracle)
     df = spark.createDataFrame(
         [("a", 1), ("b", 2)],
@@ -173,11 +166,11 @@ def test_cc_driver_declines_mixed_types_and_cap(spark, tier_guard, monkeypatch):
         [(1, 2)],
         StructType([StructField("u", LongType()), StructField("v", LongType())]),
     ).localCheckpoint(eager=True)
-    monkeypatch.setattr(G, "GENERAL_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(DT, "MAX_ROWS", 0)
     assert G._cc_driver(small) is None
 
 
-def test_dedup_clusters_identity_tier_on_off(spark, tier_guard):
+def test_dedup_clusters_identity_tier_on_off(spark, tiers):
     """End-to-end: dedup_clusters output (doc, cluster_rep, cluster_size)
     identical with the driver tier on and off."""
     schema = StructType(
@@ -185,10 +178,7 @@ def test_dedup_clusters_identity_tier_on_off(spark, tier_guard):
     )
     rows = [(1, 2), (2, 3), (10, 11), (5, 5), (3, 1)]
     df = spark.createDataFrame(rows, schema)
-    a = {tuple(r) for r in G.dedup_clusters(df).collect()}
-    G.GENERAL_DRIVER_TIER_ENABLED = False
-    b = {tuple(r) for r in G.dedup_clusters(df).collect()}
-    G.GENERAL_DRIVER_TIER_ENABLED = True
+    a, b = tiers.on_off(lambda: {tuple(r) for r in G.dedup_clusters(df).collect()})
     assert a == b
     assert {(1, 1, 3), (2, 1, 3), (3, 1, 3)} <= a
 
@@ -196,7 +186,7 @@ def test_dedup_clusters_identity_tier_on_off(spark, tier_guard):
 # ------------------------------------------------ prefix_agg driver tier
 
 
-def test_prefix_agg_driver_identity_random(spark, tier_guard):
+def test_prefix_agg_driver_identity_random(spark, tiers):
     """Driver tier == two-phase distributed path on random frames with
     multi-column order keys, signed integer sums and mixed-type maxes."""
     from hadoop_data_lake_spark.operators.packing import prefix_agg
@@ -215,14 +205,13 @@ def test_prefix_agg_driver_identity_random(spark, tier_guard):
         ]
         df = spark.createDataFrame(rows, "oid long, okey string, val int, fval double")
         args = dict(sum_cols={"s": "val"}, max_cols={"m": "val", "fm": "fval"})
-        a = sorted(map(str, prefix_agg(df, ["oid", "okey"], **args).collect()))
-        G.GENERAL_DRIVER_TIER_ENABLED = False
-        b = sorted(map(str, prefix_agg(df, ["oid", "okey"], **args).collect()))
-        G.GENERAL_DRIVER_TIER_ENABLED = True
+        a, b = tiers.on_off(
+            lambda: sorted(map(str, prefix_agg(df, ["oid", "okey"], **args).collect()))
+        )
         assert a == b
 
 
-def test_prefix_agg_driver_declines(spark, tier_guard, monkeypatch):
+def test_prefix_agg_driver_declines(spark, tiers, monkeypatch):
     from hadoop_data_lake_spark.operators import packing as P
 
     # float sum inputs: order-dependent in the low bits -> decline
@@ -233,7 +222,7 @@ def test_prefix_agg_driver_declines(spark, tier_guard, monkeypatch):
     assert P._prefix_agg_driver(df2, ["oid"], {"s": "val"}, {}) is None
     # over-cap -> decline via the limit probe
     df3 = spark.createDataFrame([(1, 1), (2, 2), (3, 3)], "oid long, val int")
-    monkeypatch.setattr(P, "PREFIX_DRIVER_MAX_ROWS", 2)
+    monkeypatch.setattr(DT, "MAX_ROWS", 2)
     assert P._prefix_agg_driver(df3, ["oid"], {"s": "val"}, {}) is None
     monkeypatch.undo()
     # int64 overflow envelope -> decline
@@ -242,5 +231,5 @@ def test_prefix_agg_driver_declines(spark, tier_guard, monkeypatch):
     )
     assert P._prefix_agg_driver(big, ["oid"], {"s": "val"}, {}) is None
     # tier switch off -> decline
-    G.GENERAL_DRIVER_TIER_ENABLED = False
+    tiers(False)
     assert P._prefix_agg_driver(df3, ["oid"], {"s": "val"}, {}) is None

@@ -25,16 +25,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from hadoop_data_lake_spark.core import driver_tier as DT
 from hadoop_data_lake_spark.core import io as IO
 from hadoop_data_lake_spark.operators import graph as G
 from hadoop_data_lake_spark.operators import packing as P
-
-
-@pytest.fixture()
-def tier_guard():
-    orig = G.GENERAL_DRIVER_TIER_ENABLED
-    yield
-    G.GENERAL_DRIVER_TIER_ENABLED = orig
 
 
 # ---------------------------------------------- parquet_row_count cap
@@ -113,16 +107,16 @@ def _counted_frame(spark, n=20):
     return df, acc
 
 
-def test_prefix_bound_over_cap_skips_probe(spark, tier_guard, monkeypatch):
+def test_prefix_bound_over_cap_skips_probe(spark, tiers, monkeypatch):
     """An over-cap `n_rows_bound` must decline WITHOUT the limit(cap+1)
     probe: the upstream executes exactly as many times as the tier-off
     distributed path (VERDICT r15 item 6), and the boundless probe path
     demonstrably executes it more."""
-    monkeypatch.setattr(P, "PREFIX_DRIVER_MAX_ROWS", 10)
+    monkeypatch.setattr(DT, "MAX_ROWS", 10)
     n = 20
 
     def run(bound, tier_on):
-        G.GENERAL_DRIVER_TIER_ENABLED = tier_on
+        tiers(tier_on)
         df, acc = _counted_frame(spark, n)
         out = P.prefix_agg(
             df, ["k"], sum_cols={"rk": "__one"}, n_rows_bound=bound
@@ -142,7 +136,7 @@ def test_prefix_bound_over_cap_skips_probe(spark, tier_guard, monkeypatch):
     assert probe_execs > base_execs
 
 
-def test_prefix_bound_under_cap_fires(spark, tier_guard):
+def test_prefix_bound_under_cap_fires(spark, tiers):
     """A sound under-cap bound keeps the tier firing (and the defensive
     limit recheck still declines when the promise is broken)."""
     df = spark.range(50).select(F.col("id").alias("k")).withColumn(
@@ -156,7 +150,7 @@ def test_prefix_bound_under_cap_fires(spark, tier_guard):
     # broken promise: bound says 10, frame holds 50 over a 10-row cap
     import unittest.mock as mock
 
-    with mock.patch.object(P, "PREFIX_DRIVER_MAX_ROWS", 10):
+    with mock.patch.object(DT, "MAX_ROWS", 10):
         assert (
             P._prefix_agg_driver(df, ["k"], {"rk": "__one"}, {}, n_rows_bound=5)
             is None
@@ -166,7 +160,7 @@ def test_prefix_bound_under_cap_fires(spark, tier_guard):
 # ------------------------------------------ prefix byte / NULL gates
 
 
-def test_prefix_tier_declines_array_passthrough(spark, tier_guard):
+def test_prefix_tier_declines_array_passthrough(spark, tiers):
     """Unbounded-payload passthrough columns decline the collect (ADVICE
     r15: the budget is bytes; a row cap cannot see a token-array column
     coming) — and the distributed path still answers correctly."""
@@ -184,7 +178,7 @@ def test_prefix_tier_declines_array_passthrough(spark, tier_guard):
     assert {(r["k"], r["rk"]) for r in out.collect()} == {(1, 1), (2, 2)}
 
 
-def test_prefix_tier_declines_wide_frames_by_bytes(spark, tier_guard):
+def test_prefix_tier_declines_wide_frames_by_bytes(spark, tiers):
     """min(row cap, byte budget / est row width): a schema wide enough to
     blow the byte budget shrinks the effective cap below the frame."""
     import unittest.mock as mock
@@ -195,11 +189,11 @@ def test_prefix_tier_declines_wide_frames_by_bytes(spark, tier_guard):
     for c in range(6):
         df = df.withColumn(f"s{c}", F.lit("x"))
     # est width: 2x8 (longs) + 6x48 (strings) = 304 B -> cap = 1024//304 = 3
-    with mock.patch.object(P, "PREFIX_DRIVER_MAX_BYTES", 1024):
+    with mock.patch.object(DT, "MAX_BYTES", 1024):
         assert P._prefix_agg_driver(df, ["k"], {"rk": "__one"}, {}) is None
 
 
-def test_prefix_tier_declines_null_passthrough_integral(spark, tier_guard):
+def test_prefix_tier_declines_null_passthrough_integral(spark, tiers):
     """A NULL-carrying passthrough integral column declines: pandas would
     round-trip it through float64 and silently lose >= 2^53 precision
     (ADVICE r15). The distributed path keeps the exact values."""
@@ -231,7 +225,7 @@ def test_prefix_tier_declines_null_passthrough_integral(spark, tier_guard):
 # ------------------------------------------------ NULL-id graph gates
 
 
-def test_cc_driver_labels_declines_on_null_ids(spark, tier_guard):
+def test_cc_driver_labels_declines_on_null_ids(spark, tiers):
     raw = spark.createDataFrame(
         [(1, 2), (None, 3)],
         StructType([StructField("u", LongType()), StructField("v", LongType())]),
@@ -239,7 +233,7 @@ def test_cc_driver_labels_declines_on_null_ids(spark, tier_guard):
     assert G._cc_driver_labels(raw) is None  # decline, not TypeError
 
 
-def test_pagerank_layered_driver_declines_on_null_ids(spark, tier_guard):
+def test_pagerank_layered_driver_declines_on_null_ids(spark, tiers):
     e = spark.createDataFrame(
         [(1, -1), (None, -2), (2, -1)],
         StructType(
@@ -255,7 +249,7 @@ def test_pagerank_layered_driver_declines_on_null_ids(spark, tier_guard):
 # ----------------------------------------- value_psi_drift bin fold
 
 
-def test_value_psi_drift_driver_fold_matches_distributed(spark, tier_guard):
+def test_value_psi_drift_driver_fold_matches_distributed(spark, tiers):
     """The r16 driver fold (cut/ranks/edges/bin map/pivot in numpy) must
     produce the identical 10 rows as the distributed prefix + crossJoin
     formulation — including the float tail, which both paths compute in
@@ -264,10 +258,7 @@ def test_value_psi_drift_driver_fold_matches_distributed(spark, tier_guard):
 
     fn = REGISTRY["value_psi_drift"].fn
     sf = "/root/testdata/sf0.001"
-    G.GENERAL_DRIVER_TIER_ENABLED = True
-    on = sorted(map(tuple, fn(spark, sf).collect()))
-    G.GENERAL_DRIVER_TIER_ENABLED = False
-    off = sorted(map(tuple, fn(spark, sf).collect()))
+    on, off = tiers.on_off(lambda: sorted(map(tuple, fn(spark, sf).collect())))
     assert on == off
     assert len(on) == 10 and {r[0] for r in on} == set(range(10))
 
@@ -275,7 +266,7 @@ def test_value_psi_drift_driver_fold_matches_distributed(spark, tier_guard):
 # ------------------------------- cluster_safe_split_audit leak fold
 
 
-def test_split_audit_leak_fold_matches_distributed(spark, tier_guard):
+def test_split_audit_leak_fold_matches_distributed(spark, tiers):
     """The r16 driver leak fold (Python md5 over the collected pair list)
     must equal the distributed leak joins row-for-row — including the
     md5(cast(id as string)) replication and the leak_c == 0 invariant."""
@@ -283,10 +274,7 @@ def test_split_audit_leak_fold_matches_distributed(spark, tier_guard):
 
     fn = REGISTRY["cluster_safe_split_audit"].fn
     sf = "/root/testdata/sf0.001"
-    G.GENERAL_DRIVER_TIER_ENABLED = True
-    on = sorted(map(tuple, fn(spark, sf).collect()))
-    G.GENERAL_DRIVER_TIER_ENABLED = False
-    off = sorted(map(tuple, fn(spark, sf).collect()))
+    on, off = tiers.on_off(lambda: sorted(map(tuple, fn(spark, sf).collect())))
     assert on == off
     by_kind = {r[0]: r for r in on}
     assert by_kind["cluster_aware"][3] == 0  # no leaks by construction
@@ -296,7 +284,7 @@ def test_split_audit_leak_fold_matches_distributed(spark, tier_guard):
 # ------------------------------------- dedup_clusters decline path
 
 
-def test_dedup_clusters_over_cap_matches_tier(spark, tier_guard, monkeypatch):
+def test_dedup_clusters_over_cap_matches_tier(spark, tiers, monkeypatch):
     """The refactored decline path (_cc_distributed on the caller's own
     checkpoint — no re-checkpoint, no second tier gate) labels exactly
     like the driver tier."""
@@ -310,7 +298,7 @@ def test_dedup_clusters_over_cap_matches_tier(spark, tier_guard, monkeypatch):
         (r["doc"], r["cluster_rep"], r["cluster_size"])
         for r in G.dedup_clusters(pairs).collect()
     }
-    monkeypatch.setattr(G, "GENERAL_DRIVER_MAX_EDGES", 2)  # force decline
+    monkeypatch.setattr(DT, "MAX_ROWS", 2)  # force decline
     got = {
         (r["doc"], r["cluster_rep"], r["cluster_size"])
         for r in G.dedup_clusters(pairs).collect()

@@ -148,12 +148,13 @@ def main() -> None:
     only = set(sys.argv[1:])  # optional op-name filter: probe just these
     spark = get_spark("scale-probe-100x")
     # This probe characterizes the DISTRIBUTED paths' scaling curves; the
-    # r11 general-graph driver tier is a bounded-size fast path that by
-    # design stops firing above its caps, so leaving it on would splice
-    # two regimes into one curve (driver tier at 1x, distributed at 100x).
+    # driver tiers are bounded-size fast paths that by design stop firing
+    # above their caps, so leaving them on would splice two regimes into
+    # one curve (driver tier at 1x, distributed at 100x).
+    from hadoop_data_lake_spark.core import driver_tier as DT
     from hadoop_data_lake_spark.operators import graph as G
 
-    G.GENERAL_DRIVER_TIER_ENABLED = False
+    DT.GENERAL_DRIVER_TIER_ENABLED = False
     out: dict[str, dict] = {}
     for mult in MULTS:
         docs = bench._scaled_docs(spark, BASE, mult)
