@@ -14,6 +14,7 @@ index (or a metastore) do the listing, and AQE sizes the scan tasks.
 from __future__ import annotations
 
 import datetime as _dt
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -145,8 +146,13 @@ def read_table(
     spark: SparkSession, sf_dir: str, name: str, validate: bool = True
 ) -> DataFrame:
     """Read one driver-generated table (TESTDATA.md layout), validated
-    against its SCHEMAS contract (pass validate=False for exploratory reads
-    of files that deliberately deviate).
+    against its SCHEMAS contract on every call (pass validate=False for
+    exploratory reads of files that deliberately deviate).
+
+    The file is opened through `read_parquet`, so a repeat read of an
+    unchanged local file reuses Spark's inferred schema and runs no
+    schema-inference job; normalization and validation still run on
+    every read.
 
     The events table's `ts` encoding has drifted across driver testdata
     generations — TIMESTAMP(NANOS) in one vintage (Spark 4 has no native
@@ -158,8 +164,70 @@ def read_table(
     canonical type.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = normalize_ns_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    df = normalize_ns_ts(read_parquet(spark, f"{sf_dir}/{name}.parquet"))
     return validate_schema(df, name) if validate else df
+
+
+#: Confs whose values change the schema Spark infers from a Parquet footer;
+#: their values are part of the `parquet_schema` memo key.
+PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+#: Entries `parquet_schema` keeps; the oldest is dropped past this.
+SCHEMA_MEMO_MAX = 64
+
+_SCHEMA_MEMO: dict[tuple, T.StructType] = {}
+_SCHEMA_MEMO_LOCK = threading.Lock()
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """Spark's own inferred schema of the local Parquet FILE at `path`,
+    memoized, or None when `path` is not memoizable.
+
+    Inferring a Parquet schema is a Spark job (`ParquetUtils.inferSchema`
+    merges footers in parallel, even for one file); reading with the
+    schema given runs none. The memo key is the file's absolute path,
+    inode, `st_mtime_ns` and `st_size`, plus the values of
+    `PARQUET_INFERENCE_CONFS`, so a rewritten file or a changed inference
+    conf is inferred afresh. Only local single files are memoized:
+    directories, remote URIs and paths that cannot be stat'ed return None,
+    and the caller infers as usual. The memo holds at most
+    `SCHEMA_MEMO_MAX` entries.
+    """
+    import os
+    import stat
+
+    try:
+        st = os.stat(path)
+    except (OSError, ValueError):
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    key = (
+        os.path.abspath(path), st.st_ino, st.st_mtime_ns, st.st_size,
+        *(spark.conf.get(k) for k in PARQUET_INFERENCE_CONFS),
+    )
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        with _SCHEMA_MEMO_LOCK:
+            if key not in _SCHEMA_MEMO and len(_SCHEMA_MEMO) >= SCHEMA_MEMO_MAX:
+                del _SCHEMA_MEMO[next(iter(_SCHEMA_MEMO))]
+            _SCHEMA_MEMO[key] = schema
+    return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)`, with the schema from `parquet_schema`
+    when the path is memoizable (no inference job on a repeat read) and
+    plain inference otherwise."""
+    schema = parquet_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def normalize_ns_ts(df: DataFrame) -> DataFrame:
@@ -325,6 +393,15 @@ def register_tables(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = 
         read_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
+#: Value range of each integral Spark type, for `local_frame`'s check.
+_INT_RANGES = {
+    T.ByteType: (-(1 << 7), (1 << 7) - 1),
+    T.ShortType: (-(1 << 15), (1 << 15) - 1),
+    T.IntegerType: (-(1 << 31), (1 << 31) - 1),
+    T.LongType: (-(1 << 63), (1 << 63) - 1),
+}
+
+
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     """Driver-built literal frame via ONE pandas/Arrow batch.
 
@@ -338,21 +415,34 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     ``rows`` is a list of tuples or a pandas frame (a driver tier's
     result; `core.driver_tier` declines NULL inputs, so it goes straight
     to Arrow with no per-row scan). ``schema`` is a DDL string or
-    StructType and stays the declared contract either way. An empty row
-    list and rows carrying ``None`` fall back to the row path: pandas
-    would route NULL-carrying integral columns through float64 and has
-    nothing to infer from zero rows.
+    StructType and stays the declared contract either way: on the Arrow
+    path every integral column is range-checked against its field's
+    width and a value that does not fit raises ValueError (Arrow would
+    wrap it when `spark.sql.execution.pandas.convertToArrowArraySafely`
+    is off). An empty row list and rows carrying ``None`` fall back to
+    the row path, which verifies every value itself: pandas would route
+    NULL-carrying integral columns through float64 and has nothing to
+    infer from zero rows.
     """
     import pandas as pd
 
-    if (
-        isinstance(rows, pd.DataFrame)
-        or not rows
-        or any(v is None for r in rows for v in r)
-    ):
+    is_pdf = isinstance(rows, pd.DataFrame)
+    if not is_pdf and (not rows or any(v is None for r in rows for v in r)):
         return spark.createDataFrame(rows, schema)
     st = T._parse_datatype_string(schema) if isinstance(schema, str) else schema
-    pdf = pd.DataFrame(rows, columns=[f.name for f in st.fields])
+    pdf = rows if is_pdf else pd.DataFrame(rows, columns=[f.name for f in st.fields])
+    for f, col in zip(st.fields, pdf.columns):
+        bounds = _INT_RANGES.get(type(f.dataType))
+        if bounds is None or pdf.empty:
+            continue
+        lo, hi = bounds
+        vmin, vmax = pdf[col].min(), pdf[col].max()
+        if vmin < lo or vmax > hi:
+            bad = vmin if vmin < lo else vmax
+            raise ValueError(
+                f"local_frame: column {f.name!r} value {bad} does not fit "
+                f"{f.dataType.simpleString()} [{lo}, {hi}]"
+            )
     return spark.createDataFrame(pdf, st)
 
 

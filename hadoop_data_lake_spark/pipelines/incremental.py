@@ -18,7 +18,7 @@ Valid whenever the aggregate's partition key is a function of the fact's
 partition key (week <- date), so each output partition depends only on its
 own input slice. History-dependent aggregates (e.g. first-event-per-user
 registrations) need the full-history pass instead — that's why
-zone_report's registration branch is NOT refreshed this way.
+zone_report's registration counts are NOT refreshed this way.
 """
 
 from __future__ import annotations

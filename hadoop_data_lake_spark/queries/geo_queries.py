@@ -88,8 +88,8 @@ def _cities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Geotag: nearest city per event (reference save_mes_geo.py:24-50; J1 + W1
-# with the B1 radians fix). Broadcast the 25-row dim; argmin via one
-# row_number window — WindowGroupLimit keeps only rank 1 at shuffle read.
+# with the B1 radians fix). The 25-row dim is broadcast into a
+# BroadcastNestedLoopJoin; the argmin is a min_by aggregate per event.
 # --------------------------------------------------------------------------
 
 def nearest_city(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -99,10 +99,11 @@ def nearest_city(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dist_km",
         F.round(haversine_km(F.col("lat"), F.col("lon"), F.col("lat_c"), F.col("lon_c")), 6),
     )
-    # Argmin via min_by hash aggregate rather than row_number window: the
-    # map-side partial agg collapses the 25 candidates per event before the
-    # shuffle (3-4x faster than sort+WindowGroupLimit here; same tie-break —
-    # the ordering struct puts city_id after dist_km).
+    # Argmin via min_by rather than a row_number window: a partial
+    # aggregate collapses the 25 candidates per event before the shuffle,
+    # then a final one merges them. Both are SortAggregates — a struct-typed
+    # buffer cannot live in a HashAggregate. Same tie-break as the window:
+    # the ordering struct puts city_id after dist_km.
     best = paired.groupBy("event_id", "user_id").agg(
         F.min_by(
             F.struct("city_id", "city_name"), F.struct("dist_km", "city_id")

@@ -159,13 +159,10 @@ def scratch_root() -> str:
 def _open_stream(spark: SparkSession, parquet_path: str) -> tuple[DataFrame, str]:
     """Returns (streaming frame, scratch dir). The caller must remove the
     scratch dir once the replay has drained (see `_drain_replay`)."""
-    from hadoop_data_lake_spark.core.io import normalize_ns_ts
-
-    import os
-    import tempfile
+    from hadoop_data_lake_spark.core.io import normalize_ns_ts, read_parquet
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(parquet_path).schema
+    schema = read_parquet(spark, parquet_path).schema
     # The file-stream source monitors a DIRECTORY; expose a single-file input
     # through a scratch dir with a symlink (read-only source stays untouched).
     src_dir = tempfile.mkdtemp(prefix="stream_src_", dir=scratch_root())
@@ -173,22 +170,18 @@ def _open_stream(spark: SparkSession, parquet_path: str) -> tuple[DataFrame, str
     return normalize_ns_ts(spark.readStream.schema(schema).parquet(src_dir)), src_dir
 
 
-#: State-store partition count for the REPLAY harness (the deterministic
-#: verification path: one availableNow batch over a static test corpus).
-#: `spark.sql.shuffle.partitions` at query start fixes the number of
-#: streaming state-store partitions for the query's lifetime, and each
-#: partition pays a fixed per-batch cost (store init + delta-file commit +
-#: task launch) regardless of rows — profiled at sf0.1 (100k events,
-#: tools/stream_replay_profile.py): a 1-ROW corpus replay costs the same
-#: wall as the full corpus, and 32 partitions read 3-5x slower than 8
-#: across all seven replay shapes (windowed 5.0->1.4 s, session 11.3->1.4,
-#: stateful 10.9->2.3, interval-join 13.1->4.2). Replay verification is
-#: fixed-cost-dominated, so it gets FEW partitions; a PRODUCTION stream on
-#: a real source sizes state partitions to sustained throughput instead —
-#: keep the session default (cores, or higher) there and leave this knob
-#: to the replay path only.
-REPLAY_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_REPLAY_STATE_PARTITIONS", "8")
+#: State-store partitions of a replay: at most this many, and never more
+#: than the session's own `spark.sql.shuffle.partitions`. Each partition
+#: pays a fixed store init + commit per batch whatever its row count.
+REPLAY_STATE_PARTITIONS = 8
+
+#: Checkpoint manager of a replay: renames with a plain FileSystem rename
+#: (atomic on a local POSIX filesystem) instead of the default FileContext
+#: manager, whose rename forks a `readlink` process per file when Hadoop's
+#: native IO is not loaded. A replay's checkpoint is a temporary directory.
+REPLAY_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
 )
 
 
@@ -196,15 +189,28 @@ def replay_to_memory(out: DataFrame, output_mode: str = "complete") -> str:
     """Drain a streaming frame into a memory sink with availableNow; returns
     the sink table name.
 
-    The session's shuffle-partition conf is snapshotted, pinned to
-    `REPLAY_STATE_PARTITIONS` for the query start (which is when the
-    streaming state layout is fixed), and restored after the drain — batch
-    plans running before/after the replay see the session default."""
+    Two session confs are pinned for the query start and restored after the
+    drain, also when the start fails, so batch plans running before and
+    after the replay see the session's own values:
+
+    - `spark.sql.shuffle.partitions`, which fixes the streaming state-store
+      partition count at query start, becomes
+      min(`REPLAY_STATE_PARTITIONS`, the session's count): a one-batch
+      replay is dominated by per-partition fixed costs;
+    - `spark.sql.streaming.checkpointFileManagerClass` becomes
+      `REPLAY_CHECKPOINT_MANAGER`, which cuts the per-file process forks of
+      the default manager's rename. State-file checksums stay on."""
     spark = out.sparkSession
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(REPLAY_STATE_PARTITIONS))
+    parts = min(REPLAY_STATE_PARTITIONS, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    pinned = {
+        "spark.sql.shuffle.partitions": str(parts),
+        "spark.sql.streaming.checkpointFileManagerClass": REPLAY_CHECKPOINT_MANAGER,
+    }
+    prev = {k: spark.conf.get(k, None) for k in pinned}
     try:
+        for k, v in pinned.items():
+            spark.conf.set(k, v)
         q = (
             out.writeStream.outputMode(output_mode)
             .format("memory")
@@ -214,7 +220,11 @@ def replay_to_memory(out: DataFrame, output_mode: str = "complete") -> str:
         )
         q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     return name
 
 
@@ -542,11 +552,11 @@ def stream_upsert_latest(
     import shutil
     import tempfile
 
-    from hadoop_data_lake_spark.core.io import normalize_ns_ts
+    from hadoop_data_lake_spark.core.io import normalize_ns_ts, read_parquet
     from hadoop_data_lake_spark.operators.windows import top1_per_group
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = normalize_ns_ts(spark.read.parquet(parquet_path))
+    src = normalize_ns_ts(read_parquet(spark, parquet_path))
     scratch = tempfile.mkdtemp(prefix="stream_upsert_src_", dir=scratch_root())
     src.repartition(n_slices).write.mode("overwrite").parquet(scratch)
 

@@ -1,3 +1,4 @@
+import itertools
 import sys
 from pathlib import Path
 
@@ -20,6 +21,20 @@ def spark():
 
 
 SF_DIR = "/root/testdata/sf0.001"
+
+_job_groups = itertools.count()
+
+
+def count_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted through a job group."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{next(_job_groups)}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 class TierSwitch:

@@ -6,28 +6,12 @@ paths (counted through a job group), and the HITS NULL-id regression the
 gate's NULL decline fixes.
 """
 
-import itertools
-
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from conftest import SF_DIR
+from conftest import SF_DIR, count_jobs
 from hadoop_data_lake_spark.core import driver_tier as DT
-
-_group_ids = itertools.count()
-
-
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs fn ran)."""
-    sc = spark.sparkContext
-    group = f"driver-tier-test-{next(_group_ids)}"
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _longs(spark, n):
@@ -37,7 +21,7 @@ def _longs(spark, n):
 
 
 def test_gate_returns_the_frame(spark, tiers):
-    pdf, jobs = _jobs(spark, lambda: DT.collect_bounded(_longs(spark, 3), max_rows=10))
+    pdf, jobs = count_jobs(spark, lambda: DT.collect_bounded(_longs(spark, 3), max_rows=10))
     assert list(pdf.columns) == ["k", "v"]
     assert sorted(pdf["v"].tolist()) == [0, 10, 20]
     assert jobs == 1
@@ -45,7 +29,7 @@ def test_gate_returns_the_frame(spark, tiers):
 
 def test_gate_declines_when_switched_off(spark, tiers):
     tiers(False)
-    out, jobs = _jobs(spark, lambda: DT.collect_bounded(_longs(spark, 3), max_rows=10))
+    out, jobs = count_jobs(spark, lambda: DT.collect_bounded(_longs(spark, 3), max_rows=10))
     assert out is None and jobs == 0
 
 
@@ -64,7 +48,7 @@ def test_gate_declines_types_not_allowed(spark, tiers):
             ),
         ]
 
-    out, jobs = _jobs(spark, run)
+    out, jobs = count_jobs(spark, run)
     assert out == [None, None, None] and jobs == 0
     ok = DT.collect_bounded(df, max_rows=10, types={"k": DT.INTEGRAL})
     assert ok is not None and len(ok) == 3
@@ -72,23 +56,23 @@ def test_gate_declines_types_not_allowed(spark, tiers):
 
 def test_gate_bound_over_cap_declines_without_a_job(spark, tiers, monkeypatch):
     df = _longs(spark, 5)
-    out, jobs = _jobs(spark, lambda: DT.collect_bounded(df, max_rows=4, bound=5))
+    out, jobs = count_jobs(spark, lambda: DT.collect_bounded(df, max_rows=4, bound=5))
     assert out is None and jobs == 0
     # the byte budget lowers the cap the same way: 16 B rows, 64 B budget
     monkeypatch.setattr(DT, "MAX_BYTES", 64)
-    out, jobs = _jobs(spark, lambda: DT.collect_bounded(df, max_rows=10, bound=5))
+    out, jobs = count_jobs(spark, lambda: DT.collect_bounded(df, max_rows=10, bound=5))
     assert out is None and jobs == 0
 
 
 def test_gate_sound_bound_takes_one_collect_and_no_probe(spark, tiers):
     df = _longs(spark, 5)
-    pdf, jobs = _jobs(spark, lambda: DT.collect_bounded(df, max_rows=10, bound=5))
+    pdf, jobs = count_jobs(spark, lambda: DT.collect_bounded(df, max_rows=10, bound=5))
     assert len(pdf) == 5 and jobs == 1
 
 
 def test_gate_probe_over_cap_declines(spark, tiers):
     df = _longs(spark, 5)
-    out, jobs = _jobs(spark, lambda: DT.collect_bounded(df, max_rows=4))
+    out, jobs = count_jobs(spark, lambda: DT.collect_bounded(df, max_rows=4))
     assert out is None and jobs == 1  # the limit(cap + 1) collect itself
     pdf = DT.collect_bounded(df, max_rows=5)
     assert len(pdf) == 5
@@ -97,7 +81,7 @@ def test_gate_probe_over_cap_declines(spark, tiers):
 def test_gate_declines_broken_bound(spark, tiers):
     """A bound below the rows that actually arrive was not sound: decline
     after the one collect."""
-    out, jobs = _jobs(
+    out, jobs = count_jobs(
         spark, lambda: DT.collect_bounded(_longs(spark, 5), max_rows=10, bound=2)
     )
     assert out is None and jobs == 1
@@ -172,16 +156,20 @@ def test_pagerank_det_tier_adds_no_job_to_its_collect(spark, tiers):
     from hadoop_data_lake_spark.queries.tpch_queries import pagerank_det
 
     def collect_raw_edges():
-        # the query's own reads (one schema job per table) and its collect
+        # the query's own reads and its collect
         orders = read_table(spark, SF_DIR, "orders").select("o_orderkey", "o_custkey")
         li = read_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_suppkey")
         return li.join(orders, li["l_orderkey"] == orders["o_orderkey"]).select(
             F.col("o_custkey").alias("src"), (-F.col("l_suppkey") - 1).alias("dst")
         ).toPandas()
 
-    _, collect_jobs = _jobs(spark, collect_raw_edges)
-    _, jobs = _jobs(spark, lambda: pagerank_det(spark, SF_DIR))
+    # both sides read with the tables' schemas already memoized, so neither
+    # count includes a schema-inference job
+    read_table(spark, SF_DIR, "orders")
+    read_table(spark, SF_DIR, "lineitem")
+    _, collect_jobs = count_jobs(spark, collect_raw_edges)
+    _, jobs = count_jobs(spark, lambda: pagerank_det(spark, SF_DIR))
     assert jobs == collect_jobs
     tiers(False)
-    _, jobs_off = _jobs(spark, lambda: pagerank_det(spark, SF_DIR))
+    _, jobs_off = count_jobs(spark, lambda: pagerank_det(spark, SF_DIR))
     assert jobs_off > jobs  # the distributed build materializes checkpoints

@@ -1,11 +1,13 @@
 """IO surface: format round-trips, partitioned writes, partition pruning.
 
 Covers SURVEY.md §2.1 S1-S5 (parquet scans/sinks, partition enumeration ->
-declarative pruning) plus the ORC/CSV/JSON extension formats.
+declarative pruning) plus the ORC/CSV/JSON extension formats, the Parquet
+schema memo behind `read_table`, and `local_frame`'s range check.
 """
 
 import pyspark.sql.functions as F
 import pytest
+from conftest import count_jobs
 
 from hadoop_data_lake_spark.core.io import (
     read_any,
@@ -192,3 +194,112 @@ def test_parquet_row_count_listing_stops_past_the_guard(tmp_path, monkeypatch):
     listed.clear()
     assert IO.parquet_row_count(str(tmp_path), "t") == 10
     assert len(listed) == 10 and len(footers) == 10
+
+
+def test_read_table_reuses_the_inferred_schema_of_an_unchanged_file(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hadoop_data_lake_spark.core.io import read_table
+
+    path = tmp_path / "region.parquet"
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([0, 1], pa.int32()), "r_name": ["A", "B"]}),
+        str(path),
+    )
+    _, first = count_jobs(spark, lambda: read_table(spark, str(tmp_path), "region"))
+    df, second = count_jobs(spark, lambda: read_table(spark, str(tmp_path), "region"))
+    assert first >= 1  # Spark's own schema inference
+    assert second == 0
+    assert sorted(r["r_regionkey"] for r in df.collect()) == [0, 1]
+
+
+def test_read_table_reinfers_a_rewritten_file_and_still_validates(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hadoop_data_lake_spark.core.io import SchemaContractError, read_table
+
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": pa.array([1], pa.int32()), "r_name": ["A"]}), path)
+    assert read_table(spark, str(tmp_path), "region").schema["r_regionkey"].dataType.simpleString() == "int"
+    # same path, another schema: the memo must not serve the old one
+    pq.write_table(pa.table({"r_regionkey": pa.array([1], pa.int64()), "r_name": ["A"]}), path)
+    df = read_table(spark, str(tmp_path), "region", validate=False)
+    assert df.schema["r_regionkey"].dataType.simpleString() == "bigint"
+    assert df.collect()[0]["r_regionkey"] == 1
+    for _ in range(2):  # the contract is checked on every read, memo or not
+        with pytest.raises(SchemaContractError, match="r_regionkey"):
+            read_table(spark, str(tmp_path), "region")
+
+
+def test_parquet_schema_key_covers_the_inference_confs(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hadoop_data_lake_spark.core.io import parquet_schema
+
+    path = str(tmp_path / "b.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), path)
+    key = "spark.sql.parquet.binaryAsString"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        assert parquet_schema(spark, path)["b"].dataType.simpleString() == "binary"
+        spark.conf.set(key, "true")
+        assert parquet_schema(spark, path)["b"].dataType.simpleString() == "string"
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_parquet_schema_memoizes_only_local_files(spark, sample, tmp_path):
+    from hadoop_data_lake_spark.core import io as IO
+
+    root = str(tmp_path / "dir.parquet")
+    sample.write.parquet(root)
+    before = dict(IO._SCHEMA_MEMO)
+    assert IO.parquet_schema(spark, root) is None
+    assert IO.parquet_schema(spark, "hdfs://nowhere/x.parquet") is None
+    assert IO.parquet_schema(spark, str(tmp_path / "missing.parquet")) is None
+    assert IO._SCHEMA_MEMO == before
+    back = IO.read_parquet(spark, root)
+    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, sample.collect()))
+
+
+def test_parquet_schema_memo_is_bounded(spark, tmp_path, monkeypatch):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hadoop_data_lake_spark.core import io as IO
+
+    monkeypatch.setattr(IO, "_SCHEMA_MEMO", {})
+    monkeypatch.setattr(IO, "SCHEMA_MEMO_MAX", 2)
+    for i in range(3):
+        path = str(tmp_path / f"f{i}.parquet")
+        pq.write_table(pa.table({"x": [i]}), path)
+        IO.parquet_schema(spark, path)
+    assert len(IO._SCHEMA_MEMO) == 2
+    assert {k[0] for k in IO._SCHEMA_MEMO} == {str(tmp_path / "f1.parquet"), str(tmp_path / "f2.parquet")}
+
+
+def test_local_frame_rejects_values_that_do_not_fit_the_field(spark):
+    """With Arrow's safe conversion off, an int64 value cast to INT wraps
+    (2**31 -> -2**31); local_frame range-checks before Arrow instead."""
+    import pandas as pd
+
+    from hadoop_data_lake_spark.core.io import local_frame
+
+    key = "spark.sql.execution.pandas.convertToArrowArraySafely"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        with pytest.raises(ValueError, match="'x'"):
+            local_frame(spark, [(2**31, 1)], "x int, y int")
+        with pytest.raises(ValueError, match="'y'"):
+            local_frame(spark, [(1, -129)], "x long, y byte")
+        with pytest.raises(ValueError, match="'x'"):
+            local_frame(spark, pd.DataFrame({"x": [2**31]}), "x int")
+        edge = local_frame(spark, [(2**31 - 1, -(2**31), 2**31)], "a int, b int, c long")
+        assert tuple(edge.collect()[0]) == (2**31 - 1, -(2**31), 2**31)
+    finally:
+        spark.conf.set(key, prev)

@@ -117,3 +117,86 @@ def test_recommendations_radius_widens(mes_geo):
     pairs = sorted((r["user_left"], r["user_right"]) for r in out.collect())
     # 7.2 km now qualifies: 12 pairs with both 10 and 11; 13 still cross-city
     assert pairs == [(10, 11), (10, 12), (11, 12)]
+
+
+# (datetime, message_from, event_type, city_id, event_id)
+_REG_ROWS = [
+    # user 1 registers in zone 5 (week 1, month 1); every later event falls
+    # in another zone, week and month
+    ("2024-01-01 10:00:00", 1, "message", 5, 10),
+    ("2024-02-20 09:00:00", 1, "message", 7, 11),
+    ("2024-02-21 09:00:00", 1, "reaction", 7, 12),
+    ("2024-03-05 12:00:00", 1, "message", 8, 13),
+    # users 2 and 3: two first events tie on ts, the lower event_id decides
+    ("2024-01-15 09:00:00", 2, "message", 4, 21),
+    ("2024-01-15 09:00:00", 2, "reaction", 3, 20),
+    ("2024-01-29 09:00:00", 2, "message", 4, 22),
+    ("2024-02-02 08:00:00", 3, "reaction", 6, 31),
+    ("2024-02-02 08:00:00", 3, "message", 6, 30),
+    ("2024-02-02 08:00:00", 3, "message", 5, 32),
+    # user 4: same month, later week, other zone
+    ("2024-03-04 10:00:00", 4, "message", 2, 40),
+    ("2024-03-25 10:00:00", 4, "message", 9, 41),
+    # subscriptions carry no user: they register once, as the NULL user
+    ("2024-01-03 10:00:00", None, "subscription", 5, 50),
+    ("2024-02-21 10:00:00", None, "subscription", 7, 51),
+]
+
+
+def _zone_report_reference(rows, event_types):
+    """pandas replay of the two-branch definition: per-type counts per
+    (week, month, zone) joined to its week and month totals, plus
+    registrations (first event per user under (ts, uid)) counted per
+    (week, zone) and (month, zone) and LEFT-joined with a 0 fill."""
+    import pandas as pd
+
+    base = pd.DataFrame(rows, columns=["dt", "user", "event_type", "zone_id", "uid"])
+    ts = pd.to_datetime(base["dt"])
+    base["week"] = ts.dt.isocalendar().week.astype(int)
+    base["month"] = ts.dt.month
+    base["ts"] = ts
+    for t in event_types:
+        base[t] = (base["event_type"] == t).astype(int)
+    cell = base.groupby(["week", "month", "zone_id"], as_index=False)[event_types].sum()
+    wk = base.groupby(["week", "zone_id"], as_index=False)[event_types].sum()
+    mo = base.groupby(["month", "zone_id"], as_index=False)[event_types].sum()
+    regs = base.sort_values(["ts", "uid"]).groupby("user", dropna=False).head(1)
+    wu = regs.groupby(["week", "zone_id"]).size().rename("week_user").reset_index()
+    mu = regs.groupby(["month", "zone_id"]).size().rename("month_user").reset_index()
+    out = (
+        cell[["week", "month", "zone_id"]]
+        .merge(wk.rename(columns={t: f"week_{t}" for t in event_types}), on=["week", "zone_id"])
+        .merge(mo.rename(columns={t: f"month_{t}" for t in event_types}), on=["month", "zone_id"])
+        .merge(wu, on=["week", "zone_id"], how="left")
+        .merge(mu, on=["month", "zone_id"], how="left")
+        .fillna({"week_user": 0, "month_user": 0})
+    )
+    cols = [
+        "week", "month", "zone_id",
+        *[f"week_{t}" for t in event_types], "week_user",
+        *[f"month_{t}" for t in event_types], "month_user",
+    ]
+    return sorted(tuple(int(v) for v in r) for r in out[cols].itertuples(index=False))
+
+
+def test_zone_report_registrations_match_the_two_branch_definition(spark):
+    types = ["message", "reaction", "subscription"]
+    mes_geo = spark.createDataFrame(
+        [((dt, user), et, city, uid) for dt, user, et, city, uid in _REG_ROWS],
+        "event struct<datetime: string, message_from: long>, event_type string, "
+        "city_id int, event_id long",
+    )
+    rep = zone_report_from_mes_geo(mes_geo, types)
+    assert rep.columns == [
+        "week", "month", "zone_id",
+        *[f"week_{t}" for t in types], "week_user",
+        *[f"month_{t}" for t in types], "month_user",
+    ]
+    got = sorted(tuple(r) for r in rep.collect())
+    assert got == _zone_report_reference(_REG_ROWS, types)
+    # the cases the fixture is built for: user 1 registers in zone 5 only,
+    # user 2's tie goes to event 20 (zone 3), not event 21 (zone 4)
+    by_week = {(r["week"], r["zone_id"]): r["week_user"] for r in rep.collect()}
+    assert by_week[(1, 5)] == 2  # user 1 and the NULL user
+    assert by_week[(8, 7)] == 0
+    assert by_week[(3, 3)] == 1 and by_week[(3, 4)] == 0

@@ -15,6 +15,7 @@ import subprocess
 import sys
 
 import pytest
+from conftest import SF_DIR
 
 REPO = "/root/repo"
 
@@ -111,52 +112,102 @@ def test_fused_docstring_names_the_edge_cap():
 
 
 # ---------------------------------------------------------------------------
-# VERDICT r14 item 5: streaming replay state-partition posture. The replay
-# harness pins spark.sql.shuffle.partitions (= streaming state-store
-# partition count at query start) to REPLAY_STATE_PARTITIONS for the drain
-# and restores the session conf afterwards; partition count must never
-# change results.
+# Streaming replay posture. The replay harness pins two session confs for
+# the drain — spark.sql.shuffle.partitions (= streaming state-store
+# partition count at query start) to min(REPLAY_STATE_PARTITIONS, the
+# session's count), and the checkpoint file manager — and restores both
+# afterwards; partition count must never change results.
 # ---------------------------------------------------------------------------
 
+_EVENTS = f"{SF_DIR}/events.parquet"
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
 
-def test_replay_restores_session_shuffle_conf(spark):
-    from hadoop_data_lake_spark.streaming.ingest import run_batch_replay
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        out = run_batch_replay(
-            spark, "/root/testdata/sf0.001/events.parquet", window_seconds=3600
+@pytest.fixture()
+def session_confs(spark):
+    """Session shuffle partitions set to 7, the checkpoint manager unset;
+    the previous values come back at teardown."""
+    prev = {k: spark.conf.get(k, None) for k in ("spark.sql.shuffle.partitions", _MANAGER_KEY)}
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    spark.conf.unset(_MANAGER_KEY)
+    yield
+    for k, v in prev.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+def _confs_at_start(spark, monkeypatch):
+    """Record the two pinned confs as every streaming query starts."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    seen = []
+    real_start = DataStreamWriter.start
+
+    def recording_start(self, *a, **kw):
+        seen.append(
+            (spark.conf.get("spark.sql.shuffle.partitions"), spark.conf.get(_MANAGER_KEY, None))
         )
-        assert out.count() > 0
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        return real_start(self, *a, **kw)
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    return seen
 
 
-def test_replay_restores_conf_when_start_fails(spark):
+def test_replay_restores_session_shuffle_conf(spark, session_confs, monkeypatch):
+    from hadoop_data_lake_spark.streaming import ingest
+
+    seen = _confs_at_start(spark, monkeypatch)
+    out = ingest.run_batch_replay(spark, _EVENTS, window_seconds=3600)
+    assert out.count() > 0
+    assert seen == [("7", ingest.REPLAY_CHECKPOINT_MANAGER)]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+    assert spark.conf.get(_MANAGER_KEY, None) is None
+
+    # a session that sets its own manager and a larger count gets both back
+    spark.conf.set("spark.sql.shuffle.partitions", "20")
+    spark.conf.set(_MANAGER_KEY, _FILE_CONTEXT_MANAGER)
+    assert ingest.run_batch_replay(spark, _EVENTS, window_seconds=3600).count() > 0
+    assert seen[-1] == (str(ingest.REPLAY_STATE_PARTITIONS), ingest.REPLAY_CHECKPOINT_MANAGER)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "20"
+    assert spark.conf.get(_MANAGER_KEY) == _FILE_CONTEXT_MANAGER
+
+
+def test_replay_restores_conf_when_start_fails(spark, session_confs):
     """The restore must run even when the streaming query can't start
     (finally path): 'complete' output mode on a non-aggregate stream is an
     AnalysisException at start()."""
-    import pytest
+    import shutil
+
     from pyspark.errors.exceptions.base import PySparkException
 
     from hadoop_data_lake_spark.streaming import ingest
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    stream, src_dir = ingest._open_stream(spark, _EVENTS)
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        stream, src_dir = ingest._open_stream(
-            spark, "/root/testdata/sf0.001/events.parquet"
-        )
         with pytest.raises(PySparkException):
             ingest.replay_to_memory(stream, output_mode="complete")
         assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
-        import shutil
-
-        shutil.rmtree(src_dir, ignore_errors=True)
+        assert spark.conf.get(_MANAGER_KEY, None) is None
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        shutil.rmtree(src_dir, ignore_errors=True)
+
+
+@pytest.mark.parametrize("run", ["run_batch_replay", "run_session_replay"])
+def test_replay_results_invariant_to_session_partition_count(spark, session_confs, run):
+    from hadoop_data_lake_spark.streaming import ingest
+
+    def rows(parts):
+        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+        return sorted(map(tuple, getattr(ingest, run)(spark, _EVENTS).collect()))
+
+    one = rows(1)
+    assert one and one == rows(7)
 
 
 def test_replay_results_invariant_to_state_partition_count(spark, monkeypatch):
