@@ -46,14 +46,14 @@ from pyspark.sql import types as T
 GENERAL_DRIVER_TIER_ENABLED = True
 
 #: Row cap of the Python-loop tiers and the prefix/PSI tiers (union-find,
-#: integer PageRank rounds, label propagation, running aggregates).
+#: label propagation, running aggregates).
 MAX_ROWS = 500_000
-#: Node cap of the Python-loop graph tiers (PageRank, LPA), checked on the
-#: node count the operator already holds before the edge collect.
+#: Node cap of the label-propagation tier, checked on the node count the
+#: operator already holds before the edge collect.
 MAX_NODES = 200_000
-#: Row cap of the numpy tiers (fused HITS and layered PageRank): a gather
-#: plus an integer bincount per round is ~1000x cheaper per edge than a
-#: Python dict loop. 4M (long, long) edges are 64 MB.
+#: Row cap of the numpy tiers (fused HITS and both integer PageRank tiers):
+#: a gather plus an integer bincount per round is ~1000x cheaper per edge
+#: than a Python dict loop. 4M (long, long) edges are 64 MB.
 NUMPY_MAX_ROWS = 4_000_000
 #: Byte budget of any one collect, rows x estimated row width.
 MAX_BYTES = 64 * 1024 * 1024

@@ -476,7 +476,7 @@ def parquet_row_count(sf_dir: str, name: str, cap: int | None = None) -> int | N
     driver-local metadata reads, no Spark job.
 
     The fused driver tiers (graph.hits_topk_sides_driver /
-    pagerank_layered_driver) take a sound upper bound on a fact table's
+    pagerank_distinct_driver) take a sound upper bound on a fact table's
     row count as their `core.driver_tier.collect_bounded` bound; footer
     ``num_rows`` is that exact number read straight off the files,
     without the scheduler round-trip of a Spark ``count()``. Returns

@@ -58,10 +58,6 @@ BROADCAST_STATE_MAX_ROWS = 1_000_000
 # under can only narrow, never widen.
 BROADCAST_STATE_MAX_BYTES = 64 * 1024 * 1024
 
-# Escape hatch for tests (and for callers that want the general loop's
-# plan shape regardless of structure): disables BOTH layered tiers.
-LAYERED_FAST_PATH_ENABLED = True
-
 
 def broadcast_bounded_state(df: DataFrame, n_rows: int | None) -> DataFrame:
     """Broadcast-hint a bounded per-vertex state frame (see note above).
@@ -466,6 +462,76 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     return corners.groupBy("vertex").agg(F.count("*").alias("n_triangles"))
 
 
+def _int_rounds_exact(iters: int, scale: int, damping_pct: int) -> bool:
+    """Whether `_pagerank_int_rounds` is exact for these parameters (its
+    docstring); the driver tiers decline outside this envelope."""
+    return iters >= 1 and 0 <= scale <= 10**12 and 0 <= damping_pct <= 100
+
+
+def _pagerank_int_rounds(src_i, dst_i, n: int, iters: int, scale: int, damping_pct: int):
+    """The integer recurrence of `pagerank_intexact`, in numpy: the int64
+    ranks of nodes ``0..n-1`` after ``iters`` rounds over index-encoded
+    edges (one entry per edge row, so multi-edges count). Per round
+
+        d_per = sum(rank[dangling]) // n
+        s_in  = bincount(dst_i, rank[src_i] // deg[src_i])
+        rank  = base + damping_pct * (s_in + d_per) // 100
+
+    with ``base = (100 - damping_pct) * (scale // n) // 100``. A node with
+    no in-edge gets ``s_in = 0``, which is the distributed loop's
+    closed-form zero-in-degree rank.
+
+    Exactness envelope (`_int_rounds_exact`): ``0 <= scale <= 10**12``
+    and ``0 <= damping_pct <= 100``. Every quantity is then a
+    non-negative integer, so floor division equals SQL ``div``, and the
+    total rank mass never exceeds ``scale``: a round hands out at most the
+    previous mass, and each division only truncates. So every addend and
+    partial sum of the float64 bincount is an integer <= scale < 2^53,
+    exact and order-independent like the distributed bigint sum.
+    """
+    import numpy as np
+
+    deg = np.bincount(src_i, minlength=n)
+    dangling = deg == 0
+    deg_e = deg[src_i]  # source out-degree per edge row, >= 1
+    base = (100 - damping_pct) * (scale // n) // 100
+    rank = np.full(n, scale // n, dtype=np.int64)
+    for _ in range(iters):
+        d_per = int(rank[dangling].sum()) // n
+        s_in = np.bincount(
+            dst_i, weights=(rank[src_i] // deg_e).astype(np.float64), minlength=n
+        ).astype(np.int64)
+        rank = base + damping_pct * (s_in + d_per) // 100
+    return rank
+
+
+def _encode_edges(src_vals, dst_vals):
+    """(nodes, src_i, dst_i): the sorted distinct ids over both endpoint
+    columns, and each edge's endpoints as indices into them."""
+    import numpy as np
+
+    nodes, idx = np.unique(
+        np.concatenate([src_vals.to_numpy(), dst_vals.to_numpy()]),
+        return_inverse=True,
+    )
+    return nodes, idx[: len(src_vals)], idx[len(src_vals) :]
+
+
+def _rank_frame(spark, nodes, rank, node_type) -> DataFrame:
+    import pandas as pd
+
+    return local_frame(
+        spark,
+        pd.DataFrame({"node": nodes, "rank_units": rank}),
+        T.StructType(
+            [
+                T.StructField("node", node_type),
+                T.StructField("rank_units", T.LongType()),
+            ]
+        ),
+    )
+
+
 def pagerank_intexact(
     edges: DataFrame,
     src: str = "src",
@@ -494,61 +560,58 @@ def pagerank_intexact(
     the integer divisions introduce is deterministic and bounded by
     n*iters/scale total mass, irrelevant for ranking at scale=1e12.
 
-    Shapes per iteration (round-6 tightening — identical integer results,
-    fewer exchanges; localCheckpoint does NOT preserve partitioning
-    metadata in this Spark version — Scan ExistingRDD reports unknown
-    partitioning — so the win comes from restructuring, not exchange
-    reuse): the contribution join ships only NON-dangling ranks (a
-    dangling node by definition contributes no edge mass — its rank
-    enters through the scalar dangling sum — and in a bipartite purchase
-    graph that halves the shuffled rank volume), the per-node update is
-    a UNION, not a join: nodes with in-edges get their new rank straight
-    from the dst-grouped aggregate (whose rows carry the static
-    `dst_dang` flag as a grouping key), nodes with zero in-degree (a
-    static, checkpointed set; never dangling since they appear as edge
-    sources) get the closed-form s=0 rank from the broadcast dangling
-    scalar. Per round: the edges-x-ranks join + one groupBy(dst) + a
-    one-row filter-aggregate — the previous shape also paid a
-    SortMergeJoin against the full node list and re-aggregated
-    out-degrees for an anti-join every round. localCheckpoint per round
-    so round N never re-executes rounds 1..N-1.
+    Every edge row counts: a duplicate edge adds to its source's
+    out-degree and contributes once more. ``deg_col`` names a column that
+    already holds each edge's source out-degree (it must equal the per-src
+    row count, or ranks are silently wrong); the distributed paths then
+    skip their own degree aggregate and join.
 
-    LAYERED graphs (source and sink sets disjoint — bipartite purchase
-    graphs) take a structural fast path: the recurrence collapses onto
-    the iteration-invariant per-sink out-degree histogram and runs
-    driver-side in exact integer arithmetic (bit-identical results, ONE
-    distributed edge pass instead of `iters`); see the inline note.
+    Three paths compute this one recurrence, so they are bit-identical:
+
+    1. **Driver tier**: when the edge list passes the driver-tier gate
+       (``NUMPY_MAX_ROWS``, integral or string ids of one type) and the
+       parameters pass `_pagerank_int_rounds`' exactness envelope, one
+       collect and the numpy kernel; no per-round job.
+    2. **Layered histogram**: when no node has both in- and out-edges
+       (bipartite source->sink graphs), each round aggregates the
+       iteration-invariant per-sink out-degree histogram instead of the
+       edge list.
+    3. **General loop**: each round joins the edges with the ranks and
+       sums the contributions per destination.
+
+    Paths 2 and 3 localCheckpoint every round, so round N never re-runs
+    rounds 1..N-1.
     """
     cols = [F.col(src).alias("src"), F.col(dst).alias("dst")]
     if deg_col is not None:
-        # Round 13: callers that build their edge list through a
-        # src-partitioned exchange anyway (pagerank_det fuses
-        # repartition(src) + local dedup + a window count into ONE
-        # shuffle) pass the out-degree along each edge row — the operator
-        # then skips its own groupBy(src) aggregation AND every
-        # out-degree join (hist_df, contrib_base read `deg` straight off
-        # the edge). Contract: deg_col must equal the edge multiset's
-        # per-src row count, or ranks are silently wrong (pinned by the
-        # bit-identity test against the self-computed path). Costs
-        # +8 B/edge in the checkpoint; callers with skewed hub sources
-        # should keep deg_col=None — the fused window needs every edge
-        # of a src on one task, the agg+join shape does not.
+        # +8 B/edge in the checkpoint. A caller computing deg with a
+        # window puts every edge of a src on one task, so callers with
+        # skewed hub sources should keep deg_col=None.
         cols.append(F.col(deg_col).cast("long").alias("deg"))
     e = edges.select(*cols).localCheckpoint(eager=True)
+
+    if _int_rounds_exact(iters, scale, damping_pct) and (
+        e.schema["src"].dataType == e.schema["dst"].dataType
+    ):
+        pdf = DT.collect_bounded(
+            e.select("src", "dst"),
+            max_rows=DT.NUMPY_MAX_ROWS,
+            types=DT.INTEGRAL + (T.StringType,),
+            null_cols=("src", "dst"),
+        )
+        if pdf is not None:
+            nodes, src_i, dst_i = _encode_edges(pdf["src"], pdf["dst"])
+            rank = _pagerank_int_rounds(
+                src_i, dst_i, len(nodes), iters, scale, damping_pct
+            )
+            return _rank_frame(e.sparkSession, nodes, rank, e.schema["src"].dataType)
+
     # ONE per-node flags frame (dang = no out-edges; has_in = appears as a
-    # destination), checkpointed once. Every driver scalar the operator
-    # needs — n, the dangling count, and the layered-structure test — then
-    # comes from a SINGLE aggregate job instead of three separate counts
-    # (n / n_dang / n_zero; driver-ADVICE r10: non-layered graphs paid two
-    # extra detection jobs per call), and the static zero-in-degree set
-    # (appear only as sources => have out-edges => never dangling; their
-    # per-round rank is closed-form, s = 0) becomes a cheap filter over
-    # the materialized frame instead of its own checkpointed anti-join.
-    # Round 12: built with ONE shuffle — a side-tagged union aggregated by
-    # node (max/min of the tag recover has_out/has_in) — instead of
-    # distinct + two stats-less joins, which cost three exchanges and a
-    # SortMergeJoin pair per call (profiled 0.65 s of pagerank_det's
-    # scaffolding at sf0.1).
+    # destination), built with one shuffle: a side-tagged union aggregated
+    # by node, whose max/min of the tag recover has_out/has_in. One
+    # aggregate over it yields every driver scalar (n, the dangling count,
+    # the layered test), and the static zero-in-degree set (sources only,
+    # so never dangling; closed-form rank every round) is a filter over it.
     flags = (
         e.select(F.col("src").alias("node"), F.lit(1).alias("s"))
         .unionByName(e.select(F.col("dst").alias("node"), F.lit(0).alias("s")))
@@ -573,16 +636,10 @@ def pagerank_intexact(
     nodes_f = flags.select("node", "dang")
     if deg_col is None:
         # out_deg derives from the checkpointed e (Scan ExistingRDD, no
-        # stats), so Catalyst's INITIAL plan SMJ-shuffles every join
-        # against it (AQE usually converts it at runtime, so the measured
-        # win is the skipped pre-conversion exchange only: A/B best-of-4
-        # 2.378 vs 2.491 s on pagerank_det/sf0.1, consistent across
-        # reps). Its row count is bounded by n (one row per distinct
-        # source), known free from the flags aggregate — hint it through
-        # the byte-aware cap; the same hint on triangle_count's wedge
-        # joins measured FLAT (AQE's runtime conversion already covered
-        # it) and was rejected, see BENCH_NOTES round 12. Over-cap graphs
-        # keep the shuffle formulation.
+        # stats), so Catalyst's initial plan would shuffle every join
+        # against it. It has at most n rows (one per distinct source),
+        # known from the flags aggregate: hint it through the byte-aware
+        # cap. Over-cap graphs keep the shuffle formulation.
         out_deg = _bcast_state(
             e.groupBy("src").agg(F.count("*").alias("deg")), n
         )
@@ -590,101 +647,38 @@ def pagerank_intexact(
     else:
         e_deg = e  # deg rides every edge row: no aggregate, no join
     if n == 0:
-        # empty edge set (r9 empty-corpus axis): no vertices, no ranks —
-        # zero rows, same as the oracle's unrolled CTEs over empty verts
+        # empty edge set: no vertices, no ranks — zero rows, same as the
+        # oracle's unrolled CTEs over empty verts
         return nodes_f.select(
             "node", F.lit(None).cast("long").alias("rank_units")
         )
     base = (100 - damping_pct) * (scale // n) // 100
 
-    # LAYERED fast path — src set and dst set disjoint (bipartite
-    # source->sink purchase graphs, label->item graphs): then every node
-    # is either a pure source (zero in-degree, never dangling: its rank is
-    # the same closed-form scalar every round) or a pure sink (all
-    # dangling: its in-mass depends on sources only through that scalar),
-    # so the whole recurrence collapses onto the per-sink histogram of
-    # source out-degrees: rank_sink = base + d%*(sum_deg cnt*(R div deg)
-    # + dsum div n) div 100. The histogram is iteration-invariant; when it
-    # fits the driver budget the 10 rounds run driver-side in exact Python
-    # integer arithmetic (the kmeans mini-state pattern — bit-identical to
-    # the distributed loop because bigint div/sums are order-independent)
-    # and the distributed work drops to ONE pass over the edges. Detected
-    # structurally (no node has both in- and out-edges: n_mid == 0, a
-    # free byproduct of the single flags aggregate); self-loops or chains
-    # fall through to the general loop below. An over-budget histogram
-    # (1e9-sink graphs at 100 TB) takes the MIDDLE tier instead: the same
-    # recurrence runs distributed over the checkpointed histogram frame —
-    # each round scans (sink, deg, cnt) triples, never the edge list,
-    # which at 100 TB is the difference between re-reading ~1e9 histogram
-    # rows and ~1e12 edges per round. All three tiers are bit-identical
-    # (integer arithmetic; pinned by test).
-    if LAYERED_FAST_PATH_ENABLED and iters >= 1 and n_mid == 0 and n_dang > 0:
+    if iters >= 1 and n_mid == 0 and n_dang > 0:
+        # Layered histogram path. Every node is a pure source (zero
+        # in-degree, never dangling: the same closed-form scalar r_src
+        # every round, kept on the driver) or a pure sink (dangling: its
+        # in-mass depends on the sources only through r_src), so a round
+        # is rank_sink = base + d%*(sum_deg cnt*(r_src div deg) + dsum
+        # div n) div 100 over the checkpointed (sink, deg, cnt)
+        # histogram, plus a one-row dsum collect. At scale this re-reads
+        # the histogram each round, never the edge list.
         hist_df = (
             e_deg.groupBy("dst", "deg")
             .agg(F.count("*").alias("cnt"))
             .localCheckpoint(eager=True)
         )
-        pdf = DT.collect_bounded(
-            hist_df, max_rows=DT.MAX_ROWS, null_cols=("dst",)
-        )
-        if pdf is not None:
-            # driver tier: exact Python ints, zero per-round jobs
-            from collections import defaultdict
-
-            import pandas as pd
-
-            sink_hist: dict[object, list[tuple[int, int]]] = defaultdict(list)
-            for d, dg, c in zip(*(pdf[k].tolist() for k in ("dst", "deg", "cnt"))):
-                sink_hist[d].append((dg, c))
-            r_src = scale // n  # uniform source rank (round 0 init)
-            dsum = n_dang * (scale // n)  # sinks all start at init rank
-            sink_rank: dict[object, int] = {}
-            for _ in range(iters):
-                d_per = dsum // n
-                new_dsum = 0
-                for s, dl in sink_hist.items():
-                    v = base + (
-                        damping_pct
-                        * (sum(c * (r_src // dg) for dg, c in dl) + d_per)
-                    ) // 100
-                    sink_rank[s] = v
-                    new_dsum += v
-                r_src = base + (damping_pct * d_per) // 100
-                dsum = new_dsum
-            sinks_df = local_frame(
-                e.sparkSession,
-                pd.DataFrame(
-                    {"node": list(sink_rank), "rank_units": list(sink_rank.values())}
-                ),
-                T.StructType(
-                    [
-                        T.StructField("node", nodes_f.schema["node"].dataType),
-                        T.StructField("rank_units", T.LongType()),
-                    ]
-                ),
-            )
-            return sinks_df.unionByName(
-                zero_in.select(
-                    "node", F.lit(r_src).cast("long").alias("rank_units")
-                )
-            )
-        # distributed-histogram tier: one aggregation over the
-        # histogram per round + a one-row dsum collect; r_src stays a
-        # driver scalar (it is uniform across sources by construction)
         r_src = scale // n
         dsum = n_dang * (scale // n)
         sinks_ranked = None
         for _ in range(iters):
             d_per = dsum // n
-            # bigint-safe without dprod, MULTI-EDGE INCLUDED (driver-
-            # ADVICE r10): duplicate edges can push cnt past the source
-            # count, but deg counts the same duplicates, so for one
-            # (dst, deg) cell cnt <= deg * n_deg (n_deg = sources with
-            # that out-degree) and cnt * (r_src div deg)
-            # <= n_deg * r_src; summed over deg cells the per-sink f is
-            # <= n * r_src <= scale (r_src <= ~scale/n every round) —
-            # total rank mass, twelve orders under the bigint ceiling,
-            # with or without edge multiplicity.
+            # bigint-safe without dprod, multi-edges included: duplicate
+            # edges can push cnt past the source count, but deg counts the
+            # same duplicates, so for one (dst, deg) cell cnt <= deg *
+            # n_deg (n_deg = sources with that out-degree) and cnt *
+            # (r_src div deg) <= n_deg * r_src; summed over deg cells the
+            # per-sink f is <= n * r_src <= scale — total rank mass.
             sinks_ranked = (
                 hist_df.groupBy("dst")
                 .agg(
@@ -709,69 +703,14 @@ def pagerank_intexact(
             )
         )
 
-    # GENERAL-GRAPH DRIVER TIER — the non-layered analogue of the layered
-    # driver tier above: when the node count (free from the flags
-    # aggregate) fits the node cap and the edge list passes the driver-tier
-    # gate, run every round in Python ints. The recurrence below is
-    # exactly the distributed loop's: per round, contributions rank div
-    # deg summed per destination, the dangling mass entering every node as
-    # dsum div n, zero-in-degree nodes getting the closed-form rank.
-    # Integer div/sums are order-independent, so the result is
-    # bit-identical to the distributed loop (pinned by test). At 100 TB
-    # this tier is for graphs whose SIZE does not scale with the corpus —
-    # word co-occurrence graphs are vocabulary-bounded — while
-    # corpus-scaled graphs fail the caps and take the distributed loop.
-    pdf = None
-    if iters >= 1 and n <= DT.MAX_NODES:
-        pdf = DT.collect_bounded(
-            e.select("src", "dst"), max_rows=DT.MAX_ROWS, null_cols=("src", "dst")
-        )
-    if pdf is not None:
-        from collections import defaultdict
-
-        import pandas as pd
-
-        out_deg_d: dict[object, int] = defaultdict(int)
-        in_edges: dict[object, list] = defaultdict(list)
-        for s, d in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-            out_deg_d[s] += 1
-            in_edges[d].append(s)
-        src_set = set(out_deg_d)
-        dst_set = set(in_edges)
-        all_nodes = src_set | dst_set
-        dang_nodes = all_nodes - src_set  # no out-edges
-        rank = {v: scale // n for v in all_nodes}
-        for _ in range(iters):
-            dsum = sum(rank[v] for v in dang_nodes)
-            d_per = dsum // n
-            new_rank = {}
-            for v in all_nodes:
-                if v in dst_set:
-                    s_in = sum(
-                        rank[u] // out_deg_d[u] for u in in_edges[v]
-                    )
-                    new_rank[v] = base + (damping_pct * (s_in + d_per)) // 100
-                else:
-                    new_rank[v] = base + (damping_pct * d_per) // 100
-            rank = new_rank
-        return local_frame(
-            e.sparkSession,
-            pd.DataFrame({"node": list(rank), "rank_units": list(rank.values())}),
-            T.StructType(
-                [
-                    T.StructField("node", nodes_f.schema["node"].dataType),
-                    T.StructField("rank_units", T.LongType()),
-                ]
-            ),
-        )
-
-    # general distributed loop
-    # per-edge static metadata: source out-degree + whether the TARGET is
-    # dangling (no out-edges) — carried through the dst aggregation so the
-    # new ranks frame needs no join to recover the flag. dst_dang comes
-    # from the already-checkpointed flags frame (dang = never-a-source =
-    # the old out_deg-left-join has_out-IS-NULL, one join instead of two
-    # and shared by both deg paths); broadcast under the same n-row bound.
+    # General loop. Per-edge static metadata: source out-degree + whether
+    # the TARGET is dangling (from the checkpointed flags frame, broadcast
+    # under the same n-row bound), carried through the dst aggregation so
+    # the new ranks frame needs no join to recover the flag. Per round:
+    # the edges-x-ranks join ships only NON-dangling ranks (a dangling
+    # node contributes through the scalar dangling sum, not along edges),
+    # one groupBy(dst), a one-row dangling-sum aggregate, and a UNION with
+    # the zero-in-degree nodes' closed-form rank.
     contrib_base = (
         e_deg.join(
             _bcast_state(
@@ -1191,7 +1130,7 @@ def hits_topk_sides_driver(
     )
 
 
-def pagerank_layered_driver(
+def pagerank_distinct_driver(
     e: DataFrame,
     src: str = "src",
     dst: str = "dst",
@@ -1200,41 +1139,28 @@ def pagerank_layered_driver(
     damping_pct: int = 85,
     n_edges_bound: int | None = None,
 ):
-    """Fused driver tier for LAYERED fixed-point PageRank
-    (queries/tpch_queries.pagerank_det) — the pagerank analogue of
-    `hits_topk_sides_driver`: collect the RAW, possibly duplicated edge
-    projection ONCE (Arrow), then pair-dedup, out-degrees, the layered
-    structure test, the per-sink out-degree histogram AND all `iters`
-    rounds run in numpy/driver integers. The caller thereby skips the
-    entire distributed edge build (repartition + dropDuplicates + degree
-    window), the flags union-aggregate, the histogram groupBy and their
-    eager checkpoints.
+    """Fused driver tier for fixed-point PageRank over the DISTINCT edge
+    pairs of ``e`` (queries/tpch_queries.pagerank_det) — the pagerank
+    analogue of `hits_topk_sides_driver`: collect the raw, possibly
+    duplicated edge projection once (Arrow), dedupe the pairs in numpy and
+    run `_pagerank_int_rounds`. The caller thereby skips the whole
+    distributed edge build (repartition + dropDuplicates + degree window)
+    and every checkpoint of `pagerank_intexact`.
 
-    Bit-identity with `pagerank_intexact`'s layered tiers: the recurrence
-    below is literally the layered driver tier's —
-
-        r_src' = base + (damping_pct * d_per) // 100
-        sink'  = base + (damping_pct * (sum(cnt * (r_src // deg)) + d_per)) // 100
-
-    over the iteration-invariant (sink, deg, cnt) histogram, where every
-    quantity is a non-negative integer and total rank mass never exceeds
-    `scale` (mass is conserved up to deterministic truncation), so per-cell
-    products and per-sink sums stay < 2^53 — float64 bincount accumulation
-    is exact — and `damping_pct * (f + d_per)` stays far under 2^63.
-    Pinned by tests against both distributed tiers on random bipartite
-    multigraphs.
+    Bit-identical to ``pagerank_intexact(e.dropDuplicates([src, dst]),
+    ...)``: the same kernel as that operator's driver tier, over the same
+    deduplicated edges.
 
     ``n_edges_bound`` is the gate's sound bound on the collected row
     count (the `hits_topk_sides_driver` contract).
 
-    Returns ``None`` (caller falls back to the distributed build +
-    `pagerank_intexact` unchanged) when the gate or the envelope
-    declines, the node columns are not one shared integral type, or the
-    graph is NOT layered (some node appears on both sides — the general
-    loop's semantics, which this tier does not replicate).
+    Returns ``None`` (the caller falls back to the distributed build +
+    `pagerank_intexact`) when the bound is missing, the gate or the
+    exactness envelope declines, or the node columns are not one shared
+    integral type.
     """
-    if iters < 1 or scale > 10**12 or not 0 < damping_pct < 100:
-        return None  # the <2^53 mass envelope is sized to scale <= 1e12
+    if not _int_rounds_exact(iters, scale, damping_pct):
+        return None
     if n_edges_bound is None:
         return None  # a probe would run the un-materialized join twice
     if e.schema[src].dataType != e.schema[dst].dataType:
@@ -1249,69 +1175,11 @@ def pagerank_layered_driver(
     if pdf is None:
         return None
     import numpy as np
-    import pandas as pd
 
-    src_u, src_i = np.unique(pdf[src].to_numpy(), return_inverse=True)
-    dst_u, dst_i = np.unique(pdf[dst].to_numpy(), return_inverse=True)
-    # layered structure test (== the operator's n_mid == 0): no node may
-    # appear as both a source and a destination.
-    if np.intersect1d(src_u, dst_u, assume_unique=True).size:
-        return None
-    # pair dedupe == dropDuplicates([src, dst]): same encoding bound as
-    # hits_topk_sides_driver (indices <= |E| <= 4e6, product << 2^63).
-    code = np.unique(src_i.astype(np.int64) * len(dst_u) + dst_i)
-    src_i = code // len(dst_u)
-    dst_i = code % len(dst_u)
-    deg = np.bincount(src_i, minlength=len(src_u)).astype(np.int64)
-
-    n = len(src_u) + len(dst_u)
-    n_dang = len(dst_u)  # every sink is dangling in a layered graph
-    base = (100 - damping_pct) * (scale // n) // 100
-    # iteration-invariant (sink, deg) histogram: cnt = #edges into that
-    # sink from sources of that out-degree (deg <= |E|, so the encode
-    # stays far under 2^63 at the 4M edge cap).
-    dg = deg[src_i]
-    stride = int(dg.max()) + 1
-    hcode, hcnt = np.unique(
-        dst_i.astype(np.int64) * stride + dg, return_counts=True
-    )
-    h_dst = (hcode // stride).astype(np.int64)
-    h_deg = (hcode % stride).astype(np.int64)
-    hcnt = hcnt.astype(np.int64)
-
-    r_src = scale // n
-    dsum = n_dang * (scale // n)
-    sink_rank = None
-    for _ in range(iters):
-        d_per = dsum // n
-        # per-cell cnt * (r_src div deg) <= per-sink mass <= total mass
-        # <= scale <= 1e12 < 2^53: exact in float64 accumulation.
-        cell = hcnt * (r_src // h_deg)
-        f = np.bincount(
-            h_dst, weights=cell.astype(np.float64), minlength=n_dang
-        ).astype(np.int64)
-        sink_rank = base + (damping_pct * (f + d_per)) // 100
-        dsum = int(sink_rank.sum())
-        r_src = base + (damping_pct * d_per) // 100
-
-    out = pd.DataFrame(
-        {
-            "node": np.concatenate([dst_u, src_u]),
-            "rank_units": np.concatenate(
-                [
-                    sink_rank.astype(np.int64, copy=False),
-                    np.full(len(src_u), r_src, dtype=np.int64),
-                ]
-            ),
-        }
-    )
-    return local_frame(
-        e.sparkSession,
-        out,
-        T.StructType(
-            [
-                T.StructField("node", e.schema[src].dataType),
-                T.StructField("rank_units", T.LongType()),
-            ]
-        ),
-    )
+    nodes, src_i, dst_i = _encode_edges(pdf[src], pdf[dst])
+    n = len(nodes)
+    # pair dedupe == dropDuplicates([src, dst]): both indices are < n <=
+    # 2 |E|, so the pair code stays far under 2^63 at the row cap.
+    code = np.unique(src_i * n + dst_i)
+    rank = _pagerank_int_rounds(code // n, code % n, n, iters, scale, damping_pct)
+    return _rank_frame(e.sparkSession, nodes, rank, e.schema[src].dataType)

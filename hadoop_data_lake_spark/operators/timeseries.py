@@ -89,8 +89,8 @@ def time_grid_interpolate(
     stair-stepping; edges beyond the first/last observation clamp to it).
 
     Same grid/shuffle shape as time_grid_ffill plus one backward-looking
-    and one forward-looking window over the SAME key partitioning — still
-    a single hash shuffle on the key, no Python, no iteration.
+    and one forward-looking running window over the SAME key partitioning
+    — still a single hash shuffle on the key, no Python, no iteration.
     """
     bucket_us = bucket_seconds * 1_000_000
     tiebreak = tiebreak or []
@@ -118,10 +118,13 @@ def time_grid_interpolate(
         .orderBy(F.col("__b").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
+    # the next observation is the LAST one seen walking the grid backwards:
+    # a currentRow..unboundedFollowing frame is recomputed per row (O(n^2)
+    # per key), a running unboundedPreceding..currentRow frame is not
     fwd = (
         Window.partitionBy(*keys)
-        .orderBy(F.col("__b").asc())
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+        .orderBy(F.col("__b").desc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     obs_b = F.when(F.col("__v").isNotNull(), F.col("__b"))
     j = (
@@ -129,8 +132,8 @@ def time_grid_interpolate(
         .withColumn("__observed", F.col("__v").isNotNull())
         .withColumn("__pv", F.last("__v", ignorenulls=True).over(back))
         .withColumn("__pb", F.last(obs_b, ignorenulls=True).over(back))
-        .withColumn("__nv", F.first("__v", ignorenulls=True).over(fwd))
-        .withColumn("__nb", F.first(obs_b, ignorenulls=True).over(fwd))
+        .withColumn("__nv", F.last("__v", ignorenulls=True).over(fwd))
+        .withColumn("__nb", F.last(obs_b, ignorenulls=True).over(fwd))
     )
     interp = (
         F.when(F.col("__pb").isNull(), F.col("__nv"))

@@ -3454,8 +3454,8 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # former dense-integer wid mapping (global vocab window + four mapping
     # joins) existed to cheapen the distributed loop's join keys, but a
     # word co-occurrence graph is vocabulary-bounded at ANY corpus scale,
-    # so it takes the operator's general driver tier — where node identity
-    # is a dict key and the mapping is pure overhead. Ranks are invariant
+    # so it takes the operator's driver tier — whose numpy kernel encodes
+    # node ids itself, so the mapping is pure overhead. Ranks are invariant
     # under the id bijection, so results are value-identical.
     # aggregate-first: dedupe the DIRECTED pairs in one corpus pass (the
     # distinct pair set is vocabulary-bounded), eager-checkpoint the small

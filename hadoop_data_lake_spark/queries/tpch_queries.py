@@ -2193,15 +2193,14 @@ def pagerank_det(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from hadoop_data_lake_spark.core import driver_tier as DT
     from hadoop_data_lake_spark.core.io import parquet_row_count
-    from hadoop_data_lake_spark.operators.graph import pagerank_layered_driver
+    from hadoop_data_lake_spark.operators.graph import pagerank_distinct_driver
 
-    # The common case runs the FUSED driver tier: ONE Arrow collect of the
-    # raw join projection; pair-dedup, degrees, the layered test, the
-    # sink histogram and all 10 rounds in numpy/driver integers. Its sound
-    # bound is the lineitem footer row count: the inner join on orders'
-    # primary key cannot multiply lineitem rows, so |raw edges| <=
+    # The common case runs the fused driver tier: ONE Arrow collect of the
+    # raw join projection, then the pair dedup and all 10 rounds in numpy.
+    # Its sound bound is the lineitem footer row count: the inner join on
+    # orders' primary key cannot multiply lineitem rows, so |raw edges| <=
     # |lineitem|. If the tier declines, the distributed build below runs.
-    top = pagerank_layered_driver(
+    top = pagerank_distinct_driver(
         e_raw,
         "src",
         "dst",
@@ -2211,14 +2210,11 @@ def pagerank_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     if top is not None:
         return top
 
-    # Round 13: ONE exchange builds dedup + out-degree together —
-    # repartition(src) hash-clusters by the prefix, so dropDuplicates
+    # ONE exchange builds dedup + out-degree together: repartition(src)
+    # hash-clusters by the prefix, so dropDuplicates
     # (ClusteredDistribution(src, dst)) AND the deg window
-    # (ClusteredDistribution(src)) both reuse it (the scd2_collapse
-    # prefix rule); the operator's deg_col path then skips its own
-    # groupBy(src) aggregate and every out-degree join. Previously:
-    # distinct shuffled by (src, dst), and the operator re-aggregated +
-    # re-joined degrees (r12 profile: 1.6 s of 2.45 s in this build).
+    # (ClusteredDistribution(src)) both reuse it, and the operator's
+    # deg_col path skips its own groupBy(src) aggregate and degree join.
     edges = (
         e_raw.repartition("src")
         .dropDuplicates(["src", "dst"])

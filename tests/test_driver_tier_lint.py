@@ -12,6 +12,9 @@ source/AST checks, no Spark session:
    literal (a list, tuple or comprehension). A lint cannot tell a pandas
    frame from a row list behind a name, so any other first argument fails
    here — literal frames go through `local_frame`.
+3. No module outside ``core/driver_tier.py`` assigns a module-level
+   ``*_ENABLED`` switch: one switch turns the tiers off, so a tiers-off
+   run really is the distributed paths alone.
 """
 
 from __future__ import annotations
@@ -58,6 +61,53 @@ def test_tier_switch_only_in_the_gate():
     assert not offenders, "tier switch outside core/driver_tier.py:\n" + "\n".join(
         offenders
     )
+
+
+def _module_switches(tree: ast.Module) -> list[tuple[int, str]]:
+    found = []
+    for node in tree.body:
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, ast.AnnAssign):
+            targets = [node.target]
+        else:
+            continue
+        found += [
+            (node.lineno, t.id)
+            for t in targets
+            if isinstance(t, ast.Name) and t.id.endswith("_ENABLED")
+        ]
+    return found
+
+
+def test_no_module_switch_outside_the_gate():
+    offenders = []
+    for rel, path in _modules():
+        if rel == GATE:
+            continue
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), filename=path)
+        offenders += [f"{rel}:{n}: {name}" for n, name in _module_switches(tree)]
+    assert not offenders, "module-level switch outside core/driver_tier.py:\n" + (
+        "\n".join(offenders)
+    )
+
+
+def test_lint_flags_a_module_switch():
+    """The rule is not vacuous: a module-level switch is caught, a local
+    or attribute assignment is not."""
+    src = (
+        "FAST_PATH_ENABLED = True\n"
+        "X: bool = False\n"
+        "SLOW_ENABLED: bool = False\n"
+        "def f():\n"
+        "    LOCAL_ENABLED = 1\n"
+        "DT.GENERAL_DRIVER_TIER_ENABLED = False\n"
+    )
+    assert _module_switches(ast.parse(src)) == [
+        (1, "FAST_PATH_ENABLED"),
+        (3, "SLOW_ENABLED"),
+    ]
 
 
 def _create_dataframe_calls(tree: ast.AST):

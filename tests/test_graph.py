@@ -1,7 +1,17 @@
-"""Connected components / dedup clustering."""
+"""Graph operators: connected components / dedup clustering, PageRank
+(float and fixed-point, with the fixed-point driver tiers), triangles,
+BFS and label propagation."""
+
+import random
+from collections import Counter
 
 import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
+from conftest import count_jobs
+from hadoop_data_lake_spark.core import driver_tier as DT
+from hadoop_data_lake_spark.operators import graph as G
 from hadoop_data_lake_spark.operators.graph import connected_components, dedup_clusters
 
 
@@ -128,34 +138,33 @@ def test_triangle_count_known_graph(spark):
     assert got == {1: 3, 2: 3, 3: 3, 4: 3}
 
 
+def _serial_pagerank(edges, iters, scale=10**12, damping_pct=85):
+    """Serial replay of `pagerank_intexact`'s integer recurrence in Python
+    ints: every (src, dst) row is one edge, so duplicates count."""
+    nodes = {u for e in edges for u in e}
+    n = len(nodes)
+    out = Counter(s for s, _ in edges)
+    base = (100 - damping_pct) * (scale // n) // 100
+    rank = dict.fromkeys(nodes, scale // n)
+    for _ in range(iters):
+        in_sum = dict.fromkeys(nodes, 0)
+        for s, d in edges:
+            in_sum[d] += rank[s] // out[s]
+        d_per = sum(rank[v] for v in nodes if v not in out) // n
+        rank = {v: base + damping_pct * (in_sum[v] + d_per) // 100 for v in nodes}
+    return rank
+
+
+def _ranks(df):
+    return {r["node"]: r["rank_units"] for r in df.collect()}
+
+
 def test_pagerank_intexact_matches_serial_integer_simulation(spark):
     from hadoop_data_lake_spark.operators.graph import pagerank_intexact
 
     edges = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1)]  # node 5 absent; 3->1 cycle
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {
-        r["node"]: r["rank_units"]
-        for r in pagerank_intexact(df, iters=10).collect()
-    }
-
-    # serial replay of the exact integer recurrence
-    scale = 10**12
-    nodes = sorted({u for e in edges for u in e})
-    n = len(nodes)
-    out = {}
-    for s, _ in edges:
-        out[s] = out.get(s, 0) + 1
-    rank = {v: scale // n for v in nodes}
-    base = 15 * (scale // n) // 100
-    for _ in range(10):
-        in_sum = {v: 0 for v in nodes}
-        for s, d in edges:
-            in_sum[d] += rank[s] // out[s]
-        dang = sum(rank[v] for v in nodes if v not in out)
-        rank = {
-            v: base + 85 * (in_sum[v] + dang // n) // 100 for v in nodes
-        }
-    assert got == rank
+    assert _ranks(pagerank_intexact(df, iters=10)) == _serial_pagerank(edges, 10)
 
 
 def test_pagerank_intexact_mass_is_conserved_up_to_truncation(spark):
@@ -242,3 +251,181 @@ def test_lpa_unweighted_single_component_converges_to_min_label(spark):
     )
     out = {r["vertex"]: r["community"] for r in lpa_communities(df, iters=4).collect()}
     assert set(out.values()) == {1}
+
+
+# ---------------------------------------------- fixed-point PageRank paths
+
+_PR_GRAPHS = {
+    # bipartite: tiers off, the layered histogram path
+    "layered": [(c, -(c % 4) - 1) for c in range(30)] + [(7, -5), (11, -5)],
+    # customer c buys item -(c%3)-1 between 1 and 4 times, plus parallel
+    # edges: the histogram's cnt exceeds the distinct source count
+    "layered_multiedge": [
+        (c, -(c % 3) - 1) for c in range(20) for _ in range(1 + c % 4)
+    ]
+    + [(5, -2)] * 3,
+    # src and dst sets overlap: tiers off, the general loop
+    "chain": [(i, i + 1) for i in range(10)],
+}
+
+
+@pytest.mark.parametrize("graph", sorted(_PR_GRAPHS))
+def test_pagerank_paths_match_serial_reference(spark, tiers, graph):
+    """The driver tier (tiers on) and the distributed path it replaces
+    (tiers off) are bit-identical to the serial recurrence."""
+    rows = _PR_GRAPHS[graph]
+    e = spark.createDataFrame(rows, "src long, dst long")
+    on, off = tiers.on_off(lambda: _ranks(G.pagerank_intexact(e, iters=6)))
+    assert on == off == _serial_pagerank(rows, 6)
+
+
+@pytest.mark.parametrize("graph", ["layered", "chain"])
+def test_pagerank_intexact_tier_runs_two_jobs(spark, tiers, graph):
+    """Tier path: the edge checkpoint and the one bounded collect, nothing
+    else — no flags aggregate, no histogram, no per-round job."""
+    e = spark.createDataFrame(_PR_GRAPHS[graph], "src long, dst long")
+    _, jobs = count_jobs(spark, lambda: G.pagerank_intexact(e, iters=4))
+    assert jobs == 2
+    tiers(False)
+    _, jobs_off = count_jobs(spark, lambda: G.pagerank_intexact(e, iters=4))
+    assert jobs_off > jobs
+
+
+def test_pagerank_intexact_row_cap_routes_to_distributed(spark, monkeypatch):
+    """Above the numpy row cap the operator takes the distributed path,
+    with the same values."""
+    rows = [(1, 2), (2, 1), (2, 3)]
+    e = spark.createDataFrame(rows, "src int, dst int")
+    monkeypatch.setattr(DT, "NUMPY_MAX_ROWS", 0)
+    df = G.pagerank_intexact(e, iters=3)
+    # the distributed loop's ranks are an iterated localCheckpoint (Scan
+    # ExistingRDD), never a local frame
+    assert "ExistingRDD" in df._jdf.queryExecution().executedPlan().toString()
+    assert _ranks(df) == _serial_pagerank(rows, 3)
+
+
+def _random_multigraph(rng, n_max=14, m_max=30):
+    """Random digraph whose shape arises naturally: cycles, dangling and
+    zero-in-degree nodes, duplicate edges and self-loops."""
+    n = rng.randint(2, n_max)
+    return [
+        (rng.randint(0, n - 1), rng.randint(0, n - 1))
+        for _ in range(rng.randint(1, m_max))
+    ]
+
+
+def test_pagerank_int_rounds_property_matches_serial_reference():
+    """The numpy kernel alone against the serial recurrence on many random
+    multigraphs, across iteration counts and dampings."""
+    import pandas as pd
+
+    rng = random.Random(0x5EED)
+    for draw in range(200):
+        rows = _random_multigraph(rng)
+        iters, damping = rng.randint(1, 10), rng.choice([0, 50, 85, 100])
+        nodes, src_i, dst_i = G._encode_edges(
+            pd.Series([s for s, _ in rows]), pd.Series([d for _, d in rows])
+        )
+        rank = G._pagerank_int_rounds(
+            src_i, dst_i, len(nodes), iters, 10**12, damping
+        )
+        got = dict(zip(nodes.tolist(), rank.tolist()))
+        assert got == _serial_pagerank(rows, iters, damping_pct=damping), draw
+
+
+def test_pagerank_intexact_property_tiers_match_serial_reference(spark, tiers):
+    """Through Spark: random multigraphs with integer ids and with string
+    ids (textrank_keywords' shape), tiers on and off."""
+    rng = random.Random(0xC0FFEE)
+    for draw in range(4):
+        rows = _random_multigraph(rng)
+        if draw % 2:
+            rows = [(f"w{s}", f"w{d}") for s, d in rows]
+            e = spark.createDataFrame(rows, "src string, dst string")
+        else:
+            e = spark.createDataFrame(rows, "src long, dst long")
+        on, off = tiers.on_off(lambda: _ranks(G.pagerank_intexact(e, iters=3)))
+        assert on == off == _serial_pagerank(rows, 3), (draw, rows)
+
+
+def test_pagerank_intexact_envelope_edge_declines_to_distributed(spark):
+    """scale = 10**12 + 1 is outside the kernel's exactness envelope: the
+    tier declines, the distributed path answers, and the values still
+    match the serial recurrence."""
+    rows = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1), (2, 2)]
+    e = spark.createDataFrame(rows, "src long, dst long")
+    scale = 10**12 + 1
+    df, jobs = count_jobs(spark, lambda: G.pagerank_intexact(e, iters=4, scale=scale))
+    assert jobs > 2
+    assert "ExistingRDD" in df._jdf.queryExecution().executedPlan().toString()
+    assert _ranks(df) == _serial_pagerank(rows, 4, scale=scale)
+
+
+# ------------------------------------------------ pagerank_distinct_driver
+
+
+def _distinct_tiers_off(e_raw, iters):
+    """pagerank_det's distributed build: dedup + degree window + operator."""
+    edges = (
+        e_raw.repartition("src")
+        .dropDuplicates(["src", "dst"])
+        .withColumn("deg", F.count("*").over(Window.partitionBy("src")))
+    )
+    return _ranks(G.pagerank_intexact(edges, iters=iters, deg_col="deg"))
+
+
+def _random_bipartite(spark, seed, n_src=25, n_dst=8, m=120):
+    """Random bipartite multigraph: sources >= 0, sinks < 0 (disjoint id
+    spaces, pagerank_det's purchase-graph shape)."""
+    rng = random.Random(seed)
+    rows = [(rng.randint(0, n_src), -rng.randint(1, n_dst)) for _ in range(m)]
+    return spark.createDataFrame(rows, "src long, dst long")
+
+
+def test_pagerank_distinct_driver_bit_identity(spark, tiers):
+    """Fused tier == the distributed build on raw (pre-dedup) edges: random
+    bipartite multigraphs across iteration counts, and one random
+    multigraph that is not layered, which the tier accepts too."""
+    rows = _random_multigraph(random.Random(4), n_max=20, m_max=80)
+    assert {s for s, _ in rows} & {d for _, d in rows}  # not layered
+    general = spark.createDataFrame(rows, "src long, dst long")
+    cases = [
+        (_random_bipartite(spark, seed), iters)
+        for seed, iters in [(1, 1), (2, 3), (3, 10)]
+    ] + [(general, 5)]
+    for e_raw, iters in cases:
+        got = G.pagerank_distinct_driver(
+            e_raw, "src", "dst", iters=iters, n_edges_bound=e_raw.count()
+        )
+        assert got is not None
+        tiers(False)
+        assert _ranks(got) == _distinct_tiers_off(e_raw, iters), iters
+        tiers(True)
+    # the last case is the general graph
+    assert _ranks(got) == _serial_pagerank(sorted(set(rows)), 5)
+
+
+def test_pagerank_distinct_driver_declines(spark, tiers):
+    e = _random_bipartite(spark, 7)
+    n = e.count()
+    # missing / over-cap bound
+    assert G.pagerank_distinct_driver(e, n_edges_bound=None) is None
+    assert G.pagerank_distinct_driver(e, n_edges_bound=DT.NUMPY_MAX_ROWS + 1) is None
+    # broken bound promise (bound below the true collected count)
+    assert G.pagerank_distinct_driver(e, n_edges_bound=1) is None
+    # outside the exactness envelope
+    for kw in ({"iters": 0}, {"scale": 10**12 + 1}, {"damping_pct": 101}):
+        assert G.pagerank_distinct_driver(e, n_edges_bound=n, **kw) is None, kw
+    # non-integral or mismatched node types
+    se = spark.createDataFrame([("a", "x"), ("b", "x")], "src string, dst string")
+    assert G.pagerank_distinct_driver(se, n_edges_bound=2) is None
+    mixed = spark.createDataFrame([(1, -1)], "src int, dst long")
+    assert G.pagerank_distinct_driver(mixed, n_edges_bound=1) is None
+    # tier switch pinned off
+    tiers(False)
+    assert G.pagerank_distinct_driver(e, n_edges_bound=n) is None
+
+
+def test_pagerank_distinct_driver_declines_on_null_ids(spark, tiers):
+    e = spark.createDataFrame([(1, -1), (None, -2), (2, -1)], "src long, dst long")
+    assert G.pagerank_distinct_driver(e, iters=2, n_edges_bound=3) is None

@@ -346,38 +346,3 @@ def test_graph_state_broadcast_cap_is_value_neutral(spark):
         G.BROADCAST_STATE_MAX_ROWS = old_cap
     assert results["bcast"] == results["shuffle"]
     assert results["bcast"][0], "pagerank produced no rows"
-
-
-def test_pagerank_layered_fast_path_matches_general_loop(spark, tiers, monkeypatch):
-    """The three pagerank_intexact tiers must be bit-identical (all exact
-    integer arithmetic): driver-histogram (layered graph, driver tiers
-    on), distributed-histogram (layered, driver tiers off), and the
-    general loop (layered detection disabled). A chain graph (src and dst
-    sets overlap) must produce the same result regardless of the layered
-    machinery being enabled."""
-    import hadoop_data_lake_spark.operators.graph as G
-
-    bip = spark.createDataFrame(
-        [(c, -(c % 4) - 1) for c in range(30)] + [(7, -5), (11, -5)],
-        "src long, dst long",
-    )
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(10)], "src long, dst long"
-    )
-
-    def run(df):
-        return {
-            (r["node"], r["rank_units"])
-            for r in G.pagerank_intexact(df, iters=6).collect()
-        }
-
-    driver_bip = run(bip)
-    chain_out = run(chain)
-    tiers(False)  # layered, no driver tier: middle tier
-    mid_bip = run(bip)
-    monkeypatch.setattr(G, "LAYERED_FAST_PATH_ENABLED", False)  # general loop
-    general_bip = run(bip)
-    chain_out2 = run(chain)
-    assert driver_bip == mid_bip == general_bip
-    assert chain_out == chain_out2
-    assert len(driver_bip) == 35  # 30 sources + 5 sinks

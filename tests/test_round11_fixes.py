@@ -5,11 +5,6 @@
   so a wide-state algorithm (string labels, array payloads) can't ship a
   multi-GB broadcast that a narrow (long, long) rank frame of the same row
   count would legitimately pass.
-- pagerank_intexact: layered detection collapsed into the single flags
-  aggregate (one driver job instead of three), and the distributed
-  histogram tier's bigint bound is proven for MULTI-edge inputs (cnt can
-  exceed the source count, but deg scales with it, so per-sink mass stays
-  <= scale) — pinned here by a duplicate-edge three-tier equality test.
 - minhash_cross_pairs: the probe-side (broadcast-small) frames derived
   from the checkpointed inv_r carry explicit F.broadcast hints; pinned so
   a refactor can't silently demote the candidate/verify joins to SMJ.
@@ -66,61 +61,6 @@ def test_broadcast_state_byte_cap_blocks_wide_state(spark):
     # unknown / negative counts never broadcast
     assert G.broadcast_bounded_state(narrow, None) is narrow
     assert G.broadcast_bounded_state(narrow, -1) is narrow
-
-
-def test_pagerank_layered_multiedge_tiers_match(spark, tiers, monkeypatch):
-    """Duplicate (multi-)edges: all three pagerank_intexact tiers must stay
-    bit-identical (driver histogram; distributed histogram with the driver
-    tiers off; general loop with layered detection off too). The histogram tiers count EDGE rows (cnt can exceed the
-    distinct source count) while out-degree counts the same duplicates, so
-    contributions — and the bigint mass bound — are consistent across
-    driver / distributed-histogram / general-loop formulations."""
-    import hadoop_data_lake_spark.operators.graph as G
-
-    # bipartite with heavy multiplicity: customer c buys item -(c%3)-1
-    # between 1 and 4 times
-    rows = []
-    for c in range(20):
-        rows += [(c, -(c % 3) - 1)] * (1 + c % 4)
-    rows += [(5, -2), (5, -2), (5, -2)]  # extra parallel edges
-    edges = spark.createDataFrame(rows, "src long, dst long")
-
-    def run():
-        return {
-            (r["node"], r["rank_units"])
-            for r in G.pagerank_intexact(edges, iters=5).collect()
-        }
-
-    driver_t = run()
-    tiers(False)  # layered, no driver tier: middle tier
-    mid_t = run()
-    monkeypatch.setattr(G, "LAYERED_FAST_PATH_ENABLED", False)  # general loop
-    general_t = run()
-    assert driver_t == mid_t == general_t
-    assert len(driver_t) == 23  # 20 sources + 3 sinks
-
-
-def test_pagerank_detection_adds_zero_jobs(spark, monkeypatch):
-    """Layered detection must be FREE on non-layered graphs (the r10 shape
-    ran two extra count jobs on every call): with the fast path enabled vs
-    disabled, a chain graph (non-layered, takes the general loop either
-    way) must run exactly the same number of driver jobs — the structural
-    test is a byproduct of the single flags aggregate that computes n."""
-    import hadoop_data_lake_spark.operators.graph as G
-
-    chain = spark.createDataFrame([(i, i + 1) for i in range(8)], "src long, dst long")
-    tracker = spark.sparkContext.statusTracker()
-
-    def jobs_for(enabled):
-        monkeypatch.setattr(G, "LAYERED_FAST_PATH_ENABLED", enabled)
-        # job ids are monotonically increasing; counting LIST LENGTH
-        # breaks late in a long suite once the UI evicts retained jobs
-        before = max(tracker.getJobIdsForGroup(None) or [0])
-        G.pagerank_intexact(chain, iters=2)
-        return max(tracker.getJobIdsForGroup(None) or [0]) - before
-
-    warm = jobs_for(True)  # warm up partitions/AQE once
-    assert jobs_for(True) == jobs_for(False), warm
 
 
 def test_minhash_cross_probe_side_broadcasts(spark):
@@ -396,7 +336,7 @@ def test_general_driver_tier_bit_identical(spark, tiers):
     loop handles — dangling nodes (5 has no out-edge), zero-in-degree
     nodes (1 is never a destination), duplicate (multi-)edges, a cycle,
     and a self-referential cluster. Non-layered (node 2 has both in- and
-    out-edges) so the layered tiers never intercept."""
+    out-edges), so with the tiers off the general loop answers."""
     rows = [
         (1, 2), (2, 3), (3, 2),          # cycle w/ mid nodes
         (2, 5), (4, 5), (4, 5),          # dangling sink 5, dup edge
@@ -407,25 +347,6 @@ def test_general_driver_tier_bit_identical(spark, tiers):
     assert len(fast) == 5
     # mass sanity: total rank stays ~scale (integer truncation only)
     assert abs(sum(r for _, r in fast) - 10**12) < 10**7
-
-
-def test_general_driver_tier_caps_route_to_distributed(spark, monkeypatch):
-    """Above either measured cap the operator must take the distributed
-    loop (no collect of an unbounded edge list). Forced by dropping the
-    caps to zero; equality of values is what the other test pins."""
-    import hadoop_data_lake_spark.core.driver_tier as DT
-    import hadoop_data_lake_spark.operators.graph as G
-
-    e = spark.createDataFrame([(1, 2), (2, 1)], "src int, dst int")
-    for cap in ("MAX_NODES", "MAX_ROWS"):
-        monkeypatch.undo()
-        monkeypatch.setattr(DT, cap, 0)
-        df = G.pagerank_intexact(e, iters=1)
-        # the distributed loop returns the ranks frame selected from the
-        # iterated localCheckpoint — a Scan ExistingRDD, not a local
-        # frame; cheap structural probe:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan, cap
 
 
 def _lpa_rows_both_tiers(spark, tiers, rows, ddl, weight, iters):

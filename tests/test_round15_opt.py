@@ -1,14 +1,5 @@
 """Round-15 optimization tiers: bit-identity and decline contracts.
 
-Two new fused driver tiers (OPTIMIZATION_r15.md):
-
-- `graph.pagerank_layered_driver` — the pagerank analogue of the r14 HITS
-  fusion: one Arrow collect of the raw edge projection, pair-dedup /
-  degrees / layered test / sink histogram / all rounds in numpy-driver
-  integers. Must be bit-identical to `pagerank_intexact`'s distributed
-  tiers on every layered graph, and DECLINE (None) on non-layered graphs,
-  non-integral node types, over-cap bounds and broken bound promises.
-
 - `graph._cc_driver` (inside `connected_components`) — exact union-find
   with min-root election over the collected pair list. Must produce the
   identical (vertex, component = min reachable) labeling as the
@@ -29,83 +20,6 @@ from pyspark.sql.types import (
 
 from hadoop_data_lake_spark.core import driver_tier as DT
 from hadoop_data_lake_spark.operators import graph as G
-
-
-def _bipartite_edges(spark, seed, n_src=25, n_dst=8, m=120):
-    """Random bipartite multigraph: sources >= 0, sinks < 0 (disjoint id
-    spaces — the purchase-graph shape pagerank_det feeds the tier)."""
-    rng = random.Random(seed)
-    rows = [
-        (rng.randint(0, n_src), -rng.randint(1, n_dst))
-        for _ in range(m)
-    ]
-    return spark.createDataFrame(
-        rows,
-        StructType([StructField("src", LongType()), StructField("dst", LongType())]),
-    )
-
-
-# ------------------------------------------------ pagerank fused tier
-
-
-def test_pagerank_layered_driver_bit_identity(spark, tiers):
-    """Fused tier == distributed loop on random bipartite multigraphs,
-    raw (pre-dedup) edges in, across iteration counts."""
-    from pyspark.sql import Window
-
-    for seed, iters in [(1, 1), (2, 3), (3, 10)]:
-        e_raw = _bipartite_edges(spark, seed)
-        got = G.pagerank_layered_driver(
-            e_raw, "src", "dst", iters=iters, n_edges_bound=e_raw.count()
-        )
-        assert got is not None
-        a = {(r["node"], r["rank_units"]) for r in got.collect()}
-        tiers(False)
-        edges = (
-            e_raw.repartition("src")
-            .dropDuplicates(["src", "dst"])
-            .withColumn("deg", F.count("*").over(Window.partitionBy("src")))
-        )
-        b = {
-            (r["node"], r["rank_units"])
-            for r in G.pagerank_intexact(edges, iters=iters, deg_col="deg").collect()
-        }
-        tiers(True)
-        assert a == b, f"seed={seed} iters={iters}"
-
-
-def test_pagerank_layered_driver_declines(spark, tiers):
-    e = _bipartite_edges(spark, 7)
-    n = e.count()
-    # non-layered: a node on both sides
-    mixed = e.unionByName(
-        spark.createDataFrame(
-            [(-1, 5)],
-            StructType(
-                [StructField("src", LongType()), StructField("dst", LongType())]
-            ),
-        )
-    )
-    assert G.pagerank_layered_driver(mixed, "src", "dst", n_edges_bound=n + 1) is None
-    # missing / over-cap bound
-    assert G.pagerank_layered_driver(e, "src", "dst", n_edges_bound=None) is None
-    assert (
-        G.pagerank_layered_driver(
-            e, "src", "dst", n_edges_bound=DT.NUMPY_MAX_ROWS + 1
-        )
-        is None
-    )
-    # broken bound promise (bound below the true collected count)
-    assert G.pagerank_layered_driver(e, "src", "dst", n_edges_bound=1) is None
-    # non-integral node type
-    se = spark.createDataFrame(
-        [("a", "x"), ("b", "x")],
-        StructType([StructField("src", StringType()), StructField("dst", StringType())]),
-    )
-    assert G.pagerank_layered_driver(se, "src", "dst", n_edges_bound=2) is None
-    # tier switch pinned off
-    tiers(False)
-    assert G.pagerank_layered_driver(e, "src", "dst", n_edges_bound=n) is None
 
 
 # ------------------------------------------------ connected-components tier

@@ -12,8 +12,8 @@
   columns (arrays/maps/structs/binary) and NULL-carrying passthrough
   integral columns decline to the distributed path, whose results are
   the contract.
-- NULL node ids decline the CC union-find and layered-pagerank driver
-  tiers instead of crashing or fabricating ids (ADVICE r15).
+- NULL node ids decline the CC union-find driver tier instead of
+  crashing or fabricating ids (ADVICE r15).
 """
 
 import pytest
@@ -231,19 +231,6 @@ def test_cc_driver_labels_declines_on_null_ids(spark, tiers):
         StructType([StructField("u", LongType()), StructField("v", LongType())]),
     ).localCheckpoint(eager=True)
     assert G._cc_driver_labels(raw) is None  # decline, not TypeError
-
-
-def test_pagerank_layered_driver_declines_on_null_ids(spark, tiers):
-    e = spark.createDataFrame(
-        [(1, -1), (None, -2), (2, -1)],
-        StructType(
-            [StructField("src", LongType()), StructField("dst", LongType())]
-        ),
-    )
-    assert (
-        G.pagerank_layered_driver(e, "src", "dst", iters=2, n_edges_bound=3)
-        is None
-    )
 
 
 # ----------------------------------------- value_psi_drift bin fold

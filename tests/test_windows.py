@@ -122,6 +122,47 @@ def test_time_grid_interpolate_linear_values(spark):
     assert len(got) == 5
 
 
+def test_time_grid_interpolate_running_frames_only(spark):
+    """Both fill windows are running frames (a currentRow..unboundedFollowing
+    frame is recomputed per row), with the same rows as the serial
+    definition: leading and trailing buckets whose last event carries a
+    NULL value are unobserved and clamp to the nearest observation."""
+    from hadoop_data_lake_spark.operators.timeseries import time_grid_interpolate
+
+    b = 600_000_000  # one bucket, in micros
+    rows = [
+        (1, 0, 1, None),  # leading unobserved bucket 0
+        (1, b, 2, 2.0),
+        (1, 3 * b, 3, 7.0),
+        (1, 3 * b + 1, 4, 8.0),  # later event wins bucket 3
+        (1, 5 * b, 5, None),  # trailing unobserved bucket 5
+        (2, 2 * b, 6, None),  # one unobserved bucket, nothing to fill from
+        (3, 0, 7, 1.0),
+        (3, 2 * b, 8, 3.0),
+    ]
+    df = spark.createDataFrame(
+        rows, "user_id long, us long, event_id long, value double"
+    ).select("user_id", F.timestamp_micros("us").alias("ts"), "event_id", "value")
+    out = time_grid_interpolate(
+        df, ["user_id"], "ts", "value", bucket_seconds=600, tiebreak=["event_id"]
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString().lower()
+    assert "unboundedfollowing" not in plan
+    got = sorted(map(tuple, out.collect()))
+    assert got == [
+        (1, 0, 2.0, False),
+        (1, b, 2.0, True),
+        (1, 2 * b, 5.0, False),
+        (1, 3 * b, 8.0, True),
+        (1, 4 * b, 8.0, False),
+        (1, 5 * b, 8.0, False),
+        (2, 2 * b, None, False),
+        (3, 0, 1.0, True),
+        (3, b, 2.0, False),
+        (3, 2 * b, 3.0, True),
+    ]
+
+
 def test_prefix_agg_multi_column_and_running_max(spark):
     """prefix_agg: several running sums + a running max share one range
     repartition and match the serial fold, including negative values
