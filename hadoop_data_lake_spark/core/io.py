@@ -470,8 +470,16 @@ def checkpoint_serialized(df: DataFrame) -> DataFrame:
 #: footer or two.
 PARQUET_COUNT_MAX_FOOTERS = 4096
 
+#: `parquet_row_count`'s answer when the footers read so far already sum
+#: past the caller's ``cap``: +inf, above every cap, so each bound check
+#: (`collect_bounded`, the PageRank/HITS envelopes, broadcast caps)
+#: declines on it, and it is never mistaken for a row count.
+OVER_CAP = float("inf")
 
-def parquet_row_count(sf_dir: str, name: str, cap: int | None = None) -> int | None:
+
+def parquet_row_count(
+    sf_dir: str, name: str, cap: int | None = None
+) -> int | float | None:
     """Row count of a driver table from its parquet FOOTERS —
     driver-local metadata reads, no Spark job.
 
@@ -489,9 +497,9 @@ def parquet_row_count(sf_dir: str, name: str, cap: int | None = None) -> int | N
     only need to DECIDE "is the table under my collect budget?" pass
     their cap, and the loop stops reading footers as soon as the running
     sum exceeds it. With ``cap``, the return value is the exact count
-    when it is <= ``cap``, and otherwise SOME value > ``cap`` (a partial
-    sum — still a correct "over the cap" verdict, NOT the table's row
-    count).
+    when it is <= ``cap``, and otherwise ``OVER_CAP`` — never the partial
+    sum, which is only a LOWER bound and would pass the check of a gate
+    whose own limit is above ``cap``.
     """
     import glob
     import itertools
@@ -516,7 +524,7 @@ def parquet_row_count(sf_dir: str, name: str, cap: int | None = None) -> int | N
         for f in files:
             total += pq.ParquetFile(f).metadata.num_rows
             if cap is not None and total > cap:
-                return total
+                return OVER_CAP
         return total
     except Exception:
         return None

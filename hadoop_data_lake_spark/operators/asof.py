@@ -42,22 +42,25 @@ def asof_join(
     right_ts: str,
     direction: str = "backward",
 ) -> DataFrame:
-    """As-of join via union + running last/first(ignoreNulls) window.
+    """As-of join via union + running last(ignoreNulls) window.
 
     direction='backward' (default): greatest right_ts <= left_ts.
-    direction='forward': smallest right_ts >= left_ts (running frame
-    flipped to current..unboundedFollowing, tie-break to the MIN struct —
-    mirroring pd.merge_asof(direction='forward')).
+    direction='forward': smallest right_ts >= left_ts (the same running
+    last(ignoreNulls) over the REVERSED sort order, which sees every row
+    at or after the current one; tie-break to the MIN struct — mirroring
+    pd.merge_asof(direction='forward')).
     direction='nearest': whichever of the backward/forward candidates is
     closer in absolute time; equidistant ties resolve to the backward row
-    (pd.merge_asof(direction='nearest') behavior). Both running frames are
-    evaluated over the SAME partition sort, so nearest still costs one
-    shuffle + one sort — not two plans glued together.
+    (pd.merge_asof(direction='nearest') behavior). Both running frames
+    share one shuffle; the forward one re-sorts the partition in reverse
+    order. Every frame is unboundedPreceding..currentRow — O(n) per key
+    after the sort, where a currentRow..unboundedFollowing frame is
+    recomputed per row (O(n^2) per key).
 
     Plan shape: Union -> Exchange hashpartitioning(on) -> Sort(on, __t,
-    __side, __r) -> Window(last/first over a running frame) ->
-    Filter(left side). One shuffle total; the window frame is running, so
-    Spark evaluates it in a single pass per partition.
+    __side, __r), ascending or descending -> Window(last over a running
+    frame) -> Filter(left side). One shuffle total; the window frame is
+    running, so Spark evaluates it in a single pass per partition.
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(
@@ -112,15 +115,24 @@ def asof_join(
     )
 
     u = lu.unionByName(ru)
-    base = Window.partitionBy(on).orderBy(
-        F.col("__t").asc(), F.col("__side").asc(), F.col("__r").asc()
+    order = [F.col("__t"), F.col("__side"), F.col("__r")]
+    # asc (nulls first) and desc (nulls last) are exact mirror orders, so a
+    # running frame over `rev` covers the rows at or after the current one
+    # in `base` order
+    base = (
+        Window.partitionBy(on)
+        .orderBy(*[c.asc() for c in order])
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    rev = (
+        Window.partitionBy(on)
+        .orderBy(*[c.desc() for c in order])
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     if direction == "nearest":
-        wb = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        wf = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
         matched = u.withColumn(
-            "__mb", F.last("__r", ignorenulls=True).over(wb)
-        ).withColumn("__mf", F.first("__r", ignorenulls=True).over(wf))
+            "__mb", F.last("__r", ignorenulls=True).over(base)
+        ).withColumn("__mf", F.last("__r", ignorenulls=True).over(rev))
         # Distance works for timestamp AND plain numeric ts columns.
         is_ts = u.schema["__t"].dataType.simpleString() in ("timestamp", "timestamp_ntz")
 
@@ -138,18 +150,13 @@ def asof_join(
         )
         matched = matched.withColumn("__m", pick_nearest)
     else:
-        if direction == "backward":
-            # right rows at the same instant sort BEFORE the left row => the
-            # running last() sees them (inclusive <=); struct asc means
-            # last() takes the max (right_ts, tiebreaks...) among equals.
-            w = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            pick = F.last("__r", ignorenulls=True)
-        else:
-            # right rows at the same instant sort AFTER the left row => the
-            # forward frame sees them (inclusive >=); first() takes the min.
-            w = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-            pick = F.first("__r", ignorenulls=True)
-        matched = u.withColumn("__m", pick.over(w))
+        # backward: right rows at the same instant sort BEFORE the left row
+        # => the running last() sees them (inclusive <=); struct asc means
+        # last() takes the max (right_ts, tiebreaks...) among equals.
+        # forward: they sort AFTER it, i.e. before it in the reversed order
+        # (inclusive >=), where last() takes the min.
+        w = base if direction == "backward" else rev
+        matched = u.withColumn("__m", F.last("__r", ignorenulls=True).over(w))
     out = matched.where(F.col("__side") == F.lit(1 - right_side)).select(
         *[F.col(c) for c in left_cols],
         *[F.col("__m").getField(c).alias(c) for c in right_cols],

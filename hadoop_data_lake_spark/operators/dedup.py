@@ -53,8 +53,9 @@ def exact_dedup(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
 def _shingle_index(df: DataFrame, id_col: str, content_col: str, k: int) -> tuple[DataFrame, DataFrame]:
     """(doc_id -> shingle set) and its exploded inverted index.
 
-    Shingle construction is the per-row hot loop (interpreted HOF, ~0.5 ms/
-    doc) — spread it across cores when the scan arrives under-partitioned."""
+    Shingle construction (one codegen'd regex extraction per doc) is the
+    per-row hot loop — spread it across cores when the scan arrives
+    under-partitioned."""
     sets = ensure_parallelism(df).select(
         F.col(id_col).alias("doc"), shingles(F.col(content_col), k).alias("sh")
     )
@@ -119,7 +120,7 @@ def ngram_jaccard_pairs(
     sets, inv = _shingle_index(df, id_col, content_col, k)
     # checkpoint the inverted index (r9 scan-multiplicity audit): the hot
     # drop, both self-join sides and the size aggregate each re-ran the
-    # shingle HOF + corpus scan otherwise (4 documents scans per run)
+    # shingle extraction + corpus scan otherwise (4 documents scans per run)
     inv = checkpoint_serialized(inv)
 
     if max_df is not None:
@@ -171,11 +172,11 @@ def jaccard_pairs_prefix_filter(
     sets, inv = _shingle_index(df, id_col, content_col, k)
     # the inverted index feeds the df ranking, the prefix build AND both
     # sides of the verification join — without materialization each
-    # consumer re-runs the interpreted shingle HOF (~0.5 ms/doc) plus the
-    # corpus scan (measured: 10 documents scans per run, r9
-    # scan-multiplicity audit; sf0.1 wall 17.6 s -> ~8 s with the
-    # checkpoint). Token-level but 1 small row per shingle — far cheaper
-    # to persist once than to recompute 4x.
+    # consumer re-runs the shingle extraction plus the corpus scan
+    # (measured: 10 documents scans per run, r9 scan-multiplicity audit;
+    # sf0.1 wall 17.6 s -> ~8 s with the checkpoint). Token-level but 1
+    # small row per shingle — far cheaper to persist once than to
+    # recompute 4x.
     inv = checkpoint_serialized(inv)
     sizes = inv.groupBy(F.col("doc")).agg(F.count("*").alias("n_sh"))
 
@@ -359,86 +360,80 @@ def winnow_overlap_pairs(
     )
 
 
-def minhash_hash_pairs(sh: Column) -> Column:
-    """Per-shingle (h1, h2): the two 32-bit halves of ONE md5 digest.
+def _signature_bands(inv: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(doc, n_sh, band, k0..k{r-1}) LSH band rows from an exploded shingle
+    index, r = num_hashes // bands.
 
-    The hash family is h_i = h1 + i*h2 (Kirsch–Mitzenmacher double hashing)
-    — same LSH banding behavior as i independent hashes at 1/num_hashes of
-    the digest cost. Values stay < 2^36, safe under ANSI long arithmetic,
-    and bit-replayable in DuckDB (('0x' || substr(md5(s), ..)) casts)."""
-
-    def pair(s: Column) -> Column:
-        m = F.md5(s)
-        return F.struct(
-            F.conv(F.substring(m, 1, 8), 16, 10).cast("long").alias("h1"),
-            F.conv(F.substring(m, 9, 8), 16, 10).cast("long").alias("h2"),
-        )
-
-    return F.transform(sh, pair)
-
-
-def minhash_signature_from_pairs(hp: Column, num_hashes: int) -> Column:
-    """Signature from a materialized (h1, h2) array column. Keep the pairs in
-    their own projection (a plain column reference here) so the md5 pass runs
-    once, not once per family member — CollapseProject won't inline a
-    non-cheap expression used `num_hashes` times."""
-    return F.array(
-        *[
-            F.array_min(F.transform(hp, lambda p: p["h1"] + F.lit(i) * p["h2"]))
-            for i in range(num_hashes)
-        ]
-    )
-
-
-def minhash_signature(sh: Column, num_hashes: int) -> Column:
-    """Array of `num_hashes` min-hash values over a shingle array."""
-    return minhash_signature_from_pairs(minhash_hash_pairs(sh), num_hashes)
-
-
-def _banded_signatures(inv: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(doc, band, band_key) LSH band rows from an exploded shingle index.
-
-    Signatures via explode -> flat md5 projection -> `num_hashes`
-    min-aggregates. Every step is whole-stage-codegen (no higher-order
-    functions in the hot path: interpreted HOF eval measured ~1 ms/doc);
-    partial aggregation means the shuffle carries one num_hashes-value row
-    per doc per map partition. Bands carry only (doc, band, band_key): the
-    shingle arrays join back in AFTER candidate generation, so the
-    candidate join shuffles narrow rows and no array payload is duplicated
-    per banded copy."""
-    rows_per_band = num_hashes // bands
-    m = F.md5("s")
-    hashed = inv.select(
+    ONE groupBy("doc") aggregate yields the set size (count(*); index rows
+    are distinct per doc) and the `num_hashes` minima of the double-hash
+    family h_i = h1 + i*h2 (Kirsch–Mitzenmacher: the two 32-bit halves of
+    one md5 digest, so values stay < 2^36 — safe under ANSI long
+    arithmetic and bit-replayable in DuckDB). A band's key is its r exact
+    long minima. The expression lists are SQL strings — one Python→JVM call
+    per expression instead of one per Column operation. Band rows stay
+    narrow: the candidate join shuffles no shingle payload."""
+    r = num_hashes // bands
+    hashed = inv.selectExpr(
         "doc",
-        F.conv(F.substring(m, 1, 8), 16, 10).cast("long").alias("h1"),
-        F.conv(F.substring(m, 9, 8), 16, 10).cast("long").alias("h2"),
+        "cast(conv(substring(md5(s), 1, 8), 16, 10) as bigint) AS h1",
+        "cast(conv(substring(md5(s), 9, 8), 16, 10) as bigint) AS h2",
     )
     sigs = hashed.groupBy("doc").agg(
-        *[
-            F.min(F.col("h1") + F.lit(i) * F.col("h2")).alias(f"mh{i}")
-            for i in range(num_hashes)
-        ]
+        F.expr("count(*) AS n_sh"),
+        *[F.expr(f"min(h1 + {i} * h2) AS mh{i}") for i in range(num_hashes)],
     )
-    return sigs.select(
-        "doc",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col(f"mh{b * rows_per_band + r}").cast("string")
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
+    rows = ", ".join(
+        f"{b}, " + ", ".join(f"mh{b * r + j}" for j in range(r)) for b in range(bands)
+    )
+    keys = ", ".join(f"k{j}" for j in range(r))
+    return sigs.selectExpr("doc", "n_sh", f"stack({bands}, {rows}) AS (band, {keys})")
+
+
+def _lsh_pairs(
+    inv_a: DataFrame,
+    bands_a: DataFrame,
+    inv_b: DataFrame,
+    bands_b: DataFrame,
+    a: str,
+    b: str,
+    threshold: float,
+    pair_filter: str | None = None,
+    broadcast_b: bool = False,
+) -> DataFrame:
+    """The one candidate + verification core of every MinHash operator:
+    (a, b, inter, uni, jaccard_r) for doc pairs whose signatures collide in
+    at least one band and whose exact Jaccard reaches `threshold`.
+
+    Candidates carry both set sizes from the band rows, so verification is
+    two joins of the inverted indexes plus one count: |A ∩ B| =
+    co-occurring shingles, |A ∪ B| by inclusion-exclusion. Candidates with
+    no shared shingle drop out of the inner join — they cannot pass a
+    threshold > 0. `pair_filter` is a SQL predicate over (a, b);
+    `broadcast_b` hints every join that reads side b (a small probe set),
+    so side a never shuffles for it."""
+    keys = [c for c in bands_a.columns if c not in ("doc", "n_sh")]
+    side_b = bands_b.withColumnsRenamed({"doc": b, "n_sh": "n_b"})
+    inv_b = inv_b.withColumnRenamed("doc", b)
+    if broadcast_b:
+        side_b, inv_b = F.broadcast(side_b), F.broadcast(inv_b)
+    cand = bands_a.withColumnsRenamed({"doc": a, "n_sh": "n_a"}).join(side_b, keys)
+    if pair_filter is not None:
+        cand = cand.where(pair_filter)
+    co = (
+        cand.select(a, b, "n_a", "n_b")
+        .distinct()
+        .join(inv_a.withColumnRenamed("doc", a), a)
+        .join(inv_b, [b, "s"])
+        .groupBy(a, b, "n_a", "n_b")
+        .agg(F.expr("count(*) AS inter"))
+        .selectExpr(
+            a, b, "inter", "n_a + n_b - inter AS uni",
+            "cast(inter as double) / (n_a + n_b - inter) AS jaccard",
+        )
+    )
+    return co.where(F.col("jaccard") >= F.lit(threshold)).selectExpr(
+        a, b, "inter", "uni", "round(jaccard, 6) AS jaccard_r"
+    )
 
 
 def minhash_lsh_pairs(
@@ -456,52 +451,22 @@ def minhash_lsh_pairs(
     signature slice matches exactly. Only candidates are verified, so the
     quadratic term is bounded by true collisions — the property that makes
     fuzzy dedup feasible at 100 TB.
+
+    Plan contract: the corpus is scanned and shingled once (the inverted
+    index is checkpointed); ONE aggregate over that index yields every
+    doc's set size and signature (`_signature_bands`); ONE verification
+    core (`_lsh_pairs`) joins the candidates — which carry both sizes — to
+    the index twice and counts the intersection. No separate size
+    aggregate, no size join.
     """
     _, inv = _shingle_index(df, id_col, content_col, k)
-    # Checkpoint the inverted index (r10 control re-baseline, closing the
-    # last FACT-RESCAN exemption): five subtrees consume it — the banded
-    # signature build (aliased twice by the candidate self-join), the
-    # per-doc size aggregate, and the two verification joins — and
-    # alias-differing subtrees re-execute their upstream, so without the
-    # checkpoint the corpus was scanned AND re-shingled 6x (the measured
-    # per-doc hot loop). One scan + one shingle pass, materialized once;
-    # same move as the ngram/prefix paths above.
+    # The band build and both verification joins consume the index, and
+    # alias-differing subtrees re-execute their upstream: without the
+    # checkpoint the corpus would be scanned and re-shingled per consumer.
     inv = checkpoint_serialized(inv)
-    banded = _banded_signatures(inv, num_hashes, bands)
-
-    cand = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-
-    # Exact-Jaccard verification via the inverted index (codegen joins on
-    # narrow rows) instead of array_intersect over carried shingle arrays:
-    # intersection = co-occurring shingles of candidate pairs, union by
-    # inclusion-exclusion from per-doc shingle counts. Candidates with zero
-    # overlap drop out of the inner join — they can't pass threshold > 0.
-    sizes = inv.groupBy("doc").agg(F.count("*").alias("n_sh"))
-    co = (
-        cand.join(inv.select(F.col("doc").alias("doc_a"), "s"), "doc_a")
-        .join(inv.select(F.col("doc").alias("doc_b"), "s"), ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    out = (
-        co.join(sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("n_a")), "doc_a")
-        .join(sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("n_b")), "doc_b")
-        .withColumn("uni", F.col("n_a") + F.col("n_b") - F.col("inter"))
-        .withColumn("jaccard", F.col("inter").cast("double") / F.col("uni"))
-        .where(F.col("jaccard") >= threshold)
-    )
-    return out.select(
-        "doc_a", "doc_b", "inter", "uni", F.round("jaccard", 6).alias("jaccard_r")
+    bands_df = _signature_bands(inv, num_hashes, bands)
+    return _lsh_pairs(
+        inv, bands_df, inv, bands_df, "doc_a", "doc_b", threshold, "doc_a < doc_b"
     )
 
 
@@ -523,55 +488,25 @@ def minhash_cross_pairs(
     `minhash_lsh_pairs`, but the two sides are different tables and BOTH
     directions matter, so there is no `doc_a < doc_b` canonicalization —
     output keys are (doc_left, doc_right). The right side is the probe set
-    (benchmarks are small), so its banded index and inverted index are
-    BROADCAST: the corpus side never shuffles. Complements
+    (benchmarks are small), so its band rows and inverted index are
+    BROADCAST: the corpus side never shuffles for them. Complements
     `decontaminate_ngram_overlap` (exact n-gram hits): minhash catches
     paraphrase-level contamination exact overlap misses.
     """
     _, inv_l = _shingle_index(left, id_col, content_col, k)
     _, inv_r = _shingle_index(right, id_col, content_col, k)
-    # Same single-pass move as minhash_lsh_pairs: the training corpus (the
-    # big side) feeds three subtrees (banded build, size agg, co-occurrence
-    # join) — checkpoint so it is scanned and shingled once. The probe side
-    # is broadcast-small; one checkpoint keeps its shingle pass single too.
+    # Same single-pass move as minhash_lsh_pairs, on both sides.
     inv_l = checkpoint_serialized(inv_l)
     inv_r = checkpoint_serialized(inv_r)
-    banded_l = _banded_signatures(inv_l, num_hashes, bands)
-    banded_r = _banded_signatures(inv_r, num_hashes, bands)
-
-    cand = (
-        banded_l.alias("a")
-        .join(
-            F.broadcast(banded_r.alias("b")),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key")),
-        )
-        .select(F.col("a.doc").alias("doc_left"), F.col("b.doc").alias("doc_right"))
-        .dropDuplicates(["doc_left", "doc_right"])
-    )
-    sizes_l = inv_l.groupBy("doc").agg(F.count("*").alias("n_l"))
-    sizes_r = inv_r.groupBy("doc").agg(F.count("*").alias("n_r"))
-    co = (
-        cand.join(inv_l.select(F.col("doc").alias("doc_left"), "s"), "doc_left")
-        .join(
-            F.broadcast(inv_r.select(F.col("doc").alias("doc_right"), "s")),
-            ["doc_right", "s"],
-        )
-        .groupBy("doc_left", "doc_right")
-        .agg(F.count("*").alias("inter"))
-    )
-    out = (
-        co.join(sizes_l.select(F.col("doc").alias("doc_left"), "n_l"), "doc_left")
-        .join(
-            F.broadcast(sizes_r.select(F.col("doc").alias("doc_right"), "n_r")),
-            "doc_right",
-        )
-        .withColumn("uni", F.col("n_l") + F.col("n_r") - F.col("inter"))
-        .withColumn("jaccard", F.col("inter").cast("double") / F.col("uni"))
-        .where(F.col("jaccard") >= threshold)
-    )
-    return out.select(
-        "doc_left", "doc_right", "inter", "uni", F.round("jaccard", 6).alias("jaccard_r")
+    return _lsh_pairs(
+        inv_l,
+        _signature_bands(inv_l, num_hashes, bands),
+        inv_r,
+        _signature_bands(inv_r, num_hashes, bands),
+        "doc_left",
+        "doc_right",
+        threshold,
+        broadcast_b=True,
     )
 
 
@@ -671,16 +606,18 @@ def minhash_index_build(
 ) -> None:
     """Persist the dedup index under `path`:
 
-    - `<path>/bands/`    — (doc, band, band_key) LSH band rows;
+    - `<path>/bands/`    — (doc, n_sh, band, k0..k{r-1}) LSH band rows
+      (`_signature_bands`; r = num_hashes // bands);
     - `<path>/shingles/` — (doc, s) exploded shingle inverted index
       (verification side).
 
     Both are narrow-row parquet; at real scale, bucket `bands` by
-    (band, band_key) and `shingles` by s so probe joins co-locate without a
-    shuffle of the index side (write-side bucketBy — same pattern as
+    (band, k0..k{r-1}) and `shingles` by s so probe joins co-locate without
+    a shuffle of the index side (write-side bucketBy — same pattern as
     tests/test_bucketing.py)."""
     _, inv = _shingle_index(df, id_col, content_col, k)
-    _banded_signatures(inv, num_hashes, bands).write.mode("overwrite").parquet(
+    inv = checkpoint_serialized(inv)
+    _signature_bands(inv, num_hashes, bands).write.mode("overwrite").parquet(
         f"{path}/bands"
     )
     inv.write.mode("overwrite").parquet(f"{path}/shingles")
@@ -697,44 +634,21 @@ def minhash_index_probe(
     threshold: float = 0.3,
 ) -> DataFrame:
     """Near-dup pairs (new_doc, idx_doc, inter, uni, jaccard_r) between a
-    new ingest batch and the persisted index — same band-collision candidate
-    generation and exact-Jaccard verification as minhash_lsh_pairs, but the
-    corpus side comes from the index parquet, untouched. Pairs where both
-    ids coincide (re-ingest of an indexed doc) are excluded."""
+    new ingest batch and the persisted index — the `minhash_lsh_pairs`
+    candidate and verification core, with the corpus side read from the
+    index parquet, untouched. `num_hashes` and `bands` must match the
+    build. Pairs where both ids coincide (re-ingest of an indexed doc) are
+    excluded."""
     spark = new_docs.sparkSession
-    idx_bands = spark.read.parquet(f"{path}/bands")
-    idx_inv = spark.read.parquet(f"{path}/shingles")
-
     _, inv = _shingle_index(new_docs, id_col, content_col, k)
-    banded_new = _banded_signatures(inv, num_hashes, bands)
-
-    cand = (
-        banded_new.alias("a")
-        .join(
-            idx_bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc") != F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("new_doc"), F.col("b.doc").alias("idx_doc"))
-        .dropDuplicates(["new_doc", "idx_doc"])
-    )
-
-    new_sizes = inv.groupBy("doc").agg(F.count("*").alias("n_sh"))
-    idx_sizes = idx_inv.groupBy("doc").agg(F.count("*").alias("n_sh"))
-    co = (
-        cand.join(inv.select(F.col("doc").alias("new_doc"), "s"), "new_doc")
-        .join(idx_inv.select(F.col("doc").alias("idx_doc"), "s"), ["idx_doc", "s"])
-        .groupBy("new_doc", "idx_doc")
-        .agg(F.count("*").alias("inter"))
-    )
-    out = (
-        co.join(new_sizes.select(F.col("doc").alias("new_doc"), F.col("n_sh").alias("n_a")), "new_doc")
-        .join(idx_sizes.select(F.col("doc").alias("idx_doc"), F.col("n_sh").alias("n_b")), "idx_doc")
-        .withColumn("uni", F.col("n_a") + F.col("n_b") - F.col("inter"))
-        .withColumn("jaccard", F.col("inter").cast("double") / F.col("uni"))
-        .where(F.col("jaccard") >= threshold)
-    )
-    return out.select(
-        "new_doc", "idx_doc", "inter", "uni", F.round("jaccard", 6).alias("jaccard_r")
+    inv = checkpoint_serialized(inv)
+    return _lsh_pairs(
+        inv,
+        _signature_bands(inv, num_hashes, bands),
+        spark.read.parquet(f"{path}/shingles"),
+        spark.read.parquet(f"{path}/bands"),
+        "new_doc",
+        "idx_doc",
+        threshold,
+        "new_doc != idx_doc",
     )

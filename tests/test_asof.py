@@ -125,3 +125,48 @@ def test_asof_nearest_matches_merge_asof(spark):
         exp = (None if pd.isna(row["rts"]) else row["rts"],
                None if pd.isna(row["rv"]) else row["rv"])
         assert got[(row["k"], row["lts"])] == exp
+
+
+def test_asof_running_frames_only(spark):
+    """Every direction uses running frames only (a currentRow..
+    unboundedFollowing frame is recomputed per row, O(n^2) per key), with
+    rows unchanged on a fixture whose keys have unmatched leading and
+    trailing left rows, equal-timestamp right ties, a NULL right payload
+    and keys present on one side only."""
+    from hadoop_data_lake_spark.operators.asof import asof_join
+
+    left = spark.createDataFrame(
+        [(1, 1, "lead"), (1, 10, "tie"), (1, 15, "mid"), (1, 22, "null_px"),
+         (1, 40, "trail"), (1, 40, "trail2"), (2, 5, "no_right")],
+        "k long, lts long, lbl string",
+    )
+    right = spark.createDataFrame(
+        [(1, 10, 2.0), (1, 10, 1.0), (1, 20, None), (1, 30, 3.0), (3, 1, 9.0)],
+        "k long, rts long, rv double",
+    )
+    want = {
+        "backward": [
+            (1, 1, "lead", None, None), (1, 10, "tie", 10, 2.0),
+            (1, 15, "mid", 10, 2.0), (1, 22, "null_px", 20, None),
+            (1, 40, "trail", 30, 3.0), (1, 40, "trail2", 30, 3.0),
+            (2, 5, "no_right", None, None),
+        ],
+        "forward": [
+            (1, 1, "lead", 10, 1.0), (1, 10, "tie", 10, 1.0),
+            (1, 15, "mid", 20, None), (1, 22, "null_px", 30, 3.0),
+            (1, 40, "trail", None, None), (1, 40, "trail2", None, None),
+            (2, 5, "no_right", None, None),
+        ],
+        "nearest": [
+            (1, 1, "lead", 10, 1.0), (1, 10, "tie", 10, 2.0),
+            (1, 15, "mid", 10, 2.0), (1, 22, "null_px", 20, None),
+            (1, 40, "trail", 30, 3.0), (1, 40, "trail2", 30, 3.0),
+            (2, 5, "no_right", None, None),
+        ],
+    }
+    for direction, rows in want.items():
+        out = asof_join(left, right, "k", "lts", "rts", direction=direction)
+        plan = out._jdf.queryExecution().executedPlan().toString().lower()
+        assert "unboundedfollowing" not in plan, direction
+        got = sorted(map(tuple, out.collect()), key=lambda r: (r[0], r[1], r[2]))
+        assert got == rows, direction

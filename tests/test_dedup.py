@@ -2,6 +2,7 @@
 
 import pyspark.sql.functions as F
 import pytest
+from conftest import SF_DIR, count_jobs
 
 from hadoop_data_lake_spark.operators.dedup import (
     exact_dedup,
@@ -154,6 +155,14 @@ def test_minhash_index_incremental_probe(spark, tmp_path):
     )
     path = str(tmp_path / "mh_index")
     minhash_index_build(corpus, path, "doc_id", "text")
+    # the persisted band rows carry the set size and the r = 16 // 4 exact
+    # long minima of each band
+    bands = spark.read.parquet(f"{path}/bands")
+    assert bands.dtypes == [
+        ("doc", "bigint"), ("n_sh", "bigint"), ("band", "int"),
+        ("k0", "bigint"), ("k1", "bigint"), ("k2", "bigint"), ("k3", "bigint"),
+    ]
+    assert bands.count() == 2 * 4
     got = {
         (r["new_doc"], r["idx_doc"]): r["jaccard_r"]
         for r in minhash_index_probe(new, path, "doc_id", "text").collect()
@@ -166,6 +175,82 @@ def test_minhash_index_incremental_probe(spark, tmp_path):
         for r in minhash_lsh_pairs(corpus.unionByName(new), "doc_id", "text").collect()
     }
     assert full[(1, 10)] == got[(10, 1)]
+
+
+def test_minhash_index_probe_equals_full_batch_cross_pairs(spark, tmp_path):
+    """A probe against a freshly built index returns exactly the
+    new x index pairs of `minhash_lsh_pairs` over corpus + batch, with the
+    same inter, uni and jaccard_r."""
+    from hadoop_data_lake_spark.operators.dedup import (
+        minhash_index_build,
+        minhash_index_probe,
+    )
+
+    words = [f"w{i}" for i in range(40)]
+    texts = [" ".join(words[j:j + 12]) for j in range(0, 24, 2)]
+    texts += [t + " tail" for t in texts[:4]] + ["x y", "x y", ""]
+    rows = [(i, t) for i, t in enumerate(texts)]
+    corpus = spark.createDataFrame(rows[::2], "doc_id long, text string")
+    batch = spark.createDataFrame(rows[1::2], "doc_id long, text string")
+    new_ids = {i for i, _ in rows[1::2]}
+
+    path = str(tmp_path / "mh_index")
+    minhash_index_build(corpus, path, "doc_id", "text")
+    probe = {
+        (r["new_doc"], r["idx_doc"], r["inter"], r["uni"], r["jaccard_r"])
+        for r in minhash_index_probe(batch, path, "doc_id", "text").collect()
+    }
+    want = set()
+    for r in minhash_lsh_pairs(corpus.unionByName(batch), "doc_id", "text").collect():
+        a, b = r["doc_a"], r["doc_b"]
+        if (a in new_ids) != (b in new_ids):
+            n, i = (a, b) if a in new_ids else (b, a)
+            want.add((n, i, r["inter"], r["uni"], r["jaccard_r"]))
+    assert len(want) >= 5
+    assert probe == want
+
+
+def test_dedup_minhash_lsh_warm_runs_two_build_and_five_action_jobs(spark):
+    """One signature-and-size aggregate and one verification core: a warm
+    `dedup_minhash_lsh` runs 2 jobs while it is built (the inverted-index
+    checkpoint) and 5 for its full result."""
+    from hadoop_data_lake_spark.queries.registry import REGISTRY
+
+    fn = REGISTRY["dedup_minhash_lsh"].fn
+
+    def full(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    full(fn(spark, SF_DIR))  # warm: the table's schema is memoized
+    df, build_jobs = count_jobs(spark, lambda: fn(spark, SF_DIR))
+    _, action_jobs = count_jobs(spark, lambda: full(df))
+    assert (build_jobs, action_jobs) == (2, 5)
+
+
+def test_minhash_cross_probe_side_broadcasts(spark):
+    """Every join in minhash_cross_pairs that reads the probe side — the
+    band-collision join and the verification join — is broadcast-hinted
+    (checkpointed frames carry no stats of their own, so without the hints
+    Catalyst could SMJ-shuffle the corpus side per join)."""
+    from hadoop_data_lake_spark.operators.dedup import minhash_cross_pairs
+
+    left = spark.createDataFrame(
+        [(i, f"the quick brown fox {i} jumps over the lazy dog") for i in range(30)],
+        "doc_id long, body string",
+    )
+    right = spark.createDataFrame(
+        [(100, "the quick brown fox 3 jumps over the lazy dog")],
+        "doc_id long, body string",
+    )
+    df = minhash_cross_pairs(left, right, "doc_id", "body", threshold=0.3)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    joins = [line for line in plan.splitlines() if "Join [" in line]
+    probe_side = [line for line in joins if "band" in line or "doc_right" in line]
+    assert len(probe_side) == 2, plan
+    assert all("BroadcastHashJoin" in line for line in probe_side), plan
+    # and the operator still finds the planted cross-corpus duplicate
+    hits = {(r["doc_left"], r["doc_right"]) for r in df.collect()}
+    assert (3, 100) in hits
 
 
 def test_winnow_shared_run_guarantee(spark):

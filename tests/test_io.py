@@ -196,6 +196,34 @@ def test_parquet_row_count_listing_stops_past_the_guard(tmp_path, monkeypatch):
     assert len(listed) == 10 and len(footers) == 10
 
 
+def test_parquet_row_count_over_cap_is_no_bound(spark, tmp_path):
+    """When the first footer of a two-file table already exceeds ``cap``,
+    the answer is OVER_CAP, not the partial sum (5, a lower bound): a gate
+    whose own limit is above ``cap`` must decline on it without running a
+    Spark job, where the partial sum would pass its check."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hadoop_data_lake_spark.core import driver_tier as DT
+    from hadoop_data_lake_spark.core import io as IO
+    from hadoop_data_lake_spark.operators.graph import broadcast_bounded_state
+
+    table_dir = tmp_path / "t.parquet"
+    table_dir.mkdir()
+    for i in range(2):
+        pq.write_table(
+            pa.table({"x": pa.array(range(5 * i, 5 * i + 5), pa.int64())}),
+            str(table_dir / f"part-{i:05d}.parquet"),
+        )
+    assert IO.parquet_row_count(str(tmp_path), "t") == 10
+    bound = IO.parquet_row_count(str(tmp_path), "t", cap=3)
+    assert bound is IO.OVER_CAP
+    df = spark.read.parquet(str(table_dir))
+    out, jobs = count_jobs(spark, lambda: DT.collect_bounded(df, max_rows=100, bound=bound))
+    assert out is None and jobs == 0
+    assert broadcast_bounded_state(df, bound) is df
+
+
 def test_read_table_reuses_the_inferred_schema_of_an_unchanged_file(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq

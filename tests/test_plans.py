@@ -434,3 +434,27 @@ def test_dynamic_partition_pruning_on_partitioned_fact(spark, tmp_path):
     joined = fact.join(dim_t, "d").groupBy("d").count()
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower(), plan[:2000]
+
+
+def test_plan_audit_flags_unbounded_following_frames(spark):
+    """The audit's UNBOUNDED-FOLLOWING class fails a currentRow..
+    unboundedFollowing frame (recomputed per row) in ROWS and RANGE form,
+    and passes running and whole-partition frames."""
+    import pyspark.sql.functions as F
+    from pyspark.sql import Window
+
+    from tools.plan_audit import unbounded_following_frames
+
+    df = spark.createDataFrame([(1, 1, 1.0), (1, 2, None)], "k long, t long, v double")
+    w = Window.partitionBy("k").orderBy("t")
+
+    def flags(frame):
+        out = df.withColumn("x", F.first("v", ignorenulls=True).over(frame))
+        return unbounded_following_frames(out._jdf.queryExecution().executedPlan().toString())
+
+    bad = "UNBOUNDED-FOLLOWING"
+    assert flags(w.rowsBetween(Window.currentRow, Window.unboundedFollowing)) == [bad]
+    assert flags(w.rowsBetween(-1, Window.unboundedFollowing)) == [bad]
+    assert flags(w.rangeBetween(Window.currentRow, Window.unboundedFollowing)) == [bad]
+    assert flags(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)) == []
+    assert flags(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)) == []

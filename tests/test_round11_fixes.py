@@ -5,9 +5,6 @@
   so a wide-state algorithm (string labels, array payloads) can't ship a
   multi-GB broadcast that a narrow (long, long) rank frame of the same row
   count would legitimately pass.
-- minhash_cross_pairs: the probe-side (broadcast-small) frames derived
-  from the checkpointed inv_r carry explicit F.broadcast hints; pinned so
-  a refactor can't silently demote the candidate/verify joins to SMJ.
 - tools/degenerate_sweep: --plans now builds the table-derived corpora
   (where empty_facts lives) even under --events-only.
 """
@@ -61,28 +58,6 @@ def test_broadcast_state_byte_cap_blocks_wide_state(spark):
     # unknown / negative counts never broadcast
     assert G.broadcast_bounded_state(narrow, None) is narrow
     assert G.broadcast_bounded_state(narrow, -1) is narrow
-
-
-def test_minhash_cross_probe_side_broadcasts(spark):
-    """The three probe-side joins in minhash_cross_pairs are explicitly
-    broadcast-hinted (checkpointed frames carry no stats, so without the
-    hints Catalyst would SMJ-shuffle the corpus side per join)."""
-    from hadoop_data_lake_spark.operators.dedup import minhash_cross_pairs
-
-    left = spark.createDataFrame(
-        [(i, f"the quick brown fox {i} jumps over the lazy dog") for i in range(30)],
-        "doc_id long, body string",
-    )
-    right = spark.createDataFrame(
-        [(100, "the quick brown fox 3 jumps over the lazy dog")],
-        "doc_id long, body string",
-    )
-    df = minhash_cross_pairs(left, right, "doc_id", "body", threshold=0.3)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") >= 3, plan
-    # and the operator still finds the planted cross-corpus duplicate
-    hits = {(r["doc_left"], r["doc_right"]) for r in df.collect()}
-    assert (3, 100) in hits
 
 
 def test_degenerate_sweep_plans_mode_builds_table_cases(spark):

@@ -3,13 +3,16 @@
 import math
 
 import pyspark.sql.functions as F
+from hypothesis import given, settings, strategies as st
 
 from hadoop_data_lake_spark.functions.text import (
     lang_id,
+    ordered_shingles,
     quality_score,
     shingles,
     stopword_ratio,
     token_count,
+    tokens,
 )
 
 
@@ -27,6 +30,54 @@ def test_shingles_short_text_falls_back_to_whole(spark):
     assert _one(spark, "a b c d", lambda c: shingles(c, 3)) == ["a b c", "b c d"]
     # distinct: repeated shingles collapse
     assert _one(spark, "x x x x", lambda c: shingles(c, 3)) == ["x x x"]
+
+
+def _zip_with_shingles(text, k):
+    """Reference ordered shingles: zip_with over k shifted slices of the
+    single-space token array, joined with concat_ws."""
+    w = tokens(text)
+    n = F.size(w)
+    parts = [F.slice(w, j + 1, n - (k - 1)) for j in range(k)]
+    make = parts[-1]
+    for part in reversed(parts[:-1]):
+        make = F.zip_with(part, make, lambda a, b: F.concat_ws(" ", a, b))
+    return F.when(n >= k, make).otherwise(F.array(text))
+
+
+# token pieces: empty tokens come from runs of spaces; tabs and newlines
+# are token characters, not separators; non-ASCII and supplementary
+# (surrogate-pair) characters must not shift match positions
+_PIECES = ["a", "bc", "ß", "é", "日本", "\U0001F600", "\t", "\n", "x\ty", " ", " ", "  "]
+_EDGE_TEXTS = [None, "", " ", "  ", "a", "a b", " a", "a ", " a b c ", "a  b", "\U0001F600 \U0001F600"]
+text_s = st.lists(st.sampled_from(_PIECES), max_size=14).map("".join)
+
+
+@settings(max_examples=10, deadline=None)
+@given(st.lists(text_s, min_size=1, max_size=40))
+def test_ordered_shingles_match_zip_with_reference(spark, texts):
+    rows = [(i, t) for i, t in enumerate(_EDGE_TEXTS + texts)]
+    df = spark.createDataFrame(rows, "i long, t string")
+    for k in (1, 2, 3, 5):
+        out = df.select(
+            "i",
+            ordered_shingles(F.col("t"), k).alias("got"),
+            _zip_with_shingles(F.col("t"), k).alias("want"),
+        ).collect()
+        bad = [(rows[r["i"]][1], r["got"], r["want"]) for r in out if r["got"] != r["want"]]
+        assert not bad, (k, bad[:3])
+
+
+def test_ordered_shingles_projection_has_no_lambda(spark):
+    df = spark.createDataFrame([("a b c d",)], "t string")
+    for build in (ordered_shingles, shingles):
+        plan = (
+            df.select(build(F.col("t"), 3).alias("sh"))
+            ._jdf.queryExecution().executedPlan().toString().lower()
+        )
+        assert "lambdafunction" not in plan, plan
+    # the reference form does show one, so the check is not vacuous
+    ref = df.select(_zip_with_shingles(F.col("t"), 3))
+    assert "lambdafunction" in ref._jdf.queryExecution().executedPlan().toString().lower()
 
 
 def test_lang_id(spark):

@@ -20,6 +20,15 @@ anti-patterns that kill 100 TB jobs:
                                  with no limit and a non-aggregated child:
                                  parallel, but an avoidable full shuffle+
                                  sort of fact data.
+  * UNBOUNDED-FOLLOWING        — a window frame from a bounded start
+                                 (e.g. currentRow) to unboundedFollowing:
+                                 Spark recomputes it for every row, O(n^2)
+                                 per partition key. The cure is the mirror
+                                 running frame: reverse the sort and take
+                                 last(ignoreNulls) over unboundedPreceding..
+                                 currentRow (operators/asof.py). Whole-
+                                 partition frames (unboundedPreceding..
+                                 unboundedFollowing) are one pass and pass.
   * BroadcastNestedLoopJoin    — reported as INFO, not failure: every
                                  occurrence in this codebase is an explicit
                                  crossJoin(F.broadcast(tiny)) — scalar
@@ -151,6 +160,18 @@ def scan_single_partition_funnels(plan: str) -> list[str]:
     return sorted(set(flags))
 
 
+_FOLLOWING_FRAME = re.compile(
+    r"specifiedwindowframe\((?:RowFrame|RangeFrame), (?!unboundedpreceding)[^,]+, unboundedfollowing",
+    re.IGNORECASE,
+)
+
+
+def unbounded_following_frames(plan: str) -> list[str]:
+    """["UNBOUNDED-FOLLOWING"] when a window frame runs from a bounded start
+    to unboundedFollowing (recomputed per row), else []."""
+    return ["UNBOUNDED-FOLLOWING"] if _FOLLOWING_FRAME.search(plan) else []
+
+
 def main(sf_dir: str) -> int:
     spark = get_spark("plan_audit")
     rows = []
@@ -170,6 +191,7 @@ def main(sf_dir: str) -> int:
             continue
         flags = [m for m in RED if m in plan]
         flags += scan_single_partition_funnels(plan)
+        flags += unbounded_following_frames(plan)
         rescans = fact_rescans(plan)
         heavy = {t: n for t, n in rescans.items() if n >= FACT_RESCAN_THRESHOLD}
         if heavy and name not in FACT_RESCAN_ALLOW:
@@ -198,8 +220,10 @@ def main(sf_dir: str) -> int:
             "CartesianProduct, BatchEvalPython (row-at-a-time Python), "
             "GLOBAL-WINDOW / GLOBAL-SORT (an Exchange SinglePartition "
             "funneling a non-aggregated, non-limited frame into one task "
-            "— the cumsum scale-killer), and SORT-NO-LIMIT (global range "
-            "sort of unaggregated data with no limit). Windows/sorts over "
+            "— the cumsum scale-killer), SORT-NO-LIMIT (global range "
+            "sort of unaggregated data with no limit), and UNBOUNDED-FOLLOWING "
+            "(a window frame from a bounded start to unboundedFollowing, "
+            "recomputed per row — O(n^2) per key). Windows/sorts over "
             "aggregate or limit-bounded frames are exempt: their inputs "
             "are dimension-bounded. FACT-RESCAN flags a fact table "
             f"(events/orders/lineitem/documents/embeddings) scanned >= "
