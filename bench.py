@@ -90,7 +90,7 @@ CONTROL_R10_ABSOLUTES = {
 # tier (or its decline rules) moves. Controls are supposed to be FROZEN
 # plans, so the control measurement now times the tier-sensitive controls
 # with the shared driver-tier switch pinned OFF (the same pin the scale
-# tier and tools/scale_probe_100x use): the distributed star-loop plan is
+# tier and the 100x scale probe use): the distributed star-loop plan is
 # permanently frozen regardless of future tier work, and absolutes never
 # re-base again. The headline `queries` entry keeps the tier-ON timing
 # (that is the engine being tracked); only the control ratio uses the
@@ -420,8 +420,8 @@ def run_scale_tier(spark, base_dir: str) -> dict:
      0.58s/11.5s cold vs 1.15s/5.55s warm on the same box — a phantom 20x
     ratio); the second rep prices the operator, not the JVM.
 
-    The driver tiers are pinned OFF here (same call as
-    tools/scale_probe_100x): this tier's whole purpose is the DISTRIBUTED
+    The driver tiers are pinned OFF here (as the 100x scale probe in
+    BENCH_NOTES.md did): this tier's whole purpose is the DISTRIBUTED
     loops' scaling shape, and the bounded driver tier would intercept the
     small scaled graphs and splice a Python-loop regime into the curve."""
     from hadoop_data_lake_spark.core import driver_tier as DT
@@ -434,7 +434,7 @@ def run_scale_tier(spark, base_dir: str) -> dict:
         # restore the caller's value (not a hardcoded True): an exception
         # mid-tier must not leave the tier disabled for the rest of the
         # process, and a caller that deliberately disabled it (the
-        # tools/scale_probe_100x pattern) must stay disabled.
+        # 100x scale probe's pattern) must stay disabled.
         DT.GENERAL_DRIVER_TIER_ENABLED = orig_tier
 
 

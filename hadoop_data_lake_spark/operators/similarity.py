@@ -199,7 +199,7 @@ def scaled_srp_params(
 ) -> tuple[int, int]:
     """(num_bands, bits_per_band) for SRP near-dup at corpus size `n`.
 
-    The 100x probe (tools/scale_probe_100x.py, BENCH_NOTES.md) measured
+    The 100x scale probe (results in BENCH_NOTES.md) measured
     that FIXED LSH parameters saturate their bucket space: unrelated pairs
     collide in ~num_bands/2^bits of cases — a quadratic term whose constant
     shrinks only if 2^bits grows with n. r100 on the orthogonal-replication
@@ -249,14 +249,14 @@ def scaled_ivf_params(
 
     nlist ~ sqrt(n) is the standard IVF sizing (k-means cost and probe
     cost balance); the /3 factor matches the measured IVF_SCALED anchors
-    in tools/scale_probe_100x.py ((8, 2) at the n=500 sf0.01 corpus,
+    of the 100x scale probe in BENCH_NOTES.md ((8, 2) at the n=500 sf0.01 corpus,
     (25, 3) at 10x, (80, 4) at 100x — r100 = 3.55x runtime; an
     auto-variant with /10 measured 20.9 s vs 14.4 s at the 100x point,
     cells too coarse). nprobe grows ~log10(n) by default: the probed
     FRACTION nprobe/n_cells shrinks while absolute recall holds.
 
     `scan_budget` is the multi-probe recall knob (VERDICT r10 item 7,
-    measured in tools/ivf_multiprobe_probe.py): nprobe becomes
+    multi-probe sweep in BENCH_NOTES.md): nprobe becomes
     ceil(scan_budget * n_cells), i.e. the target fraction of the corpus
     scanned per query — cost is linear in it. On the ADVERSARIAL
     orthogonal-replication corpus (every true neighbor a ~cos 0.5 random
@@ -693,7 +693,7 @@ def ivf_kmeans_topk(
 
     auto_scale=True derives (n_cells, nprobe) from the corpus size via
     `scaled_ivf_params` (nlist ~ sqrt(n) — the measured top-k scale path,
-    r100 = 3.55x in tools/scale_probe_100x.py); `scan_budget` (only
+    r100 = 3.55x in the BENCH_NOTES.md 100x probe); `scan_budget` (only
     meaningful with auto_scale) sets nprobe to the target scanned
     fraction of the corpus — the measured multi-probe recall knob, see
     scaled_ivf_params. Pass n_rows when the caller already knows the
@@ -1391,7 +1391,7 @@ def pca_power_iterate(emb: "DataFrame", dim: int, iters: int = 8) -> "DataFrame"
     is bounded below 1e9 by an exact digit-length power-of-10 scaling
     (string length of the decimal — replayable in both engines, unlike
     bin() which needs bigint), so each iteration's sum(a*v) stays under
-    64-bit to dim ~9e3. tests/test_round8_fixes.py drives an
+    64-bit to dim ~9e3. tests/test_similarity.py drives an
     adversarial corpus past the old bigint wrap and checks against a
     serial big-int reference."""
     from pyspark.sql import functions as F

@@ -23,11 +23,12 @@ partitioning, or a different cluster produces byte-identical survivor sets.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_data_lake_spark.core.io import read_table
 from hadoop_data_lake_spark.functions.hashing import salted_md5_60bit
+from hadoop_data_lake_spark.functions.text import ordered_shingles
 from hadoop_data_lake_spark.operators.dedup import exact_dedup, minhash_lsh_pairs
 from hadoop_data_lake_spark.operators.graph import dedup_clusters
 from hadoop_data_lake_spark.operators.packing import shuffle_shard_plan
@@ -46,11 +47,9 @@ def quality_keep(docs: DataFrame) -> DataFrame:
         / n_words
     )
     digit_ratio = F.length(F.regexp_replace(t, r"[^0-9]", "")) / F.length(t)
-    bigrams = F.zip_with(
-        F.slice(words, 1, n_words - 1),
-        F.slice(words, 2, n_words - 1),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
+    # n_words >= 10 below keeps ordered_shingles' whole-text fallback
+    # (fewer than 2 words) out of every kept row.
+    bigrams = ordered_shingles(t, 2)
     dup_2gram = 1 - F.size(F.array_distinct(bigrams)) / F.size(bigrams)
     keep = (
         n_words.between(10, 1000)
@@ -178,13 +177,15 @@ def run_pretrain_pipeline(
     n_shards: int = 16,
 ) -> tuple[DataFrame, dict[str, int]]:
     """Run the full funnel; returns (shard plan for the survivors,
-    per-stage counts). Stage frames are localCheckpoint-ed so the funnel
-    counts don't re-execute the whole upstream per action."""
+    per-stage counts). Stage frames are localCheckpoint-ed so later stages
+    don't re-execute the whole upstream; each stage's count is observed
+    during its checkpoint job, so a stage costs one job, not two."""
     funnel: dict[str, int] = {}
 
     def stage(name: str, df: DataFrame) -> DataFrame:
-        df = df.localCheckpoint(eager=True)
-        funnel[name] = df.count()
+        seen = Observation(name)
+        df = df.observe(seen, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+        funnel[name] = seen.get["n"]
         return df
 
     docs = stage("raw", read_table(spark, sf_dir, "documents"))

@@ -1444,25 +1444,18 @@ GROUP BY event_type, least(floor(value / 25.0), 19)::bigint
 
 
 # --------------------------------------------------------------------------
-# Bigram frequency counts (n-gram LM statistics). The bigram array is built
-# with zip_with over two slices — lambda bodies touch only lambda variables,
-# so nothing re-evaluates per element (measured HOF pitfall); explode_outer
-# keeps InferFiltersFromGenerate from pushing a size()>0 probe below the
+# Bigram frequency counts (n-gram LM statistics). The bigrams are
+# TX.ordered_shingles(text, 2), one codegen'd regex (no HOF lambdas); the
+# n >= 2 guard keeps its whole-text fallback out. explode_outer keeps
+# InferFiltersFromGenerate from pushing a size()>0 probe below the
 # exchange. Global top-100 plans as TakeOrderedAndProject (no full sort).
 # --------------------------------------------------------------------------
 
 def bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
-    w = F.split(F.col("text"), " ")
-    docs = docs.select(F.col("doc_id"), w.alias("w"), F.size(w).alias("n"))
-    bigrams = F.zip_with(
-        F.slice(F.col("w"), 1, F.col("n") - 1),
-        F.slice(F.col("w"), 2, F.col("n") - 1),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
     return (
-        docs.where(F.col("n") >= 2)
-        .select(F.explode_outer(bigrams).alias("bigram"))
+        docs.where(F.size(TX.tokens(F.col("text"))) >= 2)
+        .select(F.explode_outer(TX.ordered_shingles(F.col("text"), 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count("*").alias("n"))
         .orderBy(F.col("n").desc(), F.col("bigram"))
@@ -1511,14 +1504,9 @@ def quality_gopher_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_data_lake_spark.functions.text import stopword_ratio
 
     stop_ratio = F.round(stopword_ratio(t), 6)
-    # repetition: fraction of 2-grams that are repeats (0 when < 2 words).
-    # Built with zip_with over shifted slices (lambdas touch only lambda
-    # vars — the HOF re-eval trap).
-    bigrams = F.zip_with(
-        F.slice(w, 1, n_words - 1),
-        F.slice(w, 2, n_words - 1),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
+    # repetition: fraction of 2-grams that are repeats (0 when < 2 words,
+    # where ordered_shingles falls back to the whole text).
+    bigrams = TX.ordered_shingles(t, 2)
     dup_2gram = F.when(
         n_words >= 2,
         F.round(
@@ -2081,20 +2069,11 @@ def doc_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_lm_perplexity_frame(docs: DataFrame) -> DataFrame:
     """Frame-level core of doc_lm_perplexity (r15: split out so the 100x
     scale probe can drive the identical plan over a synthetic scaled
-    corpus — tools/scale_probe_100x.py). Requires (doc_id, text)."""
-    w = F.split(F.col("text"), " ")
-    base = docs.select(
-        "doc_id", w.alias("w"), F.size(w).alias("n")
-    ).where(F.col("n") >= 2)
+    corpus; results in BENCH_NOTES.md). Requires (doc_id, text)."""
+    base = docs.where(F.size(TX.tokens(F.col("text"))) >= 2)
     bg = base.select(
         "doc_id",
-        F.explode_outer(
-            F.zip_with(
-                F.slice(F.col("w"), 1, F.col("n") - 1),
-                F.slice(F.col("w"), 2, F.col("n") - 1),
-                lambda a, b: F.concat(a, F.lit(" "), b),
-            )
-        ).alias("bigram"),
+        F.explode_outer(TX.ordered_shingles(F.col("text"), 2)).alias("bigram"),
     )
     # checkpoint the MODEL, not the stream (r11): the prefix re-aggregation
     # and the scoring join both consume the model — uncheckpointed, each
@@ -2495,19 +2474,10 @@ def doc_lm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables derive from ONE bigram aggregation (prefix/successor counts
     re-aggregate the model, not the corpus)."""
     docs = read_table(spark, sf_dir, "documents")
-    w = F.split(F.col("text"), " ")
-    base = docs.select("doc_id", w.alias("w"), F.size(w).alias("n")).where(
-        F.col("n") >= 2
-    )
+    base = docs.where(F.size(TX.tokens(F.col("text"))) >= 2)
     bg = base.select(
         "doc_id",
-        F.explode_outer(
-            F.zip_with(
-                F.slice(F.col("w"), 1, F.col("n") - 1),
-                F.slice(F.col("w"), 2, F.col("n") - 1),
-                lambda a, b: F.concat(a, F.lit(" "), b),
-            )
-        ).alias("bigram"),
+        F.explode_outer(TX.ordered_shingles(F.col("text"), 2)).alias("bigram"),
     )
     # (r11 note: the checkpointed MODEL below already bounds the plan at
     # 2 fact passes — model build + re-score. The bigram STREAM is ~2x
@@ -4506,20 +4476,24 @@ def cluster_safe_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("side_naive") == "train", 1)).alias("tr_n"),
         F.count(F.when(F.col("side_naive") == "test", 1)).alias("te_n"),
     )
-    joined = counts.crossJoin(leaks)
-    row_cluster = joined.select(
-        F.lit("cluster_aware").alias("split_kind"),
-        F.col("tr_c").alias("n_train"),
-        F.col("te_c").alias("n_test"),
-        F.col("leak_c").alias("leaked_pairs"),
+    # both output rows come from ONE counts x leaks row: a union of two
+    # selects would plan the documents scan, comp join and aggregate twice
+    def row(kind, tr, te, leak):
+        return F.struct(
+            F.lit(kind).alias("split_kind"),
+            F.col(tr).alias("n_train"),
+            F.col(te).alias("n_test"),
+            F.col(leak).alias("leaked_pairs"),
+        )
+
+    return counts.crossJoin(leaks).select(
+        F.inline(
+            F.array(
+                row("cluster_aware", "tr_c", "te_c", "leak_c"),
+                row("naive_hash", "tr_n", "te_n", "leak_n"),
+            )
+        )
     )
-    row_naive = joined.select(
-        F.lit("naive_hash").alias("split_kind"),
-        F.col("tr_n").alias("n_train"),
-        F.col("te_n").alias("n_test"),
-        F.col("leak_n").alias("leaked_pairs"),
-    )
-    return row_cluster.unionByName(row_naive)
 
 
 CLUSTER_SAFE_SPLIT_AUDIT_SQL = f"""

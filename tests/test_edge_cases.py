@@ -1,6 +1,10 @@
-"""Empty/degenerate inputs must produce empty (not crashing) results."""
+"""Empty/degenerate inputs must produce empty (not crashing) results, and
+the degenerate-input sweep (tools/degenerate_sweep.py) pinned as tests."""
+
+import datetime as dt
 
 import pyspark.sql.functions as F
+import pytest
 
 from hadoop_data_lake_spark.operators.dedup import exact_dedup, minhash_lsh_pairs, ngram_jaccard_pairs
 from hadoop_data_lake_spark.operators.graph import connected_components
@@ -651,3 +655,153 @@ def test_lpa_empty_and_self_loop_free(spark):
     assert even == {7: 7, 9: 9}
     odd = {r["vertex"]: r["community"] for r in lpa_communities(pair, iters=3).collect()}
     assert odd == {7: 9, 9: 7}
+
+
+EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
+EPOCH = dt.datetime(2024, 1, 1, 0, 0, 0)
+
+
+@pytest.fixture(scope="module")
+def degenerate_dirs(spark, tmp_path_factory):
+    """Three corpora that break closed-form denominators: a single event
+    (one hour bin, one group member, possibly an empty hash sample), one
+    day with two types (empty variants), and thirty identical values
+    (zero variance everywhere)."""
+    cases = {
+        "one_event": [(1, EPOCH, 1, "purchase", 5.0, "{}")],
+        "one_day_two_types": [
+            (1, EPOCH, 1, "purchase", 5.0, "{}"),
+            (2, EPOCH + dt.timedelta(hours=1), 2, "view", 3.0, "{}"),
+        ],
+        "all_same_value": [
+            (i, EPOCH + dt.timedelta(hours=i), i % 3, "click", 7.0, "{}")
+            for i in range(30)
+        ],
+    }
+    dirs = {}
+    root = tmp_path_factory.mktemp("degenerate")
+    for name, rows in cases.items():
+        d = str(root / name)
+        spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{d}/events.parquet")
+        dirs[name] = d
+    return dirs
+
+
+def test_degenerate_inputs_never_divide_by_zero(spark, degenerate_dirs):
+    """The r8 degenerate-input sweep found five window queries crashing
+    with ANSI DIVIDE_BY_ZERO on inputs with empty variants / single bins /
+    one group / zero variance (the daily_revenue_changepoint class).
+    Undefined statistics must read NULL (or filter the undefined rows),
+    never raise."""
+    from hadoop_data_lake_spark.queries import events_queries as EV
+
+    guarded = [
+        # the five window queries from the first sweep + changepoint
+        EV.ks_test_variants, EV.fano_burstiness, EV.anova_eta_squared,
+        EV.sample_representativeness_audit, EV.value_outliers_zscore,
+        EV.daily_revenue_changepoint,
+        # the thirteen registry-wide offenders from the full sweep
+        EV.kendall_tau_daily, EV.mann_whitney_variants,
+        EV.jackknife_daily_mean, EV.ols_weekend_effect, EV.ols_daily_trend,
+        EV.cuped_adjusted_lift, EV.ipw_outcome_estimate, EV.value_psi_drift,
+        EV.neyman_allocation_plan, EV.woe_value_bins, EV.eb_shrunk_conversion,
+        EV.target_encode_event_type, EV.self_join_skew_profile,
+    ]
+    anova_eta_squared = EV.anova_eta_squared
+    fano_burstiness = EV.fano_burstiness
+    ks_test_variants = EV.ks_test_variants
+    value_outliers_zscore = EV.value_outliers_zscore
+
+    for d in degenerate_dirs.values():
+        for fn in guarded:
+            fn(spark, d).collect()  # must not raise
+
+    # semantics, not just survival:
+    # zero variance -> no z-score outliers, NULL eta/F, NULL fano
+    same = degenerate_dirs["all_same_value"]
+    assert value_outliers_zscore(spark, same).count() == 0
+    (a,) = anova_eta_squared(spark, same).collect()
+    assert a["eta_sq_r"] is None and a["f_stat_r"] is None
+    for r in fano_burstiness(spark, same).collect():
+        assert r["fano_r"] == 0.0  # one event in each of 30 hours: zero dispersion
+    # one-variant types are UNDEFINED for KS and must be absent, not NULL
+    for r in ks_test_variants(spark, same).collect():
+        assert r["n_a"] > 0 and r["n_b"] > 0
+    # single-hour span -> fano undefined (n-1 = 0)
+    one = degenerate_dirs["one_event"]
+    (f,) = fano_burstiness(spark, one).collect()
+    assert f["n_hours"] == 1 and f["fano_r"] is None
+
+
+def test_degenerate_table_corpora_guards(spark):
+    """The TQ/NS arm of the degenerate sweep, pinned as a test: constant
+    prices / identical documents / identical embeddings and single-row
+    facts must not raise, and the undefined statistics must read NULL
+    (or the scikit silhouette-0 convention)."""
+    from tools.degenerate_sweep import _table_cases
+    from hadoop_data_lake_spark.queries.northstar_queries import (
+        length_bias_auc,
+        semdedup_silhouette,
+        source_mmd_hashed,
+    )
+    from hadoop_data_lake_spark.queries.tpch_queries import (
+        activity_tail_hill,
+        discount_elasticity,
+        price_dispersion_by_brand,
+    )
+
+    dirs = _table_cases(spark)
+    for d in dirs.values():
+        for fn in (
+            price_dispersion_by_brand, length_bias_auc, activity_tail_hill,
+            source_mmd_hashed, discount_elasticity, semdedup_silhouette,
+        ):
+            fn(spark, d).collect()  # must not raise
+
+    # semantics on the constant-values corpus:
+    const = dirs["constant_values"]
+    (e,) = discount_elasticity(spark, const).collect()
+    assert e["n_levels"] == 1 and e["elasticity_r"] is None, (
+        "a one-point discount ladder has no slope"
+    )
+    for r in semdedup_silhouette(spark, const).collect():
+        assert r["mean_silhouette_r"] == 0.0, (
+            "identical points take the scikit-learn s = 0 convention"
+        )
+    # single-row facts: a single active user leaves the Hill mean undefined
+    one = dirs["one_row_facts"]
+    (h,) = activity_tail_hill(spark, one).collect()
+    assert h["k_used"] == 1 and h["hill_r"] is None
+
+
+def test_degenerate_sweep_skip_is_events_only():
+    src = open("tools/degenerate_sweep.py").read()
+    assert "cname in events_cases" in src, (
+        "the PATH_NOT_FOUND skip must be gated on the events-only corpora"
+    )
+    assert "ev_targets" not in src, (
+        "the defining-module target filter is back — selection must be by "
+        "the tables a query actually reads"
+    )
+
+
+def test_degenerate_sweep_plans_mode_builds_table_cases(spark):
+    """--plans + --events-only used to KeyError on cases['empty_facts'];
+    build_cases must include the table-derived corpora whenever the plan
+    probe will run."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from degenerate_sweep import build_cases
+
+    cases, events_cases = build_cases(spark, events_only=True, plans_mode=True)
+    assert "empty_facts" in cases
+    assert "empty_facts" not in events_cases
+    cases2, _ = build_cases(spark, events_only=True, plans_mode=False)
+    assert "empty_facts" not in cases2

@@ -3,7 +3,7 @@
 import pyspark.sql.functions as F
 
 from hadoop_data_lake_spark.pipelines.pretrain_data import run_pretrain_pipeline
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, count_jobs
 
 
 def test_pretrain_funnel_monotone_and_deterministic(spark):
@@ -56,6 +56,23 @@ def test_cluster_safe_split_never_leaks_near_dup_pairs(spark):
         assert r["n_test"] > 0 and r["n_train"] > 0
 
 
+def test_cluster_safe_split_audit_plans_its_counts_once(spark):
+    """Both output rows come from one counts x leaks row: the plan holds
+    one documents scan and no Union, and collecting the result runs 4
+    jobs (7 when a union of two selects planned the documents scan, the
+    comp join and the counts aggregate twice)."""
+    from hadoop_data_lake_spark.queries.northstar_queries import (
+        cluster_safe_split_audit,
+    )
+
+    df = cluster_safe_split_audit(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1 and "Union" not in plan
+    rows, jobs = count_jobs(spark, df.collect)
+    assert [r["split_kind"] for r in rows] == ["cluster_aware", "naive_hash"]
+    assert jobs <= 4, jobs
+
+
 def test_embedding_decontamination_flags_exactly_planted_probes(spark):
     """Every planted probe (+0.3 on one coordinate of a unit vector) must
     flag its source at cosine >= 0.9; nothing else crosses the gate."""
@@ -68,3 +85,30 @@ def test_embedding_decontamination_flags_exactly_planted_probes(spark):
         (v, v + 10_000_000) for v in range(0, 500, 50)
     }
     assert all(0.9 <= r["sim_r"] < 1.0 for r in rows)
+
+
+def test_split_audit_leak_fold_matches_distributed(spark, tiers):
+    """The r16 driver leak fold (Python md5 over the collected pair list)
+    must equal the distributed leak joins row-for-row — including the
+    md5(cast(id as string)) replication and the leak_c == 0 invariant."""
+    from hadoop_data_lake_spark.queries.registry import REGISTRY
+
+    fn = REGISTRY["cluster_safe_split_audit"].fn
+    on, off = tiers.on_off(lambda: sorted(map(tuple, fn(spark, SF_DIR).collect())))
+    assert on == off
+    by_kind = {r[0]: r for r in on}
+    assert by_kind["cluster_aware"][3] == 0  # no leaks by construction
+    assert by_kind["cluster_aware"][1] + by_kind["cluster_aware"][2] == 500
+
+
+def test_pretrain_funnel_counts_each_stage_inside_its_checkpoint(spark):
+    """Each stage's row count is observed during the stage's eager
+    checkpoint job. A separate count() per stage ran 63 jobs for a warm
+    funnel here; observing the count must save at least one job per
+    stage (9 stages)."""
+    run_pretrain_pipeline(spark, SF_DIR, n_shards=4)  # warm: schema memo
+    (_, funnel), jobs = count_jobs(
+        spark, lambda: run_pretrain_pipeline(spark, SF_DIR, n_shards=4)
+    )
+    assert len(funnel) == 9
+    assert jobs <= 63 - 9, jobs

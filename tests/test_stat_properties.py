@@ -1,7 +1,7 @@
 """Invariant/axiom property tests for the math-heaviest stats queries
 (VERDICT r6 item 5). The DuckDB value-hash cannot catch a bug both engines
 implement identically (the Shapley-efficiency precedent,
-tests/test_round5_ops.py); these pin the MATHEMATICAL properties each
+test_shapley_efficiency_axiom below); these pin the MATHEMATICAL properties each
 estimator must satisfy regardless of implementation:
 
 - Kaplan-Meier / Nelson-Aalen: monotone curves, [0,1] range, the product
@@ -1018,3 +1018,435 @@ def test_theil_sen_counts_zero_days(spark, tmp_path):
     # sorted: [-1000, -500, 0, 0, 500, 1000]; lower median (rank 3) more
     # precisely rank ceil((6+1)/2) = 4 -> 0
     assert r["slope_per_day_r"] == pytest.approx(0.0, abs=1e-9)
+
+
+def test_exact_quantiles_match_sorted_positions(spark):
+    """Rank-join quantiles equal positions in the fully sorted values."""
+    from hadoop_data_lake_spark.core.io import read_table
+    from hadoop_data_lake_spark.functions.fixedpoint import to_units
+    from hadoop_data_lake_spark.queries.events_queries import exact_value_quantiles
+    from pyspark.sql import functions as F
+    import math
+
+    got = {
+        r["quantile_pct"]: r["cents"]
+        for r in exact_value_quantiles(spark, SF_DIR).collect()
+    }
+    ev = read_table(spark, SF_DIR, "events").select(
+        "event_id", to_units(F.col("value")).alias("cents")
+    ).where(F.col("cents").isNotNull())
+    ordered = [
+        r["cents"] for r in ev.orderBy("cents", "event_id").collect()
+    ]
+    n = len(ordered)
+    for p, cents in got.items():
+        assert cents == ordered[math.ceil(p * n / 100) - 1], p
+
+
+def test_markov_trigram_entropy_bounds(spark):
+    """Second-order conditional entropy is bounded by log2(#event types)
+    and equal on every output row."""
+    import math
+
+    from hadoop_data_lake_spark.core.io import read_table
+    from hadoop_data_lake_spark.queries.events_queries import markov_trigram_entropy
+    from pyspark.sql import functions as F
+
+    rows = markov_trigram_entropy(spark, SF_DIR).collect()
+    hs = {r["h2_r"] for r in rows}
+    assert len(hs) == 1
+    h = hs.pop()
+    n_types = (
+        read_table(spark, SF_DIR, "events")
+        .select(F.count_distinct("event_type").alias("k"))
+        .collect()[0]["k"]
+    )
+    assert 0.0 <= h <= math.log2(n_types) + 1e-9
+
+
+def test_qini_final_point_is_overall_uplift(spark):
+    """The last Qini point equals total treated responders minus scaled
+    control responders — the curve's anchor identity."""
+    from hadoop_data_lake_spark.queries.events_queries import qini_uplift_curve
+
+    rows = sorted(qini_uplift_curve(spark, SF_DIR).collect(), key=lambda r: r["decile"])
+    nt = sum(r["n_t"] for r in rows)
+    nc = sum(r["n_c"] for r in rows)
+    rt = sum(r["r_t"] for r in rows)
+    rc = sum(r["r_c"] for r in rows)
+    expect = round(rt - rc * nt / nc, 6)
+    assert abs(rows[-1]["qini_r"] - expect) < 1e-6
+
+
+def test_missing_partition_audit_finds_planted_gaps(spark, tmp_path):
+    """Drop two date ranges from a copy of events; the audit must report
+    exactly those runs with correct lengths (and nothing on the intact
+    table — covered by the oracle's empty result)."""
+    from hadoop_data_lake_spark.core.io import read_table
+    from hadoop_data_lake_spark.queries.events_queries import missing_partition_audit
+    from pyspark.sql import functions as F
+
+    ev = read_table(spark, SF_DIR, "events")
+    days = sorted(
+        r["d"] for r in ev.select(F.to_date("ts").alias("d")).distinct().collect()
+    )
+    holes = {days[3], days[4], days[10]}  # one 2-day run + one 1-day run
+    holed = ev.where(~F.to_date("ts").isin(list(holes)))
+    out = str(tmp_path / "events.parquet")
+    holed.write.parquet(out)
+    # the audit reads via read_table(sf_dir, "events") => point sf_dir at tmp
+    import shutil, os
+    sfdir = str(tmp_path / "sf")
+    os.makedirs(sfdir)
+    # single-file layout expected: write directly under sf/events.parquet
+    holed.coalesce(1).write.mode("overwrite").parquet(os.path.join(sfdir, "events.parquet"))
+    got = {
+        (r["gap_start"], r["gap_end"], r["n_days_missing"])
+        for r in missing_partition_audit(spark, sfdir).collect()
+    }
+    assert got == {
+        (str(days[3]), str(days[4]), 2),
+        (str(days[10]), str(days[10]), 1),
+    }
+
+
+def test_shapley_efficiency_axiom(spark):
+    """Sum of Shapley values must equal v(grand coalition) - v(empty) =
+    the conversion rate of users whose coalition is exactly all k
+    channels (0 if unobserved). Only holds when the FULL 2^k lattice is
+    enumerated — the restricted observed-coalition sum violates it
+    (ADVICE r5)."""
+    from hadoop_data_lake_spark.core.io import read_table
+    from hadoop_data_lake_spark.queries.events_queries import (
+        shapley_channel_attribution,
+    )
+    from pyspark.sql import functions as F
+
+    rows = shapley_channel_attribution(spark, SF_DIR).collect()
+    total = sum(r["shapley_r"] for r in rows)
+    chans = sorted(r["channel"] for r in rows)
+    ev = read_table(spark, SF_DIR, "events").select("user_id", "event_type")
+    per_user = (
+        ev.groupBy("user_id")
+        .agg(
+            F.array_join(
+                F.array_sort(
+                    F.array_distinct(
+                        F.collect_list(
+                            F.when(
+                                F.col("event_type") != "purchase",
+                                F.col("event_type"),
+                            )
+                        )
+                    )
+                ),
+                ",",
+            ).alias("coal"),
+            F.max((F.col("event_type") == "purchase").cast("long")).alias("conv"),
+        )
+        .where(F.col("coal") == ",".join(chans))
+    )
+    grand = per_user.agg(
+        F.count("*").alias("n"), F.sum("conv").alias("c")
+    ).collect()[0]
+    v_grand = (grand["c"] / grand["n"]) if grand["n"] else 0.0
+    assert abs(total - v_grand) < 1e-4  # 6-dp rounding x k channels
+
+
+EPOCH = dt.datetime(2024, 1, 1, 0, 0, 0)
+
+
+def _write_events(spark, tmp_path, rows):
+    path = str(tmp_path)
+    spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/events.parquet")
+    return path
+
+
+def test_zscore_survives_bigint_overflow_and_skips_singletons(spark, tmp_path):
+    from hadoop_data_lake_spark.queries.events_queries import value_outliers_zscore
+
+    # Group 'big': cents = 4e9 per row, cents^2 = 1.6e19 > bigint max —
+    # the pre-fix sum wrapped (or errored under ANSI). One clear outlier.
+    # n = 20 because a single extreme point's z tops out at (n-1)/sqrt(n),
+    # which only crosses the |z| >= 3 gate for n >= 12.
+    big_vals = [4.0e7 + i for i in range(19)] + [8.0e7]
+    rows = [
+        (i, EPOCH + dt.timedelta(minutes=i), 1, "big", v, "{}")
+        for i, v in enumerate(big_vals)
+    ]
+    # Group 'solo': n = 1 — sd must be NULL (filtered), not NaN (emitted).
+    rows.append((100, EPOCH, 2, "solo", 5.0, "{}"))
+    sf_dir = _write_events(spark, tmp_path, rows)
+
+    out = {r["event_id"]: r["z"] for r in value_outliers_zscore(spark, sf_dir).collect()}
+
+    # Exact expectation with Python big ints (no overflow possible).
+    cents = [round(v * 100) for v in big_vals]
+    n = len(cents)
+    sc, sq = sum(cents), sum(c * c for c in cents)
+    mu = sc / (100.0 * n)
+    sd = ((sq - sc * sc / n) / (n - 1)) ** 0.5 / 100.0
+    expected = {
+        i: round((v - mu) / sd, 6)
+        for i, v in enumerate(big_vals)
+        if abs(round((v - mu) / sd, 6)) >= 3
+    }
+    assert expected, "fixture must actually contain an outlier"
+    assert 100 not in out, "singleton group leaked through a NaN sd"
+    assert out == pytest.approx(expected)
+
+
+def test_twap_survives_bigint_overflow(spark, tmp_path):
+    from hadoop_data_lake_spark.queries.events_queries import user_value_twap
+
+    # cents = 9e10; held 2 h = 7.2e9 us -> product 6.48e20 >> bigint max.
+    rows = [
+        (1, EPOCH, 7, "m", 9.0e8, "{}"),
+        (2, EPOCH + dt.timedelta(hours=2), 7, "m", 1.0, "{}"),
+        (3, EPOCH + dt.timedelta(hours=3), 7, "m", 2.0, "{}"),  # lead=None, dropped
+    ]
+    sf_dir = _write_events(spark, tmp_path, rows)
+
+    out = user_value_twap(spark, sf_dir).collect()
+    assert len(out) == 1
+    r = out[0]
+
+    durs_us = [2 * 3600 * 10**6, 1 * 3600 * 10**6]
+    cents = [round(9.0e8 * 100), 100]
+    swc = sum(c * d for c, d in zip(cents, durs_us))  # exact big int
+    total = sum(durs_us)
+    assert r["n_obs"] == 2
+    assert r["total_dur_us"] == total
+    assert r["twap"] == pytest.approx(round(swc / (100.0 * total), 6))
+
+
+def test_rolling_zscore_survives_window_bigint_overflow(spark, tmp_path):
+    """rolling_zscore_anomaly (round-7 widening): a 24 h window holding
+    1500 cents~9e7 events wraps the old bigint SUM(vc*vc) (~1.2e19) and
+    its s1^2 quadratic (~1.8e22), driving the integer gate's var_int
+    negative — the planted outlier silently vanished. The decimal path
+    must keep the gate exact and emit it."""
+    from hadoop_data_lake_spark.queries.events_queries import rolling_zscore_anomaly
+
+    n_big = 1500
+    rows = [
+        # alternate two nearby large values so the window variance is
+        # positive but tiny next to the planted outlier's deviation
+        (i, EPOCH + dt.timedelta(seconds=10 * i), 1, "m",
+         9.0e5 + (i % 2), "{}")
+        for i in range(n_big)
+    ]
+    outlier_id = 10_000
+    rows.append(
+        (outlier_id, EPOCH + dt.timedelta(seconds=10 * n_big), 1, "m", 1.0, "{}")
+    )
+    sf_dir = _write_events(spark, tmp_path, rows)
+
+    out = {r["event_id"]: r["z_r"] for r in rolling_zscore_anomaly(spark, sf_dir).collect()}
+    assert outlier_id in out, "overflow in the window quadratics ate the outlier"
+
+    # exact recompute at the outlier row (whole history is inside 24 h)
+    cents = [round((9.0e5 + (i % 2)) * 100) for i in range(n_big)] + [100]
+    n, s1 = len(cents), sum(cents)
+    s2 = sum(c * c for c in cents)
+    dev = cents[-1] * n - s1
+    var_int = n * s2 - s1 * s1
+    assert out[outlier_id] == pytest.approx(
+        round(dev / var_int**0.5, 6), abs=2e-6
+    )
+
+
+def test_rolling_zscore_survives_19_digit_window_sum(spark, tmp_path):
+    """Ten rows of 1e17 cents inside one 24 h window push s1 past 1e18
+    (19 decimal digits — still a perfectly valid bigint): the old
+    decimal(18,0) cast errored under ANSI / nulled the gate otherwise.
+    The planted zero-value outlier must come through with the exact z."""
+    from hadoop_data_lake_spark.queries.events_queries import rolling_zscore_anomaly
+
+    # value = 1e15 + 16*i: cents = 1e17 + 1600*i, exactly representable as
+    # double (spacing at 1e17 is 16; 1600*i is a multiple of 16)
+    rows = [
+        (i, EPOCH + dt.timedelta(minutes=i), 1, "m", 1.0e15 + 16.0 * i, "{}")
+        for i in range(10)
+    ]
+    outlier_id = 999
+    rows.append(
+        (outlier_id, EPOCH + dt.timedelta(minutes=10), 1, "m", 0.0, "{}")
+    )
+    path = str(tmp_path)
+    spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/events.parquet")
+
+    out = {r["event_id"]: r["z_r"] for r in rolling_zscore_anomaly(spark, path).collect()}
+
+    cents = [round(1.0e15 + 16.0 * i) * 100 for i in range(10)] + [0]
+    n, s1 = len(cents), sum(cents)
+    assert len(str(s1)) == 19, "fixture must actually produce a 19-digit s1"
+    s2 = sum(c * c for c in cents)
+    dev = cents[-1] * n - s1
+    var_int = n * s2 - s1 * s1
+    assert 4 * dev * dev >= 9 * var_int > 0
+    assert outlier_id in out, "19-digit s1 killed the gate (decimal cast too narrow)"
+    assert out[outlier_id] == pytest.approx(
+        round(dev / math.sqrt(var_int), 6), abs=2e-6
+    )
+
+
+ENVELOPE_MAX_WINDOW_ROWS = 10**7
+
+
+ENVELOPE_MAX_ABS_CENTS = 10**6
+
+
+SPARK_DECIMAL38_CEILING = 10**38  # ANSI decimal(38,0) overflow point
+
+
+DUCKDB_HUGEINT_CEILING = 17 * 10**37  # ~1.7e38: where the oracle errors too
+
+
+def test_rolling_zscore_divergence_band_unreachable_under_envelope():
+    n = ENVELOPE_MAX_WINDOW_ROWS
+    vc = ENVELOPE_MAX_ABS_CENTS
+    # Worst-case magnitudes of every intermediate the query materializes,
+    # computed with arbitrary-precision ints:
+    s1 = n * vc  # bigint window sum (also must fit decimal(19,0))
+    s2 = n * vc * vc  # sum of dprod(vc, vc)
+    intermediates = {
+        "s1": s1,
+        "s1_squared": s1 * s1,
+        "s2": s2,
+        "n_times_s2": n * s2,  # the ADVICE-flagged product
+        "var_int": n * s2 + s1 * s1,  # |n*s2 - s1^2| <= this
+        "dev": vc * n + s1,  # |vc*n - s1| <= this
+        "four_dev_sq": 4 * (vc * n + s1) ** 2,
+        "nine_var": 9 * (n * s2 + s1 * s1),
+    }
+    assert s1 < 10**19, "s1 must fit the decimal(19,0) cast"
+    for name, mag in intermediates.items():
+        # >= 10 orders of headroom below BOTH ceilings: the band where
+        # Spark errors but DuckDB still answers cannot be entered.
+        assert mag * 10**10 < SPARK_DECIMAL38_CEILING, (
+            f"{name} worst case {mag:.3e} is within 10 orders of the "
+            f"decimal(38) ceiling — the divergence band is reachable"
+        )
+    assert SPARK_DECIMAL38_CEILING < DUCKDB_HUGEINT_CEILING
+
+
+def test_rolling_zscore_envelope_matches_documentation():
+    """The envelope constants above are only meaningful while the query's
+    in-code documentation still claims the same bounds — fail if the
+    comment drifts away from what this test checks."""
+    import inspect
+
+    import hadoop_data_lake_spark.queries.events_queries as EV
+
+    src = inspect.getsource(EV.rolling_zscore_anomaly)
+    assert "1e7 events" in src and "1e6 cents" in src, (
+        "rolling_zscore_anomaly no longer documents the 1e7-events/"
+        "1e6-cents envelope this test derives its bounds from — update "
+        "both together"
+    )
+
+
+def _sparse_type_corpus(spark, tmp_path):
+    """5-day span; 'click' logs every day, 'error' only on days 1 and 5 —
+    the sparse-type shape where densification matters."""
+    rows = []
+    eid = 0
+    for d in range(5):
+        ts = dt.datetime(2024, 1, 1 + d, 12, 0, 0)
+        eid += 1
+        rows.append((eid, ts, 1, "click", 10.0 + d, None))
+    for d in (0, 4):
+        ts = dt.datetime(2024, 1, 1 + d, 13, 0, 0)
+        eid += 1
+        rows.append((eid, ts, 2, "error", 5.0, None))
+    return _write_events(spark, tmp_path, rows)
+
+
+@pytest.fixture(scope="module")
+def sparse_dir(spark, tmp_path_factory):
+    return _sparse_type_corpus(spark, tmp_path_factory.mktemp("sparse"))
+
+
+def test_ols_daily_trend_densifies_sparse_types(spark, sparse_dir):
+    """The sparse 'error' type must fit over ALL 5 calendar days (3 of
+    them zero-filled), not just its 2 occupied days — n_days is the
+    span, and the slope sees the zero observations."""
+    from hadoop_data_lake_spark.queries.registry import REGISTRY
+
+    out = {
+        r["event_type"]: r
+        for r in REGISTRY["ols_daily_trend"].fn(spark, sparse_dir).collect()
+    }
+    assert out["click"]["n_days"] == 5
+    assert out["error"]["n_days"] == 5, (
+        "sparse type fitted over occupied days only — densification lost"
+    )
+    # 2 occupied of 5 days: a fit over (5, 0, 0, 0, 5) cents-scale values
+    # has slope 0 by symmetry; the undensified fit over (5, 5) has slope 0
+    # too, so pin the INTERCEPT which differs (densified mean 2.0 vs 5.0)
+    assert abs(out["error"]["intercept_r"] - 2.0) < 1e-6
+
+
+def test_theil_sen_densifies_sparse_types(spark, sparse_dir):
+    """Median-of-pairwise-slopes over the densified grid: C(5,2)=10 pairs
+    per type, not C(2,2)=1 for the sparse type."""
+    from hadoop_data_lake_spark.queries.registry import REGISTRY
+
+    out = {
+        r["event_type"]: r
+        for r in REGISTRY["theil_sen_daily_trend"].fn(spark, sparse_dir).collect()
+    }
+    assert out["click"]["n_pairs"] == 10
+    assert out["error"]["n_pairs"] == 10, (
+        "sparse type paired over occupied days only — densification lost"
+    )
+
+
+def test_autocorr_densifies_sparse_types(spark, sparse_dir):
+    """Lag-k pairs over the densified series: lag 1 has span-1 = 4 pairs
+    for EVERY type (the sparse type would have 1 undensified)."""
+    from hadoop_data_lake_spark.queries.registry import REGISTRY
+
+    rows = REGISTRY["autocorr_daily_value"].fn(spark, sparse_dir).collect()
+    n = {(r["event_type"], r["lag"]): r["n"] for r in rows}
+    assert n[("click", 1)] == 4
+    assert n[("error", 1)] == 4, (
+        "sparse type lagged over occupied days only — densification lost"
+    )
+
+
+def test_corpus_wide_daily_series_not_densified(spark, tmp_path):
+    """Counterexample rule: jackknife_daily_mean's day lattice is the
+    OCCUPIED days. A corpus-wide zero day (total outage) must NOT be
+    injected as a synthetic revenue-0 observation — 4 occupied days of a
+    5-day span means n_days == 4."""
+    from hadoop_data_lake_spark.queries.registry import REGISTRY
+
+    rows = []
+    for i, d in enumerate((1, 2, 4, 5)):  # day 3 missing corpus-wide
+        rows.append((i, dt.datetime(2024, 1, d, 12, 0, 0), 1, "click", 10.0, None))
+    d = _write_events(spark, tmp_path, rows)
+    out = REGISTRY["jackknife_daily_mean"].fn(spark, d).collect()
+    assert len(out) == 1
+    assert out[0]["n_days"] == 4, (
+        "corpus-wide series densified — the deliberate NOT-densified "
+        "grain rule (COVERAGE.md Round 9) was flipped"
+    )
+
+
+def test_value_psi_drift_driver_fold_matches_distributed(spark, tiers):
+    """The r16 driver fold (cut/ranks/edges/bin map/pivot in numpy) must
+    produce the identical 10 rows as the distributed prefix + crossJoin
+    formulation — including the float tail, which both paths compute in
+    Spark over the same integers."""
+    from hadoop_data_lake_spark.queries.registry import REGISTRY
+
+    fn = REGISTRY["value_psi_drift"].fn
+    on, off = tiers.on_off(lambda: sorted(map(tuple, fn(spark, SF_DIR).collect())))
+    assert on == off
+    assert len(on) == 10 and {r[0] for r in on} == set(range(10))

@@ -1,46 +1,34 @@
-"""One-command round gates (VERDICT r13 item 7): the open/close checks
-that rounds 10-13 ran by convention, made mechanical.
+"""One-command close-out gate: every check a change must pass before it
+ships, run in order.
 
-    python tools/round_gate.py --open
-        Round-START gate. Run as the FIRST action of every round:
-        1. backlog_report --artifacts  — exit 1 while any driver artifact
-           (CORRECTNESS_r*/BENCH_r*.json, bench_detail.json) is untracked
-           or modified (untracked artifacts silently skew --stale).
-        2. backlog_report --stale      — prints the ladder the round's
-           rotation must drain (informational, never fails).
+    python tools/round_gate.py
+        1. oracle-sf0.001      full registry sweep at sf0.001 (352/352).
+        2. window-sf0.01       the 50-slot graded window at the gate scale.
+        3. window-sf0.1        the window at the bench scale (ties, overflow,
+                               quantile boundaries only show with more rows).
+        4. oracle-sf0.1-full   the full registry at sf0.1.
+        5. pytest              tests/ with the tier-1 flags.
+        6. pytest-perfbench    perfbench/tests: the benchmark imports
+                               tools/check_oracle.py, so a tools edit can
+                               break it without any tests/ failure.
+        7. plan-audit          regenerates PLAN_AUDIT.md; exits 1 on any
+                               un-whitelisted red flag.
+        8. degenerate          no query raises on degenerate corpora.
+        9. degenerate-plans    fact-rescan audit on the empty-facts corpus.
+        10. entry-smoke        the driver contract's `entry()` returns rows.
 
-    python tools/round_gate.py --close
-        Round-CLOSE gate. Run at the code freeze, AFTER the rotation
-        (memory: rotation comes after the last query-code commit):
-        1. backlog_report --assert     — every non-guard window slot is
-           first-time or a declared INTENTIONAL_REGRADE.
-        2. full sf0.001 oracle sweep   — 352/352 value-hash green.
-        3. 50-slot window at sf0.01    — the driver's gate scale.
-        4. 50-slot window at sf0.1     — the bench scale (scale-sensitive
-           semantics: ties, overflow, quantile boundaries).
-        5. pytest tests/ -q
-        6. plan_audit                  — regenerates PLAN_AUDIT.md at the
-           freeze; exits 1 on any un-whitelisted red flag.
-        7. degenerate_sweep            — no query raises on degenerate
-           corpora (div-by-zero class kept closed).
-        8. degenerate_sweep --plans    — fact-rescan audit on the
-           empty-facts corpus (re-run after eager-checkpoint changes).
-        9. entry() smoke               — the driver contract's flagship.
-        10. FULL registry sweep at sf0.1 (--scaled-variants) — the
-           bench-scale insurance sweep over all 352 queries (~13 min;
-           VERDICT r14 item 4 made it a permanent numbered gate). Runs
-           LAST so every cheaper gate fails first; the 50-slot window
-           step above stays as its fast-fail precursor.
+    python tools/round_gate.py --only NAME[,NAME...]
+        Re-run a subset after a fix (names as in the list above).
 
-        The timed bench is deliberately NOT here: it must run ALONE on a
-        calm box (BENCH_NOTES protocol), never stacked behind an hour of
-        gate jobs that leave the JVMs and page cache hot.
-
-    python tools/round_gate.py --close --only NAME[,NAME...]
-        Re-run a subset after a fix (names printed in the step list).
+The sf0.1 sweeps pass `--scaled-variants`: they may verify dense-spine
+oracles on their coarser registered twin (queries/sweep_variants.py);
+check_oracle rejects the flag at any other scale.
 
 Steps run sequentially as subprocesses (each owns its Spark session);
 the gate stops at the first failure and exits with that step's code.
+A full run took 81 minutes on a 4-CPU VM. The timed bench is
+deliberately not here: it must run alone on a calm box, not behind an
+hour of gate jobs.
 """
 
 from __future__ import annotations
@@ -82,43 +70,34 @@ def _window_names() -> list[str]:
     return out.stdout.split()
 
 
-def open_steps() -> list[tuple[str, list[str]]]:
-    return [
-        ("artifacts", [PY, "tools/backlog_report.py", "--artifacts"]),
-        ("stale-ladder", [PY, "tools/backlog_report.py", "--stale"]),
-    ]
-
-
-def close_steps() -> list[tuple[str, list[str]]]:
+def steps() -> list[tuple[str, list[str]]]:
     window = _window_names()
+    oracle = [PY, "-u", "tools/check_oracle.py"]
     return [
-        ("rotation-assert", [PY, "tools/backlog_report.py", "--assert"]),
-        ("oracle-sf0.001", [PY, "-u", "tools/check_oracle.py", "/root/testdata/sf0.001"]),
-        ("window-sf0.01", [PY, "-u", "tools/check_oracle.py", "/root/testdata/sf0.01", *window]),
-        # --scaled-variants: the sf0.1 sweep may verify dense-spine
-        # oracles on their coarser registered twin (VERDICT r13 item 6;
-        # queries/sweep_variants.py) — sf0.001/sf0.01 never pass it.
-        ("window-sf0.1", [PY, "-u", "tools/check_oracle.py", "/root/testdata/sf0.1", "--scaled-variants", *window]),
-        ("pytest", [PY, "-m", "pytest", "tests/", "-q"]),
+        ("oracle-sf0.001", [*oracle, "/root/testdata/sf0.001"]),
+        ("window-sf0.01", [*oracle, "/root/testdata/sf0.01", *window]),
+        ("window-sf0.1", [*oracle, "/root/testdata/sf0.1", "--scaled-variants", *window]),
+        ("oracle-sf0.1-full", [*oracle, "/root/testdata/sf0.1", "--scaled-variants"]),
+        ("pytest", [PY, "-m", "pytest", "tests/", "-q", "-p", "no:cacheprovider"]),
+        ("pytest-perfbench", [PY, "-m", "pytest", "perfbench/tests", "-q", "-p", "no:cacheprovider"]),
         ("plan-audit", [PY, "tools/plan_audit.py"]),
         ("degenerate", [PY, "tools/degenerate_sweep.py"]),
         ("degenerate-plans", [PY, "tools/degenerate_sweep.py", "--plans"]),
         ("entry-smoke", [PY, "-c", _SMOKE_SNIPPET]),
-        ("oracle-sf0.1-full", [PY, "-u", "tools/check_oracle.py", "/root/testdata/sf0.1", "--scaled-variants"]),
     ]
 
 
-def run(steps: list[tuple[str, list[str]]], only: set[str] | None) -> int:
-    todo = [(n, c) for n, c in steps if only is None or n in only]
+def run(todo_steps: list[tuple[str, list[str]]], only: set[str] | None) -> int:
+    todo = [(n, c) for n, c in todo_steps if only is None or n in only]
     if only is not None and len(todo) != len(only):
-        known = {n for n, _ in steps}
+        known = {n for n, _ in todo_steps}
         raise SystemExit(f"unknown step(s): {sorted(only - known)}; known: {sorted(known)}")
     results: list[tuple[str, float, int]] = []
     for name, cmd in todo:
         print(f"==> {name}: {' '.join(cmd[:4])}{' ...' if len(cmd) > 4 else ''}", flush=True)
         t0 = time.time()
-        # Spark WARN spam can bury verdict lines (verify-skill gotcha):
-        # keep stdout streaming, discard stderr for the oracle sweeps only.
+        # Spark WARN spam can bury verdict lines: keep stdout streaming,
+        # discard stderr for the oracle sweeps only.
         quiet = name.startswith(("oracle-", "window-"))
         proc = subprocess.run(
             cmd, cwd=REPO, stderr=subprocess.DEVNULL if quiet else None
@@ -141,14 +120,10 @@ def _summary(results: list[tuple[str, float, int]]) -> None:
 
 def main() -> int:
     p = argparse.ArgumentParser()
-    g = p.add_mutually_exclusive_group(required=True)
-    g.add_argument("--open", action="store_true")
-    g.add_argument("--close", action="store_true")
     p.add_argument("--only", help="comma-separated step names to re-run")
     args = p.parse_args()
     only = set(args.only.split(",")) if args.only else None
-    steps = open_steps() if args.open else close_steps()
-    return run(steps, only)
+    return run(steps(), only)
 
 
 if __name__ == "__main__":
