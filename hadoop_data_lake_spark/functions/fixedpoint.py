@@ -37,7 +37,7 @@ def to_units(col: Column, scale: int = 2) -> Column:
     raises), and a value within one ulp of a .5 boundary rounds by
     binary arithmetic rather than by its shortest decimal repr.
     Row-level equality with F.round on every real money/value column is
-    pinned by tests/test_fixedpoint.py."""
+    pinned by tests/test_round12_fixes.py."""
     x = col * F.lit(10**scale)
     return (F.signum(x) * F.floor(F.abs(x) + F.lit(0.5))).cast("long")
 

@@ -21,6 +21,7 @@ def spark():
 
 
 SF_DIR = "/root/testdata/sf0.001"
+SF01_DIR = str(Path(SF_DIR).parent / "sf0.01")
 
 _job_groups = itertools.count()
 

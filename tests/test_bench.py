@@ -1,7 +1,4 @@
-"""bench.py: the stream rep pin, the calm-box gate, the control spike
-stamp, and the driver-tier pin of the scale tier."""
-
-import pytest
+"""bench.py: the stream rep pin."""
 
 
 def test_bench_stream_reps_pinned_at_two():
@@ -14,112 +11,3 @@ def test_bench_stream_reps_pinned_at_two():
     m = re.search(r"n_reps = (.+?) if name\.startswith\(\"stream_\"\)", src)
     assert m, "bench.py stream rep-count expression not found"
     assert m.group(1).strip() == "2", m.group(1)
-
-
-def test_bench_calm_box_gate(monkeypatch):
-    """VERDICT r10 item 5: the calm-box discipline lives in bench.py itself.
-    Calm box -> no wait; loaded box -> bounded wait that times out and
-    proceeds (never blocks the driver forever), with a self-describing
-    record either way."""
-    import importlib
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-    bench = importlib.import_module("bench")
-
-    monkeypatch.setattr(bench.os, "getloadavg", lambda: (0.1, 0.1, 0.1))
-    rec = bench.wait_for_calm_box()
-    assert rec["load_at_start"] == 0.1 and not rec["timed_out"]
-    assert rec["waited_s"] < 1.0
-
-    monkeypatch.setenv("SPARK_GRAFT_CALM_LOAD", "2.0")
-    monkeypatch.setenv("SPARK_GRAFT_CALM_WAIT_S", "0.2")
-    sleeps = []
-    monkeypatch.setattr(bench.time, "sleep", lambda s: sleeps.append(s))
-    # monotonic advances past max_wait after the first poll loop check
-    ticks = iter([0.0, 0.0, 0.5, 0.5])
-    monkeypatch.setattr(bench.time, "monotonic", lambda: next(ticks))
-    monkeypatch.setattr(bench.os, "getloadavg", lambda: (9.0, 9.0, 9.0))
-    rec = bench.wait_for_calm_box()
-    assert rec["timed_out"] and rec["load_at_invoke"] == 9.0
-    assert sleeps  # it did wait before giving up
-
-
-@pytest.mark.parametrize("orig_value", [True, False])
-def test_run_scale_tier_restores_flag_on_exception(monkeypatch, tiers, orig_value):
-    """ADVICE r11: an exception mid-scale-tier must not leave the driver
-    tier disabled process-wide, and the restore must honor a caller that
-    had deliberately disabled it (the 100x scale probe's pattern)."""
-    import bench
-    import hadoop_data_lake_spark.core.driver_tier as DT
-
-    def boom(spark, base_dir):
-        assert DT.GENERAL_DRIVER_TIER_ENABLED is False  # pinned inside
-        raise RuntimeError("mid-tier failure")
-
-    monkeypatch.setattr(bench, "_run_scale_tier_inner", boom)
-    tiers(orig_value)
-    with pytest.raises(RuntimeError):
-        bench.run_scale_tier(None, "/nonexistent")
-    assert DT.GENERAL_DRIVER_TIER_ENABLED is orig_value
-
-
-def test_spike_stamp_flags_over_factor_controls():
-    import bench
-
-    out = bench.spike_stamp({"a": 1.2, "b": 1.6, "c": 1.501})
-    assert out["spike_suspected"] is True
-    assert out["spike_controls"] == ["b", "c"]
-    assert out["spike_factor"] == bench.SPIKE_RATIO == 1.5
-
-    calm = bench.spike_stamp({"a": 1.5, "b": 0.9})  # 1.5 is NOT over
-    assert calm["spike_suspected"] is False
-    assert calm["spike_controls"] == []
-
-    empty = bench.spike_stamp({})  # non-sf0.1 runs have no ratios
-    assert empty["spike_suspected"] is False
-
-
-def test_spike_stamp_suppressed_off_baseline_sf():
-    """A run at another SF has no meaningful control ratios (they compare
-    against sf0.1 absolutes); the payload must then read
-    spike_suspected=False with an empty control list — mirroring the
-    control_inflation suppression. Pinned at the spike_stamp contract
-    level (main() passes {} when control_inflation is None)."""
-    import bench
-
-    out = bench.spike_stamp({})
-    assert out == {
-        "spike_suspected": False,
-        "spike_controls": [],
-        "spike_factor": bench.SPIKE_RATIO,
-    }
-
-
-def test_calm_gate_default_threshold_and_records(monkeypatch):
-    """VERDICT r11 item 1: default calm threshold is 1.0 (observed calm
-    runs sat at 0.2-0.64 on 32 CPUs; BENCH_r11 proceeded at exactly the
-    old 2.0 as an 8.86 spike drained). Also pins the self-describing
-    record fields the payload carries."""
-    import bench
-
-    monkeypatch.delenv("SPARK_GRAFT_CALM_LOAD", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_CALM_WAIT_S", raising=False)
-    monkeypatch.setattr(bench.os, "getloadavg", lambda: (0.25, 0.3, 0.4))
-    rec = bench.wait_for_calm_box()
-    assert rec["threshold"] == 1.0
-    assert rec["load_at_invoke"] == 0.25
-    assert rec["timed_out"] is False
-
-
-def test_calm_gate_bounded_wait_times_out(monkeypatch):
-    """An always-loaded box proceeds (bounded wait), recording
-    timed_out=True so the artifact is self-describing."""
-    import bench
-
-    monkeypatch.setenv("SPARK_GRAFT_CALM_WAIT_S", "0")
-    monkeypatch.setattr(bench.os, "getloadavg", lambda: (9.9, 9.9, 9.9))
-    rec = bench.wait_for_calm_box()
-    assert rec["timed_out"] is True
-    assert rec["load_at_start"] == 9.9

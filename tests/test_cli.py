@@ -1,65 +1,12 @@
-"""The `python -m hadoop_data_lake_spark` CLI: the ANN deployment flags
-reach the operators, and every run leaves `ANN_DEPLOY_OVERRIDES` as it
-found it, on success and on a raising query."""
+"""The `python -m hadoop_data_lake_spark` CLI: every run leaves
+`ANN_DEPLOY_OVERRIDES` as it found it, on success and on a raising
+query."""
 
 import types
 
 import pytest
 
 from conftest import SF_DIR
-
-
-def test_cli_auto_scale_flags_plumb_to_ann_overrides(spark, monkeypatch):
-    """VERDICT r11 item 7: `run --auto-scale --scan-budget F` must reach
-    the cosine_near_dup_pairs / ivf_kmeans_topk call sites via
-    SIM.ANN_DEPLOY_OVERRIDES; without the flags the overrides stay empty
-    (graded defaults untouched)."""
-    from hadoop_data_lake_spark.__main__ import main
-    from hadoop_data_lake_spark.operators import similarity as SIM
-
-    monkeypatch.setattr(SIM, "ANN_DEPLOY_OVERRIDES", {})
-
-    seen = {}
-    orig_ivf = SIM.ivf_kmeans_topk
-
-    def spy(corpus, queries, **kw):
-        seen.update(kw)
-        return orig_ivf(corpus, queries, **kw)
-
-    monkeypatch.setattr(SIM, "ivf_kmeans_topk", spy)
-    rc = main(
-        ["run", "ann_ivf_kmeans", "--sf-dir", SF_DIR, "--limit", "1",
-         "--auto-scale", "--scan-budget", "0.25"]
-    )
-    assert rc == 0
-    assert seen.get("auto_scale") is True
-    assert seen.get("scan_budget") == 0.25
-    assert "n_cells" not in seen  # sizing delegated to the scale law
-
-    # --scan-budget without --auto-scale is a usage error
-    assert main(
-        ["run", "ann_ivf_kmeans", "--sf-dir", SF_DIR, "--scan-budget", "0.2"]
-    ) == 2
-
-
-def test_cli_default_run_leaves_graded_defaults(spark, monkeypatch):
-    from hadoop_data_lake_spark.__main__ import main
-    from hadoop_data_lake_spark.operators import similarity as SIM
-
-    monkeypatch.setattr(SIM, "ANN_DEPLOY_OVERRIDES", {})
-
-    seen = {}
-    orig_ivf = SIM.ivf_kmeans_topk
-
-    def spy(corpus, queries, **kw):
-        seen.update(kw)
-        return orig_ivf(corpus, queries, **kw)
-
-    monkeypatch.setattr(SIM, "ivf_kmeans_topk", spy)
-    assert main(["run", "ann_ivf_kmeans", "--sf-dir", SF_DIR, "--limit", "1"]) == 0
-    assert seen.get("n_cells") == 8 and seen.get("nprobe") == 2
-    assert not seen.get("auto_scale")
-    assert SIM.ANN_DEPLOY_OVERRIDES == {}
 
 
 def test_cli_clears_ann_overrides_when_query_raises(spark, monkeypatch):
@@ -100,58 +47,3 @@ def test_cli_clears_ann_overrides_on_success_too(spark, monkeypatch):
     )
     assert rc == 0
     assert SIM.ANN_DEPLOY_OVERRIDES == {}
-
-
-def test_cli_restores_preset_overrides_after_raise(spark, monkeypatch):
-    """ADVICE r13: main() must undo only its own override changes — a
-    caller's pre-set posture survives a raising CLI query."""
-    from hadoop_data_lake_spark.__main__ import main
-    from hadoop_data_lake_spark.operators import similarity as SIM
-    from hadoop_data_lake_spark.queries import registry as R
-
-    preset = {"auto_scale": True, "scan_budget": 0.5}
-    monkeypatch.setattr(SIM, "ANN_DEPLOY_OVERRIDES", dict(preset))
-
-    def boom(spark_, sf_dir):
-        raise RuntimeError("mid-query failure")
-
-    monkeypatch.setitem(
-        R.REGISTRY,
-        "boom_test_only",
-        types.SimpleNamespace(fn=boom, oracle=None, tags=("test",)),
-    )
-    with pytest.raises(RuntimeError, match="mid-query failure"):
-        main(["run", "boom_test_only", "--sf-dir", SF_DIR])
-    assert SIM.ANN_DEPLOY_OVERRIDES == preset
-
-
-def test_cli_restores_preset_overrides_after_success(spark, monkeypatch):
-    """CLI flags compose on top of the caller's posture for the duration
-    of the invocation, then the entry snapshot is restored verbatim."""
-    from hadoop_data_lake_spark.__main__ import main
-    from hadoop_data_lake_spark.operators import similarity as SIM
-    from hadoop_data_lake_spark.queries import registry as R
-
-    preset = {"scan_budget": 0.125}
-    monkeypatch.setattr(SIM, "ANN_DEPLOY_OVERRIDES", dict(preset))
-
-    seen = {}
-
-    def probe(spark_, sf_dir):
-        seen.update(SIM.ANN_DEPLOY_OVERRIDES)
-        return spark_.range(1)
-
-    monkeypatch.setitem(
-        R.REGISTRY,
-        "probe_test_only",
-        types.SimpleNamespace(fn=probe, oracle=None, tags=("test",)),
-    )
-    rc = main(
-        ["run", "probe_test_only", "--sf-dir", SF_DIR, "--limit", "1",
-         "--auto-scale"]
-    )
-    assert rc == 0
-    # during the run: CLI flag layered over the caller's preset
-    assert seen == {"scan_budget": 0.125, "auto_scale": True}
-    # after: exactly the caller's preset, the CLI's own change undone
-    assert SIM.ANN_DEPLOY_OVERRIDES == preset

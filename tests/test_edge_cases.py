@@ -788,20 +788,3 @@ def test_degenerate_sweep_skip_is_events_only():
         "the defining-module target filter is back — selection must be by "
         "the tables a query actually reads"
     )
-
-
-def test_degenerate_sweep_plans_mode_builds_table_cases(spark):
-    """--plans + --events-only used to KeyError on cases['empty_facts'];
-    build_cases must include the table-derived corpora whenever the plan
-    probe will run."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from degenerate_sweep import build_cases
-
-    cases, events_cases = build_cases(spark, events_only=True, plans_mode=True)
-    assert "empty_facts" in cases
-    assert "empty_facts" not in events_cases
-    cases2, _ = build_cases(spark, events_only=True, plans_mode=False)
-    assert "empty_facts" not in cases2

@@ -300,68 +300,3 @@ def test_grammar_accepts_contract_shapes():
     ]
     for src in ok:
         assert _contract_ok(ast.parse(src, mode="eval").body, {}), src
-
-
-def _sites_for_source(src: str):
-    tree = ast.parse(src)
-    sites = []
-    for fn in _top_level_functions(tree):
-        sites.extend(_scope_sites("synthetic.py", fn, _assigns(fn)))
-    module_defs = {
-        stmt.targets[0].id: stmt.value
-        for stmt in tree.body
-        if isinstance(stmt, ast.Assign)
-        and len(stmt.targets) == 1
-        and isinstance(stmt.targets[0], ast.Name)
-    }
-    for stmt in tree.body:
-        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            continue
-        if isinstance(stmt, ast.ClassDef):
-            for sub in stmt.body:
-                if not isinstance(sub, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                    sites.extend(_scope_sites("synthetic.py", sub, module_defs))
-            continue
-        sites.extend(_scope_sites("synthetic.py", stmt, module_defs))
-    return sorted(sites)
-
-
-def test_lint_counts_nested_function_call_once():
-    """ADVICE r13: ast.walk(tree) used to visit a nested FunctionDef as
-    its own root, double-counting its kernel calls in the ratchet."""
-    src = (
-        "def outer():\n"
-        "    x = F.col('value')\n"
-        "    def inner():\n"
-        "        return to_units(x, 2)\n"
-        "    return inner\n"
-    )
-    sites = _sites_for_source(src)
-    assert len(sites) == 1
-    mod, kernel, arg, scale, ok = sites[0]
-    assert (kernel, arg, scale) == ("to_units", "x", "2")
-    assert ok  # resolved through the enclosing function's assignment
-
-
-def test_lint_collects_module_level_call():
-    """ADVICE r13: module-level kernel calls previously escaped both the
-    grammar and the ratchet."""
-    src = (
-        "base = F.col('value')\n"
-        "MODULE_CONST = to_units(base, 2)\n"
-        "BAD_CONST = to_units(F.col('unbounded_ratio'), 2)\n"
-    )
-    sites = _sites_for_source(src)
-    assert len(sites) == 2
-    by_arg = {arg: ok for _, _, arg, _, ok in sites}
-    assert by_arg["base"] is True  # resolved via module-level assignment
-    assert by_arg["F.col('unbounded_ratio')"] is False  # grammar rejects
-
-
-def test_lint_pinned_ratchet_unchanged():
-    """The scoping fix must not change today's collected multiset — no
-    nested or module-level kernel calls exist in the query modules."""
-    from collections import Counter
-
-    got = Counter((m, k, a, s) for m, k, a, s, _ in _collect_sites())
-    assert got == Counter(PINNED_SITES)

@@ -8,7 +8,6 @@ import math
 import pyspark.sql.functions as F
 
 from hadoop_data_lake_spark.functions.geo import grid_cell, haversine_km
-from tests.conftest import SF_DIR
 
 # (name, lat, lon) — fixed points covering hemispheres, poles, antimeridian.
 POINTS = [
@@ -196,15 +195,3 @@ def test_ray_casting_known_points(spark):
     got = {(r["lat"], r["lon"]): r for r in rows}
     for la, lo, zone, want in cases:
         assert bool(got[(la, lo)][zone]) == want, (la, lo, zone)
-
-
-def test_grid_density_clusters_are_connected_and_dense(spark):
-    """Every reported cluster's event count is at least its cell count
-    times the core threshold floor, and cluster reps are member cells."""
-    from hadoop_data_lake_spark.queries.geo_queries import grid_density_clusters
-
-    rows = grid_density_clusters(spark, SF_DIR).collect()
-    assert rows
-    for r in rows:
-        assert r["n_cells"] >= 1
-        assert r["n_events"] >= r["n_cells"]  # core cells are non-empty

@@ -1,7 +1,6 @@
 """Graph operators: connected components / dedup clustering, PageRank
 (float and fixed-point), HITS, triangles, BFS and label propagation, with
-the driver tiers' bit-identity and decline contracts and the state
-broadcast cap."""
+the driver tiers' bit-identity and decline contracts."""
 
 import random
 from collections import Counter
@@ -11,7 +10,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from conftest import SF_DIR, count_jobs
+from conftest import count_jobs
 from hadoop_data_lake_spark.core import driver_tier as DT
 from hadoop_data_lake_spark.operators import graph as G
 from hadoop_data_lake_spark.operators.graph import connected_components, dedup_clusters
@@ -433,22 +432,6 @@ def test_pagerank_distinct_driver_declines_on_null_ids(spark, tiers):
     assert G.pagerank_distinct_driver(e, iters=2, n_edges_bound=3) is None
 
 
-def test_hits_scores_are_normalized_and_bipartite(spark):
-    """HITS: integer scores in (0, 10^6], the max on each side hits the
-    10^6 ceiling exactly (rescaling invariant), and sides don't mix."""
-    from hadoop_data_lake_spark.queries.tpch_queries import hits_hubs_authorities
-
-    rows = hits_hubs_authorities(spark, SF_DIR).collect()
-    by_side = {}
-    for r in rows:
-        by_side.setdefault(r["side"], []).append(r["score"])
-    assert set(by_side) == {"hub", "auth"}
-    for side, scores in by_side.items():
-        assert len(scores) == 10
-        assert max(scores) == 1_000_000, side
-        assert all(0 < s <= 1_000_000 for s in scores)
-
-
 def test_pagerank_variants_empty_edges(spark):
     from hadoop_data_lake_spark.operators.graph import pagerank, pagerank_intexact
 
@@ -457,340 +440,6 @@ def test_pagerank_variants_empty_edges(spark):
     assert out_f.columns == ["vertex", "rank"] and out_f.count() == 0
     out_i = pagerank_intexact(e, iters=3)
     assert out_i.columns == ["node", "rank_units"] and out_i.count() == 0
-
-
-def test_graph_state_broadcast_cap_is_value_neutral(spark):
-    """operators/graph._bcast_state must only change the JOIN STRATEGY,
-    never values: pagerank_intexact, lpa_communities and kcore_peel give
-    identical results with the broadcast forced off (cap -1, the 1e9-vertex
-    path) and forced on (the bounded-state path). Integer arithmetic makes
-    this exact — any divergence means the two physical plans computed
-    different math, which would silently split correctness between bench
-    scale and 100 TB."""
-    import hadoop_data_lake_spark.operators.graph as G
-
-    edges = spark.createDataFrame(
-        [(a, b) for a in range(12) for b in range(12) if a != b and (a * 7 + b) % 3],
-        "src long, dst long",
-    )
-    old_cap = G.BROADCAST_STATE_MAX_ROWS
-    try:
-        results = {}
-        for mode, cap in (("bcast", 1_000_000), ("shuffle", -1)):
-            G.BROADCAST_STATE_MAX_ROWS = cap
-            pr = {
-                (r["node"], r["rank_units"])
-                for r in G.pagerank_intexact(edges, iters=4).collect()
-            }
-            lpa = {
-                (r["vertex"], r["community"])
-                for r in G.lpa_communities(edges, iters=3).collect()
-            }
-            kc = {
-                (r["node"], r["deg"])
-                for r in G.kcore_peel(edges, k=3, peels=2).collect()
-            }
-            results[mode] = (pr, lpa, kc)
-    finally:
-        G.BROADCAST_STATE_MAX_ROWS = old_cap
-    assert results["bcast"] == results["shuffle"]
-    assert results["bcast"][0], "pagerank produced no rows"
-
-
-def test_est_row_bytes_widths():
-    import hadoop_data_lake_spark.operators.graph as G
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    narrow = StructType(
-        [StructField("node", LongType()), StructField("rank", LongType())]
-    )
-    wide = StructType(
-        [
-            StructField("node", LongType()),
-            StructField("label", StringType()),
-            StructField("payload", ArrayType(LongType())),
-        ]
-    )
-    assert G._est_row_bytes(narrow) == 16
-    # complex columns are priced pessimistically (>= 256 each)
-    assert G._est_row_bytes(wide) >= 8 + 48 + 256
-
-
-def test_broadcast_state_byte_cap_blocks_wide_state(spark):
-    """A state frame under the ROW cap but over the BYTE cap must NOT get
-    the broadcast hint; the same row count with a narrow schema must."""
-    import hadoop_data_lake_spark.operators.graph as G
-
-    narrow = spark.createDataFrame([(1, 2)], "node long, rank long")
-    wide = narrow.withColumn("payload", F.array(F.lit(1), F.lit(2))).withColumn(
-        "label", F.lit("x")
-    )
-    n_rows = 900_000  # under BROADCAST_STATE_MAX_ROWS
-    assert n_rows <= G.BROADCAST_STATE_MAX_ROWS
-    # narrow: 900k x 16B = ~14 MB — broadcasts (hint returns a NEW frame)
-    assert G.broadcast_bounded_state(narrow, n_rows) is not narrow
-    # wide: 900k x >=312B = ~280 MB — over the 64 MB byte cap, unchanged
-    assert G.broadcast_bounded_state(wide, n_rows) is wide
-    # row cap still binds first regardless of width
-    assert G.broadcast_bounded_state(narrow, G.BROADCAST_STATE_MAX_ROWS + 1) is narrow
-    # unknown / negative counts never broadcast
-    assert G.broadcast_bounded_state(narrow, None) is narrow
-    assert G.broadcast_bounded_state(narrow, -1) is narrow
-
-
-def test_hits_uses_public_broadcast_helper():
-    """queries/tpch_queries must not reach into the private _bcast_state
-    (ADVICE r10) and must not re-count state frames per rescale."""
-    import inspect
-
-    from hadoop_data_lake_spark.queries import tpch_queries as T
-
-    src = inspect.getsource(T.hits_hubs_authorities)
-    assert "_bcast_state" not in src
-    assert "broadcast_bounded_state" in src
-    assert "df.count()" not in src
-
-
-def _pr_both_tiers(spark, tiers, rows, iters=4):
-    """Run pagerank_intexact with the driver tiers ON vs OFF on the same
-    edge list; return the two sorted (node, rank_units) lists."""
-    import hadoop_data_lake_spark.operators.graph as G
-
-    e = spark.createDataFrame(rows, "src int, dst int")
-    return tiers.on_off(
-        lambda: sorted(
-            (r["node"], r["rank_units"])
-            for r in G.pagerank_intexact(e, iters=iters).collect()
-        )
-    )
-
-
-def test_general_driver_tier_bit_identical(spark, tiers):
-    """General-graph driver tier: byte-for-byte the distributed
-    loop's integer recurrence, on a graph with every structural feature the
-    loop handles — dangling nodes (5 has no out-edge), zero-in-degree
-    nodes (1 is never a destination), duplicate (multi-)edges, a cycle,
-    and a self-referential cluster. Non-layered (node 2 has both in- and
-    out-edges), so with the tiers off the general loop answers."""
-    rows = [
-        (1, 2), (2, 3), (3, 2),          # cycle w/ mid nodes
-        (2, 5), (4, 5), (4, 5),          # dangling sink 5, dup edge
-        (3, 4), (1, 4),
-    ]
-    fast, dist = _pr_both_tiers(spark, tiers, rows)
-    assert fast == dist
-    assert len(fast) == 5
-    # mass sanity: total rank stays ~scale (integer truncation only)
-    assert abs(sum(r for _, r in fast) - 10**12) < 10**7
-
-
-def _lpa_rows_both_tiers(spark, tiers, rows, ddl, weight, iters):
-    import hadoop_data_lake_spark.operators.graph as G
-
-    e = spark.createDataFrame(rows, ddl)
-    src, dst = e.columns[:2]
-    return tiers.on_off(
-        lambda: sorted(
-            map(
-                tuple,
-                G.lpa_communities(
-                    e, src=src, dst=dst, weight=weight, iters=iters
-                ).collect(),
-            )
-        )
-    )
-
-
-def test_lpa_driver_tier_bit_identical(spark, tiers):
-    """LPA driver tier: same (score desc, label asc) synchronous
-    recurrence as the distributed loop, string labels + integer weights,
-    including a weight-tied pair (the tie-break path) and an isolated
-    2-clique."""
-    rows = [
-        ("a", "b", 3), ("b", "c", 3),      # tie at b: labels a vs c
-        ("c", "d", 5), ("a", "d", 1),
-        ("x", "y", 2),                      # separate component
-    ]
-    fast, dist = _lpa_rows_both_tiers(
-        spark, tiers, rows, "brand_a string, brand_b string, n_orders long",
-        "n_orders", 4,
-    )
-    assert fast == dist
-    assert len(fast) == 6
-
-
-def test_lpa_driver_tier_caps_route_to_distributed(spark, monkeypatch):
-    """Above either measured cap lpa_communities must take the distributed
-    loop (no collect of an unbounded edge list) — same probe as the
-    pagerank cap test: the distributed loop's labels frame is an iterated
-    localCheckpoint (Scan ExistingRDD), never a local frame."""
-    import hadoop_data_lake_spark.core.driver_tier as DT
-    import hadoop_data_lake_spark.operators.graph as G
-
-    e = spark.createDataFrame(
-        [("a", "b", 1), ("b", "c", 2)], "brand_a string, brand_b string, w long"
-    )
-    for cap in ("MAX_NODES", "MAX_ROWS"):
-        monkeypatch.undo()
-        monkeypatch.setattr(DT, cap, 0)
-        df = G.lpa_communities(e, src="brand_a", dst="brand_b", weight="w", iters=1)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan, cap
-
-
-def test_driver_tier_property_random_graphs(spark, tiers):
-    """Property harness for the graph driver tiers: on random small
-    digraphs (dangling nodes, self-referential pairs, duplicate edges,
-    multiple components all arise naturally), pagerank_intexact and
-    lpa_communities must return BIT-identical results with the tiers on
-    vs off. Seeded stdlib RNG, a handful of draws, one Spark pipeline per
-    draw — the hypothesis float strategies are avoided per
-    tests/test_properties.py's container note, and graph shapes need
-    structured randomness anyway."""
-    import random
-
-    rng = random.Random(0xC0FFEE)
-    for draw in range(4):
-        n = rng.randint(2, 14)
-        m = rng.randint(1, 28)
-        rows = [
-            (rng.randint(0, n - 1), rng.randint(0, n - 1)) for _ in range(m)
-        ]
-        rows = [(s, d) for s, d in rows if s != d] or [(0, 1)]
-        pr_on, pr_off = _pr_both_tiers(spark, tiers, rows, iters=3)
-        assert pr_on == pr_off, (draw, rows)
-        lpa_on, lpa_off = _lpa_rows_both_tiers(
-            spark, tiers, [(s, d, 1 + (s + d) % 3) for s, d in rows],
-            "src int, dst int, w long", "w", 3,
-        )
-        assert lpa_on == lpa_off, (draw, rows)
-
-
-def _hits_both_tiers(spark, tiers):
-    from hadoop_data_lake_spark.queries.tpch_queries import (
-        hits_hubs_authorities,
-    )
-
-    return tiers.on_off(
-        lambda: sorted(map(tuple, hits_hubs_authorities(spark, SF_DIR).collect()))
-    )
-
-
-def test_hits_driver_tier_bit_identical_e2e(spark, tiers):
-    """The full query at sf0.001 returns byte-identical rows with the
-    numpy driver tier on vs the distributed loop."""
-    fast, dist = _hits_both_tiers(spark, tiers)
-    assert fast == dist
-    assert len(fast) == 20  # top-10 hubs + top-10 authorities
-
-
-def test_hits_numpy_rounds_matches_python_int_reference():
-    """Property check of the EXACTNESS argument: on random bipartite
-    multigraphs (duplicate edges allowed — degree counts then differ per
-    edge, exercising the count step), the numpy recurrence must equal a
-    pure-Python arbitrary-precision integer replay of the distributed
-    semantics (count -> rescale -> sum -> rescale per round)."""
-    import numpy as np
-
-    import hadoop_data_lake_spark.operators.graph as G
-
-    rng = random.Random(0x12C0DE)
-    for _draw in range(4):
-        nh, na = rng.randint(1, 8), rng.randint(1, 6)
-        m = rng.randint(1, 30)
-        rows = [
-            (rng.randint(0, nh - 1), rng.randint(100, 100 + na - 1))
-            for _ in range(m)
-        ]
-        hub_u, hub_i = np.unique([c for c, _ in rows], return_inverse=True)
-        auth_u, auth_i = np.unique([s for _, s in rows], return_inverse=True)
-        h_arr, a_arr = G._hits_numpy_rounds(
-            hub_i, auth_i, len(hub_u), len(auth_u), rounds=2, scale=1_000_000
-        )
-        got_h = dict(zip(hub_u.tolist(), h_arr.tolist()))
-        got_a = dict(zip(auth_u.tolist(), a_arr.tolist()))
-
-        # pure-Python integer reference
-        scale = 1_000_000
-        a = {}
-        for _c, s in rows:
-            a[s] = a.get(s, 0) + 1
-        m_ = max(a.values())
-        a = {k: (v * scale) // m_ for k, v in a.items()}
-        for rnd in range(3):
-            if rnd % 2 == 0:  # hub update from a
-                h = {}
-                for c, s in rows:
-                    h[c] = h.get(c, 0) + a[s]
-                m_ = max(h.values())
-                h = {k: (v * scale) // m_ for k, v in h.items()}
-            else:  # authority update from h
-                a = {}
-                for c, s in rows:
-                    a[s] = a.get(s, 0) + h[c]
-                m_ = max(a.values())
-                a = {k: (v * scale) // m_ for k, v in a.items()}
-        assert got_h == h
-        assert got_a == a
-
-
-def test_hits_query_distributed_path_shape(spark, tiers):
-    """With the tier pinned off, the query's final frame comes from the
-    iterated checkpoint chain (Scan ExistingRDD), not a local collect —
-    the cap-routing probe the r11 tier tests established."""
-    from hadoop_data_lake_spark.queries.tpch_queries import (
-        hits_hubs_authorities,
-    )
-
-    tiers(False)
-    df = hits_hubs_authorities(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" in plan
-
-
-def test_hits_numpy_exactness_at_documented_bounds():
-    """Pins the <2^53 bincount exactness argument at its boundary: with
-    per-node sums right at the documented cap regime (values <= 1e6,
-    4M addends -> sums <= 4e12), float64 accumulation must be exact; and
-    the rescale numerator at the extreme (4e12 * 1e6 = 4e18) must not
-    overflow int64. Pure numpy — no Spark session needed."""
-    import numpy as np
-
-    # worst-case per-node sum at the caps: 4e12 (every addend 1e6 into
-    # one bucket). Use a smaller edge count with the same sum magnitude:
-    # 4_000 addends of 1e9 would NOT occur (values are <= scale=1e6), so
-    # build the real shape — many max-scale addends — and check against
-    # Python bigint arithmetic.
-    m = 400_000
-    w = np.full(m, 1_000_000, dtype=np.int64)
-    idx = np.zeros(m, dtype=np.int64)
-    s = np.bincount(idx, weights=w.astype(np.float64), minlength=1).astype(
-        np.int64
-    )[0]
-    assert s == 1_000_000 * m == sum(int(x) for x in w)
-    assert float(s) < 2**53  # the argument's precondition holds at cap/10
-    # full-cap magnitude: 4e12 is still exactly representable
-    assert np.float64(4_000_000 * 1_000_000) == 4e12 < 2**53
-
-    # rescale numerator at the extreme: int64 arithmetic, no overflow
-    v = np.array([4_000_000_000_000], dtype=np.int64)
-    out = (v * 1_000_000) // v.max()
-    assert out[0] == 1_000_000
-    assert (v * 1_000_000)[0] == 4 * 10**18  # fits int64 (max ~9.22e18)
-
-    # mixed-magnitude exactness: alternating 1 and 1e6 addends sum
-    # bit-identically to Python bigints
-    w2 = np.tile(np.array([1, 1_000_000], dtype=np.int64), 50_000)
-    got = np.bincount(
-        np.zeros(len(w2), dtype=np.int64), weights=w2.astype(np.float64)
-    ).astype(np.int64)[0]
-    assert int(got) == sum(int(x) for x in w2)
 
 
 def _lpa_both_tiers(spark, tiers, rows, iters=4):
@@ -807,42 +456,6 @@ def _lpa_both_tiers(spark, tiers, rows, iters=4):
             )
         )
     )
-
-
-def test_lpa_driver_tier_null_weights_no_crash(spark, tiers):
-    """ADVICE r11: a NULL edge weight raised TypeError in the driver
-    tier while the distributed loop's F.sum silently skipped it. Both
-    paths must agree bit-for-bit on a graph mixing null and non-null
-    weights (the driver-tier gate now declines NULL weights, so the
-    distributed loop answers both runs)."""
-    rows = [
-        ("a", "b", None),   # null weight inside a group that also has a 3
-        ("a", "b", 3),
-        ("b", "c", 5),
-        ("c", "d", None),   # group with ONLY null weights (SQL sum -> NULL)
-        ("x", "y", 2),      # clean separate component
-    ]
-    fast, dist = _lpa_both_tiers(spark, tiers, rows)
-    assert fast == dist
-    assert len(fast) == 6
-
-
-def test_lpa_driver_tier_null_vs_zero_ranking(spark, tiers):
-    """The semantic corner the 'treat null as 0' shortcut gets wrong:
-    a candidate label whose weight sum is 0 must BEAT a candidate whose
-    sum is SQL-NULL (desc ranks nulls last), even when the null label
-    sorts first alphabetically."""
-    # vertex "v" sees label-candidates via neighbors "aa" (null weight,
-    # lexically smaller) and "zz" (weight 0). Distributed: sum(null)=NULL
-    # loses to 0 under desc-nulls-last, so v adopts "zz".
-    rows = [
-        ("v", "aa", None),
-        ("v", "zz", 0),
-    ]
-    fast, dist = _lpa_both_tiers(spark, tiers, rows, iters=1)
-    assert fast == dist
-    v_row = [r for r in fast if r[0] == "v"]
-    assert v_row and v_row[0][1] == "zz"
 
 
 def test_lpa_null_weight_property_random_graphs(spark, tiers):
@@ -1025,159 +638,6 @@ def test_pagerank_deg_col_property_random_graphs(spark, tiers):
         assert len(outs) == 1, (draw, rows)
 
 
-def _sides(df):
-    return sorted(map(tuple, df.collect()))
-
-
-def test_hits_topk_fused_property_random_bipartite(spark):
-    """Random bipartite multigraphs: the fused tier and the DISTRIBUTED
-    loop (the graded query's fallback shape) must agree bit-for-bit on the
-    (side, node, score) rows. Duplicate edges arise naturally, so the
-    fused tier's np.unique pair dedupe must equal SQL DISTINCT. Seeded
-    stdlib RNG, one Spark pipeline per draw."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    import hadoop_data_lake_spark.operators.graph as G
-    from hadoop_data_lake_spark.queries.tpch_queries import _hits_top_sides
-
-    rng = random.Random(0x14817)
-    for draw in range(3):
-        n_hub = rng.randint(1, 8)
-        n_auth = rng.randint(1, 6)
-        m = rng.randint(1, 30)
-        rows = [
-            (rng.randint(0, n_hub - 1), 100 + rng.randint(0, n_auth - 1))
-            for _ in range(m)
-        ]
-        raw = spark.createDataFrame(rows, "c long, s long")
-        k = rng.randint(1, 5)
-        fused = G.hits_topk_sides_driver(
-            raw, "c", "s", rounds=2, k=k, n_edges_bound=m
-        )
-        assert fused is not None, draw
-        e = raw.distinct().localCheckpoint(eager=True)
-
-        # distributed loop: replay the graded query's fallback shape
-        def rescale(df):
-            df = df.localCheckpoint(eager=True)
-            mx = df.agg(F.max("v").alias("m"))
-            return df.crossJoin(F.broadcast(mx)).select(
-                df.columns[0], F.expr("v * 1000000 div m").alias("v")
-            )
-
-        a_d = rescale(e.groupBy("s").agg(F.count("*").cast("long").alias("v")))
-        h_d = rescale(e.join(a_d, "s").groupBy("c").agg(F.sum("v").alias("v")))
-        a_d = rescale(e.join(h_d, "c").groupBy("s").agg(F.sum("v").alias("v")))
-        h_d = rescale(e.join(a_d, "s").groupBy("c").agg(F.sum("v").alias("v")))
-        dist = _hits_top_sides(h_d, a_d)
-
-        # k may trim: compare fused against the k-trimmed reference sides
-        def trim(sides_rows, kk):
-            hubs = [r for r in sides_rows if r[0] == "hub"]
-            auths = [r for r in sides_rows if r[0] == "auth"]
-            key = lambda r: (-r[2], r[1])
-            return sorted(sorted(hubs, key=key)[:kk] + sorted(auths, key=key)[:kk])
-
-        assert _sides(fused) == trim(_sides(dist), k), draw
-
-
-def test_hits_topk_fused_cap_routing(spark, tiers):
-    """Bound/envelope violations must decline (None), including an
-    unsound caller bound discovered post-collect."""
-    import hadoop_data_lake_spark.core.driver_tier as DT
-    import hadoop_data_lake_spark.operators.graph as G
-
-    raw = spark.createDataFrame([(1, 10), (2, 10)], "c long, s long")
-    assert G.hits_topk_sides_driver(raw, "c", "s", n_edges_bound=None) is None
-    assert (
-        G.hits_topk_sides_driver(
-            raw, "c", "s", n_edges_bound=DT.NUMPY_MAX_ROWS + 1
-        )
-        is None
-    )
-    # envelope: scale^2 * bound >= 2^63 (scale=1e6 -> bound 1e7 breaks 2^53 first)
-    assert (
-        G.hits_topk_sides_driver(raw, "c", "s", scale=1, n_edges_bound=2**53)
-        is None
-    )
-    # unsound bound: promised 1, collected 2
-    assert G.hits_topk_sides_driver(raw, "c", "s", n_edges_bound=1) is None
-    # mixed node types decline
-    mixed = spark.createDataFrame([(1, 10)], "c int, s long")
-    assert G.hits_topk_sides_driver(mixed, "c", "s", n_edges_bound=1) is None
-    # disabled tier declines
-    tiers(False)
-    assert G.hits_topk_sides_driver(raw, "c", "s", n_edges_bound=2) is None
-
-
-def test_hits_fused_declines_string_node_columns(spark):
-    import hadoop_data_lake_spark.operators.graph as G
-
-    e = spark.createDataFrame(
-        [("u1", "v1"), ("u2", "v1")], "c string, s string"
-    )
-    assert G.hits_topk_sides_driver(e, "c", "s", n_edges_bound=2) is None
-
-
-def test_hits_fused_declines_decimal_node_columns(spark):
-    import hadoop_data_lake_spark.operators.graph as G
-    from pyspark.sql import functions as F
-
-    e = spark.createDataFrame([(1, 10), (2, 10)], "c long, s long").select(
-        F.col("c").cast("decimal(10,0)").alias("c"),
-        F.col("s").cast("decimal(10,0)").alias("s"),
-    )
-    assert G.hits_topk_sides_driver(e, "c", "s", n_edges_bound=2) is None
-
-
-def test_hits_fused_still_runs_on_int_columns(spark):
-    import hadoop_data_lake_spark.operators.graph as G
-
-    e = spark.createDataFrame([(1, 10), (2, 10), (1, 10)], "c int, s int")
-    out = G.hits_topk_sides_driver(e, "c", "s", n_edges_bound=3)
-    assert out is not None and out.count() > 0
-
-
-def test_hits_query_skips_tier_and_its_count_when_disabled(spark, monkeypatch, tiers):
-    """With the tiers pinned off, the fused tier must decline without
-    running a single Spark job (no bound count, no collect — ADVICE r14),
-    and the distributed fallback must still answer."""
-    import hadoop_data_lake_spark.operators.graph as G
-    from hadoop_data_lake_spark.queries.tpch_queries import (
-        hits_hubs_authorities,
-    )
-
-    sc = spark.sparkContext
-    calls = []
-    orig = G.hits_topk_sides_driver
-
-    def spy(*a, **k):
-        sc.setLocalProperty("spark.jobGroup.id", "hits-tier-off")
-        try:
-            out = orig(*a, **k)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        calls.append(out)
-        return out
-
-    tiers(False)
-    monkeypatch.setattr(G, "hits_topk_sides_driver", spy)
-    rows = hits_hubs_authorities(spark, SF_DIR).collect()
-    assert len(rows) == 20
-    assert calls == [None]
-    assert sc.statusTracker().getJobIdsForGroup("hits-tier-off") == []
-
-
-def test_fused_docstring_names_the_edge_cap():
-    import hadoop_data_lake_spark.operators.graph as G
-
-    doc = G.hits_topk_sides_driver.__doc__
-    assert "NUMPY_MAX_ROWS" in doc
-    assert "byte cap and the exactness envelope" not in doc
-
-
 def _cc_both_ways(tiers, df):
     return tiers.on_off(
         lambda: {
@@ -1248,40 +708,3 @@ def test_dedup_clusters_identity_tier_on_off(spark, tiers):
     a, b = tiers.on_off(lambda: {tuple(r) for r in G.dedup_clusters(df).collect()})
     assert a == b
     assert {(1, 1, 3), (2, 1, 3), (3, 1, 3)} <= a
-
-
-def test_cc_driver_labels_declines_on_null_ids(spark, tiers):
-    raw = spark.createDataFrame(
-        [(1, 2), (None, 3)],
-        StructType([StructField("u", LongType()), StructField("v", LongType())]),
-    ).localCheckpoint(eager=True)
-    assert G._cc_driver_labels(raw) is None  # decline, not TypeError
-
-
-def test_dedup_clusters_over_cap_matches_tier(spark, tiers, monkeypatch):
-    """The refactored decline path (_cc_distributed on the caller's own
-    checkpoint — no re-checkpoint, no second tier gate) labels exactly
-    like the driver tier."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (5, 5), (3, 1)],
-        StructType(
-            [StructField("doc_a", LongType()), StructField("doc_b", LongType())]
-        ),
-    )
-    want = {
-        (r["doc"], r["cluster_rep"], r["cluster_size"])
-        for r in G.dedup_clusters(pairs).collect()
-    }
-    monkeypatch.setattr(DT, "MAX_ROWS", 2)  # force decline
-    got = {
-        (r["doc"], r["cluster_rep"], r["cluster_size"])
-        for r in G.dedup_clusters(pairs).collect()
-    }
-    assert got == want == {
-        (1, 1, 3),
-        (2, 1, 3),
-        (3, 1, 3),
-        (10, 10, 2),
-        (11, 10, 2),
-        (5, 5, 1),
-    }

@@ -15,7 +15,6 @@ from hadoop_data_lake_spark.pipelines.geotag import events_with_city
 from hadoop_data_lake_spark.pipelines.recommendations import recommend_pairs
 from hadoop_data_lake_spark.pipelines.user_city import user_city_datamart
 from hadoop_data_lake_spark.pipelines.zone_report import zone_report_from_mes_geo
-from tests.conftest import SF_DIR
 from tests.fixtures import make_events, make_geo
 
 
@@ -201,24 +200,3 @@ def test_zone_report_registrations_match_the_two_branch_definition(spark):
     assert by_week[(1, 5)] == 2  # user 1 and the NULL user
     assert by_week[(8, 7)] == 0
     assert by_week[(3, 3)] == 1 and by_week[(3, 4)] == 0
-
-
-def test_zone_report_values_survive_checkpoint_swap(spark):
-    """The persist->localCheckpoint swap must be value-neutral: the
-    flagship report at sf0.001 keeps its known grain and row count, and
-    week/month totals stay internally consistent (the week total of a
-    (week, month, zone) cell >= the cell's own count)."""
-    from pyspark.sql import functions as F
-
-    from hadoop_data_lake_spark.queries.registry import REGISTRY
-
-    df = REGISTRY["zone_report"].fn(spark, SF_DIR)
-    rows = df.count()
-    assert rows > 0
-    assert df.select("week", "month", "zone_id").distinct().count() == rows
-    bad = df.where(
-        (F.col("week_purchase") < 0)
-        | (F.col("week_user") < 0)
-        | (F.col("month_user") < 0)
-    ).count()
-    assert bad == 0

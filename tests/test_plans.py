@@ -1,7 +1,6 @@
 """Physical-plan regression tests: the scale properties README claims must
 actually show up in the executed plans (broadcasts, pushdown, partial
-aggregation, WindowGroupLimit, no Python in JVM-only paths, pinned fact
-scan counts), and tools/plan_audit.py's checks."""
+aggregation, WindowGroupLimit, no Python in JVM-only paths), and tools/plan_audit.py's checks."""
 
 import pytest
 
@@ -493,45 +492,3 @@ def test_fact_rescan_allowlist_empty():
     from tools.plan_audit import FACT_RESCAN_ALLOW
 
     assert FACT_RESCAN_ALLOW == set()
-
-
-_PINNED = [
-    ("zone_report", {"events": 0}),
-    ("dedup_minhash_lsh", {"documents": 0}),
-    ("decontaminate_minhash_cross", {"documents": 0}),
-    ("dedup_clusters_minhash", {"documents": 0}),
-    ("embedding_near_dup", {"embeddings": 2}),
-    ("decontamination_report", {"documents": 2, "embeddings": 2}),
-    # snapshot sims: the simulated old/new snapshots derive from ONE
-    # checkpointed projection per physical table (was orders x4 / x5 +
-    # customer x6 through the alias-differing delta subtrees)
-    ("incremental_orders_agg", {"orders": 0}),
-    ("ivm_join_delta", {"orders": 0, "customer": 0}),
-]
-
-
-def _scan_counts(spark, name):
-    import re
-    from collections import Counter
-
-    from hadoop_data_lake_spark.queries.registry import REGISTRY
-
-    plan = (
-        REGISTRY[name].fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
-    )
-    c = Counter()
-    for line in plan.splitlines():
-        if "FileScan" in line:
-            c.update(re.findall(r"(\w+)\.parquet", line))
-    return c
-
-
-@pytest.mark.parametrize("name,limits", _PINNED, ids=[p[0] for p in _PINNED])
-def test_rebaseline_plans_are_single_pass(spark, name, limits):
-    counts = _scan_counts(spark, name)
-    for table, max_scans in limits.items():
-        assert counts.get(table, 0) <= max_scans, (
-            f"{name}: {table} scanned {counts.get(table, 0)}x "
-            f"(pinned <= {max_scans}) — the r10 checkpoint restructuring "
-            f"regressed; full counts: {dict(counts)}"
-        )

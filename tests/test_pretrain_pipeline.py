@@ -87,20 +87,6 @@ def test_embedding_decontamination_flags_exactly_planted_probes(spark):
     assert all(0.9 <= r["sim_r"] < 1.0 for r in rows)
 
 
-def test_split_audit_leak_fold_matches_distributed(spark, tiers):
-    """The r16 driver leak fold (Python md5 over the collected pair list)
-    must equal the distributed leak joins row-for-row — including the
-    md5(cast(id as string)) replication and the leak_c == 0 invariant."""
-    from hadoop_data_lake_spark.queries.registry import REGISTRY
-
-    fn = REGISTRY["cluster_safe_split_audit"].fn
-    on, off = tiers.on_off(lambda: sorted(map(tuple, fn(spark, SF_DIR).collect())))
-    assert on == off
-    by_kind = {r[0]: r for r in on}
-    assert by_kind["cluster_aware"][3] == 0  # no leaks by construction
-    assert by_kind["cluster_aware"][1] + by_kind["cluster_aware"][2] == 500
-
-
 def test_pretrain_funnel_counts_each_stage_inside_its_checkpoint(spark):
     """Each stage's row count is observed during the stage's eager
     checkpoint job. A separate count() per stage ran 63 jobs for a warm

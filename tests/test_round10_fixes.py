@@ -24,8 +24,7 @@ rescan (the audit would catch >= 4; these pin the actual <= 2 contract).
 """
 
 import pytest
-
-SF = "/root/testdata/sf0.001"
+from conftest import SF_DIR
 
 # (query, {fact_table: max allowed FileScan lines in the pre-execution plan})
 _PINNED = [
@@ -50,7 +49,7 @@ def _scan_counts(spark, name):
     from hadoop_data_lake_spark.queries.registry import REGISTRY
 
     plan = (
-        REGISTRY[name].fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+        REGISTRY[name].fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
     )
     c = Counter()
     for line in plan.splitlines():
@@ -68,54 +67,6 @@ def test_rebaseline_plans_are_single_pass(spark, name, limits):
             f"(pinned <= {max_scans}) — the r10 checkpoint restructuring "
             f"regressed; full counts: {dict(counts)}"
         )
-
-
-def test_scale_probe_embedding_replication_is_orthogonal(spark):
-    """tools/scale_probe_100x._scaled_embeddings_orth must preserve
-    within-copy cosines EXACTLY (per-copy sign-flip = orthogonal diagonal)
-    and scramble cross-copy twins to ~0 — identical replication would
-    plant a quadratic true-pair set and re-create the phantom
-    super-linear trap the docs token masking avoids."""
-    import sys
-
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    sys.path.insert(0, "tools")
-    from scale_probe_100x import _scaled_embeddings_orth
-
-    mult = 3
-    base = {
-        r["vec_id"]: np.array(r["embedding"], dtype=float)
-        for r in spark.read.parquet(f"{SF}/embeddings.parquet").limit(6).collect()
-    }
-    ids = list(base)
-    wanted = [i * mult + rep for i in ids for rep in range(mult)]
-    scaled = {
-        r["vec_id"]: np.array(r["embedding"], dtype=float)
-        for r in _scaled_embeddings_orth(spark, SF, mult)
-        .where(F.col("vec_id").isin(wanted))
-        .collect()
-    }
-
-    def cos(a, b):
-        return float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
-
-    # within-copy: cosine of every pair equals the base cosine (exact up to
-    # float assembly noise)
-    for rep in range(mult):
-        for i in ids[:3]:
-            for j in ids[3:]:
-                got = cos(scaled[i * mult + rep], scaled[j * mult + rep])
-                want = cos(base[i], base[j])
-                assert abs(got - want) < 1e-9, (rep, i, j, got, want)
-    # cross-copy twins (same base vector, different masks): |cos| well
-    # below the 0.95 near-dup threshold
-    for i in ids:
-        for r1 in range(mult):
-            for r2 in range(r1 + 1, mult):
-                c = cos(scaled[i * mult + r1], scaled[i * mult + r2])
-                assert abs(c) < 0.6, (i, r1, r2, c)
 
 
 # ---------------------------------------------------------------------------
@@ -250,14 +201,14 @@ def test_stream_replay_over_empty_source(spark, tmp_path):
 
     from hadoop_data_lake_spark.queries.registry import REGISTRY
 
-    src = spark.read.parquet(f"{SF}/events.parquet")
+    src = spark.read.parquet(f"{SF_DIR}/events.parquet")
     tmp = str(tmp_path / "part")
     src.limit(0).coalesce(1).write.parquet(tmp)
     dest = str(tmp_path / "events.parquet")
     shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], dest)
     for other in ("documents", "embeddings", "orders", "lineitem", "customer",
                   "supplier", "part", "nation", "region"):
-        p = f"{SF}/{other}.parquet"
+        p = f"{SF_DIR}/{other}.parquet"
         import os
         if os.path.exists(p):
             os.symlink(p, str(tmp_path / f"{other}.parquet"))
@@ -269,26 +220,6 @@ def test_stream_replay_over_empty_source(spark, tmp_path):
         assert len(out.schema.fields) > 0, f"{name} lost its output schema"
 
 
-def test_correctness_file_epoch_untracked_falls_back_to_mtime(tmp_path, monkeypatch, capsys):
-    """VERDICT r9 items 2+3: `git log -1` on an untracked CORRECTNESS file
-    returns nothing, and the old code dated it to epoch 0 — every row of
-    the newest round printed as 'stale by ~20000d' and the raw stale count
-    doubled. Untracked files now fall back to file mtime (with a warning);
-    tracked files keep their commit epoch."""
-    import os
-
-    from tools.backlog_report import correctness_file_epoch
-
-    tracked = correctness_file_epoch("CORRECTNESS_r01.json")
-    assert tracked > 1_600_000_000  # a real commit epoch, not 0
-
-    f = tmp_path / "CORRECTNESS_rXX.json"
-    f.write_text("{}")
-    ep = correctness_file_epoch(str(f))
-    assert abs(ep - os.path.getmtime(str(f))) < 2
-    assert "untracked" in capsys.readouterr().err
-
-
 def test_zone_report_values_survive_checkpoint_swap(spark):
     """The persist->localCheckpoint swap must be value-neutral: the
     flagship report at sf0.001 keeps its known grain and row count, and
@@ -298,7 +229,7 @@ def test_zone_report_values_survive_checkpoint_swap(spark):
 
     from hadoop_data_lake_spark.queries.registry import REGISTRY
 
-    df = REGISTRY["zone_report"].fn(spark, SF)
+    df = REGISTRY["zone_report"].fn(spark, SF_DIR)
     rows = df.count()
     assert rows > 0
     assert df.select("week", "month", "zone_id").distinct().count() == rows

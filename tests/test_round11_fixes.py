@@ -79,7 +79,7 @@ def test_degenerate_sweep_plans_mode_builds_table_cases(spark):
 
 def test_scaled_params_law():
     """similarity.scaled_srp_params / scaled_ivf_params — the measured ANN
-    scale law (tools/scale_probe_100x.py LSH_SCALED / IVF_SCALED) as an
+    scale law (the 100x probe's LSH_SCALED / IVF_SCALED in BENCH_NOTES.md) as an
     API. At the graded corpus size the law lands exactly on the shipped
     registry defaults; at every size the derived (bands, bits) must hold
     the banded recall bound >= 98% at the 0.95 threshold and keep the
@@ -224,28 +224,6 @@ def test_ivf_scan_budget_knob(spark):
     # query's whole cluster — even the minimal budget clears 0.9
     assert r_small >= 0.9
 
-
-def test_stale_ladder_excludes_rows_only():
-    """VERDICT r10 item 3: the re-grade ladder must never schedule a
-    rows-only query (no DuckDB oracle -> the driver row is guaranteed
-    `no_oracle`, a wasted slot). ann_ivf_kmeans is the regression case —
-    graded twice (r2, r10) for no value hash, and re-dated again by the
-    r11 auto_scale change, so without the filter it WOULD be on the
-    ladder."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from backlog_report import stale_ladder
-
-    from hadoop_data_lake_spark.queries.registry import REGISTRY
-
-    assert REGISTRY["ann_ivf_kmeans"].oracle is None  # fixture sanity
-    ladder = stale_ladder()
-    names = {name for _, name, _ in ladder}
-    assert "ann_ivf_kmeans" not in names
-    for name in names:
-        assert REGISTRY[name].oracle is not None, name
 
 
 def test_hits_uses_public_broadcast_helper():

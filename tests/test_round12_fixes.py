@@ -20,9 +20,8 @@
 import random
 
 import pytest
+from conftest import SF01_DIR, SF_DIR
 from pyspark.sql import functions as F
-
-SF_DIR = "/root/testdata/sf0.001"
 
 
 # ---------------------------------------------------------------- HITS tier
@@ -172,7 +171,7 @@ def test_lpa_driver_tier_null_vs_zero_ranking(spark, tiers):
 def test_run_scale_tier_restores_flag_on_exception(monkeypatch, tiers, orig_value):
     """ADVICE r11: an exception mid-scale-tier must not leave the driver
     tier disabled process-wide, and the restore must honor a caller that
-    had deliberately disabled it (the tools/scale_probe_100x pattern)."""
+    had deliberately disabled it (the 100x scale probe's pattern)."""
     import bench
     import hadoop_data_lake_spark.core.driver_tier as DT
 
@@ -369,7 +368,7 @@ def test_to_units_matches_round_on_every_real_money_column(spark):
     from hadoop_data_lake_spark.core.io import read_table
     from hadoop_data_lake_spark.functions.fixedpoint import to_units
 
-    sf = "/root/testdata/sf0.01"
+    sf = SF01_DIR
     cols = {
         "lineitem": [("l_quantity", 2), ("l_extendedprice", 2),
                      ("l_discount", 2), ("l_tax", 2)],

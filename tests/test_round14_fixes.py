@@ -3,9 +3,6 @@
 - __main__.main: ANN_DEPLOY_OVERRIDES is snapshot/restored rather than
   cleared, so an in-process caller that pre-set overrides and then calls
   main() gets its state back — main() undoes only its OWN changes.
-- tools/backlog_report.py assert_artifacts: fails CLOSED when git itself
-  fails (empty stdout from a failed `git status` must not read as "all
-  committed").
 - tests/test_fixedpoint_contract_lint.py collectors: a kernel call inside
   a nested function is counted exactly once, and module-level kernel
   calls are collected (they previously escaped both the grammar and the
@@ -13,13 +10,10 @@
 """
 
 import ast
-import subprocess
-import sys
 import types
 
 import pytest
-
-SF_DIR = "/root/testdata/sf0.001"
+from conftest import SF_DIR
 
 
 # ------------------------------------------------- CLI override snapshot
@@ -78,27 +72,6 @@ def test_cli_restores_preset_overrides_after_success(spark, monkeypatch):
     assert seen == {"scan_budget": 0.125, "auto_scale": True}
     # after: exactly the caller's preset, the CLI's own change undone
     assert SIM.ANN_DEPLOY_OVERRIDES == preset
-
-
-# ------------------------------------------------- artifacts gate fail-closed
-
-
-def test_assert_artifacts_fails_closed_outside_git(tmp_path):
-    """ADVICE r13: when `git status` itself fails (not a repo), the gate
-    must exit non-zero instead of reading the empty stdout as clean."""
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "tools", "backlog_report.py"),
-         "--artifacts"],
-        cwd=tmp_path,
-        capture_output=True,
-        text=True,
-        env={**os.environ, "GIT_CEILING_DIRECTORIES": str(tmp_path)},
-    )
-    assert proc.returncode != 0
-    assert "git status failed" in proc.stderr or "fatal" in proc.stderr.lower()
 
 
 # ------------------------------------------------- lint collector scoping
@@ -297,7 +270,7 @@ def test_scaled_sweep_variant_matches_own_oracle(spark, tmp_path):
         SCALED_SWEEP_VARIANTS,
     )
 
-    sf_dir = "/root/testdata/sf0.001"
+    sf_dir = SF_DIR
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -322,9 +295,8 @@ def test_scaled_sweep_variant_matches_own_oracle(spark, tmp_path):
 
 
 def test_round_gate_close_covers_the_checklist():
-    """The --close step list must keep covering every gate the round
-    checklist requires (a silently dropped step is a silently skipped
-    gate)."""
+    """The gate's one step list must keep covering every close-out check,
+    in order (a silently dropped step is a silently skipped gate)."""
     import importlib.util
     import os
 
@@ -334,24 +306,26 @@ def test_round_gate_close_covers_the_checklist():
     )
     rg = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(rg)
-    names = [n for n, _ in rg.close_steps()]
+    names = [n for n, _ in rg.steps()]
     assert names == [
-        "rotation-assert",
         "oracle-sf0.001",
         "window-sf0.01",
         "window-sf0.1",
+        "oracle-sf0.1-full",
         "pytest",
+        "pytest-perfbench",
         "plan-audit",
         "degenerate",
         "degenerate-plans",
         "entry-smoke",
-        "oracle-sf0.1-full",
     ]
-    steps = dict(rg.close_steps())
+    steps = dict(rg.steps())
     # the sf0.1 checks must carry the scaled-variant flag; the smaller
-    # scales must NOT (check_oracle exits 2 on misuse since r15)
+    # scales must NOT (check_oracle exits 2 on misuse)
     assert "--scaled-variants" in steps["window-sf0.1"]
     assert "--scaled-variants" in steps["oracle-sf0.1-full"]
     assert "--scaled-variants" not in steps["window-sf0.01"]
     assert "--scaled-variants" not in steps["oracle-sf0.001"]
-    assert [n for n, _ in rg.open_steps()] == ["artifacts", "stale-ladder"]
+    # both pytest steps run with the tier-1 flags
+    for name, target in (("pytest", "tests/"), ("pytest-perfbench", "perfbench/tests")):
+        assert target in steps[name] and "no:cacheprovider" in steps[name], name

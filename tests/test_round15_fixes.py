@@ -11,13 +11,14 @@
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 import pytest
-from conftest import SF_DIR
+from conftest import SF01_DIR, SF_DIR
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_hits_fused_declines_string_node_columns(spark):
@@ -72,7 +73,7 @@ def test_hits_query_skips_tier_and_its_count_when_disabled(spark, monkeypatch, t
 
     tiers(False)
     monkeypatch.setattr(G, "hits_topk_sides_driver", spy)
-    rows = hits_hubs_authorities(spark, "/root/testdata/sf0.001").collect()
+    rows = hits_hubs_authorities(spark, SF_DIR).collect()
     assert len(rows) == 20
     assert calls == [None]
     assert sc.statusTracker().getJobIdsForGroup("hits-tier-off") == []
@@ -83,7 +84,7 @@ def test_check_oracle_rejects_scaled_variants_at_graded_scales():
         [
             sys.executable,
             "tools/check_oracle.py",
-            "/root/testdata/sf0.01",
+            SF01_DIR,
             "--scaled-variants",
             "linkage_jaro_winkler",
         ],
@@ -213,7 +214,7 @@ def test_replay_results_invariant_to_session_partition_count(spark, session_conf
 def test_replay_results_invariant_to_state_partition_count(spark, monkeypatch):
     from hadoop_data_lake_spark.streaming import ingest
 
-    path = "/root/testdata/sf0.001/events.parquet"
+    path = f"{SF_DIR}/events.parquet"
 
     def session_keys(setting):
         monkeypatch.setattr(ingest, "REPLAY_STATE_PARTITIONS", setting)

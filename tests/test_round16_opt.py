@@ -17,6 +17,7 @@
 """
 
 import pytest
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -244,7 +245,7 @@ def test_value_psi_drift_driver_fold_matches_distributed(spark, tiers):
     from hadoop_data_lake_spark.queries.registry import REGISTRY
 
     fn = REGISTRY["value_psi_drift"].fn
-    sf = "/root/testdata/sf0.001"
+    sf = SF_DIR
     on, off = tiers.on_off(lambda: sorted(map(tuple, fn(spark, sf).collect())))
     assert on == off
     assert len(on) == 10 and {r[0] for r in on} == set(range(10))
@@ -260,7 +261,7 @@ def test_split_audit_leak_fold_matches_distributed(spark, tiers):
     from hadoop_data_lake_spark.queries.registry import REGISTRY
 
     fn = REGISTRY["cluster_safe_split_audit"].fn
-    sf = "/root/testdata/sf0.001"
+    sf = SF_DIR
     on, off = tiers.on_off(lambda: sorted(map(tuple, fn(spark, sf).collect())))
     assert on == off
     by_kind = {r[0]: r for r in on}

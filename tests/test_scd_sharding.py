@@ -5,7 +5,6 @@ import pyspark.sql.functions as F
 
 from hadoop_data_lake_spark.operators.packing import shuffle_shard_plan
 from hadoop_data_lake_spark.operators.scd import scd2_collapse
-from tests.conftest import SF_DIR
 
 
 def test_scd2_collapses_runs_into_intervals(spark):
@@ -107,22 +106,3 @@ def test_scd2_single_shuffle(spark):
     out = scd2_collapse(df, "user_id", ["ts", "event_id"], "a")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
-
-
-def test_shard_lpt_plan_is_balanced_and_complete(spark):
-    """Snake placement: all docs placed, 8 shards, and the heaviest shard
-    is within one max-document of the lightest."""
-    from hadoop_data_lake_spark.core.io import read_table
-    from hadoop_data_lake_spark.queries.northstar_queries import shard_lpt_plan
-    from pyspark.sql import functions as F
-
-    rows = shard_lpt_plan(spark, SF_DIR).collect()
-    assert sorted(r["shard"] for r in rows) == list(range(8))
-    docs = read_table(spark, SF_DIR, "documents")
-    n_docs = docs.count()
-    assert sum(r["n_docs"] for r in rows) == n_docs
-    max_doc = docs.select(
-        F.max(F.size(F.split(F.col("text"), " "))).alias("m")
-    ).collect()[0]["m"]
-    toks = [r["toks"] for r in rows]
-    assert max(toks) - min(toks) <= max_doc

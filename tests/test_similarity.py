@@ -595,151 +595,3 @@ def test_kmeans_and_pq_empty_corpus(spark):
     out = ivf_kmeans_topk(emb, emb, k=5, n_cells=4, max_iter=2)
     assert out.columns == ["query_id", "neighbor_id", "sim_r", "rnk"]
     assert out.count() == 0
-
-
-def test_scaled_params_law():
-    """similarity.scaled_srp_params / scaled_ivf_params — the measured ANN
-    scale law (the 100x probe's LSH_SCALED / IVF_SCALED in BENCH_NOTES.md) as an
-    API. At the graded corpus size the law lands exactly on the shipped
-    registry defaults; at every size the derived (bands, bits) must hold
-    the banded recall bound >= 98% at the 0.95 threshold and keep the
-    collision term bands/2^bits under the 1x default's."""
-    import math
-
-    from hadoop_data_lake_spark.operators.similarity import (
-        scaled_ivf_params,
-        scaled_srp_params,
-    )
-
-    # graded scale (sf0.01 embeddings corpus, n = 500): exactly the
-    # registry defaults
-    assert scaled_srp_params(500) == (8, 8)
-    assert scaled_ivf_params(500) == (8, 2)
-    # the measured probe anchors (LSH_SCALED / IVF_SCALED at 10x/100x of
-    # the n=500 base): same occupancy regime as the hand-tuned values
-    assert scaled_srp_params(5000) == (12, 12)  # hand: (12, 12)
-    assert scaled_srp_params(50000) == (18, 15)  # hand: (24, 16)
-    assert scaled_ivf_params(5000) == (24, 3)  # hand: (25, 3)
-    assert scaled_ivf_params(50000) == (75, 4)  # hand: (80, 4)
-
-    p = 1 - math.acos(0.95) / math.pi
-    base_collision = 8 / 2**8
-    for n in (100, 6_000, 60_000, 600_000, 6_000_000, 10**9):
-        bands, bits = scaled_srp_params(n)
-        recall = 1 - (1 - p**bits) ** bands
-        assert recall >= 0.98, (n, bands, bits, recall)
-        assert bands / 2**bits <= base_collision, (n, bands, bits)
-        n_cells, nprobe = scaled_ivf_params(n)
-        assert 1 <= nprobe <= n_cells
-    # monotone bucket growth: bigger corpora never get fewer bits/cells
-    bits_seq = [scaled_srp_params(10**e)[1] for e in range(2, 10)]
-    assert bits_seq == sorted(bits_seq)
-    cells_seq = [scaled_ivf_params(10**e)[0] for e in range(2, 10)]
-    assert cells_seq == sorted(cells_seq)
-
-
-def test_auto_scale_is_opt_in_and_value_consistent(spark):
-    """auto_scale=True must (a) not change the default code path (opt-in),
-    (b) produce exactly the pairs the explicit scaled parameters produce,
-    and (c) still find planted near-duplicates."""
-    import numpy as np
-    from hadoop_data_lake_spark.operators.similarity import (
-        cosine_near_dup_pairs,
-        ivf_kmeans_topk,
-        scaled_srp_params,
-    )
-
-    rng = np.random.default_rng(7)
-    base = rng.standard_normal((40, 64))
-    rows = []
-    for i, v in enumerate(base):
-        v = v / np.linalg.norm(v)
-        rows.append((i, [float(x) for x in v]))
-        if i < 5:  # plant a near-dup twin (tiny perturbation)
-            w = v + 0.01 * rng.standard_normal(64)
-            w = w / np.linalg.norm(w)
-            rows.append((1000 + i, [float(x) for x in w]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    n = df.count()
-    bands, bits = scaled_srp_params(n)
-    explicit = {
-        (r["id_a"], r["id_b"])
-        for r in cosine_near_dup_pairs(
-            df, threshold=0.95, num_bands=bands, bits_per_band=bits
-        ).collect()
-    }
-    auto = {
-        (r["id_a"], r["id_b"])
-        for r in cosine_near_dup_pairs(df, threshold=0.95, auto_scale=True).collect()
-    }
-    assert auto == explicit
-    planted = {(i, 1000 + i) for i in range(5)}
-    assert planted <= auto
-
-    out = ivf_kmeans_topk(
-        df, df.where("vec_id < 3"), k=2, auto_scale=True
-    ).collect()
-    assert {r["query_id"] for r in out} == {0, 1, 2}
-    assert all(1 <= r["rnk"] <= 2 for r in out)
-
-
-def test_ivf_scan_budget_knob(spark):
-    """scan_budget is the measured multi-probe recall lever (VERDICT r10
-    item 7): nprobe = ceil(budget * n_cells). At budget 1.0 every cell is
-    probed, so IVF must return EXACTLY the brute-force top-k (same scoring
-    and tie-break); at a partial budget recall must be monotone in the
-    budget on a clustered corpus."""
-    import numpy as np
-    from hadoop_data_lake_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_kmeans_topk,
-        scaled_ivf_params,
-    )
-
-    # parameter arithmetic
-    for n in (5_000, 600_000):
-        cells, _ = scaled_ivf_params(n)
-        assert scaled_ivf_params(n, scan_budget=1.0) == (cells, cells)
-        _, p24 = scaled_ivf_params(n, scan_budget=0.24)
-        assert 1 <= p24 <= cells and p24 >= 0.24 * cells
-    # graded default path unchanged by the knob's existence
-    assert scaled_ivf_params(500) == (8, 2)
-
-    # clustered corpus: 8 well-separated centers, 30 points each
-    rng = np.random.default_rng(11)
-    centers = rng.standard_normal((8, 64)) * 10
-    rows = []
-    for i in range(240):
-        v = centers[i % 8] + 0.1 * rng.standard_normal(64)
-        v = v / np.linalg.norm(v)
-        rows.append((i, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = df.where("vec_id < 8")
-
-    truth = {
-        (r["query_id"], r["neighbor_id"], r["rnk"])
-        for r in brute_force_topk(df, q, k=3).collect()
-    }
-    full = {
-        (r["query_id"], r["neighbor_id"], r["rnk"])
-        for r in ivf_kmeans_topk(
-            df, q, k=3, auto_scale=True, scan_budget=1.0
-        ).collect()
-    }
-    assert full == truth
-
-    def recall(budget):
-        got = {
-            (r["query_id"], r["neighbor_id"])
-            for r in ivf_kmeans_topk(
-                df, q, k=3, auto_scale=True, scan_budget=budget
-            ).collect()
-        }
-        return len(got & {(a, b) for a, b, _ in truth}) / len(truth)
-
-    r_small, r_big = recall(0.13), recall(0.5)
-    assert r_small <= r_big <= 1.0
-    # on a tightly clustered corpus one probed cell already holds the
-    # query's whole cluster — even the minimal budget clears 0.9
-    assert r_small >= 0.9

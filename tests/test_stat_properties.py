@@ -1,7 +1,7 @@
 """Invariant/axiom property tests for the math-heaviest stats queries
 (VERDICT r6 item 5). The DuckDB value-hash cannot catch a bug both engines
 implement identically (the Shapley-efficiency precedent,
-test_shapley_efficiency_axiom below); these pin the MATHEMATICAL properties each
+tests/test_round5_ops.py); these pin the MATHEMATICAL properties each
 estimator must satisfy regardless of implementation:
 
 - Kaplan-Meier / Nelson-Aalen: monotone curves, [0,1] range, the product
@@ -1020,139 +1020,6 @@ def test_theil_sen_counts_zero_days(spark, tmp_path):
     assert r["slope_per_day_r"] == pytest.approx(0.0, abs=1e-9)
 
 
-def test_exact_quantiles_match_sorted_positions(spark):
-    """Rank-join quantiles equal positions in the fully sorted values."""
-    from hadoop_data_lake_spark.core.io import read_table
-    from hadoop_data_lake_spark.functions.fixedpoint import to_units
-    from hadoop_data_lake_spark.queries.events_queries import exact_value_quantiles
-    from pyspark.sql import functions as F
-    import math
-
-    got = {
-        r["quantile_pct"]: r["cents"]
-        for r in exact_value_quantiles(spark, SF_DIR).collect()
-    }
-    ev = read_table(spark, SF_DIR, "events").select(
-        "event_id", to_units(F.col("value")).alias("cents")
-    ).where(F.col("cents").isNotNull())
-    ordered = [
-        r["cents"] for r in ev.orderBy("cents", "event_id").collect()
-    ]
-    n = len(ordered)
-    for p, cents in got.items():
-        assert cents == ordered[math.ceil(p * n / 100) - 1], p
-
-
-def test_markov_trigram_entropy_bounds(spark):
-    """Second-order conditional entropy is bounded by log2(#event types)
-    and equal on every output row."""
-    import math
-
-    from hadoop_data_lake_spark.core.io import read_table
-    from hadoop_data_lake_spark.queries.events_queries import markov_trigram_entropy
-    from pyspark.sql import functions as F
-
-    rows = markov_trigram_entropy(spark, SF_DIR).collect()
-    hs = {r["h2_r"] for r in rows}
-    assert len(hs) == 1
-    h = hs.pop()
-    n_types = (
-        read_table(spark, SF_DIR, "events")
-        .select(F.count_distinct("event_type").alias("k"))
-        .collect()[0]["k"]
-    )
-    assert 0.0 <= h <= math.log2(n_types) + 1e-9
-
-
-def test_qini_final_point_is_overall_uplift(spark):
-    """The last Qini point equals total treated responders minus scaled
-    control responders — the curve's anchor identity."""
-    from hadoop_data_lake_spark.queries.events_queries import qini_uplift_curve
-
-    rows = sorted(qini_uplift_curve(spark, SF_DIR).collect(), key=lambda r: r["decile"])
-    nt = sum(r["n_t"] for r in rows)
-    nc = sum(r["n_c"] for r in rows)
-    rt = sum(r["r_t"] for r in rows)
-    rc = sum(r["r_c"] for r in rows)
-    expect = round(rt - rc * nt / nc, 6)
-    assert abs(rows[-1]["qini_r"] - expect) < 1e-6
-
-
-def test_missing_partition_audit_finds_planted_gaps(spark, tmp_path):
-    """Drop two date ranges from a copy of events; the audit must report
-    exactly those runs with correct lengths (and nothing on the intact
-    table — covered by the oracle's empty result)."""
-    from hadoop_data_lake_spark.core.io import read_table
-    from hadoop_data_lake_spark.queries.events_queries import missing_partition_audit
-    from pyspark.sql import functions as F
-
-    ev = read_table(spark, SF_DIR, "events")
-    days = sorted(
-        r["d"] for r in ev.select(F.to_date("ts").alias("d")).distinct().collect()
-    )
-    holes = {days[3], days[4], days[10]}  # one 2-day run + one 1-day run
-    holed = ev.where(~F.to_date("ts").isin(list(holes)))
-    out = str(tmp_path / "events.parquet")
-    holed.write.parquet(out)
-    # the audit reads via read_table(sf_dir, "events") => point sf_dir at tmp
-    import shutil, os
-    sfdir = str(tmp_path / "sf")
-    os.makedirs(sfdir)
-    # single-file layout expected: write directly under sf/events.parquet
-    holed.coalesce(1).write.mode("overwrite").parquet(os.path.join(sfdir, "events.parquet"))
-    got = {
-        (r["gap_start"], r["gap_end"], r["n_days_missing"])
-        for r in missing_partition_audit(spark, sfdir).collect()
-    }
-    assert got == {
-        (str(days[3]), str(days[4]), 2),
-        (str(days[10]), str(days[10]), 1),
-    }
-
-
-def test_shapley_efficiency_axiom(spark):
-    """Sum of Shapley values must equal v(grand coalition) - v(empty) =
-    the conversion rate of users whose coalition is exactly all k
-    channels (0 if unobserved). Only holds when the FULL 2^k lattice is
-    enumerated — the restricted observed-coalition sum violates it
-    (ADVICE r5)."""
-    from hadoop_data_lake_spark.core.io import read_table
-    from hadoop_data_lake_spark.queries.events_queries import (
-        shapley_channel_attribution,
-    )
-    from pyspark.sql import functions as F
-
-    rows = shapley_channel_attribution(spark, SF_DIR).collect()
-    total = sum(r["shapley_r"] for r in rows)
-    chans = sorted(r["channel"] for r in rows)
-    ev = read_table(spark, SF_DIR, "events").select("user_id", "event_type")
-    per_user = (
-        ev.groupBy("user_id")
-        .agg(
-            F.array_join(
-                F.array_sort(
-                    F.array_distinct(
-                        F.collect_list(
-                            F.when(
-                                F.col("event_type") != "purchase",
-                                F.col("event_type"),
-                            )
-                        )
-                    )
-                ),
-                ",",
-            ).alias("coal"),
-            F.max((F.col("event_type") == "purchase").cast("long")).alias("conv"),
-        )
-        .where(F.col("coal") == ",".join(chans))
-    )
-    grand = per_user.agg(
-        F.count("*").alias("n"), F.sum("conv").alias("c")
-    ).collect()[0]
-    v_grand = (grand["c"] / grand["n"]) if grand["n"] else 0.0
-    assert abs(total - v_grand) < 1e-4  # 6-dp rounding x k channels
-
-
 EPOCH = dt.datetime(2024, 1, 1, 0, 0, 0)
 
 
@@ -1349,104 +1216,3 @@ def test_rolling_zscore_envelope_matches_documentation():
         "1e6-cents envelope this test derives its bounds from — update "
         "both together"
     )
-
-
-def _sparse_type_corpus(spark, tmp_path):
-    """5-day span; 'click' logs every day, 'error' only on days 1 and 5 —
-    the sparse-type shape where densification matters."""
-    rows = []
-    eid = 0
-    for d in range(5):
-        ts = dt.datetime(2024, 1, 1 + d, 12, 0, 0)
-        eid += 1
-        rows.append((eid, ts, 1, "click", 10.0 + d, None))
-    for d in (0, 4):
-        ts = dt.datetime(2024, 1, 1 + d, 13, 0, 0)
-        eid += 1
-        rows.append((eid, ts, 2, "error", 5.0, None))
-    return _write_events(spark, tmp_path, rows)
-
-
-@pytest.fixture(scope="module")
-def sparse_dir(spark, tmp_path_factory):
-    return _sparse_type_corpus(spark, tmp_path_factory.mktemp("sparse"))
-
-
-def test_ols_daily_trend_densifies_sparse_types(spark, sparse_dir):
-    """The sparse 'error' type must fit over ALL 5 calendar days (3 of
-    them zero-filled), not just its 2 occupied days — n_days is the
-    span, and the slope sees the zero observations."""
-    from hadoop_data_lake_spark.queries.registry import REGISTRY
-
-    out = {
-        r["event_type"]: r
-        for r in REGISTRY["ols_daily_trend"].fn(spark, sparse_dir).collect()
-    }
-    assert out["click"]["n_days"] == 5
-    assert out["error"]["n_days"] == 5, (
-        "sparse type fitted over occupied days only — densification lost"
-    )
-    # 2 occupied of 5 days: a fit over (5, 0, 0, 0, 5) cents-scale values
-    # has slope 0 by symmetry; the undensified fit over (5, 5) has slope 0
-    # too, so pin the INTERCEPT which differs (densified mean 2.0 vs 5.0)
-    assert abs(out["error"]["intercept_r"] - 2.0) < 1e-6
-
-
-def test_theil_sen_densifies_sparse_types(spark, sparse_dir):
-    """Median-of-pairwise-slopes over the densified grid: C(5,2)=10 pairs
-    per type, not C(2,2)=1 for the sparse type."""
-    from hadoop_data_lake_spark.queries.registry import REGISTRY
-
-    out = {
-        r["event_type"]: r
-        for r in REGISTRY["theil_sen_daily_trend"].fn(spark, sparse_dir).collect()
-    }
-    assert out["click"]["n_pairs"] == 10
-    assert out["error"]["n_pairs"] == 10, (
-        "sparse type paired over occupied days only — densification lost"
-    )
-
-
-def test_autocorr_densifies_sparse_types(spark, sparse_dir):
-    """Lag-k pairs over the densified series: lag 1 has span-1 = 4 pairs
-    for EVERY type (the sparse type would have 1 undensified)."""
-    from hadoop_data_lake_spark.queries.registry import REGISTRY
-
-    rows = REGISTRY["autocorr_daily_value"].fn(spark, sparse_dir).collect()
-    n = {(r["event_type"], r["lag"]): r["n"] for r in rows}
-    assert n[("click", 1)] == 4
-    assert n[("error", 1)] == 4, (
-        "sparse type lagged over occupied days only — densification lost"
-    )
-
-
-def test_corpus_wide_daily_series_not_densified(spark, tmp_path):
-    """Counterexample rule: jackknife_daily_mean's day lattice is the
-    OCCUPIED days. A corpus-wide zero day (total outage) must NOT be
-    injected as a synthetic revenue-0 observation — 4 occupied days of a
-    5-day span means n_days == 4."""
-    from hadoop_data_lake_spark.queries.registry import REGISTRY
-
-    rows = []
-    for i, d in enumerate((1, 2, 4, 5)):  # day 3 missing corpus-wide
-        rows.append((i, dt.datetime(2024, 1, d, 12, 0, 0), 1, "click", 10.0, None))
-    d = _write_events(spark, tmp_path, rows)
-    out = REGISTRY["jackknife_daily_mean"].fn(spark, d).collect()
-    assert len(out) == 1
-    assert out[0]["n_days"] == 4, (
-        "corpus-wide series densified — the deliberate NOT-densified "
-        "grain rule (COVERAGE.md Round 9) was flipped"
-    )
-
-
-def test_value_psi_drift_driver_fold_matches_distributed(spark, tiers):
-    """The r16 driver fold (cut/ranks/edges/bin map/pivot in numpy) must
-    produce the identical 10 rows as the distributed prefix + crossJoin
-    formulation — including the float tail, which both paths compute in
-    Spark over the same integers."""
-    from hadoop_data_lake_spark.queries.registry import REGISTRY
-
-    fn = REGISTRY["value_psi_drift"].fn
-    on, off = tiers.on_off(lambda: sorted(map(tuple, fn(spark, SF_DIR).collect())))
-    assert on == off
-    assert len(on) == 10 and {r[0] for r in on} == set(range(10))

@@ -672,144 +672,3 @@ def test_watermark_evicts_state_across_time_ordered_batches(spark):
         assert w + 600_000_000 > wm_us, (
             f"window starting {w} was finalized but never emitted"
         )
-
-
-def test_stream_replay_over_empty_source(spark, tmp_path):
-    """VERDICT r9 item 5: an empty availableNow batch is a legal production
-    state (an empty Kafka topic window). A zero-row events source must
-    drain cleanly to a 0-row result with the stable output schema — for a
-    windowed aggregate, a stateful applyInPandasWithState query, and a
-    stream-static join (the three state-machinery shapes in the guard)."""
-    import glob
-    import shutil
-
-    from hadoop_data_lake_spark.queries.registry import REGISTRY
-
-    src = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    tmp = str(tmp_path / "part")
-    src.limit(0).coalesce(1).write.parquet(tmp)
-    dest = str(tmp_path / "events.parquet")
-    shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], dest)
-    for other in ("documents", "embeddings", "orders", "lineitem", "customer",
-                  "supplier", "part", "nation", "region"):
-        p = f"{SF_DIR}/{other}.parquet"
-        import os
-        if os.path.exists(p):
-            os.symlink(p, str(tmp_path / f"{other}.parquet"))
-
-    for name in ("stream_windowed_counts", "stream_running_max",
-                 "stream_enriched_value"):
-        out = REGISTRY[name].fn(spark, str(tmp_path))
-        assert out.count() == 0, f"{name} emitted rows from an empty source"
-        assert len(out.schema.fields) > 0, f"{name} lost its output schema"
-
-
-_EVENTS = f"{SF_DIR}/events.parquet"
-
-
-_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
-
-
-_FILE_CONTEXT_MANAGER = (
-    "org.apache.spark.sql.execution.streaming.checkpointing."
-    "FileContextBasedCheckpointFileManager"
-)
-
-
-@pytest.fixture()
-def session_confs(spark):
-    """Session shuffle partitions set to 7, the checkpoint manager unset;
-    the previous values come back at teardown."""
-    prev = {k: spark.conf.get(k, None) for k in ("spark.sql.shuffle.partitions", _MANAGER_KEY)}
-    spark.conf.set("spark.sql.shuffle.partitions", "7")
-    spark.conf.unset(_MANAGER_KEY)
-    yield
-    for k, v in prev.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
-
-
-def _confs_at_start(spark, monkeypatch):
-    """Record the two pinned confs as every streaming query starts."""
-    from pyspark.sql.streaming.readwriter import DataStreamWriter
-
-    seen = []
-    real_start = DataStreamWriter.start
-
-    def recording_start(self, *a, **kw):
-        seen.append(
-            (spark.conf.get("spark.sql.shuffle.partitions"), spark.conf.get(_MANAGER_KEY, None))
-        )
-        return real_start(self, *a, **kw)
-
-    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
-    return seen
-
-
-def test_replay_restores_session_shuffle_conf(spark, session_confs, monkeypatch):
-    from hadoop_data_lake_spark.streaming import ingest
-
-    seen = _confs_at_start(spark, monkeypatch)
-    out = ingest.run_batch_replay(spark, _EVENTS, window_seconds=3600)
-    assert out.count() > 0
-    assert seen == [("7", ingest.REPLAY_CHECKPOINT_MANAGER)]
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
-    assert spark.conf.get(_MANAGER_KEY, None) is None
-
-    # a session that sets its own manager and a larger count gets both back
-    spark.conf.set("spark.sql.shuffle.partitions", "20")
-    spark.conf.set(_MANAGER_KEY, _FILE_CONTEXT_MANAGER)
-    assert ingest.run_batch_replay(spark, _EVENTS, window_seconds=3600).count() > 0
-    assert seen[-1] == (str(ingest.REPLAY_STATE_PARTITIONS), ingest.REPLAY_CHECKPOINT_MANAGER)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "20"
-    assert spark.conf.get(_MANAGER_KEY) == _FILE_CONTEXT_MANAGER
-
-
-def test_replay_restores_conf_when_start_fails(spark, session_confs):
-    """The restore must run even when the streaming query can't start
-    (finally path): 'complete' output mode on a non-aggregate stream is an
-    AnalysisException at start()."""
-    import shutil
-
-    from pyspark.errors.exceptions.base import PySparkException
-
-    from hadoop_data_lake_spark.streaming import ingest
-
-    stream, src_dir = ingest._open_stream(spark, _EVENTS)
-    try:
-        with pytest.raises(PySparkException):
-            ingest.replay_to_memory(stream, output_mode="complete")
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
-        assert spark.conf.get(_MANAGER_KEY, None) is None
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-
-
-@pytest.mark.parametrize("run", ["run_batch_replay", "run_session_replay"])
-def test_replay_results_invariant_to_session_partition_count(spark, session_confs, run):
-    from hadoop_data_lake_spark.streaming import ingest
-
-    def rows(parts):
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        return sorted(map(tuple, getattr(ingest, run)(spark, _EVENTS).collect()))
-
-    one = rows(1)
-    assert one and one == rows(7)
-
-
-def test_replay_results_invariant_to_state_partition_count(spark, monkeypatch):
-    from hadoop_data_lake_spark.streaming import ingest
-
-    path = _EVENTS
-
-    def session_keys(setting):
-        monkeypatch.setattr(ingest, "REPLAY_STATE_PARTITIONS", setting)
-        out = ingest.run_session_replay(spark, path, gap_seconds=1800)
-        return {
-            (r["user_id"], r["session_start_us"], r["n_events"])
-            for r in out.collect()
-        }
-
-    assert session_keys(2) == session_keys(13)

@@ -14,7 +14,6 @@ from hadoop_data_lake_spark.functions.text import (
     token_count,
     tokens,
 )
-from tests.conftest import SF_DIR
 
 
 def _one(spark, text, col):
@@ -273,76 +272,3 @@ def test_kneser_ney_query_scores_every_multiword_doc(spark):
     out = doc_lm_kneser_ney(spark, "/root/testdata/sf0.001").collect()
     assert len(out) == 500
     assert all(r["kn_entropy_bits"] is not None and r["kn_entropy_bits"] > 0 for r in out)
-
-
-def test_waterfill_respects_budget_and_level(spark):
-    """Allocations never exceed the budget, uncapped sources keep every
-    token, and capped sources all sit exactly at the water level."""
-    from hadoop_data_lake_spark.queries.northstar_queries import data_mix_waterfill
-
-    rows = data_mix_waterfill(spark, SF_DIR).collect()
-    total = sum(r["toks"] for r in rows)
-    budget = total // 2
-    alloc = sum(r["alloc_toks"] for r in rows)
-    assert alloc <= budget
-    levels = {r["alloc_toks"] for r in rows if r["capped"]}
-    assert len(levels) <= 1  # every capped source is cut at the same tau
-    for r in rows:
-        if not r["capped"]:
-            assert r["alloc_toks"] == r["toks"]
-    if levels:
-        tau = levels.pop()
-        # tau is maximal: raising the level by 1 for every capped source
-        # would overshoot the budget.
-        n_capped = sum(1 for r in rows if r["capped"])
-        assert alloc + n_capped > budget
-        assert all(r["toks"] > tau for r in rows if r["capped"])
-
-
-def test_token_lang_mi_unknown_lang_excluded_by_construction(spark, tmp_path):
-    """ADVICE r11 (medium): with a document whose lang is OUTSIDE the
-    fixed 5-language domain, Spark and the DuckDB oracle must still agree
-    — both now filter to the domain up front, where previously the Spark
-    pivot dropped the unknown lang from n_total while the oracle's marg
-    CTE counted all exploded tokens."""
-    import duckdb
-    import pandas as pd
-
-    from hadoop_data_lake_spark.queries.northstar_queries import (
-        TOKEN_LANG_MI_SQL,
-        token_lang_mi,
-    )
-
-    docs = pd.DataFrame(
-        {
-            "doc_id": [1, 2, 3, 4],
-            "text": [
-                "hello world hello",
-                "bonjour monde",
-                "ciao mondo hello hello hello",  # out-of-domain: must not count
-                "hello welt",
-            ],
-            "lang": ["en", "fr", "it", "de"],
-            "source": ["t", "t", "t", "t"],
-            "n_chars": [17, 13, 29, 10],
-        }
-    )
-    docs["doc_id"] = docs["doc_id"].astype("int64")
-    docs["n_chars"] = docs["n_chars"].astype("int64")
-    docs.to_parquet(tmp_path / "documents.parquet", index=False)
-
-    sdf = token_lang_mi(spark, str(tmp_path)).toPandas()
-
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'"
-    )
-    odf = con.sql(TOKEN_LANG_MI_SQL).df()
-
-    assert list(sdf.columns) == list(odf.columns)
-    s_rows = sorted(map(tuple, sdf.itertuples(index=False)))
-    o_rows = sorted(map(tuple, odf.itertuples(index=False)))
-    assert s_rows == o_rows
-    # the 'it' doc's three extra 'hello' occurrences are invisible:
-    hello = sdf[sdf.token == "hello"]
-    assert not hello.empty and int(hello.n_occurrences.iloc[0]) == 3
