@@ -738,7 +738,7 @@ def test_degenerate_inputs_never_divide_by_zero(spark, degenerate_dirs):
     assert f["n_hours"] == 1 and f["fano_r"] is None
 
 
-def test_degenerate_table_corpora_guards(spark):
+def test_degenerate_table_corpora_guards(spark, tmp_path):
     """The TQ/NS arm of the degenerate sweep, pinned as a test: constant
     prices / identical documents / identical embeddings and single-row
     facts must not raise, and the undefined statistics must read NULL
@@ -755,7 +755,7 @@ def test_degenerate_table_corpora_guards(spark):
         price_dispersion_by_brand,
     )
 
-    dirs = _table_cases(spark)
+    dirs = _table_cases(spark, str(tmp_path))
     for d in dirs.values():
         for fn in (
             price_dispersion_by_brand, length_bias_auc, activity_tail_hill,
@@ -788,3 +788,36 @@ def test_degenerate_sweep_skip_is_events_only():
         "the defining-module target filter is back — selection must be by "
         "the tables a query actually reads"
     )
+
+
+def test_degenerate_sweep_plans_mode_builds_table_cases(spark, tmp_path):
+    """--plans + --events-only used to KeyError on cases['empty_facts'];
+    build_cases must include the table-derived corpora whenever the plan
+    probe will run."""
+    from tools.degenerate_sweep import build_cases
+
+    cases, events_cases = build_cases(
+        spark, events_only=True, plans_mode=True, root=str(tmp_path)
+    )
+    assert "empty_facts" in cases
+    assert "empty_facts" not in events_cases
+    cases2, _ = build_cases(
+        spark, events_only=True, plans_mode=False, root=str(tmp_path)
+    )
+    assert "empty_facts" not in cases2
+
+
+def test_degenerate_sweep_leaves_no_corpus_behind(spark, tmp_path, monkeypatch):
+    """Every corpus the sweep writes lives under one temporary root that
+    main() removes, so repeated sweeps do not fill the temp dir."""
+    import tempfile
+
+    import tools.degenerate_sweep as DS
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(DS, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(
+        DS.sys, "argv", ["degenerate_sweep.py", "--events-only", "user_sessions"]
+    )
+    assert DS.main() == 0
+    assert not list(tmp_path.glob("degen_*"))

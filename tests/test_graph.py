@@ -10,7 +10,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from conftest import count_jobs
+from conftest import SF_DIR, count_jobs
 from hadoop_data_lake_spark.core import driver_tier as DT
 from hadoop_data_lake_spark.operators import graph as G
 from hadoop_data_lake_spark.operators.graph import connected_components, dedup_clusters
@@ -708,3 +708,321 @@ def test_dedup_clusters_identity_tier_on_off(spark, tiers):
     a, b = tiers.on_off(lambda: {tuple(r) for r in G.dedup_clusters(df).collect()})
     assert a == b
     assert {(1, 1, 3), (2, 1, 3), (3, 1, 3)} <= a
+
+
+def test_est_row_bytes_widths():
+    from pyspark.sql.types import (
+        ArrayType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    narrow = StructType(
+        [StructField("node", LongType()), StructField("rank", LongType())]
+    )
+    wide = StructType(
+        [
+            StructField("node", LongType()),
+            StructField("label", StringType()),
+            StructField("payload", ArrayType(LongType())),
+        ]
+    )
+    assert G._est_row_bytes(narrow) == 16
+    # complex columns are priced pessimistically (>= 256 each)
+    assert G._est_row_bytes(wide) >= 8 + 48 + 256
+
+
+def test_broadcast_state_byte_cap_blocks_wide_state(spark):
+    """A state frame under the ROW cap but over the BYTE cap must NOT get
+    the broadcast hint; the same row count with a narrow schema must."""
+    narrow = spark.createDataFrame([(1, 2)], "node long, rank long")
+    wide = narrow.withColumn("payload", F.array(F.lit(1), F.lit(2))).withColumn(
+        "label", F.lit("x")
+    )
+    n_rows = 900_000  # under BROADCAST_STATE_MAX_ROWS
+    assert n_rows <= G.BROADCAST_STATE_MAX_ROWS
+    # narrow: 900k x 16B = ~14 MB — broadcasts (hint returns a NEW frame)
+    assert G.broadcast_bounded_state(narrow, n_rows) is not narrow
+    # wide: 900k x >=312B = ~280 MB — over the 64 MB byte cap, unchanged
+    assert G.broadcast_bounded_state(wide, n_rows) is wide
+    # row cap still binds first regardless of width
+    assert G.broadcast_bounded_state(narrow, G.BROADCAST_STATE_MAX_ROWS + 1) is narrow
+    # unknown / negative counts never broadcast
+    assert G.broadcast_bounded_state(narrow, None) is narrow
+    assert G.broadcast_bounded_state(narrow, -1) is narrow
+
+
+def test_hits_uses_public_broadcast_helper():
+    """queries/tpch_queries must not reach into the private _bcast_state
+    and must not re-count state frames per rescale."""
+    import inspect
+
+    from hadoop_data_lake_spark.queries import tpch_queries as T
+
+    src = inspect.getsource(T.hits_hubs_authorities)
+    assert "_bcast_state" not in src
+    assert "broadcast_bounded_state" in src
+    assert "df.count()" not in src
+
+
+def _pr_both_tiers(spark, tiers, rows, iters=4):
+    """Run pagerank_intexact with the driver tiers ON vs OFF on the same
+    edge list; return the two sorted (node, rank_units) lists."""
+    e = spark.createDataFrame(rows, "src int, dst int")
+    return tiers.on_off(
+        lambda: sorted(
+            (r["node"], r["rank_units"])
+            for r in G.pagerank_intexact(e, iters=iters).collect()
+        )
+    )
+
+
+def test_general_driver_tier_bit_identical(spark, tiers):
+    """General-graph driver tier: byte-for-byte the distributed
+    loop's integer recurrence, on a graph with every structural feature the
+    loop handles — dangling nodes (5 has no out-edge), zero-in-degree
+    nodes (1 is never a destination), duplicate (multi-)edges, a cycle,
+    and a self-referential cluster. Non-layered (node 2 has both in- and
+    out-edges), so with the tiers off the general loop answers."""
+    rows = [
+        (1, 2), (2, 3), (3, 2),          # cycle w/ mid nodes
+        (2, 5), (4, 5), (4, 5),          # dangling sink 5, dup edge
+        (3, 4), (1, 4),
+    ]
+    fast, dist = _pr_both_tiers(spark, tiers, rows)
+    assert fast == dist
+    assert len(fast) == 5
+    # mass sanity: total rank stays ~scale (integer truncation only)
+    assert abs(sum(r for _, r in fast) - 10**12) < 10**7
+
+
+def _lpa_rows_both_tiers(spark, tiers, rows, ddl, weight, iters):
+    e = spark.createDataFrame(rows, ddl)
+    src, dst = e.columns[:2]
+    return tiers.on_off(
+        lambda: sorted(
+            map(
+                tuple,
+                G.lpa_communities(
+                    e, src=src, dst=dst, weight=weight, iters=iters
+                ).collect(),
+            )
+        )
+    )
+
+
+def test_lpa_driver_tier_bit_identical(spark, tiers):
+    """LPA driver tier: same (score desc, label asc) synchronous
+    recurrence as the distributed loop, string labels + integer weights,
+    including a weight-tied pair (the tie-break path) and an isolated
+    2-clique."""
+    rows = [
+        ("a", "b", 3), ("b", "c", 3),      # tie at b: labels a vs c
+        ("c", "d", 5), ("a", "d", 1),
+        ("x", "y", 2),                      # separate component
+    ]
+    fast, dist = _lpa_rows_both_tiers(
+        spark, tiers, rows, "brand_a string, brand_b string, n_orders long",
+        "n_orders", 4,
+    )
+    assert fast == dist
+    assert len(fast) == 6
+
+
+def test_lpa_driver_tier_caps_route_to_distributed(spark, monkeypatch):
+    """Above either measured cap lpa_communities must take the distributed
+    loop (no collect of an unbounded edge list) — same probe as the
+    pagerank cap test: the distributed loop's labels frame is an iterated
+    localCheckpoint (Scan ExistingRDD), never a local frame."""
+    e = spark.createDataFrame(
+        [("a", "b", 1), ("b", "c", 2)], "brand_a string, brand_b string, w long"
+    )
+    for cap in ("MAX_NODES", "MAX_ROWS"):
+        monkeypatch.undo()
+        monkeypatch.setattr(DT, cap, 0)
+        df = G.lpa_communities(e, src="brand_a", dst="brand_b", weight="w", iters=1)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" in plan, cap
+
+
+def test_driver_tier_property_random_graphs(spark, tiers):
+    """Property harness for the graph driver tiers: on random small
+    digraphs (dangling nodes, self-referential pairs, duplicate edges,
+    multiple components all arise naturally), pagerank_intexact and
+    lpa_communities must return BIT-identical results with the tiers on
+    vs off. Seeded stdlib RNG, a handful of draws, one Spark pipeline per
+    draw — the hypothesis float strategies are avoided per
+    tests/test_properties.py's container note, and graph shapes need
+    structured randomness anyway."""
+    rng = random.Random(0xC0FFEE)
+    for draw in range(4):
+        n = rng.randint(2, 14)
+        m = rng.randint(1, 28)
+        rows = [
+            (rng.randint(0, n - 1), rng.randint(0, n - 1)) for _ in range(m)
+        ]
+        rows = [(s, d) for s, d in rows if s != d] or [(0, 1)]
+        pr_on, pr_off = _pr_both_tiers(spark, tiers, rows, iters=3)
+        assert pr_on == pr_off, (draw, rows)
+        lpa_on, lpa_off = _lpa_rows_both_tiers(
+            spark, tiers, [(s, d, 1 + (s + d) % 3) for s, d in rows],
+            "src int, dst int, w long", "w", 3,
+        )
+        assert lpa_on == lpa_off, (draw, rows)
+
+
+def _hits_both_tiers(spark, tiers):
+    from hadoop_data_lake_spark.queries.tpch_queries import (
+        hits_hubs_authorities,
+    )
+
+    return tiers.on_off(
+        lambda: sorted(map(tuple, hits_hubs_authorities(spark, SF_DIR).collect()))
+    )
+
+
+def test_hits_driver_tier_bit_identical_e2e(spark, tiers):
+    """The full query at sf0.001 returns byte-identical rows with the
+    numpy driver tier on vs the distributed loop."""
+    fast, dist = _hits_both_tiers(spark, tiers)
+    assert fast == dist
+    assert len(fast) == 20  # top-10 hubs + top-10 authorities
+
+
+def test_hits_numpy_rounds_matches_python_int_reference():
+    """Property check of the EXACTNESS argument: on random bipartite
+    multigraphs (duplicate edges allowed — degree counts then differ per
+    edge, exercising the count step), the numpy recurrence must equal a
+    pure-Python arbitrary-precision integer replay of the distributed
+    semantics (count -> rescale -> sum -> rescale per round)."""
+    import numpy as np
+
+    rng = random.Random(0x12C0DE)
+    for _draw in range(4):
+        nh, na = rng.randint(1, 8), rng.randint(1, 6)
+        m = rng.randint(1, 30)
+        rows = [
+            (rng.randint(0, nh - 1), rng.randint(100, 100 + na - 1))
+            for _ in range(m)
+        ]
+        hub_u, hub_i = np.unique([c for c, _ in rows], return_inverse=True)
+        auth_u, auth_i = np.unique([s for _, s in rows], return_inverse=True)
+        h_arr, a_arr = G._hits_numpy_rounds(
+            hub_i, auth_i, len(hub_u), len(auth_u), rounds=2, scale=1_000_000
+        )
+        got_h = dict(zip(hub_u.tolist(), h_arr.tolist()))
+        got_a = dict(zip(auth_u.tolist(), a_arr.tolist()))
+
+        # pure-Python integer reference
+        scale = 1_000_000
+        a = {}
+        for _c, s in rows:
+            a[s] = a.get(s, 0) + 1
+        m_ = max(a.values())
+        a = {k: (v * scale) // m_ for k, v in a.items()}
+        for rnd in range(3):
+            if rnd % 2 == 0:  # hub update from a
+                h = {}
+                for c, s in rows:
+                    h[c] = h.get(c, 0) + a[s]
+                m_ = max(h.values())
+                h = {k: (v * scale) // m_ for k, v in h.items()}
+            else:  # authority update from h
+                a = {}
+                for c, s in rows:
+                    a[s] = a.get(s, 0) + h[c]
+                m_ = max(a.values())
+                a = {k: (v * scale) // m_ for k, v in a.items()}
+        assert got_h == h
+        assert got_a == a
+
+
+def test_hits_query_distributed_path_shape(spark, tiers):
+    """With the tier pinned off, the query's final frame comes from the
+    iterated checkpoint chain (Scan ExistingRDD), not a local collect —
+    the same cap-routing probe as the LPA tier tests."""
+    from hadoop_data_lake_spark.queries.tpch_queries import (
+        hits_hubs_authorities,
+    )
+
+    tiers(False)
+    df = hits_hubs_authorities(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan
+
+
+def test_hits_numpy_exactness_at_documented_bounds():
+    """Pins the <2^53 bincount exactness argument at its boundary: with
+    per-node sums right at the documented cap regime (values <= 1e6,
+    4M addends -> sums <= 4e12), float64 accumulation must be exact; and
+    the rescale numerator at the extreme (4e12 * 1e6 = 4e18) must not
+    overflow int64. Pure numpy — no Spark session needed."""
+    import numpy as np
+
+    # worst-case per-node sum at the caps: 4e12 (every addend 1e6 into
+    # one bucket). Use a smaller edge count with the same sum magnitude:
+    # 4_000 addends of 1e9 would NOT occur (values are <= scale=1e6), so
+    # build the real shape — many max-scale addends — and check against
+    # Python bigint arithmetic.
+    m = 400_000
+    w = np.full(m, 1_000_000, dtype=np.int64)
+    idx = np.zeros(m, dtype=np.int64)
+    s = np.bincount(idx, weights=w.astype(np.float64), minlength=1).astype(
+        np.int64
+    )[0]
+    assert s == 1_000_000 * m == sum(int(x) for x in w)
+    assert float(s) < 2**53  # the argument's precondition holds at cap/10
+    # full-cap magnitude: 4e12 is still exactly representable
+    assert np.float64(4_000_000 * 1_000_000) == 4e12 < 2**53
+
+    # rescale numerator at the extreme: int64 arithmetic, no overflow
+    v = np.array([4_000_000_000_000], dtype=np.int64)
+    out = (v * 1_000_000) // v.max()
+    assert out[0] == 1_000_000
+    assert (v * 1_000_000)[0] == 4 * 10**18  # fits int64 (max ~9.22e18)
+
+    # mixed-magnitude exactness: alternating 1 and 1e6 addends sum
+    # bit-identically to Python bigints
+    w2 = np.tile(np.array([1, 1_000_000], dtype=np.int64), 50_000)
+    got = np.bincount(
+        np.zeros(len(w2), dtype=np.int64), weights=w2.astype(np.float64)
+    ).astype(np.int64)[0]
+    assert int(got) == sum(int(x) for x in w2)
+
+
+def test_lpa_driver_tier_null_weights_no_crash(spark, tiers):
+    """A NULL edge weight once raised TypeError in the driver
+    tier while the distributed loop's F.sum silently skipped it. Both
+    paths must agree bit-for-bit on a graph mixing null and non-null
+    weights (the driver-tier gate now declines NULL weights, so the
+    distributed loop answers both runs)."""
+    rows = [
+        ("a", "b", None),   # null weight inside a group that also has a 3
+        ("a", "b", 3),
+        ("b", "c", 5),
+        ("c", "d", None),   # group with ONLY null weights (SQL sum -> NULL)
+        ("x", "y", 2),      # clean separate component
+    ]
+    fast, dist = _lpa_both_tiers(spark, tiers, rows)
+    assert fast == dist
+    assert len(fast) == 6
+
+
+def test_lpa_driver_tier_null_vs_zero_ranking(spark, tiers):
+    """The semantic corner the 'treat null as 0' shortcut gets wrong:
+    a candidate label whose weight sum is 0 must BEAT a candidate whose
+    sum is SQL-NULL (desc ranks nulls last), even when the null label
+    sorts first alphabetically."""
+    # vertex "v" sees label-candidates via neighbors "aa" (null weight,
+    # lexically smaller) and "zz" (weight 0). Distributed: sum(null)=NULL
+    # loses to 0 under desc-nulls-last, so v adopts "zz".
+    rows = [
+        ("v", "aa", None),
+        ("v", "zz", 0),
+    ]
+    fast, dist = _lpa_both_tiers(spark, tiers, rows, iters=1)
+    assert fast == dist
+    v_row = [r for r in fast if r[0] == "v"]
+    assert v_row and v_row[0][1] == "zz"

@@ -25,6 +25,7 @@ Corpora:
 All fixtures are written in the driver's SINGLE-FILE table layout
 (one part file moved to <table>.parquet), so footer-reading queries
 (zonemap_integrity_audit) and DuckDB's direct-path views both work.
+They live under one temporary root that `main()` removes when it ends.
 
 Usage: python tools/degenerate_sweep.py [--events-only] [query ...]
 Exit 1 if any query raises. ~15 min for the full registry.
@@ -34,6 +35,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import shutil
 import sys
 import tempfile
 
@@ -75,15 +77,14 @@ def _write_single_file(spark, df, dest: str) -> None:
     (a Spark directory breaks DuckDB's direct-path view in check_oracle,
     and single files are what the zonemap footer audit contracts on)."""
     import glob
-    import shutil
 
-    tmp = tempfile.mkdtemp(prefix="degen_part_")
+    tmp = tempfile.mkdtemp(prefix="degen_part_", dir=os.path.dirname(dest))
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     shutil.move(glob.glob(os.path.join(tmp, "part-*.parquet"))[0], dest)
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _events_cases(spark) -> dict[str, str]:
+def _events_cases(spark, root: str) -> dict[str, str]:
     cases = {
         # zero rows, full schema: a legal slice at 100 TB (an empty day
         # partition / a filter that matched nothing). Exercises NULL
@@ -116,7 +117,7 @@ def _events_cases(spark) -> dict[str, str]:
     }
     out = {}
     for name, rows in cases.items():
-        d = tempfile.mkdtemp(prefix=f"degen_{name}_")
+        d = tempfile.mkdtemp(prefix=f"degen_{name}_", dir=root)
         _write_single_file(
             spark, spark.createDataFrame(rows, EVENTS_SCHEMA), f"{d}/events.parquet"
         )
@@ -124,8 +125,8 @@ def _events_cases(spark) -> dict[str, str]:
     return out
 
 
-def _base_dir() -> str:
-    d = tempfile.mkdtemp(prefix="degen_tables_")
+def _base_dir(root: str) -> str:
+    d = tempfile.mkdtemp(prefix="degen_tables_", dir=root)
     for t in TABLES:
         os.symlink(f"{SRC}/{t}.parquet", f"{d}/{t}.parquet")
     return d
@@ -136,8 +137,8 @@ def _replace(spark, d: str, t: str, df) -> None:
     _write_single_file(spark, df, f"{d}/{t}.parquet")
 
 
-def _table_cases(spark) -> dict[str, str]:
-    d1 = _base_dir()
+def _table_cases(spark, root: str) -> dict[str, str]:
+    d1 = _base_dir(root)
     orders1 = spark.read.parquet(f"{SRC}/orders.parquet").limit(1).localCheckpoint(True)
     okey = orders1.collect()[0]["o_orderkey"]
     _replace(spark, d1, "orders", orders1)
@@ -148,7 +149,7 @@ def _table_cases(spark) -> dict[str, str]:
     for t in ("events", "documents", "embeddings"):
         _replace(spark, d1, t, spark.read.parquet(f"{SRC}/{t}.parquet").limit(1))
 
-    d2 = _base_dir()
+    d2 = _base_dir(root)
     li = spark.read.parquet(f"{SRC}/lineitem.parquet")
     _replace(
         spark, d2, "lineitem",
@@ -176,7 +177,7 @@ def _table_cases(spark) -> dict[str, str]:
     # corpus slice (an empty day partition / a filter matching nothing).
     # Exercises NULL min/max spans, empty window partitions, global
     # aggregates over nothing and zero-row sketch states.
-    d3 = _base_dir()
+    d3 = _base_dir(root)
     for t in ("orders", "lineitem", "events", "documents", "embeddings"):
         _replace(spark, d3, t, spark.read.parquet(f"{SRC}/{t}.parquet").limit(0))
 
@@ -230,17 +231,18 @@ def _plan_probe(spark, sf_dir: str, targets: list[str]) -> int:
     return bad
 
 
-def build_cases(spark, events_only: bool, plans_mode: bool):
-    """Corpus map + the subset that is events-only (missing-table skips).
+def build_cases(spark, events_only: bool, plans_mode: bool, root: str):
+    """Corpus map + the subset that is events-only (missing-table skips),
+    every corpus a directory under `root`.
 
     The plan probe runs on the empty_facts corpus, which lives in the
     TABLE-derived set — so plans mode builds the table cases even under
     --events-only (driver-ADVICE r10: the combination used to KeyError).
     """
-    cases = _events_cases(spark)
+    cases = _events_cases(spark, root)
     events_cases = frozenset(cases)
     if not events_only or plans_mode:
-        cases.update(_table_cases(spark))
+        cases.update(_table_cases(spark, root))
     return cases, events_cases
 
 
@@ -250,8 +252,15 @@ def main() -> int:
     names = [a for a in sys.argv[1:] if not a.startswith("--")]
     spark = get_spark("degenerate_sweep")
     targets = names or [n for n in LOOKUP if n not in SKIP]
+    root = tempfile.mkdtemp(prefix="degen_")
+    try:
+        return _sweep(spark, targets, events_only, plans_mode, root)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
-    cases, events_cases = build_cases(spark, events_only, plans_mode)
+
+def _sweep(spark, targets: list[str], events_only: bool, plans_mode: bool, root: str) -> int:
+    cases, events_cases = build_cases(spark, events_only, plans_mode, root)
 
     if plans_mode:
         # plan probe runs on the empty-facts corpus only: that is where a

@@ -76,7 +76,7 @@ FACT_RESCAN_THRESHOLD = 4
 #: their index frames: operators/dedup.minhash_lsh_pairs inverted index,
 #: operators/similarity.cosine_near_dup_pairs band index,
 #: pipelines/zone_report grain aggregates — all <= 2 visible fact scans;
-#: new control absolutes in bench.py, old-plan record = BENCH_r09.json);
+#: old-plan record = BENCH_r09.json);
 #: the two snapshot simulations (incremental_orders_agg, ivm_join_delta)
 #: followed the same round by checkpointing the single projected base
 #: their simulated old/new snapshots derive from (a real deployment reads
