@@ -30,6 +30,19 @@ def haversine_km(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Colu
     return 2 * EARTH_RADIUS_KM * F.asin(F.sqrt(a))
 
 
+#: `haversine_km` as Spark SQL: ``HAVERSINE_A_SQL`` is its inner term ``a``
+#: over four SQL operands and ``HAVERSINE_KM_SQL`` the distance over ``a``.
+#: Both are the expression trees `haversine_km` builds (tests/test_geo.py
+#: compares the analyzed plans), so the two forms are bit-identical. Spark
+#: SQL's ``^`` is XOR, hence ``power``.
+HAVERSINE_A_SQL = (
+    "(power(sin(radians({lat2} - {lat1}) / 2), 2) + "
+    "cos(radians({lat1})) * cos(radians({lat2})) * "
+    "power(sin(radians({lon2} - {lon1}) / 2), 2))"
+)
+HAVERSINE_KM_SQL = f"(asin(sqrt({{a}})) * {2 * EARTH_RADIUS_KM!r}D)"
+
+
 def grid_cell(
     lat: Column, lon: Column, cell_km: float, max_abs_lat: float = 80.0
 ) -> tuple[Column, Column, int]:

@@ -1,8 +1,7 @@
 """Join operators: broadcast dims, unordered-pair self-joins, banded range
 joins, and grid distance joins.
 
-Reference surface covered (SURVEY.md §2.3): J1 cross join for nearest-city
-(replaced by a broadcast + grid prefilter), J2 composite-key self-join,
+Reference surface covered (SURVEY.md §2.3): J2 composite-key self-join,
 J3 pair dedup (`user_left < user_right`), J4 post-join distance predicate,
 J5 left joins, J6 multi-way joins (plain API).
 
@@ -149,32 +148,4 @@ def grid_distance_self_join(
     )
     return joined.withColumn("dist_km", dist).where(
         (F.col("dist_km") <= radius_km) & (F.col(f"{id_col}_l") < F.col(f"{id_col}_r"))
-    )
-
-
-def nearest_neighbor_join(
-    events: DataFrame,
-    dims: DataFrame,
-    event_id: str,
-    e_lat: str,
-    e_lon: str,
-    d_lat: str,
-    d_lon: str,
-) -> DataFrame:
-    """Each event row -> its nearest dimension row by haversine distance
-    (reference J1+W1: save_mes_geo.py:38-44 crossJoin + window argmin).
-
-    The dimension side (cities) is small, so broadcast nested-loop is the
-    right physical plan — but we keep it an explicit broadcast and rank with
-    a deterministic tie-break. At very large dim cardinality, switch to
-    grid_distance-style cell bucketing with escalating radius.
-    """
-    from hadoop_data_lake_spark.operators.windows import top1_per_group
-
-    paired = events.crossJoin(F.broadcast(dims))
-    paired = paired.withColumn(
-        "dist_km", haversine_km(F.col(e_lat), F.col(e_lon), F.col(d_lat), F.col(d_lon))
-    )
-    return top1_per_group(
-        paired, [event_id], [F.col("dist_km").asc(), F.col(d_lat).asc(), F.col(d_lon).asc()]
     )

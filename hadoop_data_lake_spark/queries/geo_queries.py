@@ -15,11 +15,14 @@ rather than only in pytest.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from hadoop_data_lake_spark.core.io import local_frame, read_table
-from hadoop_data_lake_spark.functions.geo import haversine_km
+from hadoop_data_lake_spark.core import driver_tier
+from hadoop_data_lake_spark.core.io import local_frame, parquet_row_count, read_table
+from hadoop_data_lake_spark.functions.geo import HAVERSINE_A_SQL, HAVERSINE_KM_SQL, haversine_km
 from hadoop_data_lake_spark.operators.joins import grid_distance_self_join
 from hadoop_data_lake_spark.operators.windows import top1_per_group
 
@@ -88,34 +91,103 @@ def _cities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Geotag: nearest city per event (reference save_mes_geo.py:24-50; J1 + W1
-# with the B1 radians fix). The 25-row dim is broadcast into a
-# BroadcastNestedLoopJoin; the argmin is a min_by aggregate per event.
+# with the B1 radians fix). One output row per input event row: the city
+# with the least (round(dist_km, 6), city_id).
+#
+# The city dimension is small, so the default plan collects it once
+# (`core.driver_tier.collect_bounded`, footer-count bound) and computes the
+# argmin per event row in one codegen'd projection: no join, no shuffle, no
+# aggregate. The select is on haversine's inner term `a` (order-preserving
+# and cheaper than the distance), and only the cities within 1e-9 of the
+# least `a` pay for asin/sqrt and the 6-decimal round (a BigDecimal
+# setScale per value, which cost more than the trigonometry). Exact:
+# sqrt is correctly rounded, asin semi-monotonic and round monotone, so the
+# rounded distance never decreases in `a`; da/dd <= 1/(2R), so a gap in `a`
+# over 1e-9 is a distance gap over 1.2e-5 km, more than one 6-decimal
+# bucket; a NULL `a` (NULL user_id) takes the round(NULL) branch, which
+# sorts first as NULL does in the cross join's struct order.
+#
+# With the tiers off, more cities than `ARGMIN_MAX_ROWS`, or a NULL/NaN/inf
+# dimension value, the broadcast cross join runs: a BroadcastNestedLoopJoin
+# keyed by a per-row id (as save_mes_geo.py:31 does) and one
+# min(struct(dist_km, city_id, city_name)) aggregate. Both paths return
+# the same rows.
 # --------------------------------------------------------------------------
 
 def nearest_city(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _located_events(spark, sf_dir)
-    cities = _cities(spark, sf_dir)
-    paired = ev.crossJoin(F.broadcast(cities)).withColumn(
-        "dist_km",
-        F.round(haversine_km(F.col("lat"), F.col("lon"), F.col("lat_c"), F.col("lon_c")), 6),
+    bound = parquet_row_count(sf_dir, "nation", cap=driver_tier.ARGMIN_MAX_ROWS)
+    return nearest_city_of(_located_events(spark, sf_dir), _cities(spark, sf_dir), bound)
+
+
+def nearest_city_of(ev: DataFrame, cities: DataFrame, bound: int | None = None) -> DataFrame:
+    """(event_id, user_id, city_id, city_name, dist_km) per row of ``ev``
+    (event_id, user_id, lat, lon) over ``cities`` (city_id, city_name,
+    lat_c, lon_c); ``bound`` is a sound upper bound on the city count."""
+    pdf = driver_tier.collect_bounded(
+        cities,
+        max_rows=driver_tier.ARGMIN_MAX_ROWS,
+        bound=bound,
+        types={
+            "city_id": driver_tier.INTEGRAL,
+            "lat_c": (T.DoubleType,),
+            "lon_c": (T.DoubleType,),
+        },
+        null_cols=("city_id", "lat_c", "lon_c", "city_name"),
     )
-    # Argmin via min_by rather than a row_number window: a partial
-    # aggregate collapses the 25 candidates per event before the shuffle,
-    # then a final one merges them. Both are SortAggregates — a struct-typed
-    # buffer cannot live in a HashAggregate. Same tie-break as the window:
-    # the ordering struct puts city_id after dist_km.
-    best = paired.groupBy("event_id", "user_id").agg(
-        F.min_by(
-            F.struct("city_id", "city_name"), F.struct("dist_km", "city_id")
-        ).alias("best"),
-        F.min(F.struct("dist_km", "city_id")).alias("bk"),
+    if pdf is None or not np.isfinite(pdf[["lat_c", "lon_c"]].to_numpy()).all():
+        return _nearest_city_cross(ev, cities)
+    # Index order is (city_id, city_name) order, so the index breaks ties
+    # exactly as the cross join's struct does.
+    pdf = pdf.sort_values(["city_id", "city_name"], kind="stable")
+    a = [
+        HAVERSINE_A_SQL.format(lat1="lat", lon1="lon", lat2=f"{la!r}D", lon2=f"{lo!r}D")
+        for la, lo in zip(pdf["lat_c"].tolist(), pdf["lon_c"].tolist())
+    ]
+    n = len(a)
+    keys = ", ".join(
+        f"named_struct('k', if(__a{i} > __m + 1e-9, double('inf'), "
+        f"round({HAVERSINE_KM_SQL.format(a=f'__a{i}')}, 6)), 'i', {i})"
+        for i in range(n)
+    )
+    best = ev.selectExpr(
+        "event_id",
+        "user_id",
+        *[f"{a_i} AS __a{i}" for i, a_i in enumerate(a)],
+        f"least({', '.join(f'__a{i}' for i in range(n))}) AS __m",
+        f"least({keys}) AS __w",
+    )
+    # one bound array literal each (numpy arrays cross py4j in one call)
+    id_type = cities.schema["city_id"].dataType
+    ids = F.lit(pdf["city_id"].to_numpy(dtype=np.int64)).cast(T.ArrayType(id_type))
+    names = F.lit(pdf["city_name"].to_numpy(dtype=str))
+    at = F.col("__w.i") + 1
+    return best.select(
+        "event_id",
+        "user_id",
+        F.element_at(ids, at).alias("city_id"),
+        F.element_at(names, at).alias("city_name"),
+        F.col("__w.k").alias("dist_km"),
+    )
+
+
+def _nearest_city_cross(ev: DataFrame, cities: DataFrame) -> DataFrame:
+    paired = (
+        ev.withColumn("__rid", F.monotonically_increasing_id())
+        .crossJoin(F.broadcast(cities))
+        .withColumn(
+            "dist_km",
+            F.round(haversine_km(F.col("lat"), F.col("lon"), F.col("lat_c"), F.col("lon_c")), 6),
+        )
+    )
+    best = paired.groupBy("__rid", "event_id", "user_id").agg(
+        F.min(F.struct("dist_km", "city_id", "city_name")).alias("best")
     )
     return best.select(
         "event_id",
         "user_id",
         F.col("best.city_id").alias("city_id"),
         F.col("best.city_name").alias("city_name"),
-        F.col("bk.dist_km").alias("dist_km"),
+        F.col("best.dist_km").alias("dist_km"),
     )
 
 

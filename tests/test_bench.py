@@ -44,6 +44,19 @@ def test_time_full_reports_jobs_and_cpu(spark):
     assert rec["cpu_s"] >= 0 and rec["s"] > 0
 
 
+def test_time_full_counts_a_replays_micro_batch_jobs(spark):
+    """A stream replay's micro-batches run under the query's run-id group,
+    outside the entry's own group; `jobs` counts them too."""
+    from conftest import SF_DIR
+
+    from hadoop_data_lake_spark.queries.registry import REGISTRY
+
+    fn = REGISTRY["stream_windowed_counts"].fn
+    rec = bench.time_full(spark, "replay", lambda: fn(spark, SF_DIR), reps=1)
+    group = spark.sparkContext.statusTracker().getJobIdsForGroup("bench|replay|0")
+    assert group and rec["jobs"] > len(group)
+
+
 def test_compact_line_sheds_decimals_not_the_map():
     names = bench.HEADLINE_FROZEN + bench.HEADLINE_EXTRAS + ["events_partitioned_range"]
     assert len(names) == 65

@@ -6,8 +6,15 @@ import pytest
 import math
 
 import pyspark.sql.functions as F
+from hypothesis import example, given, settings, strategies as st
 
 from hadoop_data_lake_spark.functions.geo import grid_cell, haversine_km
+
+# Coordinates from integer strategies, as in test_properties.py (1e-4 degree
+# resolution).
+lat_s = st.integers(min_value=-600_000, max_value=600_000).map(lambda v: v / 10_000.0)
+lon_s = st.integers(min_value=-1_700_000, max_value=1_700_000).map(lambda v: v / 10_000.0)
+coord_s = st.tuples(lat_s, lon_s)
 
 # (name, lat, lon) — fixed points covering hemispheres, poles, antimeridian.
 POINTS = [
@@ -195,3 +202,118 @@ def test_ray_casting_known_points(spark):
     got = {(r["lat"], r["lon"]): r for r in rows}
     for la, lo, zone, want in cases:
         assert bool(got[(la, lo)][zone]) == want, (la, lo, zone)
+
+
+def test_haversine_sql_is_the_haversine_km_tree(spark):
+    """The SQL twin and the Column builder analyze to the same expression
+    tree, so the nearest_city tier's distances are bit-identical to the
+    cross join's."""
+    import re
+
+    from hadoop_data_lake_spark.functions.geo import HAVERSINE_A_SQL, HAVERSINE_KM_SQL
+
+    df = spark.range(1).selectExpr(
+        "id * 1.5D AS lat1", "id * 2.5D AS lon1", "id * 3.5D AS lat2", "id * 4.5D AS lon2"
+    )
+    a = HAVERSINE_A_SQL.format(lat1="lat1", lon1="lon1", lat2="lat2", lon2="lon2")
+    by_sql = df.selectExpr(f"{HAVERSINE_KM_SQL.format(a=a)} AS d")
+    by_col = df.select(
+        haversine_km(F.col("lat1"), F.col("lon1"), F.col("lat2"), F.col("lon2")).alias("d")
+    )
+
+    def tree(x):
+        return re.sub(r"#\d+L?", "", x._jdf.queryExecution().analyzed().toString())
+
+    assert tree(by_sql) == tree(by_col)
+
+
+# --------------------------------------------------------------------------
+# nearest_city: the per-row argmin tier against the broadcast cross join.
+# --------------------------------------------------------------------------
+
+_EV_SCHEMA = "event_id long, user_id long, lat double, lon double"
+_CITY_SCHEMA = "city_id int, city_name string, lat_c double, lon_c double"
+OBRIEN = "O'Br\\ien"
+
+
+def _nearest_rows(spark, events, cities, tiers_on: bool):
+    from hadoop_data_lake_spark.core import driver_tier as DT
+    from hadoop_data_lake_spark.queries.geo_queries import nearest_city_of
+
+    ev = spark.createDataFrame(events, _EV_SCHEMA)
+    was, DT.GENERAL_DRIVER_TIER_ENABLED = DT.GENERAL_DRIVER_TIER_ENABLED, tiers_on
+    try:
+        df = nearest_city_of(ev, spark.createDataFrame(cities, _CITY_SCHEMA), len(cities))
+    finally:
+        DT.GENERAL_DRIVER_TIER_ENABLED = was
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if events:  # an empty local relation plans no join at all
+        assert ("BroadcastNestedLoopJoin" in plan) is not tiers_on  # the path ran
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+@settings(max_examples=12, deadline=None)
+@example(
+    cities=[(10.0, 20.0), (-10.0, -20.0)], ids=[5, 3], near=[], spread=1.0, far=[],
+    shift=(1, 10), twin_low=False, null_user=False,
+)
+@example(
+    cities=[(10.0, 20.0)], ids=[5], near=[(3, 4), (-7, 2), (30, -30), (1, 1)], spread=1e-4,
+    far=[], shift=(3, 12), twin_low=False, null_user=True,
+)
+@given(
+    cities=st.lists(coord_s, min_size=1, max_size=8),
+    ids=st.lists(st.integers(3, 1000), min_size=8, max_size=8, unique=True),
+    near=st.lists(st.tuples(st.integers(-30, 30), st.integers(-30, 30)), max_size=25),
+    spread=st.sampled_from([1e-4, 1e-2, 1.0]),
+    far=st.lists(coord_s, max_size=10),
+    shift=st.tuples(st.integers(1, 9), st.integers(5, 12)),
+    twin_low=st.booleans(),
+    null_user=st.booleans(),
+)
+def test_nearest_city_tier_matches_cross_join(
+    spark, cities, ids, near, spread, far, shift, twin_low, null_user
+):
+    """Tier on == tier off, row for row. The first city gets an exact twin
+    (same coordinates, lower id, later row: ties go to the lower id) and a
+    near twin shifted by m * 10^-e degrees, whose rounded distance ties or
+    straddles a 6-decimal boundary and whose id is the lowest or the
+    highest; events cluster around the first city. City id 0 is named
+    O'Br\\ien and has an event on it."""
+    (lat0, lon0), rest = cities[0], cities[1:]
+    city_rows = [(ids[0], "c0", lat0, lon0)]
+    city_rows += [(ids[i + 1], f"c{i + 1}", la, lo) for i, (la, lo) in enumerate(rest)]
+    city_rows += [
+        (min(ids) - 1, "twin", lat0, lon0),
+        (min(ids) - 2 if twin_low else 1001, "near_twin", lat0 + shift[0] * 10.0 ** -shift[1], lon0),
+        (0, OBRIEN, 45.0, 45.0),
+    ]
+    events = [(i, i % 7, lat0 + a * spread, lon0 + b * spread) for i, (a, b) in enumerate(near)]
+    events += [(100 + i, i, la, lo) for i, (la, lo) in enumerate(far)]
+    if events:
+        events += [(200, 3, 45.0, 45.0), events[0]]  # on O'Br\ien; a duplicate row
+        if null_user:
+            events.append((300, None, None, None))
+    on = _nearest_rows(spark, events, city_rows, True)
+    off = _nearest_rows(spark, events, city_rows, False)
+    assert on == off
+    assert len(on) == len(events)
+    if events:
+        assert (200, 3, 0, OBRIEN, 0.0) in on
+
+
+def test_nearest_city_runs_one_collect_and_one_action(spark, tiers):
+    """Warm: one build job (the city collect) and one job for the whole
+    result. The cross join builds with no job."""
+    from conftest import SF_DIR, count_jobs
+
+    from hadoop_data_lake_spark.queries.registry import REGISTRY
+
+    fn = REGISTRY["nearest_city"].fn
+    tiers(True)
+    fn(spark, SF_DIR)  # schema memo: a first read runs an inference job
+    df, build = count_jobs(spark, lambda: fn(spark, SF_DIR))
+    _, action = count_jobs(spark, lambda: df.write.format("noop").mode("overwrite").save())
+    assert (build, action) == (1, 1)
+    tiers(False)
+    assert count_jobs(spark, lambda: fn(spark, SF_DIR))[1] == 0

@@ -13,14 +13,22 @@ def _plan(spark, name: str) -> str:
     return REGISTRY[name].fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
 
 
-def test_nearest_city_broadcasts_dim_and_aggregates_argmin(spark):
+def test_nearest_city_tier_plans_no_exchange_join_or_aggregate(spark):
+    """The collected city dimension turns the argmin into one projection."""
+    plan = _plan(spark, "nearest_city")
+    for op in ("Exchange", "Join", "Aggregate", "Window"):
+        assert op not in plan
+
+
+def test_nearest_city_broadcasts_dim_and_aggregates_argmin(spark, tiers):
+    tiers(False)
     plan = _plan(spark, "nearest_city")
     # 25-row city dim must broadcast under the cross join
     assert "BroadcastNestedLoopJoin" in plan
-    # argmin via min_by aggregate (struct-valued buffers plan as
-    # SortAggregate): the PARTIAL stage collapses the 25 candidates per
-    # event map-side before the shuffle, final after
-    assert "partial_min_by" in plan
+    # argmin via a min(struct) aggregate per row id (struct-valued buffers
+    # plan as SortAggregate): the PARTIAL stage collapses the 25 candidates
+    # per event map-side before the shuffle, final after
+    assert "partial_min(" in plan
     assert plan.count("Aggregate") >= 2
     assert "Window" not in plan
 
