@@ -179,30 +179,6 @@ def kmv_estimate(minima: DataFrame, keys: list[str], k: int = KMV_K) -> DataFram
     return agg.select(*keys, est.alias("est"))
 
 
-def kmv_sql(table_sql: str, keys: list[str], value_expr: str, k: int = KMV_K) -> str:
-    """DuckDB replay of kmv_minima |> kmv_estimate for one grouping."""
-    ks = ", ".join(keys)
-    h = md5_60bit_sql(value_expr)
-    return f"""
-WITH hh AS (
-  SELECT DISTINCT {ks}, {h}::bigint AS h FROM {table_sql}
-),
-mins AS (
-  SELECT {ks}, h,
-         row_number() OVER (PARTITION BY {ks} ORDER BY h) AS rn
-  FROM hh
-),
-agg AS (
-  SELECT {ks}, count(*) AS n_min, max(h) AS hk
-  FROM mins WHERE rn <= {k} GROUP BY {ks}
-)
-SELECT {ks},
-       CASE WHEN n_min < {k} THEN n_min::double
-            ELSE {float((k - 1) * (1 << 60))!r} / hk::double END AS est
-FROM agg
-"""
-
-
 # ---------------------------------------------------------------------------
 # Count-min sketch (Cormode & Muthukrishnan 2005), deterministic variant
 # ---------------------------------------------------------------------------

@@ -1,8 +1,9 @@
 """Timestamp derivations.
 
-Covers the reference's datetime surface (to_timestamp / month / weekofyear /
-from_utc_timestamp — calculate_user_city.py:20,51; calculate_zone_report.py:
-18-21,30-33) with one deliberate fix: the reference computes event gaps by
+Covers the reference's datetime surface (from_utc_timestamp —
+calculate_user_city.py:51; to_timestamp / month / weekofyear,
+calculate_user_city.py:20 and calculate_zone_report.py:18-21,30-33, are
+plain `F.*` calls at their use sites) with one deliberate fix: the reference computes event gaps by
 casting a timestamp difference to long (calculate_user_city.py:56), which in
 Spark 3+ yields DayTimeIntervalType, not seconds (SURVEY.md §2.9-B4). We
 compute gaps on epoch integers instead.
@@ -18,23 +19,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def parse_ts(col: Column, fmt: str = "yyyy-MM-dd HH:mm:ss") -> Column:
-    """String -> timestamp, null on unparseable (reference P4 filters these)."""
-    return F.to_timestamp(col, fmt)
-
-
 def ts_us(col: Column) -> Column:
     """Timestamp -> exact microseconds since epoch (bigint)."""
     return F.unix_micros(col)
-
-
-def week_of(col: Column) -> Column:
-    """ISO week number (parity: Spark weekofyear == DuckDB weekofyear)."""
-    return F.weekofyear(col)
-
-
-def month_of(col: Column) -> Column:
-    return F.month(col)
 
 
 def gap_days(cur_ts: Column, prev_ts: Column) -> Column:

@@ -1,8 +1,10 @@
 """Aggregation operators: deterministic pivot counts and rollup helpers.
 
 Reference surface (SURVEY.md §2.4): pivot with a fixed value list
-(calculate_zone_report.py:23-25), count/max/sum group-bys, and
-collect_list(struct) ordered history (calculate_user_city.py:63-69).
+(calculate_zone_report.py:23-25) and count/max/sum group-bys. The
+collect_list(struct) ordered history (calculate_user_city.py:63-69) is
+written inline where it is used: `queries/geo_queries.user_event_history`
+and the `travel_array` of `pipelines/user_city`.
 
 The fixed pivot value list is kept mandatory: it makes the operator a single
 pass (no distinct-values pre-job) and the output schema static — both
@@ -33,17 +35,3 @@ def pivot_counts(
         out = out.fillna(fill, subset=values)
     return out
 
-
-def ordered_history(
-    df: DataFrame, keys: list[str], ts_col: str, value_col: str, out_col: str = "history", desc: bool = True
-) -> DataFrame:
-    """Per-key chronologically ordered array of (ts, value) structs
-    (reference A5: sort_array(collect_list(struct(dt, city_name))),
-    calculate_user_city.py:63-69).
-
-    sort_array on array<struct> orders by the first struct field, so ts must
-    be first; collect_list order is nondeterministic but the sort makes the
-    result deterministic.
-    """
-    collected = F.collect_list(F.struct(F.col(ts_col).alias("ts"), F.col(value_col).alias("val")))
-    return df.groupBy(*keys).agg(F.sort_array(collected, asc=not desc).alias(out_col))

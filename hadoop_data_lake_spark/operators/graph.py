@@ -81,7 +81,25 @@ def broadcast_bounded_state(df: DataFrame, n_rows: int | None) -> DataFrame:
 _bcast_state = broadcast_bounded_state
 
 
-def _cc_driver_labels(raw: DataFrame, return_edges: bool = False):
+def _pair_checkpoint(pairs: DataFrame, a: str, b: str) -> tuple[DataFrame, int]:
+    """(u, v) eager checkpoint of a pair frame and its row count. The
+    count is observed inside the checkpoint job itself, so it costs no
+    extra Spark job; an empty pair set is then known before any tier
+    collect or star-loop job runs."""
+    from pyspark.sql import Observation
+
+    seen = Observation()
+    raw = (
+        pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
+        .observe(seen, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    return raw, seen.get["n"]
+
+
+def _cc_driver_labels(
+    raw: DataFrame, return_edges: bool = False, bound: int | None = None
+):
     """Union-find core of the CC driver tier: (vertex -> min reachable
     id) dict over the (u, v) pairs collected through the driver-tier
     gate, or ``None`` to decline. u and v must share one integral or
@@ -98,12 +116,17 @@ def _cc_driver_labels(raw: DataFrame, return_edges: bool = False):
     pairs, so a caller that needs a PER-PAIR pass over the same bounded
     pair list (cluster_safe_split_audit's leak audit) folds it into this
     one collect instead of collecting the checkpoint again.
+
+    ``bound`` is the row count of the materialized ``raw`` when the caller
+    read it (`_pair_checkpoint`): the gate's sound bound, so an over-cap
+    pair set declines with no collect at all.
     """
     if raw.schema["u"].dataType != raw.schema["v"].dataType:
         return None
     pdf = DT.collect_bounded(
         raw.select("u", "v"),
         max_rows=DT.MAX_ROWS,
+        bound=bound,
         types=DT.INTEGRAL + (T.StringType,),
         null_cols=("u", "v"),
     )
@@ -135,12 +158,12 @@ def _cc_driver_labels(raw: DataFrame, return_edges: bool = False):
     return (labels, rows) if return_edges else labels
 
 
-def _cc_driver(raw: DataFrame):
+def _cc_driver(raw: DataFrame, bound: int | None = None):
     """Driver tier for `connected_components`: the union-find labels as a
     (vertex, component) DataFrame, or ``None`` when the core declines."""
     import pandas as pd
 
-    labels = _cc_driver_labels(raw)
+    labels = _cc_driver_labels(raw, bound=bound)
     if labels is None:
         return None
     ut = raw.schema["u"].dataType
@@ -180,17 +203,19 @@ def connected_components(
     # materialized frame, so the upstream pair pipeline (e.g. the minhash
     # LSH candidate generation) executes exactly once — deriving verts and
     # e as separate checkpoints of the un-materialized input ran it twice
-    # (measured +1.4s on dedup_clusters_minhash at sf0.1).
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
-        eager=True
-    )
+    # (measured +1.4s on dedup_clusters_minhash at sf0.1). The pair count
+    # rides along: an empty edge set is the empty labeling, with no tier
+    # collect and no star loop.
+    raw, n = _pair_checkpoint(edges, src, dst)
+    if n == 0:
+        return raw.select(F.col("u").alias("vertex"), F.col("u").alias("component"))
     # Driver tier: near-dup pair sets are tiny relative to the corpus
     # that produced them (253 pairs at sf0.1 for the minhash family), but
     # the distributed star loop pays 3 shuffles + a fingerprint aggregate
     # PER ROUND — fixed Spark overhead, not data cost. One bounded collect
     # of the checkpointed pairs + exact union-find returns the identical
     # (vertex, component = min reachable id) labeling.
-    labels = _cc_driver(raw)
+    labels = _cc_driver(raw, bound=n)
     if labels is not None:
         return labels
     return _cc_distributed(raw, max_iter=max_iter, strict=strict)
@@ -305,12 +330,16 @@ def dedup_clusters(
     """Collapse near-dup pairs into clusters: (doc, cluster_rep, cluster_size).
 
     cluster_rep = min doc id in the component (deterministic election)."""
-    raw = pairs.select(
-        F.col(id_a).alias("u"), F.col(id_b).alias("v")
-    ).localCheckpoint(eager=True)
+    raw, n = _pair_checkpoint(pairs, id_a, id_b)
+    if n == 0:
+        return raw.select(
+            F.col("u").alias("doc"),
+            F.col("u").alias("cluster_rep"),
+            F.lit(0).cast("long").alias("cluster_size"),
+        )
     # Driver tier: when the CC union-find tier fires, the sizes aggregate
     # + join fold into the same driver pass — one local frame out.
-    labels = _cc_driver_labels(raw)
+    labels = _cc_driver_labels(raw, bound=n)
     if labels is not None:
         from collections import Counter
 

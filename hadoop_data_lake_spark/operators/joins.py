@@ -2,7 +2,7 @@
 joins, and grid distance joins.
 
 Reference surface covered (SURVEY.md §2.3): J2 composite-key self-join,
-J3 pair dedup (`user_left < user_right`), J4 post-join distance predicate,
+J3 pair dedup (the `<` id predicate in the grid joins), J4 post-join distance predicate,
 J5 left joins, J6 multi-way joins (plain API).
 
 Scale design: a range predicate |a.x - b.x| <= w or a distance predicate
@@ -28,12 +28,6 @@ def broadcast_dim_join(
     reference relies on the implicit autoBroadcastJoinThreshold; we state it).
     """
     return fact.join(F.broadcast(dim), on=on, how=how)
-
-
-def dedup_unordered_pairs(df: DataFrame, left_col: str, right_col: str) -> DataFrame:
-    """Keep each unordered pair once (reference J3: 'user_left < user_right',
-    calculate_user_recommendations.py:39)."""
-    return df.where(F.col(left_col) < F.col(right_col))
 
 
 def banded_range_self_join(

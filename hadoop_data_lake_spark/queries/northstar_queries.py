@@ -4285,11 +4285,7 @@ def decontaminate_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFram
     from hadoop_data_lake_spark.operators.windows import topk_per_group
 
     emb = read_table(spark, sf_dir, "embeddings")
-    c = emb.select(
-        "vec_id",
-        F.col("embedding").alias("q_vec"),
-        norm(F.col("embedding")).alias("norm_q"),
-    )
+    c = SIM._side(emb, "vec_id", "embedding", "q", id_as="vec_id")
     pv = F.transform(
         F.col("embedding"),
         lambda x, i: F.when(i == 0, x.cast("double") + F.lit(0.3)).otherwise(
@@ -4303,7 +4299,7 @@ def decontaminate_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFram
     )
     hits = (
         c.crossJoin(F.broadcast(p))
-        .withColumn("sim_r", F.round(SIM._paired_cosine(), 6))
+        .withColumn("sim_r", SIM._paired_cosine())
         .where(F.col("sim_r") >= 0.9)
     )
     return topk_per_group(

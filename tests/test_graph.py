@@ -710,6 +710,38 @@ def test_dedup_clusters_identity_tier_on_off(spark, tiers):
     assert {(1, 1, 3), (2, 1, 3), (3, 1, 3)} <= a
 
 
+def test_cc_empty_pairs_build_without_collect(spark, tiers):
+    """An empty pair set costs only its checkpoint job: the count observed
+    in that job returns the empty result before any tier collect or
+    star-loop job, with the columns the other paths produce."""
+    empty = spark.createDataFrame([], "a long, b long")
+    for enabled in (True, False):
+        tiers(enabled)
+        cc, jobs = count_jobs(spark, lambda: G.connected_components(empty, "a", "b"))
+        assert jobs == 1
+        assert cc.columns == ["vertex", "component"] and cc.count() == 0
+        dc, jobs = count_jobs(spark, lambda: G.dedup_clusters(empty, "a", "b"))
+        assert jobs == 1
+        assert dc.columns == ["doc", "cluster_rep", "cluster_size"]
+        assert dc.count() == 0
+
+
+def test_cc_over_cap_pairs_decline_without_collect(spark, tiers, monkeypatch):
+    """Over the cap, the observed pair count is the gate's sound bound: the
+    tier declines without its limit(cap+1) collect, so tiers on builds in
+    exactly the jobs of tiers off, with the same labels."""
+    monkeypatch.setattr(DT, "MAX_ROWS", 1)
+    df = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "a long, b long")
+
+    def build():
+        return count_jobs(spark, lambda: G.connected_components(df, "a", "b"))
+
+    (on, jobs_on), (off, jobs_off) = tiers.on_off(build)
+    assert jobs_on == jobs_off
+    assert sorted(map(tuple, on.collect())) == sorted(map(tuple, off.collect()))
+    assert sorted(map(tuple, on.collect())) == [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
+
+
 def test_est_row_bytes_widths():
     from pyspark.sql.types import (
         ArrayType,
@@ -1026,3 +1058,109 @@ def test_lpa_driver_tier_null_vs_zero_ranking(spark, tiers):
     assert fast == dist
     v_row = [r for r in fast if r[0] == "v"]
     assert v_row and v_row[0][1] == "zz"
+
+
+def test_graph_state_broadcast_cap_is_value_neutral(spark):
+    """operators/graph._bcast_state must only change the JOIN STRATEGY,
+    never values: pagerank_intexact, lpa_communities and kcore_peel give
+    identical results with the broadcast forced off (cap -1, the 1e9-vertex
+    path) and forced on (the bounded-state path). Integer arithmetic makes
+    this exact — any divergence means the two physical plans computed
+    different math, which would silently split correctness between bench
+    scale and 100 TB."""
+    import hadoop_data_lake_spark.operators.graph as G
+
+    edges = spark.createDataFrame(
+        [(a, b) for a in range(12) for b in range(12) if a != b and (a * 7 + b) % 3],
+        "src long, dst long",
+    )
+    old_cap = G.BROADCAST_STATE_MAX_ROWS
+    try:
+        results = {}
+        for mode, cap in (("bcast", 1_000_000), ("shuffle", -1)):
+            G.BROADCAST_STATE_MAX_ROWS = cap
+            pr = {
+                (r["node"], r["rank_units"])
+                for r in G.pagerank_intexact(edges, iters=4).collect()
+            }
+            lpa = {
+                (r["vertex"], r["community"])
+                for r in G.lpa_communities(edges, iters=3).collect()
+            }
+            kc = {
+                (r["node"], r["deg"])
+                for r in G.kcore_peel(edges, k=3, peels=2).collect()
+            }
+            results[mode] = (pr, lpa, kc)
+    finally:
+        G.BROADCAST_STATE_MAX_ROWS = old_cap
+    assert results["bcast"] == results["shuffle"]
+    assert results["bcast"][0], "pagerank produced no rows"
+
+
+def test_hits_scores_are_normalized_and_bipartite(spark):
+    """HITS: integer scores in (0, 10^6], the max on each side hits the
+    10^6 ceiling exactly (rescaling invariant), and sides don't mix."""
+    from hadoop_data_lake_spark.queries.tpch_queries import hits_hubs_authorities
+
+    rows = hits_hubs_authorities(spark, SF_DIR).collect()
+    by_side = {}
+    for r in rows:
+        by_side.setdefault(r["side"], []).append(r["score"])
+    assert set(by_side) == {"hub", "auth"}
+    for side, scores in by_side.items():
+        assert len(scores) == 10
+        assert max(scores) == 1_000_000, side
+        assert all(0 < s <= 1_000_000 for s in scores)
+
+
+def test_cc_driver_labels_declines_on_null_ids(spark, tiers):
+    raw = spark.createDataFrame(
+        [(1, 2), (None, 3)],
+        StructType([StructField("u", LongType()), StructField("v", LongType())]),
+    ).localCheckpoint(eager=True)
+    assert G._cc_driver_labels(raw) is None  # decline, not TypeError
+
+
+def test_split_audit_leak_fold_matches_distributed(spark, tiers):
+    """The driver leak fold (Python md5 over the collected pair list)
+    must equal the distributed leak joins row-for-row — including the
+    md5(cast(id as string)) replication and the leak_c == 0 invariant."""
+    from hadoop_data_lake_spark.queries.registry import REGISTRY
+
+    fn = REGISTRY["cluster_safe_split_audit"].fn
+    sf = SF_DIR
+    on, off = tiers.on_off(lambda: sorted(map(tuple, fn(spark, sf).collect())))
+    assert on == off
+    by_kind = {r[0]: r for r in on}
+    assert by_kind["cluster_aware"][3] == 0  # no leaks by construction
+    assert by_kind["cluster_aware"][1] + by_kind["cluster_aware"][2] == 500
+
+
+def test_dedup_clusters_over_cap_matches_tier(spark, tiers, monkeypatch):
+    """The refactored decline path (_cc_distributed on the caller's own
+    checkpoint — no re-checkpoint, no second tier gate) labels exactly
+    like the driver tier."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (5, 5), (3, 1)],
+        StructType(
+            [StructField("doc_a", LongType()), StructField("doc_b", LongType())]
+        ),
+    )
+    want = {
+        (r["doc"], r["cluster_rep"], r["cluster_size"])
+        for r in G.dedup_clusters(pairs).collect()
+    }
+    monkeypatch.setattr(DT, "MAX_ROWS", 2)  # force decline
+    got = {
+        (r["doc"], r["cluster_rep"], r["cluster_size"])
+        for r in G.dedup_clusters(pairs).collect()
+    }
+    assert got == want == {
+        (1, 1, 3),
+        (2, 1, 3),
+        (3, 1, 3),
+        (10, 10, 2),
+        (11, 10, 2),
+        (5, 5, 1),
+    }

@@ -9,6 +9,7 @@ import pyspark.sql.functions as F
 import pytest
 from conftest import count_jobs
 
+from hadoop_data_lake_spark.core import io as IO
 from hadoop_data_lake_spark.core.io import (
     read_any,
     read_partitioned,
@@ -331,3 +332,60 @@ def test_local_frame_rejects_values_that_do_not_fit_the_field(spark):
         assert tuple(edge.collect()[0]) == (2**31 - 1, -(2**31), 2**31)
     finally:
         spark.conf.set(key, prev)
+
+
+# ---------------------------------------------- parquet_row_count cap
+# The footer loop stops as soon as the running sum exceeds the caller's
+# cap and answers None past the file-count guard, so callers fall back to
+# the Spark count.
+
+
+@pytest.fixture()
+def many_file_table(spark, tmp_path):
+    """A directory-layout parquet table of 6 files x 100 rows."""
+    root = tmp_path / "sfdir"
+    (root / "t.parquet").mkdir(parents=True)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for i in range(6):
+        pq.write_table(
+            pa.table({"x": list(range(i * 100, i * 100 + 100))}),
+            str(root / "t.parquet" / f"part-{i:05d}.parquet"),
+        )
+    return str(root)
+
+
+def test_parquet_row_count_exact_without_cap(many_file_table):
+    assert IO.parquet_row_count(many_file_table, "t") == 600
+
+
+def test_parquet_row_count_cap_early_exit(many_file_table, monkeypatch):
+    """With a cap, the loop reads footers only until the sum exceeds it:
+    cap=150 must stop after the second footer (2 reads, partial sum 200),
+    never all six."""
+    import pyarrow.parquet as pq
+
+    reads = []
+    orig = pq.ParquetFile
+
+    def counting(path, *a, **kw):
+        reads.append(path)
+        return orig(path, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    got = IO.parquet_row_count(many_file_table, "t", cap=150)
+    assert got is not None and got > 150  # a correct over-cap verdict
+    assert len(reads) == 2  # early exit, not a full footer sweep
+    reads.clear()
+    # under-cap: all footers read, exact count back
+    assert IO.parquet_row_count(many_file_table, "t", cap=10_000) == 600
+    assert len(reads) == 6
+
+
+def test_parquet_row_count_file_count_guard(many_file_table, monkeypatch):
+    """Past the footer budget the function answers None (callers fall
+    back to the distributed count — sound on any layout)."""
+    monkeypatch.setattr(IO, "PARQUET_COUNT_MAX_FOOTERS", 3)
+    assert IO.parquet_row_count(many_file_table, "t") is None
+    assert IO.parquet_row_count(many_file_table, "t", cap=10) is None

@@ -1,9 +1,11 @@
-"""Small-file compaction (operators/maintenance.py)."""
+"""Dataset maintenance: small-file compaction (operators/maintenance.py)
+and the missing-partition audit."""
 
 import glob
 
 import pyspark.sql.functions as F
 
+from conftest import SF_DIR
 from hadoop_data_lake_spark.operators.maintenance import compact_dataset
 
 
@@ -87,3 +89,35 @@ def test_write_audit_publish_gates_bad_snapshots(spark, tmp_path):
     r3 = write_audit_publish(spark, good2, target, expectations)
     assert r3["published"]
     assert read_table_generation(spark, target).count() == 50
+
+
+def test_missing_partition_audit_finds_planted_gaps(spark, tmp_path):
+    """Drop two date ranges from a copy of events; the audit must report
+    exactly those runs with correct lengths (and nothing on the intact
+    table — covered by the oracle's empty result)."""
+    from hadoop_data_lake_spark.core.io import read_table
+    from hadoop_data_lake_spark.queries.events_queries import missing_partition_audit
+    from pyspark.sql import functions as F
+
+    ev = read_table(spark, SF_DIR, "events")
+    days = sorted(
+        r["d"] for r in ev.select(F.to_date("ts").alias("d")).distinct().collect()
+    )
+    holes = {days[3], days[4], days[10]}  # one 2-day run + one 1-day run
+    holed = ev.where(~F.to_date("ts").isin(list(holes)))
+    out = str(tmp_path / "events.parquet")
+    holed.write.parquet(out)
+    # the audit reads via read_table(sf_dir, "events") => point sf_dir at tmp
+    import shutil, os
+    sfdir = str(tmp_path / "sf")
+    os.makedirs(sfdir)
+    # single-file layout expected: write directly under sf/events.parquet
+    holed.coalesce(1).write.mode("overwrite").parquet(os.path.join(sfdir, "events.parquet"))
+    got = {
+        (r["gap_start"], r["gap_end"], r["n_days_missing"])
+        for r in missing_partition_audit(spark, sfdir).collect()
+    }
+    assert got == {
+        (str(days[3]), str(days[4]), 2),
+        (str(days[10]), str(days[10]), 1),
+    }

@@ -500,3 +500,53 @@ def test_fact_rescan_allowlist_empty():
     from tools.plan_audit import FACT_RESCAN_ALLOW
 
     assert FACT_RESCAN_ALLOW == set()
+
+
+# Checkpointed plans: the fact tables these queries read are scanned at
+# most the pinned number of times in the pre-execution plan (the band,
+# shingle and aggregate indexes are checkpointed; embedding_near_dup keeps
+# its two column-pruned verify scans on purpose — re-scanning pruned
+# parquet beats storing a copy of the embedding payload). plan_audit
+# flags >= 4 scans; these pin the actual <= 2 contract.
+
+
+_PINNED_SCANS = [
+    ("zone_report", {"events": 0}),
+    ("dedup_minhash_lsh", {"documents": 0}),
+    ("decontaminate_minhash_cross", {"documents": 0}),
+    ("dedup_clusters_minhash", {"documents": 0}),
+    ("embedding_near_dup", {"embeddings": 2}),
+    ("decontamination_report", {"documents": 2, "embeddings": 2}),
+    # snapshot sims: the simulated old/new snapshots derive from ONE
+    # checkpointed projection per physical table (was orders x4 / x5 +
+    # customer x6 through the alias-differing delta subtrees)
+    ("incremental_orders_agg", {"orders": 0}),
+    ("ivm_join_delta", {"orders": 0, "customer": 0}),
+]
+
+
+def _fact_scan_counts(spark, name):
+    import re
+    from collections import Counter
+
+    from hadoop_data_lake_spark.queries.registry import REGISTRY
+
+    plan = (
+        REGISTRY[name].fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+    )
+    c = Counter()
+    for line in plan.splitlines():
+        if "FileScan" in line:
+            c.update(re.findall(r"(\w+)\.parquet", line))
+    return c
+
+
+@pytest.mark.parametrize("name,limits", _PINNED_SCANS, ids=[p[0] for p in _PINNED_SCANS])
+def test_checkpointed_plans_scan_facts_at_most_pinned(spark, name, limits):
+    counts = _fact_scan_counts(spark, name)
+    for table, max_scans in limits.items():
+        assert counts.get(table, 0) <= max_scans, (
+            f"{name}: {table} scanned {counts.get(table, 0)}x "
+            f"(pinned <= {max_scans}) — the checkpoint restructuring "
+            f"regressed; full counts: {dict(counts)}"
+        )

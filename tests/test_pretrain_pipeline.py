@@ -1,4 +1,5 @@
-"""End-to-end pretraining-data funnel (pipelines/pretrain_data.py)."""
+"""End-to-end pretraining-data funnel (pipelines/pretrain_data.py), the
+data-mix waterfill and the shard plan."""
 
 import pyspark.sql.functions as F
 
@@ -98,3 +99,46 @@ def test_pretrain_funnel_counts_each_stage_inside_its_checkpoint(spark):
     )
     assert len(funnel) == 9
     assert jobs <= 63 - 9, jobs
+
+
+def test_waterfill_respects_budget_and_level(spark):
+    """Allocations never exceed the budget, uncapped sources keep every
+    token, and capped sources all sit exactly at the water level."""
+    from hadoop_data_lake_spark.queries.northstar_queries import data_mix_waterfill
+
+    rows = data_mix_waterfill(spark, SF_DIR).collect()
+    total = sum(r["toks"] for r in rows)
+    budget = total // 2
+    alloc = sum(r["alloc_toks"] for r in rows)
+    assert alloc <= budget
+    levels = {r["alloc_toks"] for r in rows if r["capped"]}
+    assert len(levels) <= 1  # every capped source is cut at the same tau
+    for r in rows:
+        if not r["capped"]:
+            assert r["alloc_toks"] == r["toks"]
+    if levels:
+        tau = levels.pop()
+        # tau is maximal: raising the level by 1 for every capped source
+        # would overshoot the budget.
+        n_capped = sum(1 for r in rows if r["capped"])
+        assert alloc + n_capped > budget
+        assert all(r["toks"] > tau for r in rows if r["capped"])
+
+
+def test_shard_lpt_plan_is_balanced_and_complete(spark):
+    """Snake placement: all docs placed, 8 shards, and the heaviest shard
+    is within one max-document of the lightest."""
+    from hadoop_data_lake_spark.core.io import read_table
+    from hadoop_data_lake_spark.queries.northstar_queries import shard_lpt_plan
+    from pyspark.sql import functions as F
+
+    rows = shard_lpt_plan(spark, SF_DIR).collect()
+    assert sorted(r["shard"] for r in rows) == list(range(8))
+    docs = read_table(spark, SF_DIR, "documents")
+    n_docs = docs.count()
+    assert sum(r["n_docs"] for r in rows) == n_docs
+    max_doc = docs.select(
+        F.max(F.size(F.split(F.col("text"), " "))).alias("m")
+    ).collect()[0]["m"]
+    toks = [r["toks"] for r in rows]
+    assert max(toks) - min(toks) <= max_doc

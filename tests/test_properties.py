@@ -560,3 +560,62 @@ def test_sessionize_matches_serial_fold_random(spark, rows):
             want[i] = sid
             prev = s
     assert got == want
+
+
+def _sign_keys_reference(vec, planes, bands, bits, scale):
+    """Pure-Python bit loop: bit p is 1 iff <v, plane_p> >= 0, and band b's
+    key reads bits b*bits .. b*bits+bits-1 most significant first."""
+    if scale is not None:
+        vec = [math.floor(x * scale) for x in vec]
+        planes = [[int(w) for w in plane] for plane in planes]
+    keys = []
+    for b in range(bands):
+        key = 0
+        for r in range(bits):
+            proj = sum(x * w for x, w in zip(vec, planes[b * bits + r]))
+            key = (key << 1) | (1 if proj >= 0 else 0)
+        keys.append(key)
+    return keys
+
+
+@settings(max_examples=80, deadline=None)
+@given(st.data())
+def test_sign_keys_udf_matches_bit_loop_reference(data):
+    """`_sign_keys_udf` equals the bit loop on random vectors, zero and
+    negative components included, for the float path (Gaussian and +/-1
+    planes) and the exact int64 path. Float-path inputs are dyadic (k/64
+    components; Gaussian planes rounded to 2^-20), so every projection is
+    exact in any summation order and the comparison is exact too."""
+    import numpy as np
+    import pandas as pd
+
+    from hadoop_data_lake_spark.operators.similarity import (
+        _hyperplanes,
+        _sign_keys_udf,
+        _srp_weights,
+    )
+
+    bands = data.draw(st.integers(1, 4))
+    bits = data.draw(st.integers(1, 8))
+    dim = data.draw(st.integers(1, 12))
+    kind = data.draw(st.sampled_from(["gaussian", "rademacher", "int64"]))
+    scale = None
+    if kind == "gaussian":
+        seed = data.draw(st.integers(0, 1000))
+        planes = np.round(_hyperplanes(dim, bands, bits, seed) * 2**20) / 2**20
+        planes = planes.reshape(bands * bits, dim)
+        comp = st.integers(-4096, 4096).map(lambda k: k / 64.0)
+    elif kind == "rademacher":
+        planes = _srp_weights(bands * bits, dim)
+        comp = st.integers(-4096, 4096).map(lambda k: k / 64.0)
+    else:
+        planes = _srp_weights(bands * bits, dim)
+        scale = data.draw(st.sampled_from([1, 7, 1000, 1_000_000]))
+        comp = st.integers(-10**6, 10**6).map(lambda k: k / 10**6)
+    vecs = data.draw(
+        st.lists(st.lists(comp, min_size=dim, max_size=dim), min_size=1, max_size=6)
+    )
+    udf = _sign_keys_udf(planes, bands, bits, scale=scale)
+    got = udf.func(pd.Series([np.array(v) for v in vecs]))
+    want = [_sign_keys_reference(v, planes.tolist(), bands, bits, scale) for v in vecs]
+    assert [list(map(int, keys)) for keys in got] == want

@@ -2,6 +2,7 @@
 IVF probe behavior. Clustered synthetic vectors make the expected neighbor
 sets unambiguous."""
 
+import ast
 import math
 
 import numpy as np
@@ -742,3 +743,58 @@ def test_ivf_scan_budget_knob(spark):
     # on a tightly clustered corpus one probed cell already holds the
     # query's whole cluster — even the minimal budget clears 0.9
     assert r_small >= 0.9
+
+
+def _rerank_builders(tree) -> list[str]:
+    """Names of the top-level functions whose body builds the
+    `[F.col("sim_r").desc(), F.col("neighbor_id").asc()]` top-k order."""
+
+    def is_order(node, col, direction):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == direction
+            and isinstance(node.func.value, ast.Call)
+            and isinstance(node.func.value.func, ast.Attribute)
+            and node.func.value.func.attr == "col"
+            and [getattr(a, "value", None) for a in node.func.value.args] == [col]
+        )
+
+    found = []
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.List)
+                and any(is_order(e, "sim_r", "desc") for e in node.elts)
+                and any(is_order(e, "neighbor_id", "asc") for e in node.elts)
+            ):
+                found.append(fn.name)
+    return found
+
+
+def test_one_rerank_builds_the_topk_order():
+    """Every ANN top-k operator ends in `_rerank`: the `sim_r desc,
+    neighbor_id asc` order is built in exactly one place."""
+    from hadoop_data_lake_spark.operators import similarity
+
+    with open(similarity.__file__, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    assert _rerank_builders(tree) == ["_rerank"]
+
+
+def test_rerank_lint_flags_a_copy():
+    """The structural rule is not vacuous: a second copy of the order is
+    found, nested or not, and other orders are not."""
+    src = (
+        "def _rerank(c, k):\n"
+        "    return t(c, [F.col('sim_r').desc(), F.col('neighbor_id').asc()])\n"
+        "def ivf(c, k):\n"
+        "    def inner():\n"
+        "        return [F.col('sim_r').desc(), F.col('neighbor_id').asc()]\n"
+        "    return inner()\n"
+        "def probe(c):\n"
+        "    return [F.col('c_sim').desc(), F.col('cell').asc()]\n"
+    )
+    assert _rerank_builders(ast.parse(src)) == ["_rerank", "ivf"]

@@ -672,3 +672,33 @@ def test_watermark_evicts_state_across_time_ordered_batches(spark):
         assert w + 600_000_000 > wm_us, (
             f"window starting {w} was finalized but never emitted"
         )
+
+
+def test_stream_replay_over_empty_source(spark, tmp_path):
+    """An empty availableNow batch is a legal production
+    state (an empty Kafka topic window). A zero-row events source must
+    drain cleanly to a 0-row result with the stable output schema — for a
+    windowed aggregate, a stateful applyInPandasWithState query, and a
+    stream-static join (the three state-machinery shapes in the guard)."""
+    import glob
+    import shutil
+
+    from hadoop_data_lake_spark.queries.registry import REGISTRY
+
+    src = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    tmp = str(tmp_path / "part")
+    src.limit(0).coalesce(1).write.parquet(tmp)
+    dest = str(tmp_path / "events.parquet")
+    shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], dest)
+    for other in ("documents", "embeddings", "orders", "lineitem", "customer",
+                  "supplier", "part", "nation", "region"):
+        p = f"{SF_DIR}/{other}.parquet"
+        import os
+        if os.path.exists(p):
+            os.symlink(p, str(tmp_path / f"{other}.parquet"))
+
+    for name in ("stream_windowed_counts", "stream_running_max",
+                 "stream_enriched_value"):
+        out = REGISTRY[name].fn(spark, str(tmp_path))
+        assert out.count() == 0, f"{name} emitted rows from an empty source"
+        assert len(out.schema.fields) > 0, f"{name} lost its output schema"

@@ -1,4 +1,5 @@
-"""Jaro-Winkler (functions/strsim.py): DuckDB bit-parity and metric laws.
+"""Jaro-Winkler (functions/strsim.py): DuckDB bit-parity and metric laws;
+the Soundex DuckDB replay (functions/phonetic.py) against Spark.
 
 The registry oracle (linkage_jaro_winkler) already proves parity on the
 blocked part-name pairs; these tests pin the metric itself on adversarial
@@ -73,3 +74,28 @@ def test_rrf_top20_is_consistent(spark):
     assert scores[0] <= 2.0 / 61.0 + 1e-12
     for r in out:
         assert 1 <= r["r_lex"] <= 499 and 1 <= r["r_vec"] <= 499
+
+
+def test_soundex_sql_matches_spark_on_classic_vectors(spark):
+    """The DuckDB soundex replay equals Spark's F.soundex on the classic
+    edge-case vectors (collapse through h/w, first-letter runs, vowels)."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from hadoop_data_lake_spark.functions.phonetic import soundex_sql
+
+    words = [
+        "Robert", "Rupert", "Ashcraft", "Ashcroft", "Tymczak", "Pfister",
+        "Honeyman", "Wright", "Hughes", "AA", "MM", "Momo", "jackson",
+        "washington", "lee", "gutierrez",
+    ]
+    got_spark = {
+        r["w"]: r["sx"]
+        for r in spark.createDataFrame([(w,) for w in words], "w string")
+        .select("w", F.soundex("w").alias("sx"))
+        .collect()
+    }
+    con = duckdb.connect()
+    for w in words:
+        (code,) = con.sql(f"SELECT {soundex_sql(repr(w))}").fetchone()
+        assert code == got_spark[w], (w, code, got_spark[w])

@@ -5,6 +5,7 @@ and decline contracts."""
 import random
 
 import pyspark.sql.functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from hadoop_data_lake_spark.core import driver_tier as DT
 from hadoop_data_lake_spark.operators import packing as P
@@ -252,3 +253,140 @@ def test_prefix_agg_driver_declines(spark, tiers, monkeypatch):
     # tier switch off -> decline
     tiers(False)
     assert P._prefix_agg_driver(df3, ["oid"], {"s": "val"}, {}) is None
+
+
+# ------------------------------------------ prefix_agg n_rows_bound, byte
+# and NULL gates. A caller-known over-cap bound declines the driver tier
+# without the limit(cap+1) probe; unbounded-payload columns and
+# NULL-carrying passthrough integral columns decline to the distributed
+# path, whose results are the contract.
+
+
+def _counted_frame(spark, n=20):
+    """(frame, accumulator): every upstream execution adds n to the
+    accumulator via a non-deterministic scalar UDF (non-deterministic so
+    the optimizer cannot duplicate or prune it)."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def bump(x):
+        acc.add(1)
+        return x
+
+    u = F.udf(bump, LongType()).asNondeterministic()
+    df = (
+        spark.range(n)
+        .select(u(F.col("id")).alias("k"))
+        .withColumn("__one", F.lit(1))
+    )
+    return df, acc
+
+
+def test_prefix_bound_over_cap_skips_probe(spark, tiers, monkeypatch):
+    """An over-cap `n_rows_bound` must decline WITHOUT the limit(cap+1)
+    probe: the upstream executes exactly as many times as the tier-off
+    distributed path, and the boundless probe path
+    demonstrably executes it more."""
+    monkeypatch.setattr(DT, "MAX_ROWS", 10)
+    n = 20
+
+    def run(bound, tier_on):
+        tiers(tier_on)
+        df, acc = _counted_frame(spark, n)
+        out = P.prefix_agg(
+            df, ["k"], sum_cols={"rk": "__one"}, n_rows_bound=bound
+        )
+        rows = {(r["k"], r["rk"]) for r in out.collect()}
+        return rows, acc.value
+
+    base_rows, base_execs = run(bound=None, tier_on=False)
+    bound_rows, bound_execs = run(bound=n, tier_on=True)
+    probe_rows, probe_execs = run(bound=None, tier_on=True)
+    assert bound_rows == base_rows == probe_rows == {
+        (k, k + 1) for k in range(n)
+    }
+    # the bound path adds ZERO upstream executions over tier-off ...
+    assert bound_execs == base_execs
+    # ... while the boundless probe on an over-cap input pays extra
+    assert probe_execs > base_execs
+
+
+def test_prefix_bound_under_cap_fires(spark, tiers):
+    """A sound under-cap bound keeps the tier firing (and the defensive
+    limit recheck still declines when the promise is broken)."""
+    df = spark.range(50).select(F.col("id").alias("k")).withColumn(
+        "__one", F.lit(1)
+    )
+    got = P._prefix_agg_driver(df, ["k"], {"rk": "__one"}, {}, n_rows_bound=50)
+    assert got is not None
+    assert {(r["k"], r["rk"]) for r in got.collect()} == {
+        (k, k + 1) for k in range(50)
+    }
+    # broken promise: bound says 10, frame holds 50 over a 10-row cap
+    import unittest.mock as mock
+
+    with mock.patch.object(DT, "MAX_ROWS", 10):
+        assert (
+            P._prefix_agg_driver(df, ["k"], {"rk": "__one"}, {}, n_rows_bound=5)
+            is None
+        )
+
+
+def test_prefix_tier_declines_array_passthrough(spark, tiers):
+    """Unbounded-payload passthrough columns decline the collect (the
+    budget is bytes; a row cap cannot see a token-array column
+    coming) — and the distributed path still answers correctly."""
+    df = spark.createDataFrame(
+        [(1, [1, 2, 3]), (2, [4])],
+        StructType(
+            [
+                StructField("k", LongType()),
+                StructField("toks", ArrayType(LongType())),
+            ]
+        ),
+    ).withColumn("__one", F.lit(1))
+    assert P._prefix_agg_driver(df, ["k"], {"rk": "__one"}, {}) is None
+    out = P.prefix_agg(df, ["k"], sum_cols={"rk": "__one"})
+    assert {(r["k"], r["rk"]) for r in out.collect()} == {(1, 1), (2, 2)}
+
+
+def test_prefix_tier_declines_wide_frames_by_bytes(spark, tiers):
+    """min(row cap, byte budget / est row width): a schema wide enough to
+    blow the byte budget shrinks the effective cap below the frame."""
+    import unittest.mock as mock
+
+    df = spark.range(100).select(F.col("id").alias("k")).withColumn(
+        "__one", F.lit(1)
+    )
+    for c in range(6):
+        df = df.withColumn(f"s{c}", F.lit("x"))
+    # est width: 2x8 (longs) + 6x48 (strings) = 304 B -> cap = 1024//304 = 3
+    with mock.patch.object(DT, "MAX_BYTES", 1024):
+        assert P._prefix_agg_driver(df, ["k"], {"rk": "__one"}, {}) is None
+
+
+def test_prefix_tier_declines_null_passthrough_integral(spark, tiers):
+    """A NULL-carrying passthrough integral column declines: pandas would
+    round-trip it through float64 and silently lose >= 2^53 precision. The distributed path keeps the exact values."""
+    big = (1 << 53) + 1  # not representable in float64
+    df = spark.createDataFrame(
+        [(1, big, 1), (2, None, 1), (3, big + 2, 1)],
+        StructType(
+            [
+                StructField("k", LongType()),
+                StructField("payload", LongType()),
+                StructField("__one", LongType()),
+            ]
+        ),
+    )
+    assert P._prefix_agg_driver(df, ["k"], {"rk": "__one"}, {}) is None
+    out = P.prefix_agg(df, ["k"], sum_cols={"rk": "__one"})
+    got = {(r["k"], r["payload"], r["rk"]) for r in out.collect()}
+    assert got == {(1, big, 1), (2, None, 2), (3, big + 2, 3)}
+    # no nulls -> pandas keeps int64 and the tier fires exactly
+    df2 = df.where(F.col("payload").isNotNull())
+    tier = P._prefix_agg_driver(df2, ["k"], {"rk": "__one"}, {})
+    assert tier is not None
+    assert {(r["k"], r["payload"]) for r in tier.collect()} == {
+        (1, big),
+        (3, big + 2),
+    }
